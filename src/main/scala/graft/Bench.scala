@@ -214,30 +214,11 @@ object Bench {
 
     def staged(path: String) =
       spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
-    // Checkpoint base for the st_* entries: tmpfs when the platform has
-    // one. Structured Streaming fsyncs its offset/commit WAL per
-    // micro-batch; on AvailableNow one-shot runs over staged tables
-    // that per-batch disk fsync is pure fixed overhead charged to the
-    // operator being measured. Still a FRESH directory per run (the
-    // stRuns counter below) — nothing is ever resumed or reused across
-    // runs, so no result caching is possible; only the WAL's backing
-    // medium changes.
-    val ckptBase = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm)) {
-        val d = java.nio.file.Files.createTempDirectory(shm, "graft-bench-ckpt")
-        sys.addShutdownHook {
-          org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)
-        }
-        d.toString
-      } else tmpOut
-    }
     var stRuns = 0
     def runStream(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
       stRuns += 1 // fresh checkpoint per run — never resume a prior run's offsets
       val q = df.writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", s"$ckptBase/ckpt_${name}_$stRuns")
+        .option("checkpointLocation", s"$tmpOut/ckpt_${name}_$stRuns")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       // awaitTermination(timeout) returns false on expiry with the
       // query still RUNNING — a leaked query would overlap every

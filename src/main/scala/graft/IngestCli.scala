@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Incremental}
@@ -116,29 +117,20 @@ object IngestCli {
   final case class EvalGate(digests: Array[Long], nWords: Int)
 
   /** Build an [[EvalGate]] from an eval/benchmark frame's text. */
-  def evalGate(evalSet: DataFrame, textCol: org.apache.spark.sql.Column,
+  def evalGate(evalSet: DataFrame, textCol: Column,
       nWords: Int = 13): EvalGate =
     EvalGate(graft.streaming.StreamOps.evalGramDigests(evalSet, textCol,
       nWords), nWords)
 
-  /** The map-side gate block shared VERBATIM by [[ingestWave]] and
-    * [[batchEquivalent]] — literally one filter on [[gatePredicate]],
-    * so the counted set and the filtered set cannot drift (they are
-    * the same Column expression; Spark's And short-circuits, so the
-    * fused predicate behaves exactly like the two chained filters it
-    * replaced). */
-  private def applyGates(df: DataFrame, cfg: GraftConfig,
-      gate: Option[EvalGate]): DataFrame =
-    df.filter(gatePredicate(cfg, gate))
-
-  /** THE gate definition — one row-local predicate used by both the
-    * filtering path ([[applyGates]]) and the wave's single audit
-    * aggregation (guide §1.2: don't pay a full pass per counter).
+  /** THE gate definition — one row-local predicate that [[ingestWave]]
+    * and [[batchEquivalent]] filter on and the wave's single audit
+    * aggregation counts (guide §1.2: don't pay a full pass per counter),
+    * so the counted set and the filtered set cannot drift.
     * The decontamination component is
     * [[graft.streaming.StreamOps.decontaminatePredicate]], the same
     * definition `decontaminateStream` filters on. */
   private def gatePredicate(cfg: GraftConfig,
-      gate: Option[EvalGate]): org.apache.spark.sql.Column = {
+      gate: Option[EvalGate]): Column = {
     val lengthOk =
       length(col("text")).between(cfg.minTextLength, cfg.maxTextLength)
     gate match {
@@ -149,16 +141,14 @@ object IngestCli {
   }
 
   /** One-pass wave audit: total rows, tombstone survivors, and (when
-    * `gatePred` is given) gate survivors among the live rows — the
-    * counts [[ingestWave]]/[[ingestMediaWave]]/[[ingestVideoWave]]
-    * previously paid one full wave scan EACH for. The tombstone table
-    * is distinct by construction ([[operators.Incremental
-    * .writeTombstones]]/`appendTombstones`), so the broadcast left
-    * join marks each wave row at most once and `__tomb IS NULL`
-    * counts exactly the rows [[operators.Incremental.retractIds]]'
-    * left_anti would keep (null ids match nothing on either path). */
+    * `gatePred` is given) gate survivors among the live rows. The
+    * tombstone table is distinct by construction (`writeTombstones`/
+    * `appendTombstones`), so the broadcast left join marks each wave
+    * row at most once and `__tomb IS NULL` counts exactly the rows
+    * [[operators.Incremental.retractIds]]' left_anti would keep (null
+    * ids match nothing on either path). */
   private def waveAuditCounts(wave: DataFrame, tombs: DataFrame,
-      gatePred: Option[org.apache.spark.sql.Column]): (Long, Long, Long) = {
+      gatePred: Option[Column]): (Long, Long, Long) = {
     val marked = wave.join(
       broadcast(tombs.select(col("retract_id")).withColumn("__tomb", lit(true))),
       wave("doc_id") === col("retract_id"), "left")
@@ -183,17 +173,14 @@ object IngestCli {
   def initState(spark: SparkSession, ns: String, dir: String,
       numBuckets: Int = 8): IngestState = {
     val st = IngestState(ns, dir, numBuckets)
-    Seq(st.digestTable, st.sigTable, st.tombTable)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    resetLoop(spark, dir, Seq(st.digestTable, st.sigTable), st.tombTable,
+      numBuckets)
     val empty = spark.range(0)
       .select(col("id").as("doc_id"), lit("empty seed").as("text"))
     Incremental.writeDigestTable(empty, col("text"),
       st.digestTable, s"$dir/digests_v0", numBuckets)
     Incremental.writeBandedSignatures(empty, "doc_id", col("text"),
       st.sigTable, s"$dir/sigs_v0", numBuckets)
-    Incremental.writeTombstones(empty.select("doc_id"), "doc_id",
-      st.tombTable, s"$dir/tombstones", numBuckets)
-    resetGold(spark, dir)
     st
   }
 
@@ -214,7 +201,7 @@ object IngestCli {
 
     // map-side gates before any shuffle work (length bounds + the
     // optional decontamination membership filter — both row-local)
-    val gated = applyGates(live, cfg, evalGate)
+    val gated = live.filter(gatePredicate(cfg, evalGate))
 
     // exact: keep-lowest-id within the wave, then drop anything whose
     // normalized digest the corpus has EVER seen (state side
@@ -285,15 +272,20 @@ object IngestCli {
   }
 
 
-  /** Fresh-start gold reset shared by the three init functions: wipe
-    * every gold version, the legacy unversioned dir, and the pointer,
-    * then point at `gold_v0` (where the first wave appends). */
-  private def resetGold(spark: SparkSession, dir: String): Unit = {
+  /** Fresh start shared by the three init functions: drop `tables`,
+    * seed an empty tombstone table, wipe every gold version, the legacy
+    * unversioned dir and the pointer, then point at `gold_v0` (where the
+    * first wave appends). */
+  private def resetLoop(spark: SparkSession, dir: String,
+      tables: Seq[String], tombTable: String, numBuckets: Int): Unit = {
+    (tables :+ tombTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Incremental.writeTombstones(spark.range(0).select(col("id").as("doc_id")),
+      "doc_id", tombTable, s"$dir/tombstones", numBuckets)
     val fs = fsFor(spark, dir)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/gold_v*")))
+    Option(fs.globStatus(new Path(s"$dir/gold_v*")))
       .toSeq.flatten.foreach(st => fs.delete(st.getPath, true))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/gold"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_GOLD_CURRENT"), false)
+    fs.delete(new Path(s"$dir/gold"), true)
+    fs.delete(new Path(s"$dir/_GOLD_CURRENT"), false)
     writeGoldPointer(spark, dir, "gold_v0")
   }
 
@@ -303,11 +295,8 @@ object IngestCli {
     * and reading it fails schema inference.) */
   private def goldHasData(spark: SparkSession, goldPath: String): Boolean = {
     val fs = fsFor(spark, goldPath)
-    fs.exists(new org.apache.hadoop.fs.Path(goldPath)) && {
-      val glob = fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$goldPath/*/*.parquet"))
-      glob != null && glob.nonEmpty
-    }
+    fs.exists(new Path(goldPath)) &&
+      Option(fs.globStatus(new Path(s"$goldPath/*/*.parquet"))).exists(_.nonEmpty)
   }
 
   /** Retract `ids` (a one-column frame of doc_ids): append tombstones,
@@ -337,8 +326,11 @@ object IngestCli {
     val next = st.copy(version = st.version + 1,
       digestVersion = st.digestVersion + 1,
       goldVersion = st.goldVersion + (if (hadGold) 1 else 0))
-    tombstoneAndCompact(spark, ids, st.tombTable, st.sigTable,
-      next.sigTable, s"${st.dir}/sigs_v${next.version}",
+    Incremental.appendTombstones(ids, ids.columns.head,
+      spark.table(st.tombTable), st.tombTable, st.numBuckets)
+    Incremental.compactState(spark.table(st.sigTable), "doc_id",
+      spark.table(st.tombTable), next.sigTable,
+      s"${st.dir}/sigs_v${next.version}",
       bucketCols = Seq("band", "bucket"), numBuckets = st.numBuckets)
     spark.table(st.digestTable)
       .join(retractKeys, Seq("__d1", "__d2"), "left_anti")
@@ -359,8 +351,7 @@ object IngestCli {
         sources.CorpusIO.releaseManifest(spark, next.goldPath, "ingest_wave")
           .write.mode(SaveMode.Overwrite).parquet(st.manifestPath)
       else
-        fsFor(spark, st.dir)
-          .delete(new org.apache.hadoop.fs.Path(st.manifestPath), true)
+        fsFor(spark, st.dir).delete(new Path(st.manifestPath), true)
     }
     next
   }
@@ -391,9 +382,7 @@ object IngestCli {
     // cycle — raising the knob simply stops reclaims until the window
     // refills); with the default 2 that is current + previous
     val reclaim = prevVersion - (goldRetain(spark) - 1)
-    if (reclaim >= 0)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/gold_v$reclaim"),
-        true)
+    if (reclaim >= 0) fs.delete(new Path(s"$dir/gold_v$reclaim"), true)
   }
 
   /** How many gold versions survive each takedown rewrite — current
@@ -414,8 +403,8 @@ object IngestCli {
   private def writeGoldPointer(spark: SparkSession, dir: String,
       name: String): Unit = {
     val fs = fsFor(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/_GOLD_CURRENT.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/_GOLD_CURRENT")
+    val tmp = new Path(s"$dir/_GOLD_CURRENT.tmp")
+    val cur = new Path(s"$dir/_GOLD_CURRENT")
     val os = fs.create(tmp, true)
     try os.write(name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
@@ -433,22 +422,19 @@ object IngestCli {
     * takedown gets a complete old or new copy, never an absent dir. */
   def currentGoldPath(spark: SparkSession, dir: String): String = {
     val fs = fsFor(spark, dir)
-    val ptr = new org.apache.hadoop.fs.Path(s"$dir/_GOLD_CURRENT")
+    val ptr = new Path(s"$dir/_GOLD_CURRENT")
     val pointed =
       if (fs.exists(ptr)) {
         val in = fs.open(ptr)
         val name =
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
           finally in.close()
-        Some(s"$dir/$name")
-          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+        Some(s"$dir/$name").filter(p => fs.exists(new Path(p)))
       } else None
     pointed.getOrElse {
-      val versions = Option(fs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$dir/gold_v*"))).toSeq.flatten
-        .filter(_.isDirectory)
-        .filter(st => fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+      val versions = Option(fs.globStatus(new Path(s"$dir/gold_v*")))
+        .toSeq.flatten
+        .filter(st => st.isDirectory && fs.exists(new Path(st.getPath, "_SUCCESS")))
         .map(_.getPath.getName)
         .flatMap(n => n.stripPrefix("gold_v").toIntOption.map(_ -> n))
         .sortBy(_._1)
@@ -465,12 +451,10 @@ object IngestCli {
     * sig); the bare digest table by DISTINCT) — honestly, the text
     * loop's own exact gate already stops identical re-appends (only
     * exact SURVIVORS reach either table), so it bites mainly for
-    * out-of-loop `appendBandedSignatures` callers; the MEDIA and
-    * VIDEO loops are where recrawl accretion is structural (they
-    * append every decoded admitted signature, dropped or not, so a
-    * recrawled item adds an identical row per sighting forever).
-    * Returns the bumped state — consumers repoint exactly like after
-    * a takedown. */
+    * out-of-loop `appendBandedSignatures` callers; in the Hamming loops
+    * recrawl accretion is structural (every decoded admitted signature
+    * is appended, so a recrawled item adds a row per sighting).
+    * Returns the bumped state — consumers repoint as after a takedown. */
   def compactTextSigs(spark: SparkSession, st: IngestState): IngestState = {
     val next = st.copy(version = st.version + 1,
       digestVersion = st.digestVersion + 1)
@@ -480,46 +464,6 @@ object IngestCli {
       next.digestTable, s"${st.dir}/digests_v${next.digestVersion}",
       st.numBuckets)
     next
-  }
-
-  def compactMediaSigs(spark: SparkSession, st: MediaState): MediaState = {
-    val next = st.copy(version = st.version + 1)
-    // remap carried across versions: a later takedown of a kept id
-    // can re-elect a surviving signature twin (the video loop's
-    // compaction-vs-retraction contract, banded form)
-    val prior = Some(s"${st.sigTable}_remap")
-      .filter(spark.catalog.tableExists).map(spark.table)
-    Incremental.dedupCompactBandedState(spark.table(st.sigTable), "doc_id",
-      next.sigTable, s"${st.dir}/hsigs_v${next.version}", st.numBuckets,
-      priorRemap = prior)
-    next
-  }
-
-  def compactVideoSigs(spark: SparkSession, st: VideoState): VideoState = {
-    val next = st.copy(version = st.version + 1)
-    // carry the dropped-id → representative remap across versions so
-    // a LATER takedown of a representative can re-elect a surviving
-    // twin (the compaction-vs-retraction interaction)
-    val prior = Some(s"${st.sigTable}_remap")
-      .filter(spark.catalog.tableExists).map(spark.table)
-    Incremental.dedupCompactFrameState(spark.table(st.sigTable), "doc_id",
-      next.sigTable, s"${st.dir}/fsigs_v${next.version}", st.numBuckets,
-      priorRemap = prior)
-    next
-  }
-
-  /** Shared takedown prologue for ALL THREE loops: tombstone append +
-    * blue/green compaction of the id-carrying signature state (the
-    * Hamming loops' `_meta` row rides through — a null id never
-    * matches a tombstone). */
-  private def tombstoneAndCompact(spark: SparkSession, ids: DataFrame,
-      tombTable: String, sigTable: String, nextTable: String,
-      nextPath: String, bucketCols: Seq[String], numBuckets: Int): Unit = {
-    Incremental.appendTombstones(ids, ids.columns.head,
-      spark.table(tombTable), tombTable, numBuckets)
-    Incremental.compactState(spark.table(sigTable), "doc_id",
-      spark.table(tombTable), nextTable, nextPath,
-      bucketCols = bucketCols, numBuckets = numBuckets)
   }
 
   /** Rebuild the content-keyed digest state from RETAINED GOLD — the
@@ -550,7 +494,7 @@ object IngestCli {
   def batchEquivalent(corpus: DataFrame,
       cfg: GraftConfig = GraftConfig(),
       evalGate: Option[EvalGate] = None): DataFrame = {
-    val gated = applyGates(corpus, cfg, evalGate)
+    val gated = corpus.filter(gatePredicate(cfg, evalGate))
     val exact = Dedup.keepBestWindow(gated,
       graft.functions.text.norm_key(col("text")), Seq(col("doc_id").asc))
     Dedup.minhashDedup(exact, "doc_id", col("text"),
@@ -558,33 +502,67 @@ object IngestCli {
   }
 
   // --------------------------------------------------------------
-  // The MEDIA wave loop: the same recurring-ingestion composition for
-  // binary payloads (images by default; audio via Audio.audioSignatures
-  // — anything that reduces to a 64-bit perceptual signature). Decode
-  // → optional blocklist gate → in-wave Hamming near-dup keep-lowest-
-  // id → probe against the persisted Hamming state → append state
-  // (seen-not-kept) → gold append.
+  // The HAMMING wave loop, for payloads that reduce to 64-bit
+  // perceptual signatures: decode → optional blocklist gate → in-wave
+  // near-dup keep-lowest-id → probe against the persisted state →
+  // append state (seen-not-kept) → gold append. Two state layouts
+  // ([[HammingLayout]]): MEDIA ([[MediaState]], `hsigs_v*`), one
+  // signature per item — images by default, audio via
+  // Audio.audioSignatures; VIDEO ([[VideoState]], `fsigs_v*`, q147's
+  // layout), a clip is its per-sampled-position frame signatures and
+  // two clips match when ≥ minFrames positions are within budget. The
+  // video blocklist is CROSS-MODAL: frames share the image dHash
+  // identity, so a flagged IMAGE signature blocks every clip with a
+  // sampled frame within budget of it.
   //
   // Equivalence contract (IngestSpec): with waves arriving in id
   // order, gold after any number of waves IS [[batchMediaEquivalent]]
-  // over the union — unconditionally, because the Hamming pair
-  // enumeration is EXACT (pigeonhole banding has no big-bucket
-  // approximation the MinHash loop needs guarding from). Undecodable
-  // payloads pass (nothing provable) and never enter state; blocked
-  // payloads never enter gold OR state.
+  // / [[batchVideoEquivalent]] over the union — unconditionally, since
+  // pigeonhole banding enumerates pairs EXACTLY. Undecodable payloads
+  // pass (nothing provable) and never enter state; blocked payloads
+  // never enter gold OR state.
   //
-  // 100 TB shape: decode is the wave-sized mapPartitions scan, the
-  // state probe shuffles only the wave's banded signatures (state
-  // bucket-aligned from disk), the blocklist rides map-side inside
-  // codegen, and appends are wave-sized bucketed writes. Nothing
-  // re-reads previously ingested media bytes.
+  // 100 TB shape: decode is the wave-sized mapPartitions scan
+  // (`everyNth` is the video knob), the blocklist rides map-side in
+  // codegen, the probe shuffles only the wave's banded signatures
+  // (state bucket-aligned, plan-asserted in IncrementalSpec), appends
+  // are wave-sized bucketed writes; no prior media bytes are re-read.
   // --------------------------------------------------------------
 
-  final case class MediaState(ns: String, dir: String, numBuckets: Int,
-      maxHamming: Int, version: Int = 0, goldVersion: Int = 0) {
-    def sigTable: String = s"${ns}_hsigs_v$version"
+  /** What the Hamming loop reads off [[MediaState]]/[[VideoState]];
+    * `bumped` is the blue/green version step (gold too on a rewrite). */
+  private[graft] sealed trait HammingState[S <: HammingState[S]] {
+    def ns: String
+    def dir: String
+    def numBuckets: Int
+    def maxHamming: Int
+    def version: Int
+    def goldVersion: Int
+    private[graft] def stem: String
+    private[graft] def bumped(gold: Boolean): S
+    def sigTable: String = s"${ns}_${stem}_v$version"
     def tombTable: String = s"${ns}_tombstones"
     def goldPath: String = s"$dir/gold_v$goldVersion"
+    private[graft] def sigPath: String = s"$dir/${stem}_v$version"
+  }
+  private type AnyHammingState = HammingState[_]
+
+  final case class MediaState(ns: String, dir: String, numBuckets: Int,
+      maxHamming: Int, version: Int = 0, goldVersion: Int = 0)
+      extends HammingState[MediaState] {
+    private[graft] def stem = "hsigs"
+    private[graft] def bumped(gold: Boolean): MediaState = copy(
+      version = version + 1, goldVersion = goldVersion + (if (gold) 1 else 0))
+  }
+
+  /** `(maxHamming, minFrames, everyNth)` fix the match contract and
+    * sampling grid for life (a stride change renumbers positions). */
+  final case class VideoState(ns: String, dir: String, numBuckets: Int,
+      maxHamming: Int, minFrames: Int, everyNth: Int, version: Int = 0,
+      goldVersion: Int = 0) extends HammingState[VideoState] {
+    private[graft] def stem = "fsigs"
+    private[graft] def bumped(gold: Boolean): VideoState = copy(
+      version = version + 1, goldVersion = goldVersion + (if (gold) 1 else 0))
   }
 
   final case class MediaWaveReport(wave: Int, incoming: Long, live: Long,
@@ -593,205 +571,307 @@ object IngestCli {
   /** Declared signer identities — the contract strings the state
     * `_meta` row is signed with ([[Incremental.signerTag]]). Two
     * states are signature-comparable iff their names match; every
-    * write/append/probe in the loops below declares one, so a
+    * write/append/probe in the loop below declares one, so a
     * wrong-modality signer (the classic rebuild mistake) refuses
     * loudly instead of writing incomparable signatures. */
   val ImageSignerName = "image-dhash64-v1"
   val AudioSignerName = "audio-ehash64-v1"
   val VideoSignerName = "video-frame-dhash64-v1"
 
+  /** A wave's signatures past the blocklist: `rows` (decoded, admitted)
+    * feed every dedup and state step; `decodeCounts` is the decode job —
+    * decoded items, and blocked items as a function of live ones;
+    * `keep` narrows a payload frame to admitted items not in `dropIds`. */
+  private final case class Screen(rows: DataFrame,
+      decodeCounts: () => (Long, Long => Long),
+      keep: (DataFrame, DataFrame) => DataFrame)
+
+  /** The one decision the media and video loops differ on — the state
+    * layout — as the calls each step makes. `tag`/`decodeStep` name the
+    * wave's jobs (`<tag> wave N: <step>`); `sig`/`decoded` are the signed
+    * rows' signature and decoded-row test; `callerSigner` marks a
+    * caller-chosen signer, which rebuild guards; `pairs` are in-wave
+    * `(id_a < id_b)` near-duplicates; `retract` is remap-aware (a
+    * retracted representative re-elects its min surviving twin). */
+  private final case class HammingLayout(tag: String, decodeStep: String,
+      signerName: String, sig: Column, decoded: Column, callerSigner: Boolean,
+      sign: DataFrame => DataFrame,
+      screen: (DataFrame, Option[Dedup.HammingIndex]) => Screen,
+      pairs: (DataFrame, Int) => DataFrame,
+      probe: (DataFrame, AnyHammingState) => DataFrame,
+      write: (DataFrame, AnyHammingState) => Unit,
+      append: (DataFrame, AnyHammingState) => Unit,
+      retract: (SparkSession, AnyHammingState, AnyHammingState) => Unit,
+      compact: (DataFrame, AnyHammingState, Option[DataFrame]) => Unit)
+
+  /** The media layout: one `(doc_id, decoded, sig)` row per item, null
+    * sig when undecodable. The signer must emit EXACTLY ONE row per doc
+    * (every stock signer does), or the REPORT's row arithmetic skews
+    * (the id-keyed gold stays correct). */
+  private def flat(signer: DataFrame => DataFrame = defaultImageSigner,
+      signerName: String = ImageSignerName): HammingLayout = {
+    val signed = Some(signerName)
+    HammingLayout("media", "decode + counts", signerName, col("sig"),
+      col("decoded"), callerSigner = true,
+      sign = signer(_).select(col("doc_id"), col("decoded"), col("sig")),
+      screen = (sigs, blocklist) => {
+        // exact, codegen'd, no join; null sigs pass (undecodable is
+        // unprovable). Row-local, so the decoded and admitted counts
+        // fold into one aggregation.
+        val admittedPred = blocklist.fold(lit(true))(idx =>
+          col("sig").isNull || !Dedup.hammingNearSet(col("sig"), idx))
+        val admitted = sigs.filter(admittedPred)
+        val decodeCounts = () => {
+          val r = sigs.agg(count(when(col("decoded"), 1)),
+            count(when(admittedPred, 1))).head()
+          (r.getLong(0), (nLive: Long) => nLive - r.getLong(1))
+        }
+        Screen(admitted.filter(col("decoded")), decodeCounts,
+          (payload, dropIds) => payload.join(admitted.select("doc_id")
+            .join(dropIds, Seq("doc_id"), "left_anti"), Seq("doc_id"), "left_semi"))
+      },
+      pairs = Dedup.hammingNearDupPairs(_, "doc_id", "sig", _),
+      probe = (rows, st) => Incremental.hammingDupIdsAgainstTable(rows,
+        "doc_id", "sig", rows.sparkSession.table(st.sigTable), st.maxHamming,
+        signer = signed),
+      write = (rows, st) => Incremental.writeHammingState(rows, "doc_id",
+        "sig", st.sigTable, st.sigPath, st.maxHamming, st.numBuckets,
+        signer = signed),
+      append = (rows, st) => Incremental.appendHammingState(rows, "doc_id",
+        "sig", st.sigTable, st.maxHamming, st.numBuckets, signer = signed),
+      retract = (spark, st, next) => Incremental.retractBandedHammingIds(
+        spark, st.sigTable, next.sigTable, next.sigPath,
+        spark.table(st.tombTable), st.numBuckets),
+      compact = (state, next, prior) => Incremental.dedupCompactBandedState(
+        state, "doc_id", next.sigTable, next.sigPath, next.numBuckets,
+        priorRemap = prior))
+  }
+
+  /** The video layout: one `(doc_id, frame_pos, dhash)` row per sampled
+    * frame, none for an undecodable clip; ANY blocklisted frame blocks
+    * its clip. */
+  private def positional(minFrames: Int, everyNth: Int): HammingLayout = {
+    val signed = Some(VideoSignerName)
+    HammingLayout("video", "decode + count", VideoSignerName, col("dhash"),
+      lit(true), callerSigner = false,
+      sign = operators.Video.frameSignatures(_, "doc_id", col("content"), everyNth),
+      screen = (sigs, blocklist) => {
+        // map-side codegen per frame row, one tiny distinct; no
+        // blocklist ⇒ no blocked ids, no job spent proving it
+        val blockedIds = blocklist match {
+          case Some(idx) =>
+            sigs.filter(Dedup.hammingNearSet(col("dhash"), idx))
+              .select("doc_id").distinct().localCheckpoint(eager = false)
+          case None => sigs.sparkSession.range(0).select(col("id").as("doc_id"))
+        }
+        Screen(sigs.join(blockedIds, Seq("doc_id"), "left_anti"),
+          () => (sigs.select("doc_id").distinct().count(),
+            _ => if (blocklist.isDefined) blockedIds.count() else 0L),
+          (payload, dropIds) => payload
+            .join(blockedIds, Seq("doc_id"), "left_anti")
+            .join(dropIds, Seq("doc_id"), "left_anti"))
+      },
+      pairs = operators.Video.clipNearDupPairs(_, "doc_id", _, minFrames),
+      probe = (rows, st) => Incremental.frameHammingDupIdsAgainstTable(rows,
+        "doc_id", "dhash", rows.sparkSession.table(st.sigTable),
+        st.maxHamming, minFrames, everyNth = everyNth, signer = signed),
+      write = (rows, st) => Incremental.writeFrameHammingState(rows,
+        "doc_id", "dhash", st.sigTable, st.sigPath, st.maxHamming,
+        st.numBuckets, everyNth = everyNth, signer = signed),
+      append = (rows, st) => Incremental.appendFrameHammingState(rows,
+        "doc_id", "dhash", st.sigTable, st.maxHamming, st.numBuckets,
+        everyNth = everyNth, signer = signed),
+      retract = (spark, st, next) => Incremental.retractFrameHammingIds(
+        spark, st.sigTable, next.sigTable, next.sigPath,
+        spark.table(st.tombTable), st.numBuckets),
+      compact = (state, next, prior) => Incremental.dedupCompactFrameState(
+        state, "doc_id", next.sigTable, next.sigPath, next.numBuckets,
+        priorRemap = prior))
+  }
+
+  /** No signature rows, in `layout`'s own schema: init and rebuild seed
+    * with it, so their writers cannot split the bucketBy layout. */
+  private def emptySigs(spark: SparkSession, layout: HammingLayout) =
+    layout.sign(spark.range(0).select(col("id").as("doc_id"),
+      lit(null).cast("binary").as("content")))
+
   /** Fresh media state: empty bucketed Hamming-signature and tombstone
     * tables, clean gold dir. `maxHamming` fixes the band layout for
     * the state's whole life (every append and probe uses it). */
   def initMediaState(spark: SparkSession, ns: String, dir: String,
       maxHamming: Int = 8, numBuckets: Int = 8,
-      signerName: String = ImageSignerName): MediaState = {
-    val st = MediaState(ns, dir, numBuckets, maxHamming)
-    Seq(st.sigTable, st.tombTable)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val empty = emptyMediaSigs(spark)
-    Incremental.writeHammingState(empty, "doc_id", "sig", st.sigTable,
-      s"$dir/hsigs_v0", maxHamming, numBuckets,
-      signer = Some(signerName))
-    Incremental.writeTombstones(empty.select("doc_id"), "doc_id",
-      st.tombTable, s"$dir/tombstones", numBuckets)
-    resetGold(spark, dir)
+      signerName: String = ImageSignerName): MediaState =
+    initHamming(spark, flat(signerName = signerName),
+      MediaState(ns, dir, numBuckets, maxHamming))
+
+  /** Fresh video state (see [[VideoState]]). */
+  def initVideoState(spark: SparkSession, ns: String, dir: String,
+      maxHamming: Int = 8, minFrames: Int = 2, everyNth: Int = 2,
+      numBuckets: Int = 8): VideoState =
+    initHamming(spark, positional(minFrames, everyNth),
+      VideoState(ns, dir, numBuckets, maxHamming, minFrames, everyNth))
+
+  private def initHamming[S <: HammingState[S]](spark: SparkSession,
+      layout: HammingLayout, st: S): S = {
+    resetLoop(spark, st.dir, Seq(st.sigTable), st.tombTable, st.numBuckets)
+    layout.write(emptySigs(spark, layout), st)
     st
   }
 
   /** One media wave. `wave` needs (doc_id, content binary); extra
-    * columns ride to gold. `signer` turns the wave into
-    * `(doc_id, decoded, sig)` rows — 64-bit perceptual signature,
-    * null when undecodable; the default is the image dHash
-    * ([[operators.Images.imageSignatures]]); pass the audio eHash or
-    * a SimHash the same way. CONTRACT: the signer must emit EXACTLY
-    * ONE row per input doc (every stock signer does) — the wave
-    * report's decoded/blocked/accepted counts are row counts over the
-    * signer output plus arithmetic, so a signer emitting zero or
-    * multiple rows per doc would skew the REPORT (the written gold is
-    * still id-keyed and stays correct). `blocklist`
-    * (licensing/flagged-content enforcement) gates EXACTLY, map-side,
-    * before any dedup work. */
+    * columns ride to gold. `signer` emits one `(doc_id, decoded, sig)`
+    * row per doc ([[flat]]) — the image dHash by default; pass the audio
+    * eHash or a SimHash the same way. `blocklist` (flagged-content
+    * enforcement) gates EXACTLY, map-side, before any dedup work. */
   def ingestMediaWave(spark: SparkSession, st: MediaState, wave: DataFrame,
       waveNo: Int,
       signer: DataFrame => DataFrame = defaultImageSigner,
       blocklist: Option[Dedup.HammingIndex] = None,
-      signerName: String = ImageSignerName): MediaWaveReport = {
+      signerName: String = ImageSignerName): MediaWaveReport =
+    hammingWave(spark, flat(signer, signerName), st, wave, waveNo, blocklist)
+
+  /** One video wave. `wave` needs (doc_id, content binary AVI); extra
+    * columns ride to gold. `blocklist` = flagged IMAGE signatures. */
+  def ingestVideoWave(spark: SparkSession, st: VideoState, wave: DataFrame,
+      waveNo: Int,
+      blocklist: Option[Dedup.HammingIndex] = None): MediaWaveReport =
+    hammingWave(spark, positional(st.minFrames, st.everyNth), st, wave,
+      waveNo, blocklist)
+
+  private def hammingWave(spark: SparkSession, layout: HammingLayout,
+      st: AnyHammingState, wave: DataFrame, waveNo: Int,
+      blocklist: Option[Dedup.HammingIndex]): MediaWaveReport = {
+    def step[T](name: String)(f: => T): T =
+      labeled(spark, s"${layout.tag} wave $waveNo: $name")(f)
     val tombs = spark.table(st.tombTable)
     val live = Incremental.retractIds(wave, "doc_id", tombs)
 
-    // decode once per wave; (doc_id, decoded, sig) is 17 bytes/row —
-    // the content bytes never travel past this scan. Lazy local
-    // checkpoint: the signature aggregation below materializes the
-    // blocks, so decode+materialize+counts cost ONE job, not three.
-    val sigs = signer(live).select(col("doc_id"), col("decoded"), col("sig"))
-      .localCheckpoint(eager = false)
+    // decode once per wave (payload bytes never pass this scan); the
+    // lazy checkpoint makes decode+materialize+counts ONE job
+    val sigs = layout.sign(live).localCheckpoint(eager = false)
+    val screen = layout.screen(sigs, blocklist)
+    // the audit and the decode job are independent wave scans — run
+    // concurrently, the cheap audit hides in the decode wall (§2.6)
+    val ((incoming, nLive, _), (nDecoded, blockedOf)) = operators.Actions.par2(
+      step("audit counts") { waveAuditCounts(wave, tombs, None) },
+      step(layout.decodeStep) { screen.decodeCounts() })
+    val nBlocked = blockedOf(nLive)
 
-    // blocklist gate: exact, codegen'd, no join (null sigs pass —
-    // undecodable is unprovable; quarantine upstream when policy
-    // requires). The predicate is row-local, so the decoded and
-    // admitted counts fold into one aggregation over the checkpointed
-    // signatures.
-    val admittedPred = blocklist match {
-      case Some(idx) =>
-        col("sig").isNull || !Dedup.hammingNearSet(col("sig"), idx)
-      case None => lit(true)
-    }
-    // the audit aggregation (wave + tombstones only) and the decode
-    // pass behind the signature aggregation are independent — run the
-    // two wave scans concurrently; the cheap audit hides entirely
-    // inside the decode wall (guide §2.6)
-    val ((incoming, nLive, _), sigCounts) = operators.Actions.par2(
-      labeled(spark, s"media wave $waveNo: audit counts") {
-        waveAuditCounts(wave, tombs, None) },
-      labeled(spark, s"media wave $waveNo: decode + counts") {
-        sigs.agg(count(when(col("decoded"), 1)),
-          count(when(admittedPred, 1))).head() })
-    val nDecoded = sigCounts.getLong(0)
-    val nBlocked = nLive - sigCounts.getLong(1)
-    val admitted = sigs.filter(admittedPred)
-
-    // in-wave and against-state drops over the SAME input, unioned —
-    // the seen-not-kept contract, exactly as the text loop
-    val decoded = admitted.filter(col("decoded"))
-    val inWaveDups = Dedup.hammingNearDupPairs(decoded, "doc_id", "sig",
-        st.maxHamming)
+    // in-wave and against-state drops over the SAME screened rows,
+    // unioned — the seen-not-kept contract, exactly as the text loop
+    val dropIds = layout.pairs(screen.rows, st.maxHamming)
       .select(col("id_b").as("doc_id"))
-    val stateDups = Incremental.hammingDupIdsAgainstTable(decoded, "doc_id",
-      "sig", spark.table(st.sigTable), st.maxHamming,
-      signer = Some(signerName))
-    val dropIds = inWaveDups.union(stateDups).distinct()
-      .localCheckpoint(eager = false)
-    // drop ids are DECODED ADMITTED wave ids by construction (both
-    // enumerations read `decoded`), wave ids are unique (the loop's
-    // documented contract), so |accepted| = |admitted| − |dropIds| —
-    // no second content-carrying pass just to count the survivors
-    val nAccepted = sigCounts.getLong(1) -
-      labeled(spark, s"media wave $waveNo: drop ids") { dropIds.count() }
-    val acceptedIds = admitted.select("doc_id")
-      .join(dropIds, Seq("doc_id"), "left_anti")
+      .union(layout.probe(screen.rows, st))
+      .distinct().localCheckpoint(eager = false)
+    // drop ids are admitted (never blocked) and wave ids are unique,
+    // so |accepted| = |live| − |blocked| − |dropIds| with no second
+    // content-carrying pass
+    val nAccepted = nLive - nBlocked - step("drop ids") { dropIds.count() }
 
-    // state grows by every decoded admitted signature (dropped or not)
-    labeled(spark, s"media wave $waveNo: state append") {
-      Incremental.appendHammingState(decoded, "doc_id", "sig", st.sigTable,
-        st.maxHamming, st.numBuckets, signer = Some(signerName))
-    }
-
-    val accepted = live.join(acceptedIds, Seq("doc_id"), "left_semi")
-    labeled(spark, s"media wave $waveNo: gold append") {
-      accepted.withColumn("ingest_wave", lit(waveNo))
+    // state grows by every decoded admitted signature (dropped or not),
+    // strictly before gold
+    step("state append") { layout.append(screen.rows, st) }
+    step("gold append") {
+      screen.keep(live, dropIds).withColumn("ingest_wave", lit(waveNo))
         .write.mode(SaveMode.Append).partitionBy("ingest_wave")
         .parquet(st.goldPath)
     }
     val goldTotal =
       if (goldHasData(spark, st.goldPath))
-        labeled(spark, s"media wave $waveNo: gold count") {
-          spark.read.parquet(st.goldPath).count() }
+        step("gold count") { spark.read.parquet(st.goldPath).count() }
       else 0L
     MediaWaveReport(waveNo, incoming, nLive, nDecoded, nBlocked, nAccepted,
       goldTotal)
   }
 
   /** Media takedown: tombstones gate later waves, gold rewrites
-    * blue/green without the ids, and the id-carrying signature state
-    * compacts — the retracted media can no longer suppress future
-    * near-duplicates (content-level forgetting, not just removal).
-    * Caveat shared with the text loop's digest state: signatures of
-    * documents DROPPED as the retracted doc's duplicates stay in the
-    * state (seen-not-kept), so content near THOSE still rejects —
-    * conservative direction; rebuild the state from retained gold
-    * when retraction must readmit a whole near-dup cluster. */
+    * blue/green without the ids, and the signature state drops the
+    * ids' rows, so retracted media stop suppressing near-duplicates.
+    * Signatures of items DROPPED as their duplicates stay
+    * (seen-not-kept, the conservative direction) until
+    * [[rebuildMediaState]]. */
   def applyMediaTakedown(spark: SparkSession, st: MediaState,
-      ids: DataFrame): MediaState = {
+      ids: DataFrame): MediaState =
+    hammingTakedown(spark, flat(), st, ids)
+
+  /** [[applyMediaTakedown]] over the positional clip state. */
+  def applyVideoTakedown(spark: SparkSession, st: VideoState,
+      ids: DataFrame): VideoState =
+    hammingTakedown(spark, positional(st.minFrames, st.everyNth), st, ids)
+
+  private def hammingTakedown[S <: HammingState[S]](spark: SparkSession,
+      layout: HammingLayout, st: S, ids: DataFrame): S = {
     val hadGold = goldHasData(spark, st.goldPath)
-    val next = st.copy(version = st.version + 1,
-      goldVersion = st.goldVersion + (if (hadGold) 1 else 0))
-    // banded-state retraction is REMAP-AWARE (the video loop's
-    // contract, signature-family form): retracting a kept id with
-    // live signature twins re-elects the min twin instead of
-    // deleting the only rows suppressing that content
+    val next = st.bumped(gold = hadGold)
     Incremental.appendTombstones(ids, ids.columns.head,
       spark.table(st.tombTable), st.tombTable, st.numBuckets)
-    Incremental.retractBandedHammingIds(spark, st.sigTable,
-      next.sigTable, s"${st.dir}/hsigs_v${next.version}",
-      spark.table(st.tombTable), st.numBuckets)
+    layout.retract(spark, st, next)
     if (hadGold)
       rewriteGoldRetained(spark, st.dir, st.goldPath, next.goldPath,
         st.goldVersion, st.tombTable)
     next
   }
 
-  /** Seed schemas shared by the init and rebuild paths of each state
-    * family — ONE definition per family, or a type drift between the
-    * two writers would split the bucketBy layout. */
-  private def emptyMediaSigs(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("doc_id"), col("id").as("sig"))
-  private def emptyFrameSigs(spark: SparkSession): DataFrame =
-    spark.range(0).select(col("id").as("doc_id"),
-      col("id").cast("int").as("frame_pos"), col("id").as("dhash"))
-
   /** Rebuild the media Hamming state from RETAINED GOLD — the
-    * mechanized form of the seen-not-kept residual
-    * ([[rebuildDigestState]]'s shape for signatures): an item dropped
-    * as a retracted item's duplicate left its signature in state
-    * (takedown compaction removes only the retracted ids' OWN rows),
-    * so near-copies of fully-retracted content stay rejected forever.
-    * One signer pass over gold content (corpus-sized, at the
-    * operator's own cadence), written under a bumped blue/green state
-    * version. The rebuilt state anchors suppression to GOLD only:
-    * chain-dropped signatures (seen-not-kept) vanish, so the strict
-    * wave ≡ batch equivalence is re-baselined at the rebuild — the
-    * documented trade for content-level forgetting. Gold rows must
-    * still carry the content column the signer reads — and the signer
-    * is REQUIRED (no image default, unlike the per-wave calls): a
-    * wrong-modality rebuild decodes nothing and would silently write
-    * an empty state, disarming every later probe; the wave report
-    * surfaces that mistake immediately, a rebuild would not. */
+    * seen-not-kept residual's fix ([[rebuildDigestState]]'s shape): a
+    * signature dropped as a retracted item's duplicate otherwise
+    * rejects near-copies of fully-retracted content forever. One
+    * signer pass over gold content under a bumped state version;
+    * chain-dropped signatures vanish, so wave ≡ batch equivalence
+    * re-baselines here. The signer is REQUIRED (no image default): a
+    * wrong-modality rebuild decodes nothing and would silently write an
+    * empty state, disarming every later probe. */
   def rebuildMediaState(spark: SparkSession, st: MediaState,
       signer: DataFrame => DataFrame,
-      signerName: String): MediaState = {
-    // the guard this function exists for: a wrong-but-still-decoding
-    // signer would write incomparable signatures every later probe
-    // silently fails against — refuse BEFORE the decode pass
-    Incremental.requireSigner(spark.table(st.sigTable), signerName,
-      "rebuildMediaState")
-    val next = st.copy(version = st.version + 1)
+      signerName: String): MediaState =
+    rebuildHamming(spark, flat(signer, signerName), st)
+
+  /** [[rebuildMediaState]] for clips, on the state's own sampling grid. */
+  def rebuildVideoState(spark: SparkSession, st: VideoState): VideoState =
+    rebuildHamming(spark, positional(st.minFrames, st.everyNth), st)
+
+  private def rebuildHamming[S <: HammingState[S]](spark: SparkSession,
+      layout: HammingLayout, st: S): S = {
+    val caller = s"rebuild${layout.tag.capitalize}State"
+    // a wrong-but-decoding signer would write signatures every later
+    // probe silently misses — refuse BEFORE the decode pass
+    Incremental.requireSigner(spark.table(st.sigTable), layout.signerName,
+      caller)
+    val next = st.bumped(gold = false)
     val sigs =
       if (goldHasData(spark, st.goldPath)) {
-        val out = signer(spark.read.parquet(st.goldPath))
-          .filter(col("decoded")).select("doc_id", "sig")
-          .localCheckpoint(true)
-        if (out.isEmpty)
-          // legal (a quarantine-only gold decodes nothing) but almost
-          // always a wrong-signer mistake — say so, loudly
-          System.err.println("[graft] rebuildMediaState: gold has rows " +
-            s"but the signer decoded NONE — wrong modality signer for " +
-            s"${st.goldPath}? The rebuilt state suppresses nothing.")
-        out
-      } else emptyMediaSigs(spark)
-    Incremental.writeHammingState(sigs, "doc_id", "sig", next.sigTable,
-      s"${st.dir}/hsigs_v${next.version}", st.maxHamming, st.numBuckets,
-      signer = Some(signerName))
+        val out = layout.sign(spark.read.parquet(st.goldPath))
+          .filter(layout.decoded)
+        if (!layout.callerSigner) out
+        else {
+          val kept = out.localCheckpoint(true)
+          if (kept.isEmpty)
+            // legal (a quarantine-only gold decodes nothing) but almost
+            // always a wrong-signer mistake — say so, loudly
+            System.err.println(s"[graft] $caller: gold has rows but the " +
+              "signer decoded NONE — wrong modality signer for " +
+              s"${st.goldPath}? The rebuilt state suppresses nothing.")
+          kept
+        }
+      } else emptySigs(spark, layout)
+    layout.write(sigs, next)
+    next
+  }
+
+  def compactMediaSigs(spark: SparkSession, st: MediaState): MediaState =
+    compactHamming(spark, flat(), st)
+
+  def compactVideoSigs(spark: SparkSession, st: VideoState): VideoState =
+    compactHamming(spark, positional(st.minFrames, st.everyNth), st)
+
+  private def compactHamming[S <: HammingState[S]](spark: SparkSession,
+      layout: HammingLayout, st: S): S = {
+    val next = st.bumped(gold = false)
+    // carry the dropped-id → representative remap across versions so
+    // a LATER takedown of a representative re-elects a surviving twin
+    val prior = Some(s"${st.sigTable}_remap")
+      .filter(spark.catalog.tableExists).map(spark.table)
+    layout.compact(spark.table(st.sigTable), next, prior)
     next
   }
 
@@ -801,18 +881,29 @@ object IngestCli {
     * the chain shape is inherent to the id-ordered contract). */
   def batchMediaEquivalent(corpus: DataFrame, maxHamming: Int = 8,
       signer: DataFrame => DataFrame = defaultImageSigner,
-      blocklist: Option[Dedup.HammingIndex] = None): DataFrame = {
-    val sigs = signer(corpus).select(col("doc_id"), col("decoded"), col("sig"))
-    val admitted = blocklist match {
-      case Some(idx) =>
-        sigs.filter(col("sig").isNull || !Dedup.hammingNearSet(col("sig"), idx))
-      case None => sigs
-    }
-    val decoded = admitted.filter(col("decoded"))
-    val dropIds = Dedup.hammingNearDupPairs(decoded, "doc_id", "sig", maxHamming)
-      .select(col("id_b").as("doc_id")).distinct()
-    corpus.join(admitted.select("doc_id"), Seq("doc_id"), "left_semi")
-      .join(dropIds, Seq("doc_id"), "left_anti")
+      blocklist: Option[Dedup.HammingIndex] = None): DataFrame =
+    hammingBatch(flat(signer), corpus, maxHamming, blocklist)
+
+  /** [[batchMediaEquivalent]] for clips: a clip drops when it matches a
+    * LOWER-id admitted decoded clip on ≥ `minFrames` sampled positions. */
+  def batchVideoEquivalent(corpus: DataFrame, maxHamming: Int = 8,
+      minFrames: Int = 2, everyNth: Int = 2,
+      blocklist: Option[Dedup.HammingIndex] = None): DataFrame =
+    hammingBatch(positional(minFrames, everyNth), corpus, maxHamming,
+      blocklist)
+
+  private def hammingBatch(layout: HammingLayout, corpus: DataFrame,
+      maxHamming: Int, blocklist: Option[Dedup.HammingIndex]): DataFrame = {
+    // its own blocklist and keep joins, not the wave's screen: this is
+    // the reference the wave loop is checked against
+    val sigs = layout.sign(corpus)
+    val blocked = blocklist.map(idx => sigs.filter(layout.sig.isNotNull &&
+      Dedup.hammingNearSet(layout.sig, idx)).select("doc_id").distinct())
+    def unblocked(df: DataFrame) =
+      blocked.fold(df)(df.join(_, Seq("doc_id"), "left_anti"))
+    val dropIds = layout.pairs(unblocked(sigs.filter(layout.decoded)),
+        maxHamming).select(col("id_b").as("doc_id")).distinct()
+    unblocked(corpus).join(dropIds, Seq("doc_id"), "left_anti")
   }
 
   /** The stock image signer (dHash over decoded stills) — the default
@@ -822,223 +913,8 @@ object IngestCli {
     operators.Images.imageSignatures(df, "doc_id", col("content"))
       .select(col("doc_id"), col("decoded"), col("dhash").as("sig"))
 
-  // --------------------------------------------------------------
-  // The VIDEO wave loop: recurring clip ingestion over the persisted
-  // POSITIONAL Hamming state (q147's layout) — a clip is its
-  // per-sampled-position frame signatures, and two clips match when
-  // ≥ minFrames positions are pairwise within the budget. Composition
-  // mirrors the media loop; the blocklist gate is CROSS-MODAL by
-  // construction: frames share the image dHash identity, so a
-  // blocklist of flagged IMAGE signatures blocks every clip ANY of
-  // whose sampled frames is within the budget of a flagged still —
-  // near-copies of flagged content (re-encodes, light edits) are
-  // blocked too, which is what an enforcement gate wants.
-  //
-  // Equivalence contract (IngestSpec): with waves arriving in id
-  // order, gold after any number of waves IS [[batchVideoEquivalent]]
-  // over the union — unconditional (positional pigeonhole pairs are
-  // exact). Undecodable clips pass (nothing provable) and never enter
-  // state; blocked clips never enter gold OR state.
-  //
-  // 100 TB shape: decode is the wave-sized mapPartitions scan (the
-  // dominant linear cost; `everyNth` is the knob), the blocklist
-  // rides map-side in codegen over 16 B/frame rows, the state probe
-  // shuffles only the wave's banded frames (state bucket-aligned,
-  // plan-asserted in IncrementalSpec), appends are wave-sized
-  // bucketed writes. Nothing re-reads previously ingested clip bytes.
-  // --------------------------------------------------------------
-
-  final case class VideoState(ns: String, dir: String, numBuckets: Int,
-      maxHamming: Int, minFrames: Int, everyNth: Int, version: Int = 0,
-      goldVersion: Int = 0) {
-    def sigTable: String = s"${ns}_fsigs_v$version"
-    def tombTable: String = s"${ns}_tombstones"
-    def goldPath: String = s"$dir/gold_v$goldVersion"
-  }
-
-  /** Fresh video state: empty positional Hamming-signature and
-    * tombstone tables, clean gold dir. `(maxHamming, minFrames,
-    * everyNth)` fix the match contract AND the sampling grid for the
-    * state's whole life — a stride change renumbers positions, like
-    * re-shingling a MinHash corpus. */
-  def initVideoState(spark: SparkSession, ns: String, dir: String,
-      maxHamming: Int = 8, minFrames: Int = 2, everyNth: Int = 2,
-      numBuckets: Int = 8): VideoState = {
-    val st = VideoState(ns, dir, numBuckets, maxHamming, minFrames, everyNth)
-    Seq(st.sigTable, st.tombTable)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    val empty = emptyFrameSigs(spark)
-    Incremental.writeFrameHammingState(empty, "doc_id", "dhash",
-      st.sigTable, s"$dir/fsigs_v0", maxHamming, numBuckets,
-      everyNth = everyNth, signer = Some(VideoSignerName))
-    Incremental.writeTombstones(empty.select("doc_id"), "doc_id",
-      st.tombTable, s"$dir/tombstones", numBuckets)
-    resetGold(spark, dir)
-    st
-  }
-
-  /** One video wave. `wave` needs (doc_id, content binary AVI); extra
-    * columns ride to gold. `blocklist` = flagged IMAGE signatures —
-    * a clip is blocked when ANY sampled frame is within the index's
-    * budget of a flagged still (cross-modal enforcement). */
-  def ingestVideoWave(spark: SparkSession, st: VideoState, wave: DataFrame,
-      waveNo: Int,
-      blocklist: Option[Dedup.HammingIndex] = None): MediaWaveReport = {
-    val tombs = spark.table(st.tombTable)
-    val live = Incremental.retractIds(wave, "doc_id", tombs)
-
-    // decode once per wave: (doc_id, frame_pos, dhash) — 16 B/frame;
-    // clip bytes never travel past this scan. Lazy local checkpoint:
-    // the decoded-clip count below materializes the blocks, so
-    // decode+materialize+count is ONE job. The audit aggregation
-    // (wave + tombstones only) is independent of the decode — the two
-    // wave scans run concurrently and the cheap audit hides inside
-    // the decode wall (guide §2.6).
-    val sigs = operators.Video.frameSignatures(live, "doc_id",
-        col("content"), st.everyNth)
-      .localCheckpoint(eager = false)
-    val decodedIds = sigs.select("doc_id").distinct()
-    val ((incoming, nLive, _), nDecoded) = operators.Actions.par2(
-      labeled(spark, s"video wave $waveNo: audit counts") {
-        waveAuditCounts(wave, tombs, None) },
-      labeled(spark, s"video wave $waveNo: decode + count") {
-        decodedIds.count() })
-
-    // cross-modal blocklist: ANY flagged sampled frame blocks the
-    // whole clip — map-side codegen per frame row, one tiny distinct.
-    // No blocklist ⇒ no blocked ids, no job spent proving it.
-    val blockedIds = blocklist match {
-      case Some(idx) =>
-        sigs.filter(Dedup.hammingNearSet(col("dhash"), idx))
-          .select("doc_id").distinct().localCheckpoint(eager = false)
-      case None => spark.range(0).select(col("id").as("doc_id"))
-    }
-    val nBlocked = if (blocklist.isDefined) blockedIds.count() else 0L
-    val admitted = sigs.join(blockedIds, Seq("doc_id"), "left_anti")
-
-    // in-wave and against-state drops over the SAME admitted input,
-    // unioned — the seen-not-kept contract, exactly as the text and
-    // media loops
-    val inWaveDups = operators.Video.clipNearDupPairs(admitted, "doc_id",
-        st.maxHamming, st.minFrames)
-      .select(col("id_b").as("doc_id"))
-    val stateDups = Incremental.frameHammingDupIdsAgainstTable(admitted,
-      "doc_id", "dhash", spark.table(st.sigTable), st.maxHamming,
-      st.minFrames, everyNth = st.everyNth,
-      signer = Some(VideoSignerName))
-    val dropIds = inWaveDups.union(stateDups).distinct()
-      .localCheckpoint(eager = false)
-    // drop ids are ADMITTED DECODED clip ids, blocked ids are DECODED
-    // live ids, the two are disjoint (drops enumerate post-blocklist
-    // rows), and wave ids are unique (the loop's documented
-    // contract) — so |accepted| = |live| − |blocked| − |dropIds| and
-    // the survivors need no second content-carrying pass to count
-    val nAccepted = nLive - nBlocked -
-      labeled(spark, s"video wave $waveNo: drop ids") { dropIds.count() }
-
-    // state grows by every admitted decoded clip's frames (dropped or
-    // not); blocked clips never enter state
-    labeled(spark, s"video wave $waveNo: state append") {
-      Incremental.appendFrameHammingState(admitted, "doc_id", "dhash",
-        st.sigTable, st.maxHamming, st.numBuckets,
-        everyNth = st.everyNth, signer = Some(VideoSignerName))
-    }
-
-    val accepted = live
-      .join(blockedIds, Seq("doc_id"), "left_anti")
-      .join(dropIds, Seq("doc_id"), "left_anti")
-    labeled(spark, s"video wave $waveNo: gold append") {
-      accepted.withColumn("ingest_wave", lit(waveNo))
-        .write.mode(SaveMode.Append).partitionBy("ingest_wave")
-        .parquet(st.goldPath)
-    }
-    val goldTotal =
-      if (goldHasData(spark, st.goldPath))
-        labeled(spark, s"video wave $waveNo: gold count") {
-          spark.read.parquet(st.goldPath).count() }
-      else 0L
-    MediaWaveReport(waveNo, incoming, nLive, nDecoded, nBlocked, nAccepted,
-      goldTotal)
-  }
-
-  /** Video takedown: tombstones gate later waves, gold rewrites
-    * blue/green, and the id-carrying positional state compacts — the
-    * retracted clip's frames stop suppressing future near-duplicates.
-    * Seen-not-kept caveat shared with the other loops: frames of
-    * clips DROPPED as the retracted clip's duplicates remain. */
-  def applyVideoTakedown(spark: SparkSession, st: VideoState,
-      ids: DataFrame): VideoState = {
-    val hadGold = goldHasData(spark, st.goldPath)
-    val next = st.copy(version = st.version + 1,
-      goldVersion = st.goldVersion + (if (hadGold) 1 else 0))
-    // positional state retraction is REMAP-AWARE: when compaction
-    // collapsed a duplicate-clip family, retracting its kept
-    // representative re-elects the min surviving twin instead of
-    // silently deleting the family's only rows while twins are still
-    // live corpus members (retractFrameHammingIds; states never
-    // compacted degrade to the plain physical delete)
-    Incremental.appendTombstones(ids, ids.columns.head,
-      spark.table(st.tombTable), st.tombTable, st.numBuckets)
-    Incremental.retractFrameHammingIds(spark, st.sigTable,
-      next.sigTable, s"${st.dir}/fsigs_v${next.version}",
-      spark.table(st.tombTable), st.numBuckets)
-    if (hadGold)
-      rewriteGoldRetained(spark, st.dir, st.goldPath, next.goldPath,
-        st.goldVersion, st.tombTable)
-    next
-  }
-
-  /** Rebuild the positional video state from RETAINED GOLD —
-    * [[rebuildMediaState]]'s shape for clips: one decode pass over
-    * gold content (`everyNth` from the state's own contract — the
-    * grid is layout identity), written under a bumped blue/green
-    * version. Chain-dropped clips' frames (seen-not-kept) vanish, so
-    * near-copies of fully-retracted clips become re-admittable and
-    * the wave ≡ batch equivalence re-baselines at the rebuild. */
-  def rebuildVideoState(spark: SparkSession, st: VideoState): VideoState = {
-    Incremental.requireSigner(spark.table(st.sigTable), VideoSignerName,
-      "rebuildVideoState")
-    val next = st.copy(version = st.version + 1)
-    val sigs =
-      if (goldHasData(spark, st.goldPath))
-        operators.Video.frameSignatures(spark.read.parquet(st.goldPath),
-          "doc_id", col("content"), st.everyNth)
-      else emptyFrameSigs(spark)
-    Incremental.writeFrameHammingState(sigs, "doc_id", "dhash",
-      next.sigTable, s"${st.dir}/fsigs_v${next.version}", st.maxHamming,
-      st.numBuckets, everyNth = st.everyNth,
-      signer = Some(VideoSignerName))
-    next
-  }
-
-  /** The from-scratch video batch the wave loop must equal over the
-    * union of its waves: sign → cross-modal blocklist gate → drop
-    * every clip matching a LOWER-id admitted decoded clip on
-    * ≥ `minFrames` sampled positions (kept or dropped). */
-  def batchVideoEquivalent(corpus: DataFrame, maxHamming: Int = 8,
-      minFrames: Int = 2, everyNth: Int = 2,
-      blocklist: Option[Dedup.HammingIndex] = None): DataFrame = {
-    val sigs = operators.Video.frameSignatures(corpus, "doc_id",
-      col("content"), everyNth)
-    val blockedIds = blocklist match {
-      case Some(idx) =>
-        sigs.filter(Dedup.hammingNearSet(col("dhash"), idx))
-          .select("doc_id").distinct()
-      case None =>
-        corpus.sparkSession.range(0).select(col("id").as("doc_id"))
-    }
-    val admitted = sigs.join(blockedIds, Seq("doc_id"), "left_anti")
-    val dropIds = operators.Video.clipNearDupPairs(admitted, "doc_id",
-        maxHamming, minFrames)
-      .select(col("id_b").as("doc_id")).distinct()
-    corpus
-      .join(blockedIds, Seq("doc_id"), "left_anti")
-      .join(dropIds, Seq("doc_id"), "left_anti")
-  }
-
   private def fsFor(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The TEXT loop main drives — separated from session lifecycle so
     * IngestSpec exercises the exact CLI code path. */
@@ -1063,8 +939,7 @@ object IngestCli {
       // wave look like the corpus we promoted so far?"
       if (driftCols.nonEmpty || driftTokens > 0)
         waveDrift(spark, st, wave, driftCols, i, driftTokens)
-      val r = ingestWave(spark, st, wave, i, cfg,
-        gate)
+      val r = ingestWave(spark, st, wave, i, cfg, gate)
       println(s"[ingest] wave=${r.wave} incoming=${r.incoming} " +
         s"live=${r.live} gated=${r.gated} exact=${r.exactSurvivors} " +
         s"accepted=${r.accepted} gold=${r.goldTotal}")
@@ -1156,9 +1031,9 @@ object IngestCli {
       ns: String = "graft_ingest_media",
       compaction: CompactionPolicy = CompactionPolicy(),
       driftCols: Seq[String] = Nil, driftTokens: Int = 0): Unit = {
-    val (signer: (DataFrame => DataFrame), signerName: String) = mode match {
-      case "image" => (defaultImageSigner _, ImageSignerName)
-      case "audio" => ((df: DataFrame) =>
+    val layout = mode match {
+      case "image" => flat()
+      case "audio" => flat((df: DataFrame) =>
         operators.Audio.audioSignatures(df, "doc_id", col("content"))
           .select(col("doc_id"), col("decoded"), col("ehash").as("sig")),
         AudioSignerName)
@@ -1166,48 +1041,9 @@ object IngestCli {
         s"GRAFT_MEDIA=$other (want image|audio — video routes through " +
           "runVideo and its positional state)")
     }
-    val blocklist = loadBlocklist(spark, blocklistPath, maxHamming)
-    var st = initMediaState(spark, ns, dir, maxHamming,
-      signerName = signerName)
-    takedownPath.foreach { p =>
-      st = applyMediaTakedown(spark, st,
-        spark.read.parquet(p).select("doc_id"))
-    }
-    val clock = new CompactionClock(compaction)
-    driveWaves(spark, "ingest-media", wavePaths, (w, i) => {
-      // drift BEFORE ingesting, as the text loop: "does this wave look
-      // like the corpus we promoted so far?"
-      if (driftCols.nonEmpty || driftTokens > 0)
-        waveDriftAt(spark, st.goldPath, st.dir, w, driftCols, i,
-          driftTokens, tag = "ingest-media")
-      val r = ingestMediaWave(spark, st, w, i, signer, blocklist,
-        signerName)
-      if (clock.record(r.decoded)) {
-        st = compactMediaSigs(spark, st)
-        clock.reset(spark.table(st.sigTable)
-          .select("doc_id").distinct().count())
-        println(s"[ingest-media] compacted signature state -> ${st.sigTable}")
-      }
-      r
-    })
+    runHamming(spark, layout, MediaState(ns, dir, 8, maxHamming), wavePaths,
+      blocklistPath, takedownPath, compaction, driftCols, driftTokens)
   }
-
-  private def loadBlocklist(spark: SparkSession, path: Option[String],
-      maxHamming: Int): Option[Dedup.HammingIndex] =
-    path.map(p => Dedup.hammingIndex(spark.read.parquet(p), "sig",
-      maxHamming))
-
-  /** Shared CLI wave loop for the media/video modes: read each staged
-    * wave, ingest, report one line. */
-  private def driveWaves(spark: SparkSession, tag: String,
-      wavePaths: Seq[String],
-      ingest: (DataFrame, Int) => MediaWaveReport): Unit =
-    wavePaths.zipWithIndex.foreach { case (path, i) =>
-      val r = ingest(spark.read.parquet(path), i)
-      println(s"[$tag] wave=${r.wave} incoming=${r.incoming} " +
-        s"live=${r.live} decoded=${r.decoded} blocked=${r.blocked} " +
-        s"accepted=${r.accepted} gold=${r.goldTotal}")
-    }
 
   /** The VIDEO loop (`GRAFT_MEDIA=video`): clip waves through the
     * positional Hamming state; `GRAFT_BLOCKLIST` = parquet of flagged
@@ -1219,28 +1055,43 @@ object IngestCli {
       maxHamming: Int = 8, minFrames: Int = 2, everyNth: Int = 2,
       ns: String = "graft_ingest_video",
       compaction: CompactionPolicy = CompactionPolicy(),
-      driftCols: Seq[String] = Nil, driftTokens: Int = 0): Unit = {
-    val blocklist = loadBlocklist(spark, blocklistPath, maxHamming)
-    var st = initVideoState(spark, ns, dir, maxHamming,
-      minFrames, everyNth)
-    takedownPath.foreach { p =>
-      st = applyVideoTakedown(spark, st,
-        spark.read.parquet(p).select("doc_id"))
-    }
+      driftCols: Seq[String] = Nil, driftTokens: Int = 0): Unit =
+    runHamming(spark, positional(minFrames, everyNth),
+      VideoState(ns, dir, 8, maxHamming, minFrames, everyNth), wavePaths,
+      blocklistPath, takedownPath, compaction, driftCols, driftTokens)
+
+  /** The CLI loop of [[runMedia]]/[[runVideo]]: init, takedown seeding,
+    * then per wave: drift monitor, ingest, report, compaction when due. */
+  private def runHamming[S <: HammingState[S]](spark: SparkSession,
+      layout: HammingLayout, fresh: S, wavePaths: Seq[String],
+      blocklistPath: Option[String], takedownPath: Option[String],
+      compaction: CompactionPolicy, driftCols: Seq[String],
+      driftTokens: Int): Unit = {
+    val tag = s"ingest-${layout.tag}"
+    val blocklist = blocklistPath.map(p =>
+      Dedup.hammingIndex(spark.read.parquet(p), "sig", fresh.maxHamming))
+    var st = initHamming(spark, layout, fresh)
+    takedownPath.foreach(p => st = hammingTakedown(spark, layout, st,
+      spark.read.parquet(p).select("doc_id")))
     val clock = new CompactionClock(compaction)
-    driveWaves(spark, "ingest-video", wavePaths, (w, i) => {
+    wavePaths.zipWithIndex.foreach { case (path, i) =>
+      val wave = spark.read.parquet(path)
+      // drift BEFORE ingesting, as the text loop: "does this wave look
+      // like the corpus we promoted so far?"
       if (driftCols.nonEmpty || driftTokens > 0)
-        waveDriftAt(spark, st.goldPath, st.dir, w, driftCols, i,
-          driftTokens, tag = "ingest-video")
-      val r = ingestVideoWave(spark, st, w, i, blocklist)
+        waveDriftAt(spark, st.goldPath, st.dir, wave, driftCols, i,
+          driftTokens, tag = tag)
+      val r = hammingWave(spark, layout, st, wave, i, blocklist)
+      println(s"[$tag] wave=${r.wave} incoming=${r.incoming} " +
+        s"live=${r.live} decoded=${r.decoded} blocked=${r.blocked} " +
+        s"accepted=${r.accepted} gold=${r.goldTotal}")
       if (clock.record(r.decoded)) {
-        st = compactVideoSigs(spark, st)
+        st = compactHamming(spark, layout, st)
         clock.reset(spark.table(st.sigTable)
           .select("doc_id").distinct().count())
-        println(s"[ingest-video] compacted signature state -> ${st.sigTable}")
+        println(s"[$tag] compacted signature state -> ${st.sigTable}")
       }
-      r
-    })
+    }
   }
 
   /** The CLUSTER loop (`GRAFT_CLUSTERS=1`): text waves through the
@@ -1553,8 +1404,7 @@ object IngestCli {
         runText(spark, dir, args.drop(1).toSeq,
           sys.env.get("GRAFT_TAKEDOWN"), GraftConfig.fromEnv(),
           ns("text", "graft_ingest"), sys.env.get("GRAFT_EVAL"),
-          driftCols = driftCols,
-          driftTokens = driftTokens)
+          driftCols = driftCols, driftTokens = driftTokens)
     }
     spark.stop()
   }

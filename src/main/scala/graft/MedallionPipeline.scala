@@ -91,39 +91,10 @@ object MedallionPipeline {
       suite: Seq[Quality.QualityCheck] = Quality.corpusSuite(minVolume = 1L),
       tracker: Option[Warehouse.MetricsTracker] = None)
       : (Seq[StageResult], Seq[Quality.CheckResult]) = {
-    run(spark, inGlobs, baseDir, seed, fuzzyThreshold, suite, tracker,
-      graft.operators.Split.defaultRatios)
-  }
-
-  /** [[run]] with the knob set drawn from one validated [[GraftConfig]]
-    * (env-overridable, the reference's Settings pattern) instead of
-    * per-call arguments. Distinct name: Scala forbids two overloads
-    * with default args. */
-  def runConfigured(
-      spark: SparkSession,
-      inGlobs: Seq[String],
-      baseDir: String,
-      cfg: GraftConfig = GraftConfig.fromEnv(),
-      tracker: Option[Warehouse.MetricsTracker] = None)
-      : (Seq[StageResult], Seq[Quality.CheckResult]) =
-    run(spark, inGlobs, baseDir, cfg.seed, cfg.fuzzyThreshold,
-      Quality.corpusSuite(minVolume = cfg.minVolume, maxVolume = cfg.maxVolume),
-      tracker, cfg.normalizedRatios)
-
-  private def run(
-      spark: SparkSession,
-      inGlobs: Seq[String],
-      baseDir: String,
-      seed: Long,
-      fuzzyThreshold: Double,
-      suite: Seq[Quality.QualityCheck],
-      tracker: Option[Warehouse.MetricsTracker],
-      ratios: Seq[(String, Double)])
-      : (Seq[StageResult], Seq[Quality.CheckResult]) = {
     val b = bronze(spark, inGlobs, s"$baseDir/bronze")
     val s = silver(spark, b.path, s"$baseDir/silver").copy(in = b.out)
     val d = diamond(spark, s.path, s"$baseDir/diamond", fuzzyThreshold).copy(in = s.out)
-    val g = gold(spark, d.path, s"$baseDir/gold", seed, ratios).copy(in = d.out)
+    val g = gold(spark, d.path, s"$baseDir/gold", seed).copy(in = d.out)
     val stages = Seq(b, s, d, g)
     val results = Quality.run(spark.read.parquet(g.path), suite)
     tracker.foreach { t =>

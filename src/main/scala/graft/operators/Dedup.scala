@@ -164,6 +164,16 @@ object Dedup {
   private[graft] def minhashSigForTest(tokens: Column, numPerm: Int = 256): Column =
     minhashSig(tokens, numPerm)
 
+  /** The MinHash band key: one `(band, bucket)` struct per band, exploded,
+    * where `bucket` is the xxhash64 of the band's `r` signature slots
+    * (AND within a band, OR across bands). The one definition behind
+    * batch dedup, [[minhashDedupAgainst]] and the persisted text state
+    * ([[Incremental.banded]]) — state rows and their probes must hash
+    * identically. */
+  private[graft] def minhashBandKeys(sig: Column, bands: Int, r: Int): Column =
+    explode(transform(sequence(lit(0), lit(bands - 1)),
+      b => struct(b.as("band"), xxhash64(slice(sig, b * r + 1, lit(r))).as("bucket"))))
+
   /** Banded MinHash LSH dedup — the classic shingle → minhash → band →
     * bucket-join pipeline, built directly on DataFrame ops with the
     * native [[graft.functions.MinHashSig]] expression.
@@ -213,8 +223,7 @@ object Dedup {
     // SMJ-sorted ~1 KB rows (measured 5 GB vs 130 MB on a 150k-doc
     // rehearsal; that exchange dominated the whole operator).
     val banded = withSig.select(col(idCol),
-      explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"), xxhash64(slice(col("__sig"), b * r + 1, lit(r))).as("bucket")))).as("__b"))
+        minhashBandKeys(col("__sig"), bands, r).as("__b"))
       .select(col(idCol), col("__b.band"), col("__b.bucket"))
     val sizes = banded.groupBy(col("band"), col("bucket"))
       .agg(count(lit(1)).as("__bsz"))
@@ -378,8 +387,7 @@ object Dedup {
     // from disk with no exchange at all).
     def banded(sigDf: DataFrame, idC: String, side: String): DataFrame =
       sigDf.select(col(idC).as(s"__id$side"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"), xxhash64(slice(col("__sig"), b * r + 1, lit(r))).as("bucket")))).as("__b"))
+          minhashBandKeys(col("__sig"), bands, r).as("__b"))
         .select(col(s"__id$side"), col("__b.band"), col("__b.bucket"))
     def estJaccard(x: Column, y: Column): Column =
       text.expr2col(graft.functions.SigAgreeCount(

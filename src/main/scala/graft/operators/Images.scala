@@ -113,58 +113,16 @@ object Images {
         new java.util.HashMap()
     }
 
-  /** Per-thread ImageWriter cache keyed by output format — the encode
-    * twin of [[readerCache]].
-    *
-    * `ImageIO.write` re-runs service-registry writer DISCOVERY per
-    * call (`getWriter` → `ServiceRegistry.getServiceProviders`);
-    * thread-dump sampling of the synthetic-corpus stages (q150's
-    * JobProbe run) showed ~3 of every 4 encode samples inside that
-    * discovery rather than the JPEG encode itself — on 32×32 stills
-    * and MJPEG frames the lookup rivals the pixel work, exactly like
-    * the decode side before the reader cache. The writer is looked up
-    * ONCE per thread with the same type-aware call `ImageIO.write`
-    * makes (`ImageIO.getImageWriters(type, fmt)`), then reused with
-    * `setOutput` + `write(img)` — `ImageIO.write`'s own call sequence
-    * (JDK `ImageIO.doWrite`: `setOutput(stream); write(img)`), same
-    * plugin, no write param — so the emitted bytes are BIT-IDENTICAL
-    * (ImagesSpec pins them against a fresh `ImageIO.write` call). A
-    * writer that throws is disposed and dropped, never reused dirty. */
-  private val writerCache =
-    new ThreadLocal[java.util.HashMap[String, javax.imageio.ImageWriter]] {
-      override def initialValue(): java.util.HashMap[String, javax.imageio.ImageWriter] =
-        new java.util.HashMap()
-    }
-
-  /** Encode via the per-thread cached writer; bit-identical to
-    * `ImageIO.write(img, fmt, new MemoryCacheImageOutputStream(bos))`. */
+  /** Encode `img` as `fmt` — `ImageIO.write` on an explicit memory-cache
+    * stream (the default write path spools through an executor temp
+    * file, see [[decodeGray]]). Throws IllegalArgumentException when no
+    * ImageWriter handles `fmt` for this image type (`ImageIO.write`
+    * itself only returns false, which would yield empty bytes). */
   private[graft] def encodeImage(img: BufferedImage, fmt: String): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
-    // explicit memory-cache stream: the default write path spools
-    // through an executor temp file (see decodeGray)
     val mos = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-    val cache = writerCache.get()
-    var writer = cache.get(fmt)
-    if (writer == null) {
-      val it = javax.imageio.ImageIO.getImageWriters(
-        javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img), fmt)
-      require(it.hasNext, s"no ImageWriter for format $fmt")
-      writer = it.next()
-      cache.put(fmt, writer)
-    }
-    try {
-      writer.setOutput(mos)
-      writer.write(img)
-    } catch { case e: Throwable =>
-      // never reuse a writer that threw mid-encode — its internal
-      // state may be corrupt; the next call re-creates one
-      cache.remove(fmt)
-      try writer.dispose() catch { case _: Throwable => () }
-      throw e
-    } finally {
-      try writer.setOutput(null) catch { case _: Throwable => () }
-      try mos.close() catch { case _: Throwable => () }
-    }
+    try require(ImageIO.write(img, fmt, mos), s"no ImageWriter for format $fmt")
+    finally mos.close()
     bos.toByteArray
   }
 

@@ -296,16 +296,12 @@ object Incremental {
   }
 
   /** Explode a `(idCol, __sig)` signature frame into banded collision
-    * rows `(band, bucket, idCol, sig)` — `bucket` is the xxhash64 of
-    * the band's `r` signature slots (AND-amplification within a band,
-    * OR across bands; same hashing as [[Dedup.minhashDedupAgainst]]).
+    * rows `(band, bucket, idCol, sig)` keyed by [[Dedup.minhashBandKeys]].
     * Package-visible so the q106 oracle export can materialize the
     * incoming side's banded keying for the DuckDB replay. */
   private[graft] def banded(sigDf: DataFrame, idCol: String, bands: Int, r: Int): DataFrame =
     sigDf.select(col(idCol), col("__sig"),
-        explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => struct(b.as("band"),
-            xxhash64(slice(col("__sig"), b * r + 1, lit(r))).as("bucket")))).as("__b"))
+        Dedup.minhashBandKeys(col("__sig"), bands, r).as("__b"))
       .select(col("__b.band").as("band"), col("__b.bucket").as("bucket"),
         col(idCol), col("__sig").as("sig"))
 

@@ -353,9 +353,8 @@ object Video {
   // ======== deterministic synthetic MJPEG-AVI corpus ========
 
   private def jpegBytes(img: java.awt.image.BufferedImage): Array[Byte] =
-    // per-thread cached writer (Images.encodeImage): ImageIO.write's
-    // per-call writer discovery rivals the encode itself on 32×32
-    // frames; bytes stay bit-identical (ImagesSpec pins both formats)
+    // ImageIO.write on a memory-cache stream (Images.encodeImage); runs
+    // only while rendering the synthetic corpus, never on a decode path
     Images.encodeImage(img, "jpg")
 
   /** A deterministic MJPEG AVI: `nFrames` 32×32 frames; frame f's

@@ -517,15 +517,22 @@ object StreamOps {
     val admitted = unblocked.filter(col("sig").isNull ||
       !graft.operators.Dedup.hammingNearSet(col("sig"), stateIndex))
     if (!dropExactSigDups) admitted
-    else {
-      val decodedRows = admitted.filter(col("sig").isNotNull)
-      val deduped =
-        if (admitted.isStreaming)
-          decodedRows.withWatermark(tsCol, watermarkDelay)
-            .dropDuplicatesWithinWatermark(Seq("sig"))
-        else decodedRows.dropDuplicates(Seq("sig"))
-      deduped.unionByName(admitted.filter(col("sig").isNull))
-    }
+    else dropExactWithinWatermark(admitted, "sig", tsCol, watermarkDelay)
+  }
+
+  /** The exact recrawl drop shared by [[mediaIngestStream]] and
+    * [[videoIngestStream]]: one row per distinct non-null `key` (within
+    * the watermark when streaming); null-key rows (undecodable, hence
+    * unprovable) are exempt and all pass. */
+  private def dropExactWithinWatermark(admitted: DataFrame, key: String,
+      tsCol: String, watermarkDelay: String): DataFrame = {
+    val decodedRows = admitted.filter(col(key).isNotNull)
+    val deduped =
+      if (admitted.isStreaming)
+        decodedRows.withWatermark(tsCol, watermarkDelay)
+          .dropDuplicatesWithinWatermark(Seq(key))
+      else decodedRows.dropDuplicates(Seq(key))
+    deduped.unionByName(admitted.filter(col(key).isNull))
   }
 
   /** Decode + sample + sign a (possibly streaming) video clip in ONE
@@ -638,15 +645,7 @@ object StreamOps {
         row.getSeq[Long](sigI).toArray,
         stateIndex, minFrames))
     if (!dropExactSigDups) admitted
-    else {
-      val decodedRows = admitted.filter(col("clip_sig").isNotNull)
-      val deduped =
-        if (admitted.isStreaming)
-          decodedRows.withWatermark(tsCol, watermarkDelay)
-            .dropDuplicatesWithinWatermark(Seq("clip_sig"))
-        else decodedRows.dropDuplicates(Seq("clip_sig"))
-      deduped.unionByName(admitted.filter(col("clip_sig").isNull))
-    }
+    else dropExactWithinWatermark(admitted, "clip_sig", tsCol, watermarkDelay)
   }
 
   /** Streaming learned-quality gate: keep rows whose Naive-Bayes
