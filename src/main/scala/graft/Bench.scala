@@ -24,8 +24,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(s"local[$cpus]", cpus.toInt)
 
     val tmpOut = java.nio.file.Files.createTempDirectory("graft-bench").toString
     // staged state for a 30x rehearsal runs to gigabytes — repeated

@@ -65,8 +65,11 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
       .config("spark.ui.enabled", "false")
 
-  def get(master: String = "local[*]"): SparkSession = {
-    val spark = builder(master).getOrCreate()
+  /** The engine's session: [[builder]]'s config plus everything the
+    * engine installs on a live session — SQL functions, the optimizer
+    * rules and the NaN-quarantine listener — set once, at build. */
+  def get(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
+    val spark = builder(master, shufflePartitions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerFunctions(spark)
     installOptimizerRules(spark)

@@ -332,13 +332,11 @@ object IngestCli {
       spark.table(st.tombTable), next.sigTable,
       s"${st.dir}/sigs_v${next.version}",
       bucketCols = Seq("band", "bucket"), numBuckets = st.numBuckets)
-    spark.table(st.digestTable)
-      .join(retractKeys, Seq("__d1", "__d2"), "left_anti")
-      .repartition(st.numBuckets, col("__d1"), col("__d2"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(st.numBuckets, "__d1", "__d2").sortBy("__d1", "__d2")
-      .option("path", s"${st.dir}/digests_v${next.digestVersion}")
-      .saveAsTable(next.digestTable)
+    sources.CorpusIO.writeBucketed(
+      spark.table(st.digestTable)
+        .join(retractKeys, Seq("__d1", "__d2"), "left_anti"),
+      next.digestTable, Seq("__d1", "__d2"), st.numBuckets,
+      path = Some(s"${st.dir}/digests_v${next.digestVersion}"))
 
     // gold blue/green: write retained rows beside, then swap dirs.
     // Skipped when no gold data exists; manifest only when data

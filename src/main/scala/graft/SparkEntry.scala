@@ -861,7 +861,6 @@ object SparkEntry {
     // against DuckDB's brute force — the rewrite's exact-output
     // guarantee is oracle-gated like q58's.
     "q67_cosine_join_rewrite" -> { (s, dir) =>
-      GraftSession.installOptimizerRules(s)
       val emb = Tables.embeddings(s, dir)
       val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
       val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
@@ -1044,7 +1043,6 @@ object SparkEntry {
     // guarantee is oracle-gated; JaccardRewriteSpec asserts the plan
     // contains no nested-loop join.
     "q58_jaccard_join_rewrite" -> { (s, dir) =>
-      GraftSession.installOptimizerRules(s)
       val docs = Tables.documents(s, dir)
       val eval = docs.filter(col("doc_id") % 20 === 0)
         .select(col("doc_id").as("eval_id"), col("text").as("eval_text"))
@@ -1182,7 +1180,6 @@ object SparkEntry {
     // (nested loop) with the grid-bucket hash join; output is
     // hash-checked against DuckDB's brute force end to end.
     "q77_range_join_rewrite" -> { (s, dir) =>
-      GraftSession.installOptimizerRules(s)
       s.conf.set("spark.graft.range_join.bucket_width", "150.0")
       val bands = Tables.supplier(s, dir).select(col("s_suppkey"),
         (col("s_acctbal") - 300).as("blo"), (col("s_acctbal") + 300).as("bhi"))
@@ -1734,7 +1731,6 @@ object SparkEntry {
     // oracle-gated like q58/q67/q77. HammingRewriteSpec asserts the
     // plan has no nested loop.
     "q115_hamming_join_rewrite" -> { (s, dir) =>
-      GraftSession.installOptimizerRules(s)
       val docs = Tables.documents(s, dir)
       val sigs = docs.select(col("doc_id"),
         Dedup.simhashSignature(col("text")).as("sig"))

@@ -7,9 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=<regex>: dump just the matching subset (local
     // iteration on new queries without re-running the full sweep).

@@ -291,32 +291,10 @@ object Dedup {
       numPerm: Int = 128,
       bands: Int = 32,
       shingleSize: Int = 3,
-      maxBucketSize: Int = 1024): DataFrame = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    // signatures are the expensive narrow map (numPerm hashes per
-    // shingle); the candidate plan references the signed frame from
-    // several subplans (both self-join sides + the size stats), so
-    // persist it for the duration of the dup-id computation — same
-    // cache-then-localCheckpoint discipline as fuzzyDedup: the dup-id
-    // set (ids only) is materialized eagerly, the cache released, and
-    // the returned anti-join stays lazy.
-    val withSig = signed(df, idCol, textCol, numPerm, shingleSize)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Materialize the cache EAGERLY: the candidate plan fans out into
-      // ~8 independent map stages (band explode sides, bucket-size agg,
-      // star-verify agg) that AQE submits concurrently — against a lazy
-      // cache they all miss and each recomputes the full signature pass
-      // (observable as "Block rdd_N already exists" warnings and an 8×
-      // signature cost). One count() populates the cache first, so the
-      // fan-out reads blocks.
-      withSig.count()
-      val dupIds = candidatesFromSig(withSig, idCol, threshold, numPerm, bands, maxBucketSize)
-        .select(col("id_b").as(idCol)).distinct()
-        .localCheckpoint(true)
-      df.join(dupIds, Seq(idCol), "left_anti")
-    } finally withSig.unpersist(blocking = false)
-  }
+      maxBucketSize: Int = 1024): DataFrame =
+    minhashDedupFromSigs(df, idCol,
+      signed(df, idCol, textCol, numPerm, shingleSize),
+      threshold, numPerm, bands, maxBucketSize)
 
   /** Persistable MinHash signature table `(idCol, __sig)` — compute
     * ONCE per corpus and store as parquet: incremental ingestion then
@@ -341,10 +319,24 @@ object Dedup {
       bands: Int = 32,
       maxBucketSize: Int = 1024): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
+    // signatures are the expensive narrow map (numPerm hashes per
+    // shingle); the candidate plan references the signed frame from
+    // several subplans (both self-join sides + the size stats), so
+    // persist it for the duration of the dup-id computation — same
+    // cache-then-localCheckpoint discipline as fuzzyDedup: the dup-id
+    // set (ids only) is materialized eagerly, the cache released, and
+    // the returned anti-join stays lazy.
     val withSig = sigDf
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      withSig.count() // eager: the candidate plan fans out (see minhashDedup)
+      // Materialize the cache EAGERLY: the candidate plan fans out into
+      // ~8 independent map stages (band explode sides, bucket-size agg,
+      // star-verify agg) that AQE submits concurrently — against a lazy
+      // cache they all miss and each recomputes the full signature pass
+      // (observable as "Block rdd_N already exists" warnings and an 8×
+      // signature cost). One count() populates the cache first, so the
+      // fan-out reads blocks.
+      withSig.count()
       val dupIds = candidatesFromSig(withSig, idCol, threshold, numPerm, bands, maxBucketSize)
         .select(col("id_b").as(idCol)).distinct()
         .localCheckpoint(true)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 import graft.functions.text
+import graft.sources.CorpusIO.writeBucketed
 
 /** Incremental-ingestion state tables, persisted BUCKETED so the
   * recurring "new batch vs corpus" join never shuffles the corpus
@@ -20,7 +21,9 @@ import graft.functions.text
   * the corpus is read bucket-aligned, pre-sorted (`sortBy`), and never
   * re-shuffled. Appending a deduped batch back (`SaveMode.Append`)
   * keeps the bucketing invariant, so state maintenance is also
-  * shuffle-bounded by batch size, not corpus size.
+  * shuffle-bounded by batch size, not corpus size. Every table here
+  * is written through [[graft.sources.CorpusIO.writeBucketed]], which
+  * owns that layout; each writer below supplies only its rows and keys.
   *
   * Digests are 128-bit (two independent `xxhash64` seeds): 8+8 bytes
   * per row of join key vs ~300-byte texts or 64-char hex sha strings —
@@ -32,18 +35,11 @@ object Incremental {
   /** Exact-dedup state: one row per corpus document, keyed by the
     * 128-bit content digest of the NORMALIZED text (same `norm_key`
     * as every exact-dedup path), bucketed + bucket-sorted by the
-    * digest pair. `repartition` on the bucket columns first so each
-    * writer task owns whole buckets — one file per bucket, not
-    * tasks × buckets fragments. */
+    * digest pair. */
   def writeDigestTable(corpus: DataFrame, textCol: Column,
       table: String, path: String, numBuckets: Int = 64): Unit =
-    digests(corpus.select(textCol.as("__t")), col("__t"))
-      .select(col("__d1"), col("__d2"))
-      .repartition(numBuckets, col("__d1"), col("__d2"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "__d1", "__d2").sortBy("__d1", "__d2")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(digestKeys(corpus, textCol), table, Seq("__d1", "__d2"),
+      numBuckets, path = Some(path))
 
   /** Drop every `incoming` row whose normalized text already exists
     * in the persisted corpus digest table (read it with
@@ -62,12 +58,8 @@ object Incremental {
     * `numBuckets` must match [[writeDigestTable]]. */
   def appendDigests(batch: DataFrame, textCol: Column,
       table: String, numBuckets: Int = 64): Unit =
-    digests(batch.select(textCol.as("__t")), col("__t"))
-      .select(col("__d1"), col("__d2"))
-      .repartition(numBuckets, col("__d1"), col("__d2"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, "__d1", "__d2").sortBy("__d1", "__d2")
-      .saveAsTable(table)
+    writeBucketed(digestKeys(batch, textCol), table, Seq("__d1", "__d2"),
+      numBuckets, SaveMode.Append)
 
   /** Release-audit snapshot state: one row per corpus id with its
     * 128-bit content digest ([[Stats.contentDigest]] — the same bytes
@@ -79,12 +71,9 @@ object Incremental {
   def writeSnapshotTable(corpus: DataFrame, idCol: String,
       contentCols: Seq[String], table: String, path: String,
       numBuckets: Int = 64): Unit =
-    corpus.select(col(idCol), Stats.contentDigest(contentCols).as("__oh"))
-      .repartition(numBuckets, col(idCol))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, idCol).sortBy(idCol)
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      corpus.select(col(idCol), Stats.contentDigest(contentCols).as("__oh")),
+      table, Seq(idCol), numBuckets, path = Some(path))
 
   /** [[Stats.snapshotDiff]] of a new corpus version against a
     * persisted [[writeSnapshotTable]] state (read it with
@@ -130,13 +119,10 @@ object Incremental {
       table: String, path: String, numBuckets: Int = 64,
       numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    banded(Dedup.minhashSignatures(corpus, idCol, textCol, numPerm, shingleSize),
-        idCol, bands, numPerm / bands)
-      .repartition(numBuckets, col("band"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      banded(Dedup.minhashSignatures(corpus, idCol, textCol, numPerm, shingleSize),
+        idCol, bands, numPerm / bands),
+      table, Seq("band", "bucket"), numBuckets, path = Some(path))
   }
 
   /** Grow the banded-signature state by a batch with the SAME bucket
@@ -151,12 +137,10 @@ object Incremental {
       textCol: Column, table: String, numBuckets: Int = 64,
       numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    banded(Dedup.minhashSignatures(batch, idCol, textCol, numPerm, shingleSize),
-        idCol, bands, numPerm / bands)
-      .repartition(numBuckets, col("band"), col("bucket"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(table)
+    writeBucketed(
+      banded(Dedup.minhashSignatures(batch, idCol, textCol, numPerm, shingleSize),
+        idCol, bands, numPerm / bands),
+      table, Seq("band", "bucket"), numBuckets, SaveMode.Append)
   }
 
   /** [[Dedup.minhashDedupAgainst]] against a persisted
@@ -222,12 +206,8 @@ object Incremental {
   def writeCellVectors(corpus: DataFrame, idCol: String, vecCol: String,
       table: String, path: String, numBuckets: Int = 64,
       nCells: Int = 256, seed: Long = 42L): Unit =
-    cellKeyed(corpus, idCol, vecCol, nCells, seed)
-      .repartition(numBuckets, col("cell"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(cellKeyed(corpus, idCol, vecCol, nCells, seed), table,
+      Seq("cell"), numBuckets, path = Some(path))
 
   /** Grow the semantic-dedup state by an (already-deduped) batch with
     * the SAME bucket spec, keeping the next probe corpus-shuffle-free.
@@ -235,11 +215,8 @@ object Incremental {
   def appendCellVectors(batch: DataFrame, idCol: String, vecCol: String,
       table: String, numBuckets: Int = 64,
       nCells: Int = 256, seed: Long = 42L): Unit =
-    cellKeyed(batch, idCol, vecCol, nCells, seed)
-      .repartition(numBuckets, col("cell"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, "cell").sortBy("cell")
-      .saveAsTable(table)
+    writeBucketed(cellKeyed(batch, idCol, vecCol, nCells, seed), table,
+      Seq("cell"), numBuckets, SaveMode.Append)
 
   /** [[Dedup.semanticDedup]] against a persisted [[writeCellVectors]]
     * table: drop every incoming row whose cosine to ANY corpus vector
@@ -316,13 +293,10 @@ object Incremental {
     * the `bucketBy` layout exists for. */
   def writeGramTable(corpus: DataFrame, textCol: Column, n: Int,
       table: String, path: String, numBuckets: Int = 64): Unit =
-    gramKeys(corpus.select(textCol.as("__t")), col("__t"), n)
-      .select("__g1", "__g2").distinct()
-      .repartition(numBuckets, col("__g1"), col("__g2"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "__g1", "__g2").sortBy("__g1", "__g2")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      gramKeys(corpus.select(textCol.as("__t")), col("__t"), n)
+        .select("__g1", "__g2").distinct(),
+      table, Seq("__g1", "__g2"), numBuckets, path = Some(path))
 
   /** Per-document novelty of a batch against the persisted seen-gram
     * table: `n_new` counts the doc's distinct grams ABSENT from state
@@ -366,14 +340,12 @@ object Incremental {
     * stays probe-aligned. Shuffle bounded by batch gram count. */
   def appendGrams(batch: DataFrame, textCol: Column, n: Int,
       seenGrams: DataFrame, table: String, numBuckets: Int = 64): Unit =
-    gramKeys(batch.select(textCol.as("__t")), col("__t"), n)
-      .select("__g1", "__g2").distinct()
-      .join(seenGrams.select(col("__g1"), col("__g2")),
-        Seq("__g1", "__g2"), "left_anti")
-      .repartition(numBuckets, col("__g1"), col("__g2"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(numBuckets, "__g1", "__g2").sortBy("__g1", "__g2")
-      .saveAsTable(table)
+    writeBucketed(
+      gramKeys(batch.select(textCol.as("__t")), col("__t"), n)
+        .select("__g1", "__g2").distinct()
+        .join(seenGrams.select(col("__g1"), col("__g2")),
+          Seq("__g1", "__g2"), "left_anti"),
+      table, Seq("__g1", "__g2"), numBuckets, SaveMode.Append)
 
   // ---- Winnowing fingerprint state: recurring overlap detection ---
 
@@ -393,12 +365,8 @@ object Incremental {
       .select(col("fp"), col(idCol).as("corpus_id")).distinct()
     val keep = fp.groupBy("fp").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select("fp")
-    fp.join(keep, Seq("fp"))
-      .repartition(numBuckets, col("fp"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "fp").sortBy("fp")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(fp.join(keep, Seq("fp")), table, Seq("fp"), numBuckets,
+      path = Some(path))
   }
 
   /** Which corpus documents does each batch document near-verbatim
@@ -434,14 +402,12 @@ object Incremental {
   def appendFingerprints(batch: DataFrame, idCol: String,
       textCol: Column, fpTable: DataFrame, table: String,
       k: Int = 4, w: Int = 4, numBuckets: Int = 64): Unit =
-    Winnow.fingerprints(batch, idCol, textCol, k, w)
-      .select(col("fp"), col(idCol).as("corpus_id")).distinct()
-      .join(fpTable.select(col("fp"), col("corpus_id")),
-        Seq("fp", "corpus_id"), "left_anti")
-      .repartition(numBuckets, col("fp"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(numBuckets, "fp").sortBy("fp")
-      .saveAsTable(table)
+    writeBucketed(
+      Winnow.fingerprints(batch, idCol, textCol, k, w)
+        .select(col("fp"), col(idCol).as("corpus_id")).distinct()
+        .join(fpTable.select(col("fp"), col("corpus_id")),
+          Seq("fp", "corpus_id"), "left_anti"),
+      table, Seq("fp"), numBuckets, SaveMode.Append)
 
   /** The corpus fingerprint set as a broadcastable Bloom, CARRYING
     * the (k, w) it was hashed with so a consumer can never probe it
@@ -527,13 +493,10 @@ object Incremental {
   def writeNbCounts(docs: DataFrame, textCol: Column, labelCol: Column,
       table: String, path: String, numBuckets: Int = 64,
       batchId: String = null): Unit =
-    Classifier.tokenClassCounts(docs, textCol, labelCol)
-      .withColumn("batch_id", lit(batchId).cast("string"))
-      .repartition(numBuckets, col("token"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "token").sortBy("token")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      Classifier.tokenClassCounts(docs, textCol, labelCol)
+        .withColumn("batch_id", lit(batchId).cast("string")),
+      table, Seq("token"), numBuckets, path = Some(path))
 
   /** Grow the NB count log by one labeled batch — same bucket spec as
     * [[writeNbCounts]]. Returns true when the batch was applied,
@@ -543,13 +506,11 @@ object Incremental {
       batchId: String = null): Boolean = {
     if (batchAlreadyApplied(batch.sparkSession, table, batchId))
       return false
-    alignToLedgerSchema(batch.sparkSession, table,
-      Classifier.tokenClassCounts(batch, textCol, labelCol)
-        .withColumn("batch_id", lit(batchId).cast("string")))
-      .repartition(numBuckets, col("token"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, "token").sortBy("token")
-      .saveAsTable(table)
+    writeBucketed(
+      alignToLedgerSchema(batch.sparkSession, table,
+        Classifier.tokenClassCounts(batch, textCol, labelCol)
+          .withColumn("batch_id", lit(batchId).cast("string"))),
+      table, Seq("token"), numBuckets, SaveMode.Append)
     true
   }
 
@@ -622,12 +583,7 @@ object Incremental {
         folded0.withColumn("batch_id", lit(null).cast("string"))
           .unionByName(markers)
       } else folded0
-    folded
-      .repartition(numBuckets, col("token"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "token").sortBy("token")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(folded, table, Seq("token"), numBuckets, path = Some(path))
   }
 
   // ---- Retrieval-index state: incremental BM25 --------------------
@@ -659,22 +615,15 @@ object Incremental {
     * retraction volume starts to matter for ranking. */
   def writePostings(corpus: DataFrame, idCol: String, textCol: Column,
       table: String, path: String, numBuckets: Int = 64): Unit =
-    postingRows(corpus, idCol, textCol)
-      .repartition(numBuckets, col("term"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(postingRows(corpus, idCol, textCol), table, Seq("term"),
+      numBuckets, path = Some(path))
 
   /** Grow the posting state by one batch of NEW documents — same
     * bucket spec as [[writePostings]]; see the new-ids contract there. */
   def appendPostings(batch: DataFrame, idCol: String, textCol: Column,
       table: String, numBuckets: Int = 64): Unit =
-    postingRows(batch, idCol, textCol)
-      .repartition(numBuckets, col("term"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, "term").sortBy("term")
-      .saveAsTable(table)
+    writeBucketed(postingRows(batch, idCol, textCol), table, Seq("term"),
+      numBuckets, SaveMode.Append)
 
   /** Corpus-stats side of the index: an append-only ONE-ROW-PER-BATCH
     * log `(n_docs, sum_dl, batch_id)` — the mergeable form of BM25's
@@ -686,10 +635,10 @@ object Incremental {
     * no-ops instead of inflating N/avgdl. */
   def writeIndexStats(corpus: DataFrame, textCol: Column,
       table: String, path: String, batchId: String = null): Unit =
-    indexStatsRow(corpus, textCol)
-      .withColumn("batch_id", lit(batchId).cast("string"))
-      .write.mode(SaveMode.Overwrite).option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      indexStatsRow(corpus, textCol)
+        .withColumn("batch_id", lit(batchId).cast("string")),
+      table, Nil, 0, path = Some(path))
 
   /** Append one batch's `(n_docs, sum_dl)` row — same exactly-once
     * mechanism as [[appendNbCounts]]: returns false (no write) when
@@ -700,11 +649,11 @@ object Incremental {
       table: String, batchId: String = null): Boolean = {
     if (batchAlreadyApplied(batch.sparkSession, table, batchId))
       return false
-    alignToLedgerSchema(batch.sparkSession, table,
-      indexStatsRow(batch, textCol)
-        .withColumn("batch_id", lit(batchId).cast("string")))
-      .write.mode(SaveMode.Append).format("parquet")
-      .saveAsTable(table)
+    writeBucketed(
+      alignToLedgerSchema(batch.sparkSession, table,
+        indexStatsRow(batch, textCol)
+          .withColumn("batch_id", lit(batchId).cast("string"))),
+      table, Nil, 0, SaveMode.Append)
     true
   }
 
@@ -749,9 +698,7 @@ object Incremental {
           .select(lit(0L).as("n_docs"), lit(0L).as("sum_dl"),
             col("batch_id"))))
       .getOrElse(fresh)
-    out
-      .write.mode(SaveMode.Overwrite).option("path", path)
-      .saveAsTable(table)
+    writeBucketed(out, table, Nil, 0, path = Some(path))
   }
 
   /** Rebuild the winnowing fingerprint state with its `maxDf` cap
@@ -778,12 +725,8 @@ object Incremental {
         fpTable.columns.mkString(","))
     val keep = fpTable.groupBy("fp").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select("fp")
-    fpTable.join(keep, Seq("fp"))
-      .repartition(numBuckets, col("fp"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "fp").sortBy("fp")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(fpTable.join(keep, Seq("fp")), table, Seq("fp"),
+      numBuckets, path = Some(path))
   }
 
   /** FULL-FIDELITY fingerprint rebuild: re-winnow the RETAINED corpus
@@ -926,16 +869,11 @@ object Incremental {
           corpus.schema(idCol).dataType, maxHamming, nb, grid, sharded,
           signer))(
       (m, k) => m.withColumn(k, lit(null).cast(corpus.schema(k).dataType)))
-    val bcols = keyCols ++ Seq("band", "bucket")
-    hammingBanded(corpus, idCol, sigCol, maxHamming, nb, probe = false,
-        keyCols)
-      .unionByName(meta)
-      .repartition(numBuckets, bcols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bcols.head, bcols.tail: _*)
-      .sortBy(bcols.head, bcols.tail: _*)
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      hammingBanded(corpus, idCol, sigCol, maxHamming, nb, probe = false,
+          keyCols)
+        .unionByName(meta),
+      table, keyCols ++ Seq("band", "bucket"), numBuckets, path = Some(path))
     // an overwrite may have changed the layout under a memoized name
     hammingMetaMemo.clear()
   }
@@ -948,14 +886,10 @@ object Incremental {
     val nb = resolveBands(maxHamming, nBands)
     validateHammingMeta(batch.sparkSession.table(table), maxHamming, nb,
       caller, grid, sharded, signer)
-    val bcols = keyCols ++ Seq("band", "bucket")
-    hammingBanded(batch, idCol, sigCol, maxHamming, nb, probe = false,
-        keyCols)
-      .repartition(numBuckets, bcols.map(col): _*)
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, bcols.head, bcols.tail: _*)
-      .sortBy(bcols.head, bcols.tail: _*)
-      .saveAsTable(table)
+    writeBucketed(
+      hammingBanded(batch, idCol, sigCol, maxHamming, nb, probe = false,
+        keyCols),
+      table, keyCols ++ Seq("band", "bucket"), numBuckets, SaveMode.Append)
   }
 
   /** Reserved band id of the one `_meta` row every Hamming state
@@ -1498,16 +1432,12 @@ object Incremental {
       .select(col(idCol).as("dropped_id"), col("__keep").as("rep_id"))
       .localCheckpoint(true)
     val nDropped = newDrops.count()
-    val bcols = ("frame_pos" +: shardCols) ++ Seq("band", "bucket")
-    rows.join(newDrops.select(col("dropped_id").as("__dropid")),
-        col(idCol) === col("__dropid"), "left_anti")
-      .unionByName(meta)
-      .repartition(numBuckets, bcols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bcols.head, bcols.tail: _*)
-      .sortBy(bcols.head, bcols.tail: _*)
-      .option("path", newPath)
-      .saveAsTable(newTable)
+    writeBucketed(
+      rows.join(newDrops.select(col("dropped_id").as("__dropid")),
+          col(idCol) === col("__dropid"), "left_anti")
+        .unionByName(meta),
+      newTable, ("frame_pos" +: shardCols) ++ Seq("band", "bucket"),
+      numBuckets, path = Some(newPath))
     // compose the remap across re-compactions: a prior representative
     // dethroned now (a smaller identical twin arrived since) appears
     // in newDrops — its old family rows repoint to the new rep, so
@@ -1523,15 +1453,17 @@ object Incremental {
           .unionByName(newDrops)
       } else newDrops
     }
-    composed
-      .repartition(16, col("rep_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(16, "rep_id").sortBy("rep_id")
-      .option("path", s"${newPath}_remap")
-      .saveAsTable(s"${newTable}_remap")
+    writeRemap(composed, newTable, newPath)
     hammingMetaMemo.clear()
     nDropped
   }
+
+  /** The dropped-id → representative remap sidecar of a compacted
+    * Hamming state: `"${table}_remap"` at `"${path}_remap"`, keyed by
+    * `rep_id` (dropped ids only — small, so 16 buckets). */
+  private def writeRemap(remap: DataFrame, table: String, path: String): Unit =
+    writeBucketed(remap, s"${table}_remap", Seq("rep_id"), 16,
+      path = Some(s"${path}_remap"))
 
   /** Id-level retraction for a (possibly compacted) positional
     * hamming state — the takedown pass that is SAFE to combine with
@@ -1663,38 +1595,11 @@ object Incremental {
     } else {
       (rows.join(tomb, col(idCol) === col("retract_id"), "left_anti"), None)
     }
-    rows2.unionByName(metaRows)
-      .repartition(numBuckets, bcols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bcols.head, bcols.tail: _*)
-      .sortBy(bcols.head, bcols.tail: _*)
-      .option("path", newPath)
-      .saveAsTable(newTable)
-    remap2.foreach { m =>
-      m.repartition(16, col("rep_id"))
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(16, "rep_id").sortBy("rep_id")
-        .option("path", s"${newPath}_remap")
-        .saveAsTable(s"${newTable}_remap")
-    }
+    writeBucketed(rows2.unionByName(metaRows), newTable, bcols, numBuckets,
+      path = Some(newPath))
+    remap2.foreach(writeRemap(_, newTable, newPath))
     hammingMetaMemo.clear()
     nRemoved
-  }
-
-  /** Drop every batch frame-signature row whose CLIP matches state on
-    * ≥ `minFrames` positions — the recurring video-dedup probe.
-    * Returns the surviving rows of `batch` (clips with zero decodable
-    * frames have no rows here and survive by construction at the clip
-    * level; see [[Video.dedupAgainstState]] for the clip-frame form). */
-  def frameHammingDedupAgainstTable(batch: DataFrame, idCol: String,
-      sigCol: String, state: DataFrame, maxHamming: Int = 8,
-      minFrames: Int = 2, nBands: Int = -1, everyNth: Int,
-      shardCol: Option[String] = None,
-      signer: Option[String] = None): DataFrame = {
-    val dupIds = frameHammingDupIdsAgainstTable(batch, idCol, sigCol, state,
-        maxHamming, minFrames, nBands, everyNth, shardCol, signer)
-      .localCheckpoint(true)
-    batch.join(dupIds, Seq(idCol), "left_anti")
   }
 
   /** Broadcastable POSITIONAL Hamming index of a persisted
@@ -1810,14 +1715,11 @@ object Incremental {
         .subsetOf(state.columns.toSet) && state.columns.length == 4,
       s"not a flat banded state table (want band, bucket, $idColName, " +
         s"sig): ${state.columns.mkString(",")}")
-    state.groupBy(col("band"), col("bucket"), col("sig"))
-      .agg(min(col(idColName)).as(idColName))
-      .select(col("band"), col("bucket"), col(idColName), col("sig"))
-      .repartition(numBuckets, col("band"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "band", "bucket").sortBy("band", "bucket")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      state.groupBy(col("band"), col("bucket"), col("sig"))
+        .agg(min(col(idColName)).as(idColName))
+        .select(col("band"), col("bucket"), col(idColName), col("sig")),
+      table, Seq("band", "bucket"), numBuckets, path = Some(path))
     // dropped-id → representative remap sidecar: the per-row min-id
     // collapse is a FAMILY collapse keyed by signature (an id's
     // nBands rows are all functions of its one sig), so retraction
@@ -1839,12 +1741,7 @@ object Incremental {
           .unionByName(newDrops)
       case None => newDrops
     }
-    composed
-      .repartition(16, col("rep_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(16, "rep_id").sortBy("rep_id")
-      .option("path", s"${path}_remap")
-      .saveAsTable(s"${table}_remap")
+    writeRemap(composed, table, path)
   }
 
   /** Duplicate-digest compaction for the bare-key exact-dedup table
@@ -1855,12 +1752,8 @@ object Incremental {
     require(state.columns.toSet == Set("__d1", "__d2"),
       s"not a digest state table (want __d1, __d2): " +
         state.columns.mkString(","))
-    state.distinct()
-      .repartition(numBuckets, col("__d1"), col("__d2"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "__d1", "__d2").sortBy("__d1", "__d2")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(state.distinct(), table, Seq("__d1", "__d2"), numBuckets,
+      path = Some(path))
   }
 
   /** Clip-level duplicate compaction for the POSITIONAL state: drop
@@ -1896,14 +1789,9 @@ object Incremental {
     val reps = digests.groupBy(col("__c1"), col("__c2"))
       .agg(min(col(idColName)).as("__rep"))
     val keep = reps.select(col("__rep").as(idColName))
-    data.join(keep, Seq(idColName), "left_semi")
-      .unionByName(metaRow)
-      .repartition(numBuckets, keyCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, keyCols.head, keyCols.tail: _*)
-      .sortBy(keyCols.head, keyCols.tail: _*)
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(
+      data.join(keep, Seq(idColName), "left_semi").unionByName(metaRow),
+      table, keyCols, numBuckets, path = Some(path))
     // persist the dropped-id → representative remap sidecar (the
     // compactFrameHammingDuplicates contract): id-level retraction of
     // a representative must be able to re-elect a surviving twin
@@ -1922,12 +1810,7 @@ object Incremental {
           .unionByName(newDrops)
       case None => newDrops
     }
-    composed
-      .repartition(16, col("rep_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(16, "rep_id").sortBy("rep_id")
-      .option("path", s"${path}_remap")
-      .saveAsTable(s"${table}_remap")
+    writeRemap(composed, table, path)
   }
 
   // --------------------------------------------------------------
@@ -1945,12 +1828,8 @@ object Incremental {
     * [[compactState]] pass makes it physical. */
   def writeTombstones(ids: DataFrame, idCol: String,
       table: String, path: String, numBuckets: Int = 16): Unit =
-    ids.select(col(idCol).as("retract_id")).distinct()
-      .repartition(numBuckets, col("retract_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, "retract_id").sortBy("retract_id")
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(ids.select(col(idCol).as("retract_id")).distinct(), table,
+      Seq("retract_id"), numBuckets, path = Some(path))
 
   /** Grow the tombstone state by a new takedown batch, anti-joined
     * against existing tombstones first so retries and re-submitted
@@ -1958,13 +1837,11 @@ object Incremental {
     * discipline), same bucket spec as [[writeTombstones]]. */
   def appendTombstones(ids: DataFrame, idCol: String,
       tombstones: DataFrame, table: String, numBuckets: Int = 16): Unit =
-    ids.select(col(idCol).as("retract_id")).distinct()
-      .join(tombstones.select(col("retract_id")), Seq("retract_id"),
-        "left_anti")
-      .repartition(numBuckets, col("retract_id"))
-      .write.mode(SaveMode.Append).format("parquet")
-      .bucketBy(numBuckets, "retract_id").sortBy("retract_id")
-      .saveAsTable(table)
+    writeBucketed(
+      ids.select(col(idCol).as("retract_id")).distinct()
+        .join(tombstones.select(col("retract_id")), Seq("retract_id"),
+          "left_anti"),
+      table, Seq("retract_id"), numBuckets, SaveMode.Append)
 
   /** Drop every row whose `idColName` is tombstoned — retraction at
     * READ time: a broadcast left_anti (tombstones are takedown-list
@@ -2002,13 +1879,8 @@ object Incremental {
   def compactState(state: DataFrame, idColName: String,
       tombstones: DataFrame, table: String, path: String,
       bucketCols: Seq[String], numBuckets: Int = 64): Unit =
-    retractIds(state, idColName, tombstones)
-      .repartition(numBuckets, bucketCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .option("path", path)
-      .saveAsTable(table)
+    writeBucketed(retractIds(state, idColName, tombstones), table,
+      bucketCols, numBuckets, path = Some(path))
 
   /** Distinct-per-document word n-grams as 128-bit digest pairs —
     * the same gram identity as [[Stats.ngramNovelty]] (digest keys,
@@ -2148,18 +2020,12 @@ object Incremental {
           corpus.select(col(idCol)), pairs)
         Actions.inParallel(Seq(
           () => writeEdges(pairs, t, SaveMode.Overwrite),
-          () => comps.select(col("id").as(idCol), col("cluster"))
-            .repartition(t.numBuckets, col(idCol))
-            .write.mode(SaveMode.Overwrite).bucketBy(t.numBuckets, idCol)
-            .sortBy(idCol).option("path", t.memberPath)
-            .saveAsTable(t.memberTable)))
+          () => writeMembership(comps.select(col("id").as(idCol),
+            col("cluster")), idCol, t, SaveMode.Overwrite)))
       },
-      () => posts.select(col("__g1").as("g1"), col("__g2").as("g2"),
-          col(idCol), col("n_grams"))
-        .repartition(t.numBuckets, col("g1"), col("g2"))
-        .write.mode(SaveMode.Overwrite).bucketBy(t.numBuckets, "g1", "g2")
-        .sortBy("g1", "g2").option("path", t.postPath)
-        .saveAsTable(t.postTable),
+      () => writeBucketed(posts.select(col("__g1").as("g1"),
+          col("__g2").as("g2"), col(idCol), col("n_grams")),
+        t.postTable, Seq("g1", "g2"), t.numBuckets, path = Some(t.postPath)),
       () => writeEmptyAlias(spark, t)))
   }
 
@@ -2171,10 +2037,9 @@ object Incremental {
 
   private def writeEmptyAlias(spark: org.apache.spark.sql.SparkSession,
       t: ClusterTables): Unit =
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], AliasSchema)
-      .write.mode(SaveMode.Overwrite).option("path", t.aliasPath)
-      .saveAsTable(t.aliasTable)
+    writeBucketed(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], AliasSchema),
+      t.aliasTable, Nil, 0, path = Some(t.aliasPath))
 
   /** Blue/green alias rewrite for a merging wave. The rewritten rows
     * land in a FRESH `"${aliasPath}_v{n+1}"` directory — the directory
@@ -2258,11 +2123,8 @@ object Incremental {
       .join(ids.select(col(idCol).as("dst")), Seq("dst"), "left_semi")
     val comps = DupClusters.connectedComponents(ids,
       sub.select(col("src").as("id_a"), col("dst").as("id_b")))
-    comps.select(col("id").as(idCol), col("cluster"))
-      .repartition(nt.numBuckets, col(idCol))
-      .write.mode(SaveMode.Overwrite).bucketBy(nt.numBuckets, idCol)
-      .sortBy(idCol).option("path", nt.memberPath)
-      .saveAsTable(nt.memberTable)
+    writeMembership(comps.select(col("id").as(idCol), col("cluster")),
+      idCol, nt, SaveMode.Overwrite)
     writeEmptyAlias(spark, nt)
     // the tombstone overlay must SURVIVE recovery under nt's derived
     // name: membership above is tombstone-free, but postings/edges
@@ -2280,14 +2142,18 @@ object Incremental {
     * bucketed by src, so takedown can find every edge incident to a
     * retracted id with one bucket-aligned semi-join per direction. */
   private def writeEdges(pairs: DataFrame, t: ClusterTables,
-      mode: SaveMode): Unit = {
-    val sym = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-    val w = sym.repartition(t.numBuckets, col("src"))
-      .write.mode(mode).bucketBy(t.numBuckets, "src").sortBy("src")
-    (if (mode == SaveMode.Overwrite) w.option("path", t.edgePath) else w)
-      .saveAsTable(t.edgeTable)
-  }
+      mode: SaveMode): Unit =
+    writeBucketed(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      t.edgeTable, Seq("src"), t.numBuckets, mode, Some(t.edgePath))
+
+  /** `(<idCol>, cluster)` membership rows into `t`'s membership table,
+    * keyed by the id. */
+  private def writeMembership(rows: DataFrame, idCol: String,
+      t: ClusterTables, mode: SaveMode): Unit =
+    writeBucketed(rows, t.memberTable, Seq(idCol), t.numBuckets, mode,
+      Some(t.memberPath))
 
   /** One wave against the cluster state. Ids must be UNIQUE across
     * the state's life (a recrawl under the same id would stack a
@@ -2339,11 +2205,9 @@ object Incremental {
       gramJaccardPairs(postingsShape(posts, idCol, "a"), statePosts,
         threshold))
     appendClustersCore(spark, wave, idCol, inWave, waveState, t) {
-      posts.select(col("__g1").as("g1"), col("__g2").as("g2"), col(idCol),
-          col("n_grams"))
-        .repartition(t.numBuckets, col("g1"), col("g2"))
-        .write.mode(SaveMode.Append).bucketBy(t.numBuckets, "g1", "g2")
-        .sortBy("g1", "g2").saveAsTable(t.postTable)
+      writeBucketed(posts.select(col("__g1").as("g1"), col("__g2").as("g2"),
+          col(idCol), col("n_grams")),
+        t.postTable, Seq("g1", "g2"), t.numBuckets, SaveMode.Append)
     }
   }
 
@@ -2438,9 +2302,7 @@ object Incremental {
           .join(wave.select(col(idCol).as("id")), Seq("id"))
           .select(col("id").as(idCol), col("cluster"))
           .localCheckpoint(true)
-        assigned.repartition(t.numBuckets, col(idCol))
-          .write.mode(SaveMode.Append).bucketBy(t.numBuckets, idCol)
-          .sortBy(idCol).saveAsTable(t.memberTable)
+        writeMembership(assigned, idCol, t, SaveMode.Append)
       }))
     appendPosts
     assigned
@@ -2491,16 +2353,11 @@ object Incremental {
           corpus.select(col(idCol)), pairs)
         Actions.inParallel(Seq(
           () => writeEdges(pairs, t, SaveMode.Overwrite),
-          () => comps.select(col("id").as(idCol), col("cluster"))
-            .repartition(t.numBuckets, col(idCol))
-            .write.mode(SaveMode.Overwrite).bucketBy(t.numBuckets, idCol)
-            .sortBy(idCol).option("path", t.memberPath)
-            .saveAsTable(t.memberTable)))
+          () => writeMembership(comps.select(col("id").as(idCol),
+            col("cluster")), idCol, t, SaveMode.Overwrite)))
       },
-      () => posts.repartition(t.numBuckets, col("fp"))
-        .write.mode(SaveMode.Overwrite).bucketBy(t.numBuckets, "fp")
-        .sortBy("fp").option("path", t.postPath)
-        .saveAsTable(t.postTable),
+      () => writeBucketed(posts, t.postTable, Seq("fp"), t.numBuckets,
+        path = Some(t.postPath)),
       () => writeEmptyAlias(spark, t)))
   }
 
@@ -2548,11 +2405,9 @@ object Incremental {
         .filter(col("__shared") >= minShared)
         .select(col("__ia"), col("__ib")))
     appendClustersCore(spark, wave, idCol, inWave, waveState, t) {
-      posts.join(statePosts0.select(col("fp"),
-          col(idCol)), Seq("fp", idCol), "left_anti")
-        .repartition(t.numBuckets, col("fp"))
-        .write.mode(SaveMode.Append).bucketBy(t.numBuckets, "fp")
-        .sortBy("fp").saveAsTable(t.postTable)
+      writeBucketed(posts.join(statePosts0.select(col("fp"), col(idCol)),
+          Seq("fp", idCol), "left_anti"),
+        t.postTable, Seq("fp"), t.numBuckets, SaveMode.Append)
     }
   }
 
@@ -2787,23 +2642,12 @@ object Incremental {
     // `t` intact and the re-run overwrites every nt relation), so the
     // four corpus-sized writes run concurrently (guide §2.6)
     Actions.inParallel(Seq(
-      () => untouched
-        .union(comps.select(col("id").as(idCol), col("cluster")))
-        .repartition(nt.numBuckets, col(idCol))
-        .write.mode(SaveMode.Overwrite).bucketBy(nt.numBuckets, idCol)
-        .sortBy(idCol).option("path", nt.memberPath)
-        .saveAsTable(nt.memberTable),
-      () => priorTomb.fold(posts0)(retractIds(posts0, idCol, _))
-        .repartition(nt.numBuckets, pb.map(col): _*)
-        .write.mode(SaveMode.Overwrite)
-        .bucketBy(nt.numBuckets, pb.head, pb.tail: _*)
-        .sortBy(pb.head, pb.tail: _*).option("path", nt.postPath)
-        .saveAsTable(nt.postTable),
-      () => edges1
-        .repartition(nt.numBuckets, col("src"))
-        .write.mode(SaveMode.Overwrite).bucketBy(nt.numBuckets, "src")
-        .sortBy("src").option("path", nt.edgePath)
-        .saveAsTable(nt.edgeTable),
+      () => writeMembership(untouched.union(comps.select(col("id").as(idCol),
+        col("cluster"))), idCol, nt, SaveMode.Overwrite),
+      () => writeBucketed(priorTomb.fold(posts0)(retractIds(posts0, idCol, _)),
+        nt.postTable, pb, nt.numBuckets, path = Some(nt.postPath)),
+      () => writeBucketed(edges1, nt.edgeTable, Seq("src"), nt.numBuckets,
+        path = Some(nt.edgePath)),
       () => writeEmptyAlias(spark, nt)))
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -227,19 +227,38 @@ object CorpusIO {
   def convertJsonlToParquet(spark: SparkSession, inGlob: String, outDir: String): Unit =
     spark.read.json(inGlob).write.mode("overwrite").parquet(outDir)
 
-  /** Bucketed parquet table sink: co-locates rows by join key so
-    * repeated joins/aggregations on that key need NO shuffle at all —
-    * the physical layout the 100 TB fact tables should live in.
-    * (`bucketBy` requires the table catalog, hence `saveAsTable`.)
-    * Readers joining two tables bucketed the same way get a
-    * sort-merge join with zero Exchange (asserted in BucketingSpec).
-    */
+  /** The engine's one catalog-table writer. Every persisted state
+    * table (digest, MinHash, Hamming, cluster, takedown and index
+    * state — [[graft.operators.Incremental]]) lands through here, so
+    * the layout that lets a recurring probe read state without
+    * re-shuffling it is decided in one place:
+    *  - bucket keys = sort keys: `bucketBy(numBuckets, bucketCols)`
+    *    and `sortBy(bucketCols)`, so a join on those keys reads the
+    *    table bucket-aligned and pre-sorted — a sort-merge join with
+    *    no Exchange on this side (asserted in BucketingSpec);
+    *  - one file per bucket: `repartition(numBuckets, bucketCols)`
+    *    first, so each writer task owns whole buckets instead of
+    *    leaving tasks × buckets fragments;
+    *  - parquet always, never the session's `spark.sql.sources.default`
+    *    — an overwrite and a later append must agree on the format;
+    *  - `path` only when an overwrite names one (an external table in
+    *    its own blue/green directory); an append lands wherever the
+    *    catalog already points.
+    * Empty `bucketCols` writes an unbucketed table (the one-row-per-
+    * batch stats logs, the empty cluster alias) under the same format
+    * and path rules. (`bucketBy`
+    * requires the table catalog, hence `saveAsTable`.) */
   def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      numBuckets: Int): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
+      numBuckets: Int, mode: SaveMode = SaveMode.Overwrite,
+      path: Option[String] = None): Unit = {
+    val w =
+      if (bucketCols.isEmpty) df.write
+      else df.repartition(numBuckets, bucketCols.map(col): _*).write
+        .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
+        .sortBy(bucketCols.head, bucketCols.tail: _*)
+    path.filter(_ => mode == SaveMode.Overwrite).fold(w)(w.option("path", _))
+      .mode(mode).format("parquet").saveAsTable(table)
+  }
 
   /** Range-partitioned SORTED parquet write — the layout that makes
     * selective range scans cheap at 100 TB. `repartitionByRange` puts

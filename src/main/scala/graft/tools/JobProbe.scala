@@ -43,8 +43,7 @@ object JobProbe {
     val runs = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get(s"local[$cpus]", cpus.toInt)
 
     val jobStart = TrieMap.empty[Int, (Long, String)]
     val stageJob = TrieMap.empty[Int, Int]

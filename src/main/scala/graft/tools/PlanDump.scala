@@ -18,7 +18,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <queryName> <sfDir> [static]")
     val Array(name, sfDir) = args.take(2)
-    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
+    val spark = GraftSession.get("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (args.length > 2 && args(2) == "static") {

@@ -187,6 +187,38 @@ class IncrementalSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS t_dig_app")
   }
 
+  test("state tables are parquet whatever the session's default source: write then append succeed") {
+    // a write and the appends after it must agree on the table's
+    // format, so neither may follow spark.sql.sources.default
+    val s = spark.newSession()
+    s.conf.set("spark.sql.sources.default", "orc")
+    val d = s.read.parquet(docs.inputFiles: _*)
+    val sigs = d.select(col("doc_id"), Dedup.simhashSignature(col("text")).as("sig"))
+    def provider(t: String): String =
+      s.sql(s"DESCRIBE TABLE EXTENDED $t")
+        .filter(col("col_name") === "Provider").head().getString(1)
+    try {
+      Incremental.writeDigestTable(d.filter(col("doc_id") < 100), col("text"),
+        "t_orc_dig", tmp("graft_orc_dig"), numBuckets = 4)
+      Incremental.appendDigests(d.filter(col("doc_id") >= 100), col("text"),
+        "t_orc_dig", numBuckets = 4)
+      Incremental.writeHammingState(sigs.filter(col("doc_id") % 2 === 0),
+        "doc_id", "sig", "t_orc_hamm", tmp("graft_orc_hamm"),
+        maxHamming = 8, numBuckets = 4)
+      Incremental.appendHammingState(sigs.filter(col("doc_id") % 2 === 1),
+        "doc_id", "sig", "t_orc_hamm", maxHamming = 8, numBuckets = 4)
+      Incremental.writeIndexStats(d.filter(col("doc_id") < 100), col("text"),
+        "t_orc_stats", tmp("graft_orc_stats"))
+      Incremental.appendIndexStats(d.filter(col("doc_id") >= 100), col("text"),
+        "t_orc_stats")
+      for (t <- Seq("t_orc_dig", "t_orc_hamm", "t_orc_stats"))
+        assert(provider(t) === "parquet", s"$t provider")
+      assert(s.table("t_orc_dig").count() === d.count())
+      assert(s.table("t_orc_stats").count() === 2L)
+    } finally Seq("t_orc_dig", "t_orc_hamm", "t_orc_stats")
+      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("snapshotDiffAgainstTable equals snapshotDiff; state side never shuffles") {
     import graft.operators.Stats
     val v1 = docs.select(col("doc_id"), col("text"), col("lang"))
