@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Incremental}
@@ -9,71 +9,83 @@ import graft.operators.{Dedup, Incremental}
 /** Recurring-ingestion driver — the WAVE loop the incremental state
   * families exist for, composed the way [[CurationCli]] composes the
   * batch gates. Each arriving batch (a crawl snapshot, a CDC pull —
-  * the reference's incremental cursor loop,
-  * /root/reference/src/connectors/oracle_connector.py:95-169) runs:
+  * the reference's watermark cursor, `oracle_connector.py:95-169`) runs
+  * ONE loop, whatever the payload:
   *
   *   takedown enforcement (tombstoned ids never enter) →
-  *   quality gate (length bounds — map-side, first) →
-  *   exact dedup: in-wave keep-lowest-id + anti-join against the
-  *     persisted digest state (batch-side shuffle only) →
-  *   fuzzy dedup: in-wave banded MinHash + probe against the
-  *     persisted banded-signature state →
-  *   state append (digests + signatures — SEEN-not-kept, see below) →
-  *   gold append (partitioned by wave) → release manifest.
+  *   screen (the layout's gates, dedup stages and signing, materialized
+  *     once) → in-wave near-dup pairs (keep-lowest-id) ∪ probe against
+  *     the persisted signature state → state append (SEEN-not-kept) →
+  *   gold append (partitioned by wave) [→ release manifest].
+  *
+  * The body ([[waveLoop]]), takedown ([[takedownLoop]]), compaction
+  * ([[compactLoop]]) and CLI loop ([[runLoop]]) are shared; a private
+  * [[WaveLayout]] supplies each step. Four layouts:
+  *   - TEXT ([[IngestState]]): length + optional decontamination gate →
+  *     exact dedup (in-wave keep-lowest-id + anti-join against the
+  *     digest state) → ONE MinHash signing of the survivors, feeding the
+  *     banded pairs, the banded-signature probe and its append; keeps the
+  *     release manifest;
+  *   - IMAGE and AUDIO ([[MediaState]], `hsigs_v*`): one 64-bit
+  *     perceptual signature per item, optional exact blocklist gate;
+  *   - VIDEO ([[VideoState]], `fsigs_v*`, q147's layout): a clip is its
+  *     per-sampled-position frame signatures; two clips match when
+  *     ≥ minFrames positions are within budget. Its blocklist is
+  *     CROSS-MODAL: a flagged IMAGE signature blocks every clip with a
+  *     sampled frame within budget of it.
   *
   * '''Equivalence contract''' (IngestSpec): with waves arriving in id
-  * order (every new id above all previously ingested ones — the CDC
-  * watermark shape) and healthy LSH buckets (≤ maxBucketSize), the
-  * gold corpus after any number of waves is IDENTICAL to
-  * [[batchEquivalent]] — the from-scratch batch pipeline over the
-  * union of all waves. Two details make that hold:
+  * order (the CDC watermark shape), gold after any number of waves IS
+  * the from-scratch batch over their union — [[batchEquivalent]] (given
+  * healthy LSH buckets, ≤ maxBucketSize), [[batchMediaEquivalent]] /
+  * [[batchVideoEquivalent]] (unconditionally: pigeonhole banding
+  * enumerates pairs EXACTLY). Two details make that hold:
+  *   - state appends every row that REACHED the pair stage, dropped or
+  *     not — batch dedup drops a doc similar to ANY lower-id doc, even
+  *     a dropped one (the round-5 chain a~b~c), so a survivors-only
+  *     state would silently keep c;
+  *   - in-wave and against-state drops are computed over the SAME
+  *     screened rows and unioned, never chained, so a doc dropped by the
+  *     probe still serves as an in-wave mate.
+  * Gated docs never enter gold OR state (they cannot suppress
+  * near-duplicates); undecodable payloads pass and never enter state.
   *
-  *   - the signature state appends every document that REACHED the
-  *     fuzzy stage, dropped or not — batch dedup drops a doc similar
-  *     to ANY lower-id doc including ones that were themselves
-  *     dropped (the round-5 chain a~b~c), so a survivors-only state
-  *     would silently keep c;
-  *   - in-wave and against-state drop decisions are computed over the
-  *     SAME fuzzy-stage input and unioned, never chained, so a doc
-  *     dropped by the state probe still serves as an in-wave mate.
-  *
-  * '''Takedown''' ([[applyTakedown]]): tombstones append to the
-  * bucketed tombstone table (enforced at the top of every later
-  * wave), gold is rewritten blue/green minus the ids, the id-carrying
-  * signature state compacts via [[Incremental.compactState]], and the
-  * content-keyed digest state compacts by the retracted documents'
-  * OWN digest keys (recomputed from their gold text before the gold
-  * rewrite). Retraction removes content, not history: documents
-  * dropped earlier as a retracted document's duplicates stay dropped
-  * (re-run the batch pipeline over the retained corpus when decisions
-  * themselves must be replayed). A retracted doc that never reached
-  * gold (dropped as a dup) leaves its digest behind — the documented
-  * rebuild-from-retained-corpus path for content-keyed state.
+  * '''Takedown''': tombstones append (enforced at the top of every
+  * later wave), the signature state retracts remap-aware, gold rewrites
+  * blue/green minus the ids; text also drops the retracted documents'
+  * OWN digest keys (recomputed from gold text before the rewrite).
+  * Retraction removes content, not history: documents dropped as a
+  * retracted document's duplicates stay dropped until a rebuild from
+  * retained gold ([[rebuildDigestState]], [[rebuildMediaState]]).
   *
   * '''Scale shape''' (the recurring 100 TB question): a wave pays
-  * wave-sized costs only — the digest/signature probes shuffle the
-  * batch side alone (state arrives bucket-aligned from disk,
-  * plan-asserted in IncrementalSpec), appends are batch-sized bucketed
-  * writes, gold append touches no prior wave, and takedown costs are
-  * tombstone-broadcast + state-sized rewrites at the operator's own
-  * cadence. Nothing in the loop ever re-reads previously ingested
-  * corpus text.
+  * wave-sized costs only — one signing/decode scan, probes that shuffle
+  * the batch side alone (state arrives bucket-aligned, plan-asserted in
+  * IncrementalSpec), batch-sized bucketed appends, a gold append that
+  * touches no prior wave; takedowns are tombstone-broadcast +
+  * state-sized rewrites at the operator's own cadence. Nothing in the
+  * loop re-reads previously ingested text or media bytes.
   *
   * Usage:
   *   runMain graft.IngestCli <stateDir> <wave1.parquet> [wave2 ...]
   * with GRAFT_TAKEDOWN optionally naming a parquet of doc_ids to
-  * retract before the waves run. Waves need (doc_id, text, ...);
-  * extra columns ride to gold.
+  * retract before the waves run. Text waves need (doc_id, text, ...),
+  * media waves (doc_id, content, ...); extra columns ride to gold.
   */
 object IngestCli {
 
   final case class IngestState(ns: String, dir: String, numBuckets: Int,
-      version: Int = 0, digestVersion: Int = 0, goldVersion: Int = 0) {
+      version: Int = 0, digestVersion: Int = 0, goldVersion: Int = 0)
+      extends WaveState[IngestState] {
     def digestTable: String = s"${ns}_digests_v$digestVersion"
     def sigTable: String = s"${ns}_sigs_v$version"
-    def tombTable: String = s"${ns}_tombstones"
-    def goldPath: String = s"$dir/gold_v$goldVersion"
     def manifestPath: String = s"$dir/manifest"
+    private[graft] def digestPath: String = s"$dir/digests_v$digestVersion"
+    private[graft] def sigPath: String = s"$dir/sigs_v$version"
+    private[graft] def tables: Seq[String] = Seq(digestTable, sigTable)
+    private[graft] def bumped(gold: Boolean): IngestState = copy(
+      version = version + 1, digestVersion = digestVersion + 1,
+      goldVersion = goldVersion + (if (gold) 1 else 0))
   }
 
   final case class WaveReport(wave: Int, incoming: Long, live: Long,
@@ -99,16 +111,6 @@ object IngestCli {
       enabled && appended >= math.max(minDocs, (ratio * baseline).toLong)
   }
 
-  /** Mutable trigger bookkeeping for one loop run: O(1) per wave (no
-    * state scans — the wave report's own counts feed `appended`);
-    * one exact count per fired compaction resets the baseline. */
-  private final class CompactionClock(policy: CompactionPolicy) {
-    private var baseline = 0L
-    private var appended = 0L
-    def record(n: Long): Boolean = { appended += n; policy.due(appended, baseline) }
-    def reset(newBaseline: Long): Unit = { baseline = newBaseline; appended = 0L }
-  }
-
   /** Benchmark-decontamination gate model: the eval set's sorted
     * gram digests BUNDLED with the gram size that produced them — a
     * digest array probed at a different `nWords` matches nothing
@@ -122,7 +124,7 @@ object IngestCli {
     EvalGate(graft.streaming.StreamOps.evalGramDigests(evalSet, textCol,
       nWords), nWords)
 
-  /** THE gate definition — one row-local predicate that [[ingestWave]]
+  /** THE gate definition — one row-local predicate that the text layout
     * and [[batchEquivalent]] filter on and the wave's single audit
     * aggregation counts (guide §1.2: don't pay a full pass per counter),
     * so the counted set and the filtered set cannot drift.
@@ -168,125 +170,207 @@ object IngestCli {
     try f finally spark.sparkContext.setJobDescription(null)
   }
 
-  /** Fresh state: empty bucketed digest/signature/tombstone tables
-    * (the same specs every append preserves) and a clean gold dir. */
-  def initState(spark: SparkSession, ns: String, dir: String,
-      numBuckets: Int = 8): IngestState = {
-    val st = IngestState(ns, dir, numBuckets)
-    resetLoop(spark, dir, Seq(st.digestTable, st.sigTable), st.tombTable,
-      numBuckets)
-    val empty = spark.range(0)
-      .select(col("id").as("doc_id"), lit("empty seed").as("text"))
-    Incremental.writeDigestTable(empty, col("text"),
-      st.digestTable, s"$dir/digests_v0", numBuckets)
-    Incremental.writeBandedSignatures(empty, "doc_id", col("text"),
-      st.sigTable, s"$dir/sigs_v0", numBuckets)
+  // ---- The shared wave loop. It names no family parameter (fuzzy
+  // threshold, Hamming budget, frame grid, gate): the layouts carry them.
+
+  /** What the loop reads off a family's state: names, paths, and the
+    * blue/green version step (`bumped`; gold too on a takedown rewrite). */
+  private[graft] sealed trait WaveState[S <: WaveState[S]] {
+    def ns: String
+    def dir: String
+    def numBuckets: Int
+    def goldVersion: Int
+    def sigTable: String
+    def tombTable: String = s"${ns}_tombstones"
+    def goldPath: String = s"$dir/gold_v$goldVersion"
+    /** Every state table the family owns (init drops them). */
+    private[graft] def tables: Seq[String]
+    private[graft] def bumped(gold: Boolean): S
+  }
+
+  /** A wave's rows past the layout's gates, materialized: `rows` feed the
+    * pairs, the probe and the state append; `counts` is the job that
+    * materializes them and returns the layout's two report counts;
+    * `keep` turns the drop ids into the rows gold receives. */
+  private final case class Screen(rows: DataFrame, counts: () => (Long, Long),
+      keep: DataFrame => DataFrame)
+
+  /** What one pass of the loop observed. `gated` counts the live rows
+    * passing the layout's row-local `gate`; `counts` are its screen's;
+    * `accepted` is the rows the gold append wrote. */
+  private final case class Tally(wave: Int, incoming: Long, live: Long,
+      gated: Long, counts: (Long, Long), accepted: Long, goldTotal: Long)
+
+  /** A family's steps, as the calls the loop makes. `tag`/`countStep`
+    * name the wave's jobs (`<tag> wave N: <step>`); `gate` is a
+    * row-local predicate the audit counts; `pairs` are in-wave
+    * `(id_a < id_b)` near-duplicates among the screened rows, `probe`
+    * their single-column drop ids against the persisted state;
+    * `retract` gets the state before and after the bump plus the
+    * retracted ids; `compact` gets the prior `_remap` sidecar;
+    * `manifest` marks layouts that keep a release manifest; `line` and
+    * `stateDocs` are the CLI loop's report line and compaction baseline. */
+  private final case class WaveLayout[S <: WaveState[S]](tag: String,
+      countStep: String, gate: Option[Column], manifest: Boolean,
+      init: (SparkSession, S) => Unit,
+      screen: (DataFrame, S) => Screen,
+      pairs: (DataFrame, S) => DataFrame,
+      probe: (DataFrame, S) => DataFrame,
+      append: (DataFrame, S) => Unit,
+      retract: (SparkSession, S, S, DataFrame) => Unit,
+      compact: (SparkSession, S, S, Option[DataFrame]) => Unit,
+      line: Tally => String,
+      stateDocs: (SparkSession, S) => Long)
+
+  /** Fresh state: drop the family's tables, seed an empty tombstone
+    * table, wipe every gold version, the legacy unversioned dir and the
+    * pointer, point at `gold_v0` (where the first wave appends), then
+    * let the layout write its empty state (the same bucket specs every
+    * append preserves). */
+  private def initLoop[S <: WaveState[S]](spark: SparkSession,
+      layout: WaveLayout[S], st: S): S = {
+    (st.tables :+ st.tombTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Incremental.writeTombstones(spark.range(0).select(col("id").as("doc_id")),
+      "doc_id", st.tombTable, s"${st.dir}/tombstones", st.numBuckets)
+    val fs = fsFor(spark, st.dir)
+    Option(fs.globStatus(new Path(s"${st.dir}/gold_v*")))
+      .toSeq.flatten.foreach(g => fs.delete(g.getPath, true))
+    fs.delete(new Path(s"${st.dir}/gold"), true)
+    fs.delete(new Path(s"${st.dir}/_GOLD_CURRENT"), false)
+    writeGoldPointer(spark, st.dir, "gold_v0")
+    layout.init(spark, st)
     st
   }
 
-  /** One wave through the loop. `waveNo` labels the gold partition.
-    * `evalGate` ([[evalGate]]) arms the benchmark-decontamination
-    * gate: docs sharing an `nWords`-gram with the eval set never
-    * reach dedup, gold OR state — the text loop's analog of the media blocklist, map-side
-    * in one referenced-array expression. Like blocked media, a gated
-    * doc cannot suppress its near-duplicates (it was never seen). */
-  def ingestWave(spark: SparkSession, st: IngestState, wave: DataFrame,
-      waveNo: Int, cfg: GraftConfig = GraftConfig(),
-      evalGate: Option[EvalGate] = None): WaveReport = {
+  /** One wave through the loop; `waveNo` labels the gold partition. */
+  private def waveLoop[S <: WaveState[S]](spark: SparkSession,
+      layout: WaveLayout[S], st: S, wave: DataFrame, waveNo: Int): Tally = {
+    def step[T](name: String)(f: => T): T =
+      labeled(spark, s"${layout.tag} wave $waveNo: $name")(f)
     val tombs = spark.table(st.tombTable)
-
     // takedown first: a retracted id can never re-enter through a
     // re-crawl (broadcast anti — the tombstone table is request-sized)
     val live = Incremental.retractIds(wave, "doc_id", tombs)
+    val screen = layout.screen(live, st)
+    // the audit and the screen's materializing job are independent
+    // wave scans — run concurrently, the cheap audit hides in the
+    // heavier screen wall (guide §2.6)
+    val ((incoming, nLive, nGated), counts) = operators.Actions.par2(
+      step("audit counts") { waveAuditCounts(wave, tombs, layout.gate) },
+      step(layout.countStep) { screen.counts() })
 
-    // map-side gates before any shuffle work (length bounds + the
-    // optional decontamination membership filter — both row-local)
-    val gated = live.filter(gatePredicate(cfg, evalGate))
+    // in-wave and against-state drops over the SAME screened rows,
+    // unioned (never chained) — the seen-not-kept contract. Eager: the
+    // probe must read the state BEFORE this wave's append lands in it.
+    val dropIds = step("drop ids") {
+      layout.pairs(screen.rows, st).select(col("id_b").as("doc_id"))
+        .union(layout.probe(screen.rows, st))
+        .distinct().localCheckpoint(eager = true)
+    }
 
-    // exact: keep-lowest-id within the wave, then drop anything whose
-    // normalized digest the corpus has EVER seen (state side
-    // bucket-aligned; only the wave shuffles). Materialized eagerly —
-    // it feeds the fuzzy stage, two state appends, and the report.
-    // lazy local checkpoint + count: the count action itself
-    // materializes the checkpoint blocks, so the materialize-then-
-    // count pair costs ONE job instead of two (the next consumer
-    // reads the blocks either way)
-    val exact = Incremental.exactDedupAgainstTable(
-        Dedup.keepBestWindow(gated,
-          graft.functions.text.norm_key(col("text")), Seq(col("doc_id").asc)),
-        col("text"), spark.table(st.digestTable))
-      .localCheckpoint(eager = false)
-    // all three audit counts in ONE wave pass (they used to be one
-    // full scan each), overlapped with the exact-stage materialization
-    // — the two scans are independent, so the audit hides inside the
-    // heavier dedup wall (guide §2.6)
-    val ((incoming, nLive, nGated), nExact) = operators.Actions.par2(
-      waveAuditCounts(wave, tombs, Some(gatePredicate(cfg, evalGate))),
-      exact.count())
-
-    // fuzzy: against-state and in-wave drops computed over the SAME
-    // input and unioned (never chained) — the seen-not-kept contract
-    val stateDups = Incremental.fuzzyDupIds(exact, "doc_id", col("text"),
-        spark.table(st.sigTable), cfg.fuzzyThreshold,
-        numPerm = 128, bands = 32, shingleSize = 3)
-      .select(col("doc_id")).distinct()
-    val accepted = Dedup.minhashDedup(exact, "doc_id", col("text"),
-        threshold = cfg.fuzzyThreshold)
-      .join(stateDups, Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = false)
-    val nAccepted = accepted.count()
-
-    // state grows by the wave's FUZZY-STAGE INPUT (exact survivors),
-    // not by the accepted set — see the equivalence contract above.
-    // The two state appends write DIFFERENT tables from the same
-    // materialized exact blocks and run concurrently: the loop is
-    // at-least-once (a crashed wave re-runs and re-appends), and both
-    // state tables tolerate the duplicate rows a re-run can leave in
-    // ANY landing order (digests feed an anti-join, signature dup ids
-    // collapse behind `.distinct()`), so no ordering between them was
-    // ever load-bearing. State-before-GOLD stays strict below.
-    operators.Actions.inParallel(Seq(
-      () => Incremental.appendDigests(exact, col("text"), st.digestTable,
-        st.numBuckets),
-      () => Incremental.appendBandedSignatures(exact, "doc_id", col("text"),
-        st.sigTable, st.numBuckets)))
-
-    // gold append + per-wave release manifest. An all-duplicate wave
-    // appends nothing — but an empty Append still CREATES the gold
-    // dir (committer setup + _SUCCESS), so presence must be judged by
-    // data files, not the directory, or schema inference throws on
-    // the next read.
-    accepted.withColumn("ingest_wave", lit(waveNo))
-      .write.mode(SaveMode.Append).partitionBy("ingest_wave")
-      .parquet(st.goldPath)
-    val goldHas = goldHasData(spark, st.goldPath)
-    var goldTotal = 0L
-    // audit count and manifest overwrite both read the just-appended
-    // gold and are mutually independent — overlapped
-    if (goldHas) operators.Actions.inParallel(Seq(
-      () => goldTotal = spark.read.parquet(st.goldPath).count(),
-      () => sources.CorpusIO.releaseManifest(spark, st.goldPath, "ingest_wave")
-        .write.mode(SaveMode.Overwrite).parquet(st.manifestPath)))
-
-    WaveReport(waveNo, incoming, nLive, nGated, nExact, nAccepted, goldTotal)
+    // state grows by every screened row (dropped or not), strictly
+    // before gold: the loop is at-least-once (a crashed wave re-runs and
+    // re-appends), and every state table tolerates the duplicate rows a
+    // re-run leaves
+    step("state append") { layout.append(screen.rows, st) }
+    // `accepted` is observed on the gold write itself. An all-duplicate
+    // wave appends nothing — but an empty Append still CREATES the gold
+    // dir (committer setup + _SUCCESS), so presence is judged by data
+    // files, not the directory, or schema inference throws on the next
+    // read.
+    val written = Observation()
+    step("gold append") {
+      screen.keep(dropIds).withColumn("ingest_wave", lit(waveNo))
+        .observe(written, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Append).partitionBy("ingest_wave")
+        .parquet(st.goldPath)
+    }
+    val accepted = written.get("n").asInstanceOf[Long]
+    // the audit count and the manifest overwrite both read the
+    // just-appended gold and are mutually independent — overlapped
+    val goldTotal =
+      if (!goldHasData(spark, st.goldPath)) 0L
+      else step("gold count") {
+        def total = spark.read.parquet(st.goldPath).count()
+        if (layout.manifest)
+          operators.Actions.par2(total, writeManifest(spark, st.goldPath, st.dir))._1
+        else total
+      }
+    Tally(waveNo, incoming, nLive, nGated, counts, accepted, goldTotal)
   }
 
+  /** Retract `ids` (a one-column frame of doc_ids): append tombstones,
+    * retract them from the layout's state into bumped tables (state
+    * before gold), rewrite gold blue/green without them. Returns the
+    * bumped state (new table versions — consumers repoint atomically,
+    * the q137 cutover). A takedown BEFORE any gold exists (tombstone
+    * seeding — the CLI's GRAFT_TAKEDOWN-before-waves shape) rewrites no
+    * gold. */
+  private def takedownLoop[S <: WaveState[S]](spark: SparkSession,
+      layout: WaveLayout[S], st: S, ids: DataFrame): S = {
+    val hadGold = goldHasData(spark, st.goldPath)
+    val next = st.bumped(gold = hadGold)
+    Incremental.appendTombstones(ids, ids.columns.head,
+      spark.table(st.tombTable), st.tombTable, st.numBuckets)
+    layout.retract(spark, st, next, ids)
+    if (hadGold) {
+      rewriteGoldRetained(spark, st.dir, st.goldPath, next.goldPath,
+        st.goldVersion, st.tombTable)
+      if (layout.manifest) writeManifest(spark, next.goldPath, st.dir)
+    }
+    next
+  }
 
-  /** Fresh start shared by the three init functions: drop `tables`,
-    * seed an empty tombstone table, wipe every gold version, the legacy
-    * unversioned dir and the pointer, then point at `gold_v0` (where the
-    * first wave appends). */
-  private def resetLoop(spark: SparkSession, dir: String,
-      tables: Seq[String], tombTable: String, numBuckets: Int): Unit = {
-    (tables :+ tombTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    Incremental.writeTombstones(spark.range(0).select(col("id").as("doc_id")),
-      "doc_id", tombTable, s"$dir/tombstones", numBuckets)
-    val fs = fsFor(spark, dir)
-    Option(fs.globStatus(new Path(s"$dir/gold_v*")))
-      .toSeq.flatten.foreach(st => fs.delete(st.getPath, true))
-    fs.delete(new Path(s"$dir/gold"), true)
-    fs.delete(new Path(s"$dir/_GOLD_CURRENT"), false)
-    writeGoldPointer(spark, dir, "gold_v0")
+  /** Duplicate-signature compaction — the blue/green bump of the
+    * layout's state ([[CompactionPolicy]] decides WHEN; it is safe at
+    * any time: probe decisions provably unchanged, see the Incremental
+    * scaladocs). Remap contract: each compaction writes a
+    * dropped-id → representative `_remap` sidecar beside the new
+    * signature table, composed with the PRIOR version's sidecar passed
+    * in here, and every takedown retracts through it, so retracting a
+    * representative re-elects its minimum surviving twin instead of
+    * deleting the rows its collapsed twins still stand on. Returns the
+    * bumped state — consumers repoint as after a takedown. */
+  private def compactLoop[S <: WaveState[S]](spark: SparkSession,
+      layout: WaveLayout[S], st: S): S = {
+    val next = st.bumped(gold = false)
+    layout.compact(spark, st, next, Incremental.priorRemap(spark, st.sigTable))
+    next
+  }
+
+  /** The CLI loop of [[runText]], [[runMedia]] and [[runVideo]]: init,
+    * takedown seeding, then per wave: drift monitor, ingest, report,
+    * compaction when due. */
+  private def runLoop[S <: WaveState[S]](spark: SparkSession,
+      layout: WaveLayout[S], fresh: S, tag: String, wavePaths: Seq[String],
+      takedownPath: Option[String], compaction: CompactionPolicy,
+      driftCols: Seq[String], driftTokens: Int): Unit = {
+    var st = initLoop(spark, layout, fresh)
+    takedownPath.foreach(p => st = takedownLoop(spark, layout, st,
+      spark.read.parquet(p).select("doc_id")))
+    // compaction trigger bookkeeping: O(1) per wave (the tally's own
+    // count feeds `appended`); one exact count per fired compaction
+    // resets the baseline
+    var (appended, baseline) = (0L, 0L)
+    wavePaths.zipWithIndex.foreach { case (path, i) =>
+      val wave = spark.read.parquet(path)
+      // drift is measured BEFORE ingesting: the question is "does this
+      // wave look like the corpus we promoted so far?"
+      if (driftCols.nonEmpty || driftTokens > 0)
+        waveDriftAt(spark, st.goldPath, st.dir, wave, driftCols, i,
+          driftTokens, tag = tag)
+      val t = waveLoop(spark, layout, st, wave, i)
+      println(s"[$tag] wave=${t.wave} incoming=${t.incoming} " +
+        s"live=${t.live} ${layout.line(t)} " +
+        s"accepted=${t.accepted} gold=${t.goldTotal}")
+      appended += t.counts._1
+      if (compaction.due(appended, baseline)) {
+        st = compactLoop(spark, layout, st)
+        baseline = layout.stateDocs(spark, st)
+        appended = 0L
+        println(s"[$tag] compacted signature state -> ${st.sigTable}")
+      }
+    }
   }
 
   /** Does the partitioned gold dir hold any actual parquet data?
@@ -299,62 +383,18 @@ object IngestCli {
       Option(fs.globStatus(new Path(s"$goldPath/*/*.parquet"))).exists(_.nonEmpty)
   }
 
-  /** Retract `ids` (a one-column frame of doc_ids): append tombstones,
-    * rewrite gold blue/green without them, compact the id-carrying
-    * signature state, and compact the content-keyed digest state by
-    * the retracted documents' own keys (recomputed from gold text
-    * BEFORE the rewrite). Returns the bumped state (new table
-    * versions — consumers repoint atomically, the q137 cutover). */
-  def applyTakedown(spark: SparkSession, st: IngestState,
-      ids: DataFrame): IngestState = {
-    // digest keys of the retracted docs, from their retained gold
-    // text (computed FIRST — it reads gold, which the rewrite below
-    // replaces). A takedown BEFORE any gold exists (tombstone seeding
-    // — the CLI's GRAFT_TAKEDOWN-before-waves shape) retracts no
-    // content, so the key set is empty.
-    val hadGold = goldHasData(spark, st.goldPath)
-    val retractKeys =
-      if (hadGold)
-        Incremental.digestKeys(
-            spark.read.parquet(st.goldPath).join(
-              broadcast(ids.select(col(ids.columns.head).as("doc_id"))),
-              Seq("doc_id")),
-            col("text"))
-          .distinct().localCheckpoint(true)
-      else spark.range(0).select(col("id").as("__d1"), col("id").as("__d2"))
+  /** Rewrite the release manifest of `goldPath` at `$dir/manifest`; when
+    * no gold data REMAINS (a retract-everything takedown) remove it
+    * instead — a manifest read could not infer a schema from the empty
+    * dir. */
+  private def writeManifest(spark: SparkSession, goldPath: String,
+      dir: String): Unit =
+    if (goldHasData(spark, goldPath))
+      sources.CorpusIO.releaseManifest(spark, goldPath, "ingest_wave")
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/manifest")
+    else fsFor(spark, dir).delete(new Path(s"$dir/manifest"), true)
 
-    val next = st.copy(version = st.version + 1,
-      digestVersion = st.digestVersion + 1,
-      goldVersion = st.goldVersion + (if (hadGold) 1 else 0))
-    Incremental.appendTombstones(ids, ids.columns.head,
-      spark.table(st.tombTable), st.tombTable, st.numBuckets)
-    Incremental.compactState(spark.table(st.sigTable), "doc_id",
-      spark.table(st.tombTable), next.sigTable,
-      s"${st.dir}/sigs_v${next.version}",
-      bucketCols = Seq("band", "bucket"), numBuckets = st.numBuckets)
-    sources.CorpusIO.writeBucketed(
-      spark.table(st.digestTable)
-        .join(retractKeys, Seq("__d1", "__d2"), "left_anti"),
-      next.digestTable, Seq("__d1", "__d2"), st.numBuckets,
-      path = Some(s"${st.dir}/digests_v${next.digestVersion}"))
-
-    // gold blue/green: write retained rows beside, then swap dirs.
-    // Skipped when no gold data exists; manifest only when data
-    // REMAINS (a retract-everything takedown leaves an empty dir a
-    // manifest read could not infer a schema from).
-    if (hadGold) {
-      rewriteGoldRetained(spark, st.dir, st.goldPath, next.goldPath,
-        st.goldVersion, st.tombTable)
-      if (goldHasData(spark, next.goldPath))
-        sources.CorpusIO.releaseManifest(spark, next.goldPath, "ingest_wave")
-          .write.mode(SaveMode.Overwrite).parquet(st.manifestPath)
-      else
-        fsFor(spark, st.dir).delete(new Path(st.manifestPath), true)
-    }
-    next
-  }
-
-  /** Gold rewrite shared by every loop's takedown — VERSIONED
+  /** The takedown's gold rewrite — VERSIONED
     * blue/green, the state tables' pattern applied to the directory:
     * retained rows land in a fresh `gold_v{n+1}`, the `_GOLD_CURRENT`
     * pointer repoints, and only then does the n−1 version (two
@@ -441,28 +481,124 @@ object IngestCli {
     }
   }
 
-  /** Duplicate-signature compaction epilogues — the blue/green bump
-    * for each loop's signature state ([[CompactionPolicy]] decides
-    * WHEN; these are safe at any time: probe decisions provably
-    * unchanged, see the Incremental scaladocs). The text epilogue
-    * compacts BOTH text states (banded MinHash rows by (band, bucket,
-    * sig); the bare digest table by DISTINCT) — honestly, the text
-    * loop's own exact gate already stops identical re-appends (only
-    * exact SURVIVORS reach either table), so it bites mainly for
-    * out-of-loop `appendBandedSignatures` callers; in the Hamming loops
-    * recrawl accretion is structural (every decoded admitted signature
-    * is appended, so a recrawled item adds a row per sighting).
-    * Returns the bumped state — consumers repoint as after a takedown. */
-  def compactTextSigs(spark: SparkSession, st: IngestState): IngestState = {
-    val next = st.copy(version = st.version + 1,
-      digestVersion = st.digestVersion + 1)
-    Incremental.dedupCompactBandedState(spark.table(st.sigTable), "doc_id",
-      next.sigTable, s"${st.dir}/sigs_v${next.version}", st.numBuckets)
-    Incremental.dedupCompactDigestState(spark.table(st.digestTable),
-      next.digestTable, s"${st.dir}/digests_v${next.digestVersion}",
-      st.numBuckets)
-    next
+  // ---- The TEXT layout and its public surface.
+
+  /** The text layout. Its MinHash contract — 128 slots over 3-word
+    * shingles, 32 bands — is fixed for the state's life (the persisted
+    * rows hash 4 slots per band); `cfg` supplies the gate and the fuzzy
+    * threshold, `evalGate` arms the decontamination gate. */
+  private def textLayout(cfg: GraftConfig = GraftConfig(),
+      evalGate: Option[EvalGate] = None): WaveLayout[IngestState] = {
+    val (numPerm, bands, shingleSize) = (128, 32, 3)
+    val gate = gatePredicate(cfg, evalGate)
+    WaveLayout[IngestState]("text", "exact + sign + count", Some(gate),
+      manifest = true,
+      init = (spark, st) => {
+        val empty = spark.range(0)
+          .select(col("id").as("doc_id"), lit("empty seed").as("text"))
+        Incremental.writeDigestTable(empty, col("text"), st.digestTable,
+          st.digestPath, st.numBuckets)
+        Incremental.writeBandedSignatures(empty, "doc_id", col("text"),
+          st.sigTable, st.sigPath, st.numBuckets, numPerm, bands, shingleSize)
+      },
+      screen = (live, st) => {
+        // map-side gates first (length bounds + the optional
+        // decontamination filter — both row-local); exact: keep the
+        // lowest id within the wave, then drop anything whose normalized
+        // digest the corpus has EVER seen (state side bucket-aligned;
+        // only the wave shuffles); then the survivors' ONE MinHash
+        // signing. The lazy local checkpoint is materialized by the
+        // count itself, before pairs, probe or append read a signature.
+        val rows = Incremental.exactDedupAgainstTable(
+            Dedup.keepBestWindow(live.filter(gate),
+              graft.functions.text.norm_key(col("text")), Seq(col("doc_id").asc)),
+            col("text"), live.sparkSession.table(st.digestTable))
+          .withColumn("__sig", Dedup.minhashSigCol(col("text"), numPerm,
+            shingleSize))
+          .localCheckpoint(eager = false)
+        Screen(rows, () => (rows.count(), 0L),
+          dropIds => rows.drop("__sig").join(dropIds, Seq("doc_id"), "left_anti"))
+      },
+      pairs = (rows, _) => Dedup.candidatesFromSig(rows, "doc_id",
+        cfg.fuzzyThreshold, numPerm, bands, maxBucketSize = 1024),
+      probe = (rows, st) => Incremental.fuzzyDupIdsFromSigs(rows, "doc_id",
+        rows.sparkSession.table(st.sigTable), cfg.fuzzyThreshold, numPerm,
+        bands),
+      // two DIFFERENT tables from the same materialized rows, written
+      // concurrently: both tolerate the duplicate rows a re-run can
+      // leave in ANY landing order (digests feed an anti-join, signature
+      // dup ids collapse behind `.distinct()`)
+      append = (rows, st) => operators.Actions.inParallel(Seq(
+        () => Incremental.appendDigests(rows, col("text"), st.digestTable,
+          st.numBuckets),
+        () => Incremental.writeBandedSigs(rows, "doc_id", st.sigTable,
+          st.numBuckets, numPerm, bands))),
+      retract = (spark, st, next, ids) => {
+        // the retracted docs' digest keys, from their retained gold text,
+        // read BEFORE the gold rewrite replaces it; none when no gold
+        // exists (the bump then keeps the gold version)
+        val keys =
+          if (next.goldVersion == st.goldVersion)
+            spark.range(0).select(col("id").as("__d1"), col("id").as("__d2"))
+          else Incremental.digestKeys(
+              spark.read.parquet(st.goldPath).join(
+                broadcast(ids.select(col(ids.columns.head).as("doc_id"))),
+                Seq("doc_id")),
+              col("text"))
+            .distinct().localCheckpoint(true)
+        Incremental.retractBandedHammingIds(spark, st.sigTable, next.sigTable,
+          next.sigPath, spark.table(st.tombTable), st.numBuckets)
+        sources.CorpusIO.writeBucketed(
+          spark.table(st.digestTable)
+            .join(keys, Seq("__d1", "__d2"), "left_anti"),
+          next.digestTable, Seq("__d1", "__d2"), st.numBuckets,
+          path = Some(next.digestPath))
+      },
+      compact = (spark, st, next, prior) => {
+        Incremental.dedupCompactBandedState(spark.table(st.sigTable), "doc_id",
+          next.sigTable, next.sigPath, st.numBuckets, priorRemap = prior)
+        Incremental.dedupCompactDigestState(spark.table(st.digestTable),
+          next.digestTable, next.digestPath, st.numBuckets)
+      },
+      line = t => s"gated=${t.gated} exact=${t.counts._1}",
+      stateDocs = (spark, st) => spark.table(st.digestTable).count())
   }
+
+  /** Fresh text state: empty bucketed digest/signature/tombstone tables
+    * and a clean gold dir. */
+  def initState(spark: SparkSession, ns: String, dir: String,
+      numBuckets: Int = 8): IngestState =
+    initLoop(spark, textLayout(), IngestState(ns, dir, numBuckets))
+
+  /** One text wave. `waveNo` labels the gold partition.
+    * `evalGate` ([[evalGate]]) arms the benchmark-decontamination
+    * gate: docs sharing an `nWords`-gram with the eval set never
+    * reach dedup, gold OR state — the text loop's analog of the media
+    * blocklist, map-side in one referenced-array expression. Like
+    * blocked media, a gated doc cannot suppress its near-duplicates (it
+    * was never seen). */
+  def ingestWave(spark: SparkSession, st: IngestState, wave: DataFrame,
+      waveNo: Int, cfg: GraftConfig = GraftConfig(),
+      evalGate: Option[EvalGate] = None): WaveReport = {
+    val t = waveLoop(spark, textLayout(cfg, evalGate), st, wave, waveNo)
+    WaveReport(t.wave, t.incoming, t.live, t.gated, t.counts._1, t.accepted,
+      t.goldTotal)
+  }
+
+  /** Text takedown ([[takedownLoop]]): the signature state retracts
+    * remap-aware, the content-keyed digest state drops the retracted
+    * documents' own keys, gold rewrites, the manifest follows. A
+    * retracted doc that never reached gold (dropped as a dup) leaves its
+    * digest behind — [[rebuildDigestState]] is the fix. */
+  def applyTakedown(spark: SparkSession, st: IngestState,
+      ids: DataFrame): IngestState =
+    takedownLoop(spark, textLayout(), st, ids)
+
+  /** [[compactLoop]] over both text states: banded MinHash rows by
+    * (band, bucket, sig) with the remap sidecar; the bare digest table
+    * by DISTINCT. */
+  def compactTextSigs(spark: SparkSession, st: IngestState): IngestState =
+    compactLoop(spark, textLayout(), st)
 
   /** Rebuild the content-keyed digest state from RETAINED GOLD — the
     * mechanized form of [[applyTakedown]]'s documented residual: a
@@ -482,7 +618,7 @@ object IngestCli {
       if (goldHasData(spark, st.goldPath)) spark.read.parquet(st.goldPath)
       else spark.range(0).select(col("id").as("doc_id"), lit("empty").as("text"))
     Incremental.writeDigestTable(gold, col("text"), next.digestTable,
-      s"${st.dir}/digests_v${next.digestVersion}", st.numBuckets)
+      next.digestPath, st.numBuckets)
     next
   }
 
@@ -499,49 +635,18 @@ object IngestCli {
       threshold = cfg.fuzzyThreshold)
   }
 
-  // --------------------------------------------------------------
-  // The HAMMING wave loop, for payloads that reduce to 64-bit
-  // perceptual signatures: decode → optional blocklist gate → in-wave
-  // near-dup keep-lowest-id → probe against the persisted state →
-  // append state (seen-not-kept) → gold append. Two state layouts
-  // ([[HammingLayout]]): MEDIA ([[MediaState]], `hsigs_v*`), one
-  // signature per item — images by default, audio via
-  // Audio.audioSignatures; VIDEO ([[VideoState]], `fsigs_v*`, q147's
-  // layout), a clip is its per-sampled-position frame signatures and
-  // two clips match when ≥ minFrames positions are within budget. The
-  // video blocklist is CROSS-MODAL: frames share the image dHash
-  // identity, so a flagged IMAGE signature blocks every clip with a
-  // sampled frame within budget of it.
-  //
-  // Equivalence contract (IngestSpec): with waves arriving in id
-  // order, gold after any number of waves IS [[batchMediaEquivalent]]
-  // / [[batchVideoEquivalent]] over the union — unconditionally, since
-  // pigeonhole banding enumerates pairs EXACTLY. Undecodable payloads
-  // pass (nothing provable) and never enter state; blocked payloads
-  // never enter gold OR state.
-  //
-  // 100 TB shape: decode is the wave-sized mapPartitions scan
-  // (`everyNth` is the video knob), the blocklist rides map-side in
-  // codegen, the probe shuffles only the wave's banded signatures
-  // (state bucket-aligned, plan-asserted in IncrementalSpec), appends
-  // are wave-sized bucketed writes; no prior media bytes are re-read.
-  // --------------------------------------------------------------
+  // ---- The HAMMING layouts, for payloads that reduce to 64-bit
+  // perceptual signatures, and their public surface.
 
-  /** What the Hamming loop reads off [[MediaState]]/[[VideoState]];
-    * `bumped` is the blue/green version step (gold too on a rewrite). */
-  private[graft] sealed trait HammingState[S <: HammingState[S]] {
-    def ns: String
-    def dir: String
-    def numBuckets: Int
+  /** What the Hamming layouts read off [[MediaState]]/[[VideoState]]. */
+  private[graft] sealed trait HammingState[S <: HammingState[S]]
+      extends WaveState[S] {
     def maxHamming: Int
     def version: Int
-    def goldVersion: Int
     private[graft] def stem: String
-    private[graft] def bumped(gold: Boolean): S
     def sigTable: String = s"${ns}_${stem}_v$version"
-    def tombTable: String = s"${ns}_tombstones"
-    def goldPath: String = s"$dir/gold_v$goldVersion"
     private[graft] def sigPath: String = s"$dir/${stem}_v$version"
+    private[graft] def tables: Seq[String] = Seq(sigTable)
   }
   private type AnyHammingState = HammingState[_]
 
@@ -569,63 +674,72 @@ object IngestCli {
   /** Declared signer identities — the contract strings the state
     * `_meta` row is signed with ([[Incremental.signerTag]]). Two
     * states are signature-comparable iff their names match; every
-    * write/append/probe in the loop below declares one, so a
+    * write/append/probe in the layouts below declares one, so a
     * wrong-modality signer (the classic rebuild mistake) refuses
     * loudly instead of writing incomparable signatures. */
   val ImageSignerName = "image-dhash64-v1"
   val AudioSignerName = "audio-ehash64-v1"
   val VideoSignerName = "video-frame-dhash64-v1"
 
-  /** A wave's signatures past the blocklist: `rows` (decoded, admitted)
-    * feed every dedup and state step; `decodeCounts` is the decode job —
-    * decoded items, and blocked items as a function of live ones;
-    * `keep` narrows a payload frame to admitted items not in `dropIds`. */
-  private final case class Screen(rows: DataFrame,
-      decodeCounts: () => (Long, Long => Long),
-      keep: (DataFrame, DataFrame) => DataFrame)
-
-  /** The one decision the media and video loops differ on — the state
+  /** The one decision the media and video layouts differ on — the state
     * layout — as the calls each step makes. `tag`/`decodeStep` name the
-    * wave's jobs (`<tag> wave N: <step>`); `sig`/`decoded` are the signed
-    * rows' signature and decoded-row test; `callerSigner` marks a
-    * caller-chosen signer, which rebuild guards; `pairs` are in-wave
-    * `(id_a < id_b)` near-duplicates; `retract` is remap-aware (a
-    * retracted representative re-elects its min surviving twin). */
+    * wave's jobs; `sig`/`decoded` are the signed rows' signature and
+    * decoded-row test; `callerSigner` marks a caller-chosen signer,
+    * which rebuild guards; `screen` gates a wave's payload rows given
+    * their signatures and the blocklist, its counts are (decoded,
+    * blocked); `pairs` are in-wave `(id_a < id_b)` near-duplicates
+    * within a Hamming budget; `retract` is remap-aware. The loop reads
+    * them through [[wave]]. */
   private final case class HammingLayout(tag: String, decodeStep: String,
       signerName: String, sig: Column, decoded: Column, callerSigner: Boolean,
       sign: DataFrame => DataFrame,
-      screen: (DataFrame, Option[Dedup.HammingIndex]) => Screen,
+      screen: (DataFrame, DataFrame, Option[Dedup.HammingIndex]) => Screen,
       pairs: (DataFrame, Int) => DataFrame,
       probe: (DataFrame, AnyHammingState) => DataFrame,
       write: (DataFrame, AnyHammingState) => Unit,
       append: (DataFrame, AnyHammingState) => Unit,
-      retract: (SparkSession, AnyHammingState, AnyHammingState) => Unit,
-      compact: (DataFrame, AnyHammingState, Option[DataFrame]) => Unit)
+      retract: (SparkSession, AnyHammingState, AnyHammingState, DataFrame) => Unit,
+      compact: (SparkSession, AnyHammingState, AnyHammingState,
+        Option[DataFrame]) => Unit) {
+    /** This layout as the shared loop runs it; `blocklist` gates each
+      * wave. */
+    def wave[S <: HammingState[S]](
+        blocklist: Option[Dedup.HammingIndex] = None): WaveLayout[S] =
+      WaveLayout[S](tag, decodeStep, gate = None, manifest = false,
+        init = (spark, st) => write(emptySigs(spark, this), st),
+        // decode once per wave (payload bytes never pass this scan); the
+        // lazy checkpoint makes decode+materialize+counts ONE job
+        screen = (live, _) =>
+          screen(live, sign(live).localCheckpoint(eager = false), blocklist),
+        pairs = (rows, st) => pairs(rows, st.maxHamming),
+        probe = probe, append = append, retract = retract, compact = compact,
+        line = t => s"decoded=${t.counts._1} blocked=${t.counts._2}",
+        stateDocs = (spark, st) =>
+          spark.table(st.sigTable).select("doc_id").distinct().count())
+  }
 
   /** The media layout: one `(doc_id, decoded, sig)` row per item, null
-    * sig when undecodable. The signer must emit EXACTLY ONE row per doc
-    * (every stock signer does), or the REPORT's row arithmetic skews
-    * (the id-keyed gold stays correct). */
+    * sig when undecodable. */
   private def flat(signer: DataFrame => DataFrame = defaultImageSigner,
       signerName: String = ImageSignerName): HammingLayout = {
     val signed = Some(signerName)
     HammingLayout("media", "decode + counts", signerName, col("sig"),
       col("decoded"), callerSigner = true,
       sign = signer(_).select(col("doc_id"), col("decoded"), col("sig")),
-      screen = (sigs, blocklist) => {
+      screen = (live, sigs, blocklist) => {
         // exact, codegen'd, no join; null sigs pass (undecodable is
-        // unprovable). Row-local, so the decoded and admitted counts
+        // unprovable). Row-local, so the decoded and blocked counts
         // fold into one aggregation.
         val admittedPred = blocklist.fold(lit(true))(idx =>
           col("sig").isNull || !Dedup.hammingNearSet(col("sig"), idx))
         val admitted = sigs.filter(admittedPred)
-        val decodeCounts = () => {
-          val r = sigs.agg(count(when(col("decoded"), 1)),
-            count(when(admittedPred, 1))).head()
-          (r.getLong(0), (nLive: Long) => nLive - r.getLong(1))
-        }
-        Screen(admitted.filter(col("decoded")), decodeCounts,
-          (payload, dropIds) => payload.join(admitted.select("doc_id")
+        Screen(admitted.filter(col("decoded")),
+          () => {
+            val r = sigs.agg(count(when(col("decoded"), 1)),
+              count(when(!admittedPred, 1))).head()
+            (r.getLong(0), r.getLong(1))
+          },
+          dropIds => live.join(admitted.select("doc_id")
             .join(dropIds, Seq("doc_id"), "left_anti"), Seq("doc_id"), "left_semi"))
       },
       pairs = Dedup.hammingNearDupPairs(_, "doc_id", "sig", _),
@@ -637,12 +751,12 @@ object IngestCli {
         signer = signed),
       append = (rows, st) => Incremental.appendHammingState(rows, "doc_id",
         "sig", st.sigTable, st.maxHamming, st.numBuckets, signer = signed),
-      retract = (spark, st, next) => Incremental.retractBandedHammingIds(
+      retract = (spark, st, next, _) => Incremental.retractBandedHammingIds(
         spark, st.sigTable, next.sigTable, next.sigPath,
         spark.table(st.tombTable), st.numBuckets),
-      compact = (state, next, prior) => Incremental.dedupCompactBandedState(
-        state, "doc_id", next.sigTable, next.sigPath, next.numBuckets,
-        priorRemap = prior))
+      compact = (spark, st, next, prior) => Incremental.dedupCompactBandedState(
+        spark.table(st.sigTable), "doc_id", next.sigTable, next.sigPath,
+        next.numBuckets, priorRemap = prior))
   }
 
   /** The video layout: one `(doc_id, frame_pos, dhash)` row per sampled
@@ -653,7 +767,7 @@ object IngestCli {
     HammingLayout("video", "decode + count", VideoSignerName, col("dhash"),
       lit(true), callerSigner = false,
       sign = operators.Video.frameSignatures(_, "doc_id", col("content"), everyNth),
-      screen = (sigs, blocklist) => {
+      screen = (live, sigs, blocklist) => {
         // map-side codegen per frame row, one tiny distinct; no
         // blocklist ⇒ no blocked ids, no job spent proving it
         val blockedIds = blocklist match {
@@ -664,8 +778,8 @@ object IngestCli {
         }
         Screen(sigs.join(blockedIds, Seq("doc_id"), "left_anti"),
           () => (sigs.select("doc_id").distinct().count(),
-            _ => if (blocklist.isDefined) blockedIds.count() else 0L),
-          (payload, dropIds) => payload
+            if (blocklist.isDefined) blockedIds.count() else 0L),
+          dropIds => live
             .join(blockedIds, Seq("doc_id"), "left_anti")
             .join(dropIds, Seq("doc_id"), "left_anti"))
       },
@@ -679,12 +793,12 @@ object IngestCli {
       append = (rows, st) => Incremental.appendFrameHammingState(rows,
         "doc_id", "dhash", st.sigTable, st.maxHamming, st.numBuckets,
         everyNth = everyNth, signer = signed),
-      retract = (spark, st, next) => Incremental.retractFrameHammingIds(
+      retract = (spark, st, next, _) => Incremental.retractFrameHammingIds(
         spark, st.sigTable, next.sigTable, next.sigPath,
         spark.table(st.tombTable), st.numBuckets),
-      compact = (state, next, prior) => Incremental.dedupCompactFrameState(
-        state, "doc_id", next.sigTable, next.sigPath, next.numBuckets,
-        priorRemap = prior))
+      compact = (spark, st, next, prior) => Incremental.dedupCompactFrameState(
+        spark.table(st.sigTable), "doc_id", next.sigTable, next.sigPath,
+        next.numBuckets, priorRemap = prior))
   }
 
   /** No signature rows, in `layout`'s own schema: init and rebuild seed
@@ -693,28 +807,26 @@ object IngestCli {
     layout.sign(spark.range(0).select(col("id").as("doc_id"),
       lit(null).cast("binary").as("content")))
 
+  /** A media/video wave's report from the loop's tally. */
+  private def mediaReport(t: Tally): MediaWaveReport =
+    MediaWaveReport(t.wave, t.incoming, t.live, t.counts._1, t.counts._2,
+      t.accepted, t.goldTotal)
+
   /** Fresh media state: empty bucketed Hamming-signature and tombstone
     * tables, clean gold dir. `maxHamming` fixes the band layout for
     * the state's whole life (every append and probe uses it). */
   def initMediaState(spark: SparkSession, ns: String, dir: String,
       maxHamming: Int = 8, numBuckets: Int = 8,
       signerName: String = ImageSignerName): MediaState =
-    initHamming(spark, flat(signerName = signerName),
+    initLoop(spark, flat(signerName = signerName).wave[MediaState](),
       MediaState(ns, dir, numBuckets, maxHamming))
 
   /** Fresh video state (see [[VideoState]]). */
   def initVideoState(spark: SparkSession, ns: String, dir: String,
       maxHamming: Int = 8, minFrames: Int = 2, everyNth: Int = 2,
       numBuckets: Int = 8): VideoState =
-    initHamming(spark, positional(minFrames, everyNth),
+    initLoop(spark, positional(minFrames, everyNth).wave[VideoState](),
       VideoState(ns, dir, numBuckets, maxHamming, minFrames, everyNth))
-
-  private def initHamming[S <: HammingState[S]](spark: SparkSession,
-      layout: HammingLayout, st: S): S = {
-    resetLoop(spark, st.dir, Seq(st.sigTable), st.tombTable, st.numBuckets)
-    layout.write(emptySigs(spark, layout), st)
-    st
-  }
 
   /** One media wave. `wave` needs (doc_id, content binary); extra
     * columns ride to gold. `signer` emits one `(doc_id, decoded, sig)`
@@ -726,61 +838,17 @@ object IngestCli {
       signer: DataFrame => DataFrame = defaultImageSigner,
       blocklist: Option[Dedup.HammingIndex] = None,
       signerName: String = ImageSignerName): MediaWaveReport =
-    hammingWave(spark, flat(signer, signerName), st, wave, waveNo, blocklist)
+    mediaReport(waveLoop(spark,
+      flat(signer, signerName).wave[MediaState](blocklist), st, wave, waveNo))
 
   /** One video wave. `wave` needs (doc_id, content binary AVI); extra
     * columns ride to gold. `blocklist` = flagged IMAGE signatures. */
   def ingestVideoWave(spark: SparkSession, st: VideoState, wave: DataFrame,
       waveNo: Int,
       blocklist: Option[Dedup.HammingIndex] = None): MediaWaveReport =
-    hammingWave(spark, positional(st.minFrames, st.everyNth), st, wave,
-      waveNo, blocklist)
-
-  private def hammingWave(spark: SparkSession, layout: HammingLayout,
-      st: AnyHammingState, wave: DataFrame, waveNo: Int,
-      blocklist: Option[Dedup.HammingIndex]): MediaWaveReport = {
-    def step[T](name: String)(f: => T): T =
-      labeled(spark, s"${layout.tag} wave $waveNo: $name")(f)
-    val tombs = spark.table(st.tombTable)
-    val live = Incremental.retractIds(wave, "doc_id", tombs)
-
-    // decode once per wave (payload bytes never pass this scan); the
-    // lazy checkpoint makes decode+materialize+counts ONE job
-    val sigs = layout.sign(live).localCheckpoint(eager = false)
-    val screen = layout.screen(sigs, blocklist)
-    // the audit and the decode job are independent wave scans — run
-    // concurrently, the cheap audit hides in the decode wall (§2.6)
-    val ((incoming, nLive, _), (nDecoded, blockedOf)) = operators.Actions.par2(
-      step("audit counts") { waveAuditCounts(wave, tombs, None) },
-      step(layout.decodeStep) { screen.decodeCounts() })
-    val nBlocked = blockedOf(nLive)
-
-    // in-wave and against-state drops over the SAME screened rows,
-    // unioned — the seen-not-kept contract, exactly as the text loop
-    val dropIds = layout.pairs(screen.rows, st.maxHamming)
-      .select(col("id_b").as("doc_id"))
-      .union(layout.probe(screen.rows, st))
-      .distinct().localCheckpoint(eager = false)
-    // drop ids are admitted (never blocked) and wave ids are unique,
-    // so |accepted| = |live| − |blocked| − |dropIds| with no second
-    // content-carrying pass
-    val nAccepted = nLive - nBlocked - step("drop ids") { dropIds.count() }
-
-    // state grows by every decoded admitted signature (dropped or not),
-    // strictly before gold
-    step("state append") { layout.append(screen.rows, st) }
-    step("gold append") {
-      screen.keep(live, dropIds).withColumn("ingest_wave", lit(waveNo))
-        .write.mode(SaveMode.Append).partitionBy("ingest_wave")
-        .parquet(st.goldPath)
-    }
-    val goldTotal =
-      if (goldHasData(spark, st.goldPath))
-        step("gold count") { spark.read.parquet(st.goldPath).count() }
-      else 0L
-    MediaWaveReport(waveNo, incoming, nLive, nDecoded, nBlocked, nAccepted,
-      goldTotal)
-  }
+    mediaReport(waveLoop(spark,
+      positional(st.minFrames, st.everyNth).wave[VideoState](blocklist), st,
+      wave, waveNo))
 
   /** Media takedown: tombstones gate later waves, gold rewrites
     * blue/green without the ids, and the signature state drops the
@@ -790,26 +858,13 @@ object IngestCli {
     * [[rebuildMediaState]]. */
   def applyMediaTakedown(spark: SparkSession, st: MediaState,
       ids: DataFrame): MediaState =
-    hammingTakedown(spark, flat(), st, ids)
+    takedownLoop(spark, flat().wave[MediaState](), st, ids)
 
   /** [[applyMediaTakedown]] over the positional clip state. */
   def applyVideoTakedown(spark: SparkSession, st: VideoState,
       ids: DataFrame): VideoState =
-    hammingTakedown(spark, positional(st.minFrames, st.everyNth), st, ids)
-
-  private def hammingTakedown[S <: HammingState[S]](spark: SparkSession,
-      layout: HammingLayout, st: S, ids: DataFrame): S = {
-    val hadGold = goldHasData(spark, st.goldPath)
-    val next = st.bumped(gold = hadGold)
-    Incremental.appendTombstones(ids, ids.columns.head,
-      spark.table(st.tombTable), st.tombTable, st.numBuckets)
-    layout.retract(spark, st, next)
-    if (hadGold)
-      rewriteGoldRetained(spark, st.dir, st.goldPath, next.goldPath,
-        st.goldVersion, st.tombTable)
-    next
-  }
-
+    takedownLoop(spark, positional(st.minFrames, st.everyNth)
+      .wave[VideoState](), st, ids)
   /** Rebuild the media Hamming state from RETAINED GOLD — the
     * seen-not-kept residual's fix ([[rebuildDigestState]]'s shape): a
     * signature dropped as a retracted item's duplicate otherwise
@@ -857,21 +912,11 @@ object IngestCli {
   }
 
   def compactMediaSigs(spark: SparkSession, st: MediaState): MediaState =
-    compactHamming(spark, flat(), st)
+    compactLoop(spark, flat().wave[MediaState](), st)
 
   def compactVideoSigs(spark: SparkSession, st: VideoState): VideoState =
-    compactHamming(spark, positional(st.minFrames, st.everyNth), st)
-
-  private def compactHamming[S <: HammingState[S]](spark: SparkSession,
-      layout: HammingLayout, st: S): S = {
-    val next = st.bumped(gold = false)
-    // carry the dropped-id → representative remap across versions so
-    // a LATER takedown of a representative re-elects a surviving twin
-    val prior = Some(s"${st.sigTable}_remap")
-      .filter(spark.catalog.tableExists).map(spark.table)
-    layout.compact(spark.table(st.sigTable), next, prior)
-    next
-  }
+    compactLoop(spark, positional(st.minFrames, st.everyNth)
+      .wave[VideoState](), st)
 
   /** The from-scratch media batch the wave loop must equal over the
     * union of its waves: sign → blocklist gate → keep every row not
@@ -926,27 +971,8 @@ object IngestCli {
     // digests built ONCE per run — benchmark-sized eval sets, the
     // evalGramDigests contract
     val gate = evalPath.map(p => evalGate(spark.read.parquet(p), col("text")))
-    var st = initState(spark, ns, dir)
-    takedownPath.foreach { p =>
-      st = applyTakedown(spark, st, spark.read.parquet(p).select("doc_id"))
-    }
-    val clock = new CompactionClock(compaction)
-    wavePaths.zipWithIndex.foreach { case (path, i) =>
-      val wave = spark.read.parquet(path)
-      // drift is measured BEFORE ingesting: the question is "does this
-      // wave look like the corpus we promoted so far?"
-      if (driftCols.nonEmpty || driftTokens > 0)
-        waveDrift(spark, st, wave, driftCols, i, driftTokens)
-      val r = ingestWave(spark, st, wave, i, cfg, gate)
-      println(s"[ingest] wave=${r.wave} incoming=${r.incoming} " +
-        s"live=${r.live} gated=${r.gated} exact=${r.exactSurvivors} " +
-        s"accepted=${r.accepted} gold=${r.goldTotal}")
-      if (clock.record(r.exactSurvivors)) {
-        st = compactTextSigs(spark, st)
-        clock.reset(spark.table(st.digestTable).count())
-        println(s"[ingest] compacted signature state -> ${st.sigTable}")
-      }
-    }
+    runLoop(spark, textLayout(cfg, gate), IngestState(ns, dir, 8), "ingest",
+      wavePaths, takedownPath, compaction, driftCols, driftTokens)
   }
 
   /** PSI alarm threshold for the wave drift monitor — the standard
@@ -1039,8 +1065,11 @@ object IngestCli {
         s"GRAFT_MEDIA=$other (want image|audio — video routes through " +
           "runVideo and its positional state)")
     }
-    runHamming(spark, layout, MediaState(ns, dir, 8, maxHamming), wavePaths,
-      blocklistPath, takedownPath, compaction, driftCols, driftTokens)
+    val blocklist = blocklistPath.map(p =>
+      Dedup.hammingIndex(spark.read.parquet(p), "sig", maxHamming))
+    runLoop(spark, layout.wave[MediaState](blocklist),
+      MediaState(ns, dir, 8, maxHamming), "ingest-media", wavePaths,
+      takedownPath, compaction, driftCols, driftTokens)
   }
 
   /** The VIDEO loop (`GRAFT_MEDIA=video`): clip waves through the
@@ -1053,43 +1082,12 @@ object IngestCli {
       maxHamming: Int = 8, minFrames: Int = 2, everyNth: Int = 2,
       ns: String = "graft_ingest_video",
       compaction: CompactionPolicy = CompactionPolicy(),
-      driftCols: Seq[String] = Nil, driftTokens: Int = 0): Unit =
-    runHamming(spark, positional(minFrames, everyNth),
-      VideoState(ns, dir, 8, maxHamming, minFrames, everyNth), wavePaths,
-      blocklistPath, takedownPath, compaction, driftCols, driftTokens)
-
-  /** The CLI loop of [[runMedia]]/[[runVideo]]: init, takedown seeding,
-    * then per wave: drift monitor, ingest, report, compaction when due. */
-  private def runHamming[S <: HammingState[S]](spark: SparkSession,
-      layout: HammingLayout, fresh: S, wavePaths: Seq[String],
-      blocklistPath: Option[String], takedownPath: Option[String],
-      compaction: CompactionPolicy, driftCols: Seq[String],
-      driftTokens: Int): Unit = {
-    val tag = s"ingest-${layout.tag}"
+      driftCols: Seq[String] = Nil, driftTokens: Int = 0): Unit = {
     val blocklist = blocklistPath.map(p =>
-      Dedup.hammingIndex(spark.read.parquet(p), "sig", fresh.maxHamming))
-    var st = initHamming(spark, layout, fresh)
-    takedownPath.foreach(p => st = hammingTakedown(spark, layout, st,
-      spark.read.parquet(p).select("doc_id")))
-    val clock = new CompactionClock(compaction)
-    wavePaths.zipWithIndex.foreach { case (path, i) =>
-      val wave = spark.read.parquet(path)
-      // drift BEFORE ingesting, as the text loop: "does this wave look
-      // like the corpus we promoted so far?"
-      if (driftCols.nonEmpty || driftTokens > 0)
-        waveDriftAt(spark, st.goldPath, st.dir, wave, driftCols, i,
-          driftTokens, tag = tag)
-      val r = hammingWave(spark, layout, st, wave, i, blocklist)
-      println(s"[$tag] wave=${r.wave} incoming=${r.incoming} " +
-        s"live=${r.live} decoded=${r.decoded} blocked=${r.blocked} " +
-        s"accepted=${r.accepted} gold=${r.goldTotal}")
-      if (clock.record(r.decoded)) {
-        st = compactHamming(spark, layout, st)
-        clock.reset(spark.table(st.sigTable)
-          .select("doc_id").distinct().count())
-        println(s"[$tag] compacted signature state -> ${st.sigTable}")
-      }
-    }
+      Dedup.hammingIndex(spark.read.parquet(p), "sig", maxHamming))
+    runLoop(spark, positional(minFrames, everyNth).wave[VideoState](blocklist),
+      VideoState(ns, dir, 8, maxHamming, minFrames, everyNth), "ingest-video",
+      wavePaths, takedownPath, compaction, driftCols, driftTokens)
   }
 
   /** The CLUSTER loop (`GRAFT_CLUSTERS=1`): text waves through the

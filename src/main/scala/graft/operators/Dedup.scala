@@ -212,7 +212,7 @@ object Dedup {
     * arrays never enter its shuffle); min-id signatures are aggregated
     * over oversized-bucket members alone, which the cap makes rare by
     * construction. */
-  private def candidatesFromSig(
+  private[graft] def candidatesFromSig(
       withSig: DataFrame, idCol: String,
       threshold: Double, numPerm: Int, bands: Int,
       maxBucketSize: Int): DataFrame = {
@@ -260,10 +260,13 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
   }
 
-  private def signed(df: DataFrame, idCol: String, textCol: Column,
-      numPerm: Int, shingleSize: Int): DataFrame =
-    spreadWide(df).select(col(idCol),
-      minhashSig(shingles(text.norm_key(textCol), shingleSize), numPerm).as("__sig"))
+  /** The MinHash signature of a text: `numPerm` slots over the
+    * `shingleSize`-word shingles of its normalized form. The one signing
+    * expression behind [[minhashSignatures]] and the text wave loop, so
+    * state rows and their probes sign identically. */
+  private[graft] def minhashSigCol(textCol: Column, numPerm: Int,
+      shingleSize: Int): Column =
+    minhashSig(shingles(text.norm_key(textCol), shingleSize), numPerm)
 
   private[graft] def minhashCandidates(
       df: DataFrame,
@@ -279,7 +282,7 @@ object Dedup {
     // (banded rows + both re-attach sides) — the standalone entry
     // point leaves it lazy so plan-shape specs can inspect the full
     // tree; minhashDedup persists it around this call.
-    candidatesFromSig(signed(df, idCol, textCol, numPerm, shingleSize),
+    candidatesFromSig(minhashSignatures(df, idCol, textCol, numPerm, shingleSize),
       idCol, threshold, numPerm, bands, maxBucketSize)
   }
 
@@ -293,7 +296,7 @@ object Dedup {
       shingleSize: Int = 3,
       maxBucketSize: Int = 1024): DataFrame =
     minhashDedupFromSigs(df, idCol,
-      signed(df, idCol, textCol, numPerm, shingleSize),
+      minhashSignatures(df, idCol, textCol, numPerm, shingleSize),
       threshold, numPerm, bands, maxBucketSize)
 
   /** Persistable MinHash signature table `(idCol, __sig)` — compute
@@ -302,7 +305,8 @@ object Dedup {
     * (numPerm longs/doc), never re-reading corpus text. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: Column,
       numPerm: Int = 128, shingleSize: Int = 3): DataFrame =
-    signed(df, idCol, textCol, numPerm, shingleSize)
+    spreadWide(df).select(col(idCol),
+      minhashSigCol(textCol, numPerm, shingleSize).as("__sig"))
 
   /** [[minhashDedup]] over an ALREADY-computed signature table
     * `(idCol, __sig)` (a [[minhashSignatures]] product, typically read
@@ -385,7 +389,7 @@ object Dedup {
       text.expr2col(graft.functions.SigAgreeCount(
         text.col2expr(x), text.col2expr(y))).cast("double") / numPerm
     val corpusIdCol = corpusSigned.columns.head
-    val incSigned = signed(incoming, idCol, textCol, numPerm, shingleSize)
+    val incSigned = minhashSignatures(incoming, idCol, textCol, numPerm, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       incSigned.count() // eager: referenced by the banding AND the re-attach
@@ -1276,19 +1280,12 @@ object Dedup {
     * its second plan copy). Any static probe reads the pre-AQE split
     * count — exactly what's wanted here, since the question is "how
     * parallel is the SCAN", not what AQE coalesces the first shuffle
-    * to. At-scale jobs can pin the answer and skip the probe entirely
-    * via `graft.spread.partitions`: 0 = never repartition, k > 0 =
-    * always repartition(k). */
+    * to. */
   private[graft] def spreadWide(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    df.sparkSession.conf.getOption("graft.spread.partitions").map(_.toInt) match {
-      case Some(0)           => df
-      case Some(k) if k > 0  => df.repartition(k)
-      case _ =>
-        if (df.queryExecution.toRdd.getNumPartitions < math.max(2, par / 2))
-          df.repartition(par)
-        else df
-    }
+    if (df.queryExecution.toRdd.getNumPartitions < math.max(2, par / 2))
+      df.repartition(par)
+    else df
   }
 
   /** Count-based pair enumeration shared by [[jaccardPairs]] (self

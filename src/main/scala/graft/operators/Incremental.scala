@@ -117,30 +117,25 @@ object Incremental {
     * /incremental design point). */
   def writeBandedSignatures(corpus: DataFrame, idCol: String, textCol: Column,
       table: String, path: String, numBuckets: Int = 64,
-      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit = {
-    require(numPerm % bands == 0, "bands must divide numPerm")
-    writeBucketed(
-      banded(Dedup.minhashSignatures(corpus, idCol, textCol, numPerm, shingleSize),
-        idCol, bands, numPerm / bands),
-      table, Seq("band", "bucket"), numBuckets, path = Some(path))
-  }
+      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit =
+    writeBandedSigs(
+      Dedup.minhashSignatures(corpus, idCol, textCol, numPerm, shingleSize),
+      idCol, table, numBuckets, numPerm, bands, SaveMode.Overwrite, Some(path))
 
-  /** Grow the banded-signature state by a batch with the SAME bucket
-    * spec (parameters must match [[writeBandedSignatures]]'s). The
-    * seen-not-kept contract lives HERE: to reproduce batch dedup
-    * semantics across waves, append every document that REACHED the
-    * fuzzy stage — including ones the probe then drops — because a
-    * later document similar only to a dropped one must still drop
-    * (the round-5 chain shape a~b~c). [[graft.IngestCli]] is the
-    * composition that gets this right. */
-  def appendBandedSignatures(batch: DataFrame, idCol: String,
-      textCol: Column, table: String, numBuckets: Int = 64,
-      numPerm: Int = 128, bands: Int = 32, shingleSize: Int = 3): Unit = {
+  /** Write (`Overwrite` at `path`) or grow (`Append`, the same bucket
+    * spec) the banded-signature state from an ALREADY-signed frame
+    * (`idCol`, `__sig`; other columns are ignored; parameters must match
+    * the state's). The text wave loop signs each wave once and appends
+    * every document that REACHED the fuzzy stage, including ones the
+    * probe then drops: a later document similar only to a dropped one
+    * must still drop (the round-5 chain a~b~c, the seen-not-kept
+    * contract of [[graft.IngestCli]]). */
+  private[graft] def writeBandedSigs(signed: DataFrame, idCol: String,
+      table: String, numBuckets: Int, numPerm: Int, bands: Int,
+      mode: SaveMode = SaveMode.Append, path: Option[String] = None): Unit = {
     require(numPerm % bands == 0, "bands must divide numPerm")
-    writeBucketed(
-      banded(Dedup.minhashSignatures(batch, idCol, textCol, numPerm, shingleSize),
-        idCol, bands, numPerm / bands),
-      table, Seq("band", "bucket"), numBuckets, SaveMode.Append)
+    writeBucketed(banded(signed, idCol, bands, numPerm / bands), table,
+      Seq("band", "bucket"), numBuckets, mode, path)
   }
 
   /** [[Dedup.minhashDedupAgainst]] against a persisted
@@ -171,7 +166,16 @@ object Incremental {
   private[graft] def fuzzyDupIds(
       incoming: DataFrame, idCol: String, textCol: Column,
       bandedCorpus: DataFrame, threshold: Double,
-      numPerm: Int, bands: Int, shingleSize: Int): DataFrame = {
+      numPerm: Int, bands: Int, shingleSize: Int): DataFrame =
+    fuzzyDupIdsFromSigs(
+      Dedup.minhashSignatures(incoming, idCol, textCol, numPerm, shingleSize),
+      idCol, bandedCorpus, threshold, numPerm, bands)
+
+  /** [[fuzzyDupIds]] over an ALREADY-signed incoming frame (`idCol`,
+    * `__sig`; other columns are ignored). */
+  private[graft] def fuzzyDupIdsFromSigs(signed: DataFrame, idCol: String,
+      bandedCorpus: DataFrame, threshold: Double,
+      numPerm: Int, bands: Int): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     // exactly (band, bucket, <id>, sig) — an extra column would make
     // the id inference silently pick the wrong one, so reject it
@@ -181,9 +185,7 @@ object Incremental {
         "not a banded signature table (want exactly band, bucket, <id>, sig): " +
           bandedCorpus.columns.mkString(","))
     }
-    val inc = banded(
-      Dedup.minhashSignatures(incoming, idCol, textCol, numPerm, shingleSize),
-      idCol, bands, numPerm / bands)
+    val inc = banded(signed, idCol, bands, numPerm / bands)
       .withColumnRenamed(idCol, "__idI").withColumnRenamed("sig", "__sigI")
     val cor = bandedCorpus
       .select(col("band"), col("bucket"),
@@ -1115,7 +1117,7 @@ object Incremental {
     * `_meta` row before anything is written (a mismatched append
     * would poison the table with rows probes can never reach).
     * Seen-not-kept composes exactly as in
-    * [[appendBandedSignatures]]: append every signature that was
+    * [[writeBandedSigs]]: append every signature that was
     * COMPARED, not only survivors, when batch-parity across waves
     * matters. */
   def appendHammingState(batch: DataFrame, idCol: String, sigCol: String,
@@ -1438,22 +1440,8 @@ object Incremental {
         .unionByName(meta),
       newTable, ("frame_pos" +: shardCols) ++ Seq("band", "bucket"),
       numBuckets, path = Some(newPath))
-    // compose the remap across re-compactions: a prior representative
-    // dethroned now (a smaller identical twin arrived since) appears
-    // in newDrops — its old family rows repoint to the new rep, so
-    // chains never exceed depth 1
-    val composed = {
-      val oldT = s"${table}_remap"
-      if (spark.catalog.tableExists(oldT)) {
-        spark.table(oldT)
-          .join(newDrops.select(col("dropped_id").as("rep_id"),
-            col("rep_id").as("__r2")), Seq("rep_id"), "left")
-          .withColumn("rep_id", coalesce(col("__r2"), col("rep_id")))
-          .select(col("dropped_id"), col("rep_id"))
-          .unionByName(newDrops)
-      } else newDrops
-    }
-    writeRemap(composed, newTable, newPath)
+    writeRemap(composeRemap(priorRemap(spark, table), newDrops), newTable,
+      newPath)
     hammingMetaMemo.clear()
     nDropped
   }
@@ -1464,6 +1452,23 @@ object Incremental {
   private def writeRemap(remap: DataFrame, table: String, path: String): Unit =
     writeBucketed(remap, s"${table}_remap", Seq("rep_id"), 16,
       path = Some(s"${path}_remap"))
+
+  /** The remap sidecar of state `table`, if it was ever compacted. */
+  private[graft] def priorRemap(spark: org.apache.spark.sql.SparkSession,
+      table: String): Option[DataFrame] =
+    Some(s"${table}_remap").filter(spark.catalog.tableExists).map(spark.table)
+
+  /** A compaction's remap composed with the prior one: a prior
+    * representative dethroned now (a smaller identical twin arrived
+    * since) appears in `newDrops`, so its old family repoints to the new
+    * representative and chains never exceed depth 1. */
+  private def composeRemap(prior: Option[DataFrame],
+      newDrops: DataFrame): DataFrame =
+    prior.fold(newDrops)(_.join(newDrops.select(col("dropped_id").as("rep_id"),
+        col("rep_id").as("__r2")), Seq("rep_id"), "left")
+      .withColumn("rep_id", coalesce(col("__r2"), col("rep_id")))
+      .select(col("dropped_id"), col("rep_id"))
+      .unionByName(newDrops))
 
   /** Id-level retraction for a (possibly compacted) positional
     * hamming state — the takedown pass that is SAFE to combine with
@@ -1547,9 +1552,10 @@ object Incremental {
       spark: org.apache.spark.sql.SparkSession, table: String,
       newTable: String, newPath: String, tombstones: DataFrame,
       idCol: String, bcols: Seq[String], numBuckets: Int): Long = {
-    val state = spark.table(table)
-    val rows = state.filter(col("band") =!= HammingMetaBand)
-    val metaRows = state.filter(col("band") === HammingMetaBand)
+    // the `_meta` row's null id matches no tombstone and no election, so
+    // it rides through every join below untouched, and the rewrite keeps
+    // the scan's rows in place for the bucketed write
+    val rows = spark.table(table)
     val tomb = org.apache.spark.sql.functions.broadcast(
       tombstones.select(col(tombstones.columns.head).as("retract_id"))
         .distinct().localCheckpoint(true))
@@ -1595,8 +1601,7 @@ object Incremental {
     } else {
       (rows.join(tomb, col(idCol) === col("retract_id"), "left_anti"), None)
     }
-    writeBucketed(rows2.unionByName(metaRows), newTable, bcols, numBuckets,
-      path = Some(newPath))
+    writeBucketed(rows2, newTable, bcols, numBuckets, path = Some(newPath))
     remap2.foreach(writeRemap(_, newTable, newPath))
     hammingMetaMemo.clear()
     nRemoved
@@ -1732,16 +1737,7 @@ object Incremental {
     val newDrops = idSig.join(reps, Seq("sig"))
       .filter(col(idColName) =!= col("__rep"))
       .select(col(idColName).as("dropped_id"), col("__rep").as("rep_id"))
-    val composed = priorRemap match {
-      case Some(o) =>
-        o.join(newDrops.select(col("dropped_id").as("rep_id"),
-            col("rep_id").as("__r2")), Seq("rep_id"), "left")
-          .withColumn("rep_id", coalesce(col("__r2"), col("rep_id")))
-          .select(col("dropped_id"), col("rep_id"))
-          .unionByName(newDrops)
-      case None => newDrops
-    }
-    writeRemap(composed, table, path)
+    writeRemap(composeRemap(priorRemap, newDrops), table, path)
   }
 
   /** Duplicate-digest compaction for the bare-key exact-dedup table
@@ -1801,16 +1797,7 @@ object Incremental {
     val newDrops = digests.join(reps, Seq("__c1", "__c2"))
       .filter(col(idColName) =!= col("__rep"))
       .select(col(idColName).as("dropped_id"), col("__rep").as("rep_id"))
-    val composed = priorRemap match {
-      case Some(o) =>
-        o.join(newDrops.select(col("dropped_id").as("rep_id"),
-            col("rep_id").as("__r2")), Seq("rep_id"), "left")
-          .withColumn("rep_id", coalesce(col("__r2"), col("rep_id")))
-          .select(col("dropped_id"), col("rep_id"))
-          .unionByName(newDrops)
-      case None => newDrops
-    }
-    writeRemap(composed, table, path)
+    writeRemap(composeRemap(priorRemap, newDrops), table, path)
   }
 
   // --------------------------------------------------------------

@@ -110,6 +110,27 @@ class IngestSpec extends AnyFunSuite {
     assert(goldIds(st.goldPath) === Set(1L, 4L, 13L, 31L))
   }
 
+  test("text takedown after compaction: a retracted kept id re-elects its signature twin") {
+    // A, B and C are distinct texts (distinct digests) with ONE 3-word
+    // shingle set — x0..x7 repeated 2, 3 and 4 times — so their MinHash
+    // signatures are identical and compaction collapses B onto A
+    val cycle = words("x", 8).mkString(" ")
+    def rep(n: Int): String = Seq.fill(n)(cycle).mkString(" ")
+    def run(ns: String, compact: Boolean): (Long, Long) = {
+      var st = IngestCli.initState(spark, ns, tmp(ns), numBuckets = 4)
+      IngestCli.ingestWave(spark, st, df(1L -> rep(2), 2L -> rep(3)), 1, cfg)
+      if (compact) st = IngestCli.compactTextSigs(spark, st)
+      st = IngestCli.applyTakedown(spark, st, Seq(1L).toDF("doc_id"))
+      val r = IngestCli.ingestWave(spark, st, df(3L -> rep(4)), 2, cfg)
+      (r.accepted, r.goldTotal)
+    }
+    // B was SEEN (dropped as A's near-dup), so C stays out after A's
+    // takedown — and compaction must not change that
+    val plain = run("graft_ingest_treelect_plain", compact = false)
+    assert(plain === ((0L, 0L)))
+    assert(run("graft_ingest_treelect", compact = true) === plain)
+  }
+
   test("compaction cadence: recrawls trigger the epilogue; state bounded; probe decisions unchanged") {
     import operators.{Images, Incremental}
     def imgs(ids: Long*) = Images.syntheticCorpus(
