@@ -20,7 +20,9 @@ import graft.operators.{Dedup, Incremental}
   *
   * The body ([[waveLoop]]), takedown ([[takedownLoop]]), compaction
   * ([[compactLoop]]) and CLI loop ([[runLoop]]) are shared; a private
-  * [[WaveLayout]] supplies each step. Four layouts:
+  * [[WaveLayout]] supplies each step. Streams run the same wave once
+  * per micro-batch ([[graft.streaming.StreamOps.foreachWave]]). Four
+  * layouts:
   *   - TEXT ([[IngestState]]): length + optional decontamination gate →
   *     exact dedup (in-wave keep-lowest-id + anti-join against the
   *     digest state) → ONE MinHash signing of the survivors, feeding the
@@ -93,7 +95,7 @@ object IngestCli {
 
   /** Cadence policy for the duplicate-signature compaction epilogue
     * the run* loops apply ([[Incremental.dedupCompactBandedState]] /
-    * [[Incremental.dedupCompactFrameState]] — decision-preserving by
+    * [[Incremental.compactFrameHammingDuplicates]] — decision-preserving by
     * construction). Trigger arithmetic: compact when the documents
     * appended since the last compaction exceed `ratio` × the state's
     * document count AT that compaction (and at least `minDocs`, so
@@ -269,9 +271,12 @@ object IngestCli {
     }
 
     // state grows by every screened row (dropped or not), strictly
-    // before gold: the loop is at-least-once (a crashed wave re-runs and
-    // re-appends), and every state table tolerates the duplicate rows a
-    // re-run leaves
+    // before gold, so gold never holds a row the state lacks. A re-run
+    // of a wave whose state append landed is NOT at-least-once: the
+    // probe finds the wave's own rows in state and drops them, so rows
+    // that had not reached gold never do, and rows no probe can judge
+    // (undecodable media) reach gold again. Every state table tolerates
+    // the duplicate rows a re-run leaves
     step("state append") { layout.append(screen.rows, st) }
     // `accepted` is observed on the gold write itself. An all-duplicate
     // wave appends nothing — but an empty Append still CREATES the gold
@@ -796,9 +801,10 @@ object IngestCli {
       retract = (spark, st, next, _) => Incremental.retractFrameHammingIds(
         spark, st.sigTable, next.sigTable, next.sigPath,
         spark.table(st.tombTable), st.numBuckets),
-      compact = (spark, st, next, prior) => Incremental.dedupCompactFrameState(
-        spark.table(st.sigTable), "doc_id", next.sigTable, next.sigPath,
-        next.numBuckets, priorRemap = prior))
+      // reads the same prior `_remap` the loop passes in itself
+      compact = (spark, st, next, _) =>
+        Incremental.compactFrameHammingDuplicates(spark, st.sigTable,
+          next.sigTable, next.sigPath, next.numBuckets))
   }
 
   /** No signature rows, in `layout`'s own schema: init and rebuild seed

@@ -105,7 +105,11 @@ object web {
     * into `(raw, text)` structs materializes the cleaned text once;
     * the filter reads the struct field, and the raw block stays
     * available so the anchor scan ([[blockLinkLen]]) keeps its
-    * short-circuit position behind the cheap word/empty gates. */
+    * short-circuit position behind the cheap word/empty gates. The
+    * price is memory: until the final projection the struct array
+    * holds every block twice, raw and cleaned, so a page's peak
+    * per-row footprint is about two copies of its block text instead
+    * of one. */
   def html_main_text(html: Column, minWords: Int = 3,
       maxLinkDensity: Double = 0.33): Column = {
     val blocks = split(regexp_replace(html, hiddenRegionRe, " "),

@@ -1169,21 +1169,6 @@ object Incremental {
       .select(col(idCol)).distinct()
   }
 
-  /** Broadcastable Hamming index of a persisted signature state table
-    * — the against-state probe for the STREAMING media gate chain
-    * ([[graft.streaming.StreamOps.mediaIngestStream]]): the state's
-    * distinct signatures collected into [[graft.operators.Dedup
-    * .hammingIndex]] (its request-scale cap applies and refuses
-    * loudly — the 100 TB-state path remains the batch bucketed
-    * probe). The `_meta` row is excluded by its reserved band; the
-    * caller refreshes the index at its own cadence (each refresh is
-    * one distinct-scan of 20 B rows). */
-  def stateHammingIndex(state: DataFrame, maxHamming: Int,
-      maxSignatures: Int = 4_000_000): Dedup.HammingIndex =
-    Dedup.hammingIndex(
-      state.filter(col("band") =!= HammingMetaBand).select(col("sig")),
-      "sig", maxHamming, maxSignatures)
-
   private def resolveBands(maxHamming: Int, nBands: Int): Int =
     if (nBands == -1) graft.functions.Bits.joinBands(maxHamming) else nBands
 
@@ -1341,12 +1326,7 @@ object Incremental {
       s"not a ${shardCol.map(_ => "sharded ").getOrElse("")}positional " +
         s"hamming state table (want ${reserved.mkString(", ")}[, <id>]): " +
         state.columns.mkString(","))
-    val stateIdCol = state.columns.filterNot(reserved) match {
-      case Array(id) => id
-      case _ => throw new IllegalArgumentException(
-        "positional hamming state table carries no id column: " +
-          state.columns.mkString(","))
-    }
+    val (stateIdCol, _) = positionalStateCols(state)
     val nb = resolveBands(maxHamming, nBands)
     validateHammingMeta(state, maxHamming, nb,
       "frameHammingDupIdsAgainstTable", grid = everyNth,
@@ -1404,16 +1384,7 @@ object Incremental {
       spark: org.apache.spark.sql.SparkSession, table: String,
       newTable: String, newPath: String, numBuckets: Int = 64): Long = {
     val state = spark.table(table)
-    val sharded = state.columns.contains("shard")
-    val reserved = Set("frame_pos", "band", "bucket", "sig") ++
-      (if (sharded) Set("shard") else Set.empty[String])
-    val idCol = state.columns.filterNot(reserved) match {
-      case Array(id) => id
-      case other => throw new IllegalArgumentException(
-        "not a positional hamming state table (want " +
-          s"${reserved.mkString(", ")}, <id>): ${other.mkString(",")}")
-    }
-    val shardCols = if (sharded) Seq("shard") else Seq.empty[String]
+    val (idCol, shardCols) = positionalStateCols(state)
     val rows = state.filter(col("band") =!= HammingMetaBand)
     val meta = state.filter(col("band") === HammingMetaBand)
     // clip fingerprint: the full distinct (frame_pos, sig) set, sorted
@@ -1444,6 +1415,20 @@ object Incremental {
       newPath)
     hammingMetaMemo.clear()
     nDropped
+  }
+
+  /** A positional state table's id column and shard key (`shard` when
+    * the table was written sharded): past the reserved `(frame_pos[,
+    * shard], band, bucket, sig)` columns it must carry exactly one. */
+  private def positionalStateCols(state: DataFrame): (String, Seq[String]) = {
+    val shardCols = Seq("shard").filter(state.columns.contains)
+    val reserved = Set("frame_pos", "band", "bucket", "sig") ++ shardCols
+    state.columns.filterNot(reserved) match {
+      case Array(id) => (id, shardCols)
+      case other => throw new IllegalArgumentException(
+        "not a positional hamming state table (want " +
+          s"${reserved.mkString(", ")}, <id>): ${other.mkString(",")}")
+    }
   }
 
   /** The dropped-id → representative remap sidecar of a compacted
@@ -1491,20 +1476,9 @@ object Incremental {
       spark: org.apache.spark.sql.SparkSession, table: String,
       newTable: String, newPath: String, tombstones: DataFrame,
       numBuckets: Int = 64): Long = {
-    val state = spark.table(table)
-    val sharded = state.columns.contains("shard")
-    val reserved = Set("frame_pos", "band", "bucket", "sig") ++
-      (if (sharded) Set("shard") else Set.empty[String])
-    val idCol = state.columns.filterNot(reserved) match {
-      case Array(id) => id
-      case other => throw new IllegalArgumentException(
-        "not a positional hamming state table (want " +
-          s"${reserved.mkString(", ")}, <id>): ${other.mkString(",")}")
-    }
-    val shardCols = if (sharded) Seq("shard") else Seq.empty[String]
-    val bcols = ("frame_pos" +: shardCols) ++ Seq("band", "bucket")
+    val (idCol, shardCols) = positionalStateCols(spark.table(table))
     retractHammingCore(spark, table, newTable, newPath, tombstones,
-      idCol, bcols, numBuckets)
+      idCol, ("frame_pos" +: shardCols) ++ Seq("band", "bucket"), numBuckets)
   }
 
   /** [[retractFrameHammingIds]]' sibling for the FLAT banded state
@@ -1607,76 +1581,6 @@ object Incremental {
     nRemoved
   }
 
-  /** Broadcastable POSITIONAL Hamming index of a persisted
-    * frame-signature state table — the against-state probe for the
-    * STREAMING video gate chain ([[graft.streaming.StreamOps
-    * .videoIngestStream]]): distinct `(frame_pos, sig, id)` triples
-    * collected into [[Video.FrameStateIndex]]'s per-position exact
-    * band layout. The id must ride along (the positional contract is
-    * a per-pair position count), so the cap is on TRIPLES — the same
-    * request-scale envelope as [[stateHammingIndex]], refused loudly;
-    * the 100 TB-state path remains the batch bucketed probe
-    * ([[frameHammingDupIdsAgainstTable]]). SHARDED state is refused
-    * (the `_meta` flag): the shard contract exists precisely because
-    * such states are beyond driver-index scale. */
-  def stateFrameHammingIndex(state: DataFrame, maxHamming: Int,
-      everyNth: Int, nBands: Int = -1, signer: Option[String] = None,
-      maxSignatures: Int = 4_000_000): Video.FrameStateIndex = {
-    val reserved = Set("frame_pos", "band", "bucket", "sig")
-    require(reserved.subsetOf(state.columns.toSet) &&
-      state.columns.length == reserved.size + 1,
-      "not an unsharded positional hamming state table (want " +
-        s"frame_pos, band, bucket, sig, <id>): ${state.columns.mkString(",")}")
-    val stateIdCol = state.columns.filterNot(reserved).head
-    validateHammingMeta(state, maxHamming, resolveBands(maxHamming, nBands),
-      "stateFrameHammingIndex", grid = everyNth, sharded = false,
-      signer = signer)
-    val triplesDf = state.filter(col("band") =!= HammingMetaBand)
-      .select(col("frame_pos").cast("int"), col("sig").cast("long"),
-        col(stateIdCol).cast("long"))
-      .filter(col("sig").isNotNull).distinct()
-      .localCheckpoint(true)
-    // the cap is checked BEFORE the collect: an oversized state must
-    // refuse loudly, not OOM the driver mid-collect (the checkpoint
-    // holds the distinct result on executors, so the extra count is a
-    // limit scan, not a recompute)
-    require(triplesDf.limit(maxSignatures + 1).count() <= maxSignatures,
-      s"stateFrameHammingIndex: more than $maxSignatures distinct " +
-        "(position, sig, id) triples — over the driver-index bound " +
-        "(serialized with the plan into every task). Raise " +
-        "maxSignatures to accept the weight knowingly; corpus-scale " +
-        "recurring video dedup is frameHammingDupIdsAgainstTable " +
-        "(bucketed state, batch-sized probes).")
-    val triples = triplesDf
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val nb = maxHamming + 1
-    val byPos = triples.groupBy(_._1).toArray.sortBy(_._1)
-    val positions = byPos.map(_._1)
-    val buckets = Array.ofDim[Array[Array[Long]]](positions.length)
-    val sigsA = Array.ofDim[Array[Array[Long]]](positions.length)
-    val idsA = Array.ofDim[Array[Array[Long]]](positions.length)
-    var p = 0
-    while (p < positions.length) {
-      val rows = byPos(p)._2
-      buckets(p) = Array.ofDim[Array[Long]](nb)
-      sigsA(p) = Array.ofDim[Array[Long]](nb)
-      idsA(p) = Array.ofDim[Array[Long]](nb)
-      var b = 0
-      while (b < nb) {
-        val sorted = rows
-          .map(t => (graft.functions.Bits.bandOf(t._2, b, maxHamming), t._2, t._3))
-          .sortBy(_._1)
-        buckets(p)(b) = sorted.map(_._1)
-        sigsA(p)(b) = sorted.map(_._2)
-        idsA(p)(b) = sorted.map(_._3)
-        b += 1
-      }
-      p += 1
-    }
-    Video.FrameStateIndex(maxHamming, everyNth, positions, buckets, sigsA,
-      idsA)
-  }
-
   /** Drop every batch row whose signature is within `maxHamming` of
     * any state signature — the recurring media-dedup probe
     * ([[graft.operators.Images]] dHash / [[graft.operators.Audio]]
@@ -1750,54 +1654,6 @@ object Incremental {
         state.columns.mkString(","))
     writeBucketed(state.distinct(), table, Seq("__d1", "__d2"), numBuckets,
       path = Some(path))
-  }
-
-  /** Clip-level duplicate compaction for the POSITIONAL state: drop
-    * every clip whose COMPLETE `(frame_pos[, shard], band, bucket,
-    * sig)` row set equals a lower-id clip's (128-bit order-free
-    * digest: summed pair of independent row hashes). Recrawled
-    * identical clips are exactly this shape. Row-level dedup across
-    * ids would be WRONG here — the probe counts positions per
-    * (batch, state-clip) pair, so removing one clip's row can flip a
-    * ≥ minFrames decision for a pair the surviving row's clip does
-    * not complete; whole-identical-clip removal cannot (the keeper
-    * matches whenever the dropped clip would, position for
-    * position). The `_meta` row rides through untouched. */
-  def dedupCompactFrameState(state: DataFrame, idColName: String,
-      table: String, path: String, numBuckets: Int,
-      priorRemap: Option[DataFrame] = None): Unit = {
-    val sharded = state.columns.contains("shard")
-    val keyCols = Seq("frame_pos") ++ (if (sharded) Seq("shard") else Nil) ++
-      Seq("band", "bucket")
-    require((keyCols.toSet + "sig" + idColName)
-        .subsetOf(state.columns.toSet),
-      s"not a positional state table: ${state.columns.mkString(",")}")
-    val metaRow = state.filter(col("band") === HammingMetaBand)
-    val data = state.filter(col("band") =!= HammingMetaBand)
-    val rowCols: Seq[Column] = keyCols.map(col) :+ col("sig")
-    // decimal(38) sums: order-free set digests that cannot hit ANSI
-    // long overflow (Spark 4 throws on it) at any clip size
-    val digests = data.groupBy(col(idColName))
-      .agg(sum(xxhash64(rowCols: _*).cast("decimal(38,0)")).as("__c1"),
-        sum(xxhash64((rowCols :+ lit(0x9e3779b9L)): _*)
-          .cast("decimal(38,0)")).as("__c2"))
-      .localCheckpoint(true)
-    val reps = digests.groupBy(col("__c1"), col("__c2"))
-      .agg(min(col(idColName)).as("__rep"))
-    val keep = reps.select(col("__rep").as(idColName))
-    writeBucketed(
-      data.join(keep, Seq(idColName), "left_semi").unionByName(metaRow),
-      table, keyCols, numBuckets, path = Some(path))
-    // persist the dropped-id → representative remap sidecar (the
-    // compactFrameHammingDuplicates contract): id-level retraction of
-    // a representative must be able to re-elect a surviving twin
-    // ([[retractFrameHammingIds]]) instead of silently deleting the
-    // family's only rows while twins are live corpus members.
-    // Composed across re-compactions so chains stay depth-1.
-    val newDrops = digests.join(reps, Seq("__c1", "__c2"))
-      .filter(col(idColName) =!= col("__rep"))
-      .select(col(idColName).as("dropped_id"), col("__rep").as("rep_id"))
-    writeRemap(composeRemap(priorRemap, newDrops), table, path)
   }
 
   // --------------------------------------------------------------

@@ -205,11 +205,11 @@ object Video {
   }
 
   /** True when ANY sampled frame of the clip is within the index's
-    * budget of a flagged still — the cross-modal enforcement decision
-    * ([[graft.IngestCli]]'s video blocklist gate) as one
-    * short-circuiting function over the raw bytes, usable inside a
-    * typed filter (batch or streaming — see
-    * [[graft.streaming.StreamOps.videoBlockGateStream]]).
+    * budget of a flagged still — the cross-modal decision the video
+    * wave's blocklist screen ([[graft.IngestCli.ingestVideoWave]]) makes
+    * over its frame signatures, as one short-circuiting function over
+    * the raw bytes for a stateless typed filter, batch or streaming
+    * ([[graft.streaming.StreamOps.videoBlockGateStream]]).
     * Undecodable clips and frames are never blocked (nothing
     * provable); `everyNth` must match the enforcement contract's
     * sampling grid. */
@@ -224,87 +224,6 @@ object Video {
         }
       }
     }
-
-  /** Driver-built broadcastable index of a POSITIONAL Hamming state
-    * table — [[Dedup.HammingIndex]]'s per-band bucket-sorted layout,
-    * replicated per sampled position and carrying the OWNING state
-    * clip id alongside each signature, because the positional match
-    * contract is a per-(probe clip, state clip) distinct-position
-    * COUNT ([[clipNearDupPairs]]), not mere existence. `everyNth` is
-    * carried so a probe at a different sampling grid refuses instead
-    * of silently matching nothing (positions are SAMPLE indices).
-    * Construct only via [[graft.operators.Incremental
-    * .stateFrameHammingIndex]] — its request-scale cap and `_meta`
-    * validation apply. */
-  final case class FrameStateIndex(maxHamming: Int, everyNth: Int,
-      positions: Array[Int],
-      buckets: Array[Array[Array[Long]]],
-      sigs: Array[Array[Array[Long]]],
-      ids: Array[Array[Array[Long]]])
-
-  /** Does the clip's sampled (position, signature) list match SOME
-    * state clip on ≥ `minFrames` distinct positions? The
-    * [[clipNearDupPairs]] / [[graft.operators.Incremental
-    * .frameHammingDupIdsAgainstTable]] contract as one driver-index
-    * probe usable inside a stateless typed filter (batch or
-    * streaming — [[graft.streaming.StreamOps.videoIngestStream]]).
-    * Per position: the exact `maxHamming + 1`-band pigeonhole search
-    * ([[graft.functions.HammingNearSet]]'s layout), candidates
-    * deduped within the position so multi-band hits count once;
-    * short-circuits the moment any state clip reaches the bar. */
-  def clipMatchesState(framePos: Array[Int], frameSigs: Array[Long],
-      index: FrameStateIndex, minFrames: Int): Boolean = {
-    val counts = new java.util.HashMap[java.lang.Long, Integer]()
-    val perPosSeen = new java.util.HashSet[java.lang.Long]()
-    val nBands = index.maxHamming + 1
-    var i = 0
-    while (i < framePos.length) {
-      val pi = java.util.Arrays.binarySearch(index.positions, framePos(i))
-      if (pi >= 0) {
-        perPosSeen.clear()
-        val sig = frameSigs(i)
-        var b = 0
-        while (b < nBands) {
-          val bucket = graft.functions.Bits.bandOf(sig, b, index.maxHamming)
-          val arr = index.buckets(pi)(b)
-          var j = java.util.Arrays.binarySearch(arr, bucket)
-          if (j >= 0) {
-            while (j > 0 && arr(j - 1) == bucket) j -= 1
-            val sg = index.sigs(pi)(b)
-            val idArr = index.ids(pi)(b)
-            while (j < arr.length && arr(j) == bucket) {
-              if (java.lang.Long.bitCount(sig ^ sg(j)) <= index.maxHamming &&
-                  perPosSeen.add(idArr(j))) {
-                val c = counts.merge(idArr(j), 1, (a, x) => a + x)
-                if (c >= minFrames) return true
-              }
-              j += 1
-            }
-          }
-          b += 1
-        }
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** 64-bit digest of a clip's full sampled (position, signature)
-    * sequence — equal iff the sampled content is bit-identical at the
-    * grid, the clip-level analog of the media loop's exact `sig` (the
-    * recrawl-drop key in [[graft.streaming.StreamOps
-    * .videoIngestStream]]). FNV-1a over the pair stream, finalized
-    * with mix64 — deterministic across JVMs. */
-  def clipSigDigest(framePos: Array[Int], frameSigs: Array[Long]): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < framePos.length) {
-      h = (h ^ framePos(i).toLong) * 0x100000001b3L
-      h = (h ^ frameSigs(i)) * 0x100000001b3L
-      i += 1
-    }
-    graft.functions.Bits.mix64(h ^ framePos.length.toLong)
-  }
 
   /** Clip-level near-dup dedup: decode → sample → dHash → drop every
     * clip matching a LOWER-id clip on ≥ `minFrames` sampled

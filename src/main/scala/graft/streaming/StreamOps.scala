@@ -15,7 +15,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - fuzzy incremental dedup → `flatMapGroupsWithState` keeping
   *    MinHash signatures per key (state size = signatures, not rows);
   *  - trend aggregates (A9/W1) → tumbling/sliding `window()` aggs;
-  *  - harvest-batch grouping → `session_window`.
+  *  - harvest-batch grouping → `session_window`;
+  *  - recurring ingestion (the retract → gate → dedup-against-state →
+  *    state append → gold append loop of [[graft.IngestCli]]) →
+  *    [[foreachWave]]: each micro-batch is one call of the same wave
+  *    function the batch CLI runs, against the same persisted state —
+  *    the stream path has no gate chain of its own.
   *
   * Every operator takes a (possibly streaming) DataFrame — the same
   * code path works in batch mode, which is also how the specs drive
@@ -445,209 +450,6 @@ object StreamOps {
       !graft.operators.Video.clipBlocked(
         row.getAs[Array[Byte]](contentCol), blockIndex, everyNth))
 
-  /** Byte-level signers for [[mediaIngestStream]] — the SAME decoders
-    * the batch loop's signers wrap ([[graft.operators.Images
-    * .imageSignatures]] / [[graft.operators.Audio.audioSignatures]]),
-    * as plain functions a stateless streaming map closes over, so
-    * stream and batch hash identical bytes to identical signatures
-    * by construction. */
-  val imageSignBytes: Array[Byte] => Option[Long] = bytes =>
-    graft.operators.Images.decodeGray(bytes).map { case (w, h, g) =>
-      graft.operators.Images.dHash64(w, h, g) }
-  val audioSignBytes: Array[Byte] => Option[Long] = bytes =>
-    graft.operators.Audio.decodePcm(bytes).map { case (_, _, mono) =>
-      graft.operators.Audio.eHash64(mono) }
-
-  /** Decode + sign a (possibly streaming) media frame in ONE
-    * stateless map: every input column rides through, `decoded` and
-    * the nullable 64-bit `sig` append. Payload bytes never leave the
-    * partition; no state, no watermark — legal in any output mode. */
-  def mediaSignStream(media: DataFrame, contentCol: String,
-      sign: Array[Byte] => Option[Long] = imageSignBytes): DataFrame = {
-    val outSchema = media.schema
-      .add("decoded", org.apache.spark.sql.types.BooleanType)
-      .add("sig", org.apache.spark.sql.types.LongType)
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val s = Option(r.getAs[Array[Byte]](contentCol)).flatMap(sign)
-        org.apache.spark.sql.Row.fromSeq(
-          r.toSeq :+ s.isDefined :+ s.map(Long.box).orNull)
-      }
-    }
-  }
-
-  /** Streaming MEDIA ingestion — the media wave loop's gate chain
-    * ([[graft.IngestCli.ingestMediaWave]]) at stream cadence:
-    * [[mediaSignStream]] decode+sign, the exact codegen blocklist
-    * gate, the AGAINST-STATE probe as a map-side filter over a
-    * driver-built broadcast Hamming index of the persisted signature
-    * state ([[graft.operators.Incremental.stateHammingIndex]] —
-    * request-scale per the index cap; the 100 TB-state path remains
-    * the batch bucketed probe), and an exact in-stream duplicate
-    * drop on the signature within the watermark — the recrawl shape,
-    * bounded state via `dropDuplicatesWithinWatermark`. Undecodable
-    * rows (null sig) pass every gate unprovable and are EXEMPT from
-    * the exact drop (a naive dropDuplicates("sig") would collapse
-    * all of them into one row).
-    *
-    * Division of labor, stated honestly: near-dup pairs BOTH new in
-    * the stream (neither in state, not bit-identical) are NOT decided
-    * here — exact pigeonhole near-dedup in-stream needs a per-band
-    * stateful merge whose verdicts only resolve behind the watermark;
-    * the loops run that decision at micro-batch boundaries instead
-    * (`foreachBatch` → [[graft.IngestCli.ingestMediaWave]], which
-    * also appends state and refreshes the broadcast index at the
-    * operator's cadence). The spec pins stream ≡ batch wave decisions
-    * on exactly that contract: blocklist, state-dup and exact-recrawl
-    * verdicts agree row for row. */
-  def mediaIngestStream(media: DataFrame, contentCol: String,
-      stateIndex: graft.operators.Dedup.HammingIndex,
-      blockIndex: Option[graft.operators.Dedup.HammingIndex] = None,
-      sign: Array[Byte] => Option[Long] = imageSignBytes,
-      dropExactSigDups: Boolean = true,
-      tsCol: String = "ts",
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    val signed = mediaSignStream(media, contentCol, sign)
-    val unblocked = blockIndex match {
-      case Some(idx) => hammingBlockGateStream(signed, col("sig"), idx)
-      case None => signed
-    }
-    val admitted = unblocked.filter(col("sig").isNull ||
-      !graft.operators.Dedup.hammingNearSet(col("sig"), stateIndex))
-    if (!dropExactSigDups) admitted
-    else dropExactWithinWatermark(admitted, "sig", tsCol, watermarkDelay)
-  }
-
-  /** The exact recrawl drop shared by [[mediaIngestStream]] and
-    * [[videoIngestStream]]: one row per distinct non-null `key` (within
-    * the watermark when streaming); null-key rows (undecodable, hence
-    * unprovable) are exempt and all pass. */
-  private def dropExactWithinWatermark(admitted: DataFrame, key: String,
-      tsCol: String, watermarkDelay: String): DataFrame = {
-    val decodedRows = admitted.filter(col(key).isNotNull)
-    val deduped =
-      if (admitted.isStreaming)
-        decodedRows.withWatermark(tsCol, watermarkDelay)
-          .dropDuplicatesWithinWatermark(Seq(key))
-      else decodedRows.dropDuplicates(Seq(key))
-    deduped.unionByName(admitted.filter(col(key).isNull))
-  }
-
-  /** Decode + sample + sign a (possibly streaming) video clip in ONE
-    * stateless map — every input column rides through and four append:
-    * `decoded`, the parallel `frame_pos`/`frame_sigs` arrays (sample
-    * index + per-frame dHash, [[graft.operators.Video
-    * .frameSignatures]]'s rows folded in-row so the downstream gates
-    * never re-decode), and `clip_sig` (the exact sampled-content
-    * digest, [[graft.operators.Video.clipSigDigest]]). Undecodable
-    * clips get `decoded = false` and nulls; clip bytes never leave
-    * the partition. `everyNth` must match the state/enforcement
-    * contracts' sampling grid. */
-  def videoSignStream(clips: DataFrame, contentCol: String,
-      everyNth: Int = 2): DataFrame = {
-    require(everyNth >= 1, "everyNth must be >= 1")
-    val outSchema = clips.schema
-      .add("decoded", org.apache.spark.sql.types.BooleanType)
-      .add("frame_pos", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType, containsNull = false))
-      .add("frame_sigs", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false))
-      .add("clip_sig", org.apache.spark.sql.types.LongType)
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    clips.mapPartitions { rows =>
-      rows.map { r =>
-        val decoded = Option(r.getAs[Array[Byte]](contentCol))
-          .flatMap(graft.operators.Video.aviFrames)
-        decoded match {
-          case Some(frames) =>
-            val pos = scala.collection.mutable.ArrayBuffer.empty[Int]
-            val sigs = scala.collection.mutable.ArrayBuffer.empty[Long]
-            frames.indices.by(everyNth).zipWithIndex.foreach { case (fi, si) =>
-              graft.operators.Images.decodeGray(frames(fi)).foreach {
-                case (w, h, gray) =>
-                  pos += si
-                  sigs += graft.operators.Images.dHash64(w, h, gray)
-              }
-            }
-            val pa = pos.toArray; val sa = sigs.toArray
-            // zero signed frames (container parsed, every sampled frame
-            // failed decode): clip_sig must be NULL, not the shared
-            // empty-digest constant — such clips are mutually
-            // unprovable and must ALL take the exact-drop-exempt path,
-            // exactly as the batch wave (which emits no signature rows
-            // for them) admits every one. A constant here would let the
-            // in-stream recrawl gate drop all but one of them.
-            val clipSig: Any =
-              if (pa.isEmpty) null
-              else graft.operators.Video.clipSigDigest(pa, sa)
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ true :+
-              pa.toSeq :+ sa.toSeq :+ clipSig)
-          case None =>
-            org.apache.spark.sql.Row.fromSeq(
-              r.toSeq :+ false :+ null :+ null :+ null)
-        }
-      }
-    }
-  }
-
-  /** Streaming VIDEO ingestion — the video wave loop's gate chain
-    * ([[graft.IngestCli.ingestVideoWave]]) at stream cadence, on the
-    * [[mediaIngestStream]] model: [[videoSignStream]] decode+sample+
-    * sign once, the CROSS-MODAL blocklist gate (any sampled frame
-    * within the flagged-still index's budget blocks the clip — the
-    * wave loop's enforcement decision, here over the in-row signature
-    * array so the clip is never decoded twice), the AGAINST-STATE
-    * positional probe as a map-side filter over a driver-built
-    * broadcast index of the persisted frame state
-    * ([[graft.operators.Incremental.stateFrameHammingIndex]] —
-    * request-scale per its cap; the 100 TB-state path remains the
-    * batch bucketed probe), and an exact in-stream recrawl drop on
-    * the sampled-content digest within the watermark. Undecodable
-    * clips pass every gate unprovable and are EXEMPT from the exact
-    * drop.
-    *
-    * Division of labor, exactly [[mediaIngestStream]]'s: near-dup
-    * pairs BOTH new in the stream are decided at micro-batch
-    * boundaries (`foreachBatch` → [[graft.IngestCli
-    * .ingestVideoWave]], which also appends state and refreshes the
-    * broadcast index at the operator's cadence); the spec pins
-    * stream ≡ batch wave decisions on that contract. */
-  def videoIngestStream(clips: DataFrame, contentCol: String,
-      stateIndex: graft.operators.Video.FrameStateIndex,
-      blockIndex: Option[graft.operators.Dedup.HammingIndex] = None,
-      minFrames: Int = 2, everyNth: Int = 2,
-      dropExactSigDups: Boolean = true,
-      tsCol: String = "ts",
-      watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(everyNth == stateIndex.everyNth,
-      s"videoIngestStream: everyNth=$everyNth does not match the state " +
-        s"index's sampling grid (${stateIndex.everyNth}) — positions are " +
-        "sample indices; a stride mismatch silently matches nothing")
-    val signed = videoSignStream(clips, contentCol, everyNth)
-    // positional indexes resolved at PLAN time — rows inside a
-    // mid-stream typed filter carry no schema to look names up in
-    val posI = signed.schema.fieldIndex("frame_pos")
-    val sigI = signed.schema.fieldIndex("frame_sigs")
-    val unblocked = blockIndex match {
-      case Some(idx) =>
-        signed.filter((row: org.apache.spark.sql.Row) =>
-          row.isNullAt(sigI) || !row.getSeq[Long](sigI).exists(s =>
-            graft.functions.HammingNearSet.near(
-              s, idx.maxHamming, idx.buckets, idx.sigs)))
-      case None => signed
-    }
-    val admitted = unblocked.filter((row: org.apache.spark.sql.Row) =>
-      row.isNullAt(posI) || !graft.operators.Video.clipMatchesState(
-        row.getSeq[Int](posI).toArray,
-        row.getSeq[Long](sigI).toArray,
-        stateIndex, minFrames))
-    if (!dropExactSigDups) admitted
-    else dropExactWithinWatermark(admitted, "clip_sig", tsCol, watermarkDelay)
-  }
-
   /** Streaming learned-quality gate: keep rows whose Naive-Bayes
     * log-odds score clears `minScore`. The classifier's dictionary is
     * trained offline ([[graft.operators.Classifier.nbTrain]] →
@@ -737,11 +539,48 @@ object StreamOps {
   def incrementalSince(df: DataFrame, wmCol: String, lastSync: java.sql.Timestamp): DataFrame =
     df.filter(col(wmCol) > lit(lastSync))
 
+  /** The stream driver of the wave loops: run `wave` on the driver for
+    * each non-empty micro-batch, passing the micro-batch id as the wave
+    * number. A media stream is
+    * {{{
+    * foreachWave(stream, Some(ckpt)) { (b, n) =>
+    *   IngestCli.ingestMediaWave(spark, st, b, n.toInt, blocklist = idx) }
+    * }}}
+    * and a video stream the same with [[graft.IngestCli.ingestVideoWave]]:
+    * each micro-batch is one whole wave of [[graft.IngestCli]]'s loop
+    * (in-wave near-duplicate pairs, the bucketed state probe, the state
+    * append, the gold append) against the one persisted state the batch
+    * calls keep, so a stream and direct calls over the same waves leave
+    * equal gold and state (StreamingSpec pins it). [[clusterAssignStream]]
+    * runs its cluster waves through it too.
+    *
+    * Replay: a micro-batch whose function did not return (a crash, a
+    * throw) runs again on restart, under the same batch id, over the
+    * same rows. Nothing here fences that, so a replay does whatever a
+    * second call of `wave` does; no exactly-once claim. For the ingest
+    * waves that is the loop's crash note ([[graft.IngestCli]]): once a
+    * wave's state append has landed, the re-run finds the wave's own
+    * signatures in state and drops its decoded rows as their duplicates,
+    * so rows whose gold append had not landed never reach gold, and
+    * rows no probe can judge (undecodable payloads) reach gold again if
+    * it had. */
+  def foreachWave(waves: DataFrame, checkpointDir: Option[String],
+      trigger: org.apache.spark.sql.streaming.Trigger =
+        org.apache.spark.sql.streaming.Trigger.AvailableNow())(
+      wave: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    val w = waves.writeStream.outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) wave(batch, batchId)
+      }
+      .trigger(trigger)
+    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
+
   /** Streaming cluster assignment — the incremental near-dup CLUSTER
     * loop ([[graft.operators.Incremental.appendClusters]]) at stream
     * cadence, giving the q160 family the same wave parity the
     * text/media/video loops have. Each micro-batch is one WAVE:
-    * `foreachBatch` drives it through the persisted cluster state
+    * [[foreachWave]] drives it through the persisted cluster state
     * (join / found / bridge-merge, overlay-aware) and appends the
     * wave's `(id, cluster, micro_batch)` assignments to `assignDir`.
     * Because resolved membership is wave-order INDEPENDENT (min
@@ -778,24 +617,18 @@ object StreamOps {
       trigger: org.apache.spark.sql.streaming.Trigger =
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       winnow: Boolean = false, k: Int = 4, winnowW: Int = 4,
-      minShared: Long = 2, maxDf: Long = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = waves.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val assigned =
-            if (winnow) graft.operators.Incremental.appendWinnowClusters(
-              batch, idCol, col(textCol), t, k, winnowW, minShared, maxDf)
-            else graft.operators.Incremental.appendClusters(batch, idCol,
-              col(textCol), n, threshold, t)
-          assigned
-            .withColumn("micro_batch", lit(batchId))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(assignDir)
-        }
-      }
-      .trigger(trigger)
-    checkpointDir.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      minShared: Long = 2, maxDf: Long = 64): org.apache.spark.sql.streaming.StreamingQuery =
+    foreachWave(waves, checkpointDir, trigger) { (batch, batchId) =>
+      val assigned =
+        if (winnow) graft.operators.Incremental.appendWinnowClusters(
+          batch, idCol, col(textCol), t, k, winnowW, minShared, maxDf)
+        else graft.operators.Incremental.appendClusters(batch, idCol,
+          col(textCol), n, threshold, t)
+      assigned
+        .withColumn("micro_batch", lit(batchId))
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .parquet(assignDir)
+    }
 
   /** Stream → metadata-warehouse bridge: sink a streaming aggregate
     * into the `quality_metrics` table via foreachBatch, one metric row

@@ -198,7 +198,7 @@ class IngestSpec extends AnyFunSuite {
       val before = Incremental.frameHammingDupIdsAgainstTable(batch,
           "doc_id", "dhash", spark.table("t_cfs"), maxHamming = 8,
           minFrames = 2, everyNth = 2).as[Long].collect().toSet
-      Incremental.dedupCompactFrameState(spark.table("t_cfs"), "doc_id",
+      Incremental.compactFrameHammingDuplicates(spark, "t_cfs",
         "t_cfs2", tmp("graft_cfs2"), numBuckets = 2)
       val keptIds = spark.table("t_cfs2").filter(col("band") =!= 255)
         .select("doc_id").distinct().as[Long].collect().toSet

@@ -603,133 +603,135 @@ class StreamingSpec extends AnyFunSuite {
     incoming.unpersist(blocking = false)
   }
 
-  test("mediaIngestStream: stream == batch wave decisions (blocklist, state-dup, exact recrawl); undecodable passes") {
-    import graft.operators.{Dedup, Images, Incremental}
-    val dir = Files.createTempDirectory("graft_mstream").toString
+  /** Two-drain wave parity: state `stB` takes `waves` through `ingest`
+    * directly, `stS` takes them as one file-source micro-batch each
+    * through [[StreamOps.foreachWave]] against one checkpoint (the
+    * micro-batch id is the wave number). Asserts equal gold ids per
+    * wave, equal signature-state rows and equal wave reports; returns
+    * the gold ids per wave and the reports. */
+  private def streamWaveParity[S <: IngestCli.WaveState[S]](dir: String,
+      waves: Seq[org.apache.spark.sql.DataFrame], stB: S, stS: S)(
+      ingest: (S, org.apache.spark.sql.DataFrame, Int) => IngestCli.MediaWaveReport)
+      : (Map[Int, Set[Long]], Seq[IngestCli.MediaWaveReport]) = {
+    val direct = waves.zipWithIndex.map { case (w, n) => ingest(stB, w, n) }
+    val streamed = scala.collection.mutable.ArrayBuffer.empty[IngestCli.MediaWaveReport]
+    val inDir = s"$dir/in"; val ckpt = s"$dir/ckpt"
+    waves.foreach { w =>
+      w.coalesce(1).write.mode("append").parquet(inDir)
+      StreamOps.foreachWave(spark.readStream.schema(w.schema).parquet(inDir),
+          Some(ckpt)) { (b, n) => streamed += ingest(stS, b, n.toInt) }
+        .awaitTermination(120000)
+    }
+    def gold(st: S) = spark.read.parquet(st.goldPath)
+      .select("ingest_wave", "doc_id").as[(Int, Long)].collect()
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+    def state(st: S) = spark.table(st.sigTable).collect().map(_.toString).sorted.toSeq
+    assert(streamed.toSeq === direct, "one micro-batch per wave, same reports")
+    assert(gold(stS) === gold(stB), "gold ids per wave")
+    assert(state(stS) === state(stB), "signature-state rows")
+    (gold(stS), direct)
+  }
+
+  test("media waves via foreachWave == direct ingestMediaWave") {
+    import graft.operators.{Dedup, Images}
+    val dir = Files.createTempDirectory("graft_mwaves").toString
     def imgs(ids: Long*) = Images.syntheticCorpus(
       ids.toDF("doc_id"), "doc_id", variantsPerScene = 3, corruptEvery = 0)
-    // persisted state: wave 1 through the BATCH loop (scenes 0 and 1)
-    val st = IngestCli.initMediaState(spark, "graft_mstream_t1", dir,
-      maxHamming = 8, numBuckets = 4)
-    IngestCli.ingestMediaWave(spark, st, imgs(0L, 1L, 3L, 4L), 1)
-    val stateIdx = Incremental.stateHammingIndex(
-      spark.table(st.sigTable), maxHamming = 8)
     // blocklist: scene 2's base still (near-copies blocked too)
     val blockIdx = Dedup.hammingIndex(
       Images.imageSignatures(imgs(6L), "doc_id", col("content")),
       "dhash", maxHamming = 8)
-    // wave 2: 2/5 near state (drop), 6/7 blocked (base + variant),
-    // 9 fresh (pass), 209 an EXACT byte recrawl of 9 (one of the
-    // pair survives), 999 corrupt (null sig -> passes unprovable)
-    val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val base = imgs(2L, 5L, 6L, 7L, 9L)
-      .select("doc_id", "content").as[(Long, Array[Byte])].collect()
+    // wave 0: scenes 0 and 1. Wave 1: 2/5 near the state (drop), 6/7
+    // blocked (base + variant), 9 fresh (pass), 209 an EXACT byte
+    // recrawl of 9 (the in-wave pair keeps 9), 999 corrupt (null sig,
+    // passes unprovable)
+    val base = imgs(2L, 5L, 6L, 7L, 9L).as[(Long, Array[Byte])].collect()
     val c9 = base.find(_._1 == 9L).get._2
-    val rows = base.toSeq.map { case (id, c) => (id, c, ts0) } ++
-      Seq((209L, c9, ts0), (999L, Array[Byte](1, 2, 3), ts0))
-    val w2 = rows.toDF("doc_id", "content", "ts")
-
-    // batch wave decisions through the real loop (keeps lowest id 9)
-    val r2 = IngestCli.ingestMediaWave(spark, st, w2, 2,
-      blocklist = Some(blockIdx))
-    val goldW2 = spark.read.parquet(st.goldPath)
-      .filter(col("ingest_wave") === 2)
-      .select("doc_id").as[Long].collect().toSet
-    assert(goldW2 === Set(9L, 999L), s"batch loop decisions: $goldW2")
-    assert(r2.blocked === 2)
-
-    // the same wave through the STREAM gate chain
-    val waveDir = s"$dir/w2"
-    w2.coalesce(1).write.mode("overwrite").parquet(waveDir)
-    val streamed = runToMemory(
-      StreamOps.mediaIngestStream(
-        spark.readStream.schema(w2.schema).parquet(waveDir),
-        "content", stateIdx, Some(blockIdx)),
-      "media_ingest_kept")
-    val keptIds = streamed.select("doc_id").as[Long].collect().toSet
-    // the exact pair keeps FIRST ARRIVAL (either id — documented),
-    // everything else matches the batch loop row for row
-    assert(keptIds - 9L - 209L === Set(999L), s"kept: $keptIds")
-    assert((keptIds & Set(9L, 209L)).size === 1, s"kept: $keptIds")
-    // corrupt row surfaces as undecodable, not silently dropped
-    val corrupt = streamed.filter(col("doc_id") === 999L).collect()(0)
-    assert(!corrupt.getAs[Boolean]("decoded") && corrupt.isNullAt(
-      corrupt.fieldIndex("sig")))
-    // batch-mode invocation of the same chain agrees (same code path)
-    val batchKept = StreamOps.mediaIngestStream(w2, "content", stateIdx,
-      Some(blockIdx)).select("doc_id").as[Long].collect().toSet
-    assert(batchKept - 9L - 209L === Set(999L))
-    assert((batchKept & Set(9L, 209L)).size === 1)
+    val w2 = (base.toSeq ++ Seq((209L, c9), (999L, Array[Byte](1, 2, 3))))
+      .toDF("doc_id", "content")
+    def fresh(tag: String) = IngestCli.initMediaState(spark,
+      s"graft_mwaves_$tag", s"$dir/$tag", maxHamming = 8, numBuckets = 4)
+    val (gold, reports) = streamWaveParity(dir, Seq(imgs(0L, 1L, 3L, 4L), w2),
+        fresh("b"), fresh("s")) { (st, w, n) =>
+      IngestCli.ingestMediaWave(spark, st, w, n, blocklist = Some(blockIdx))
+    }
+    assert(gold(1) === Set(9L, 999L), s"second-wave gold: ${gold(1)}")
+    assert(reports(1).blocked === 2)
+    assert(reports(1).live === 7 && reports(1).decoded === 6,
+      "the corrupt payload counts as undecodable")
   }
 
   test("videoIngestStream: stream == batch wave decisions (cross-modal blocklist, positional state-dup, exact recrawl); undecodable passes") {
-    import graft.operators.{Dedup, Incremental, Video}
-    val dir = Files.createTempDirectory("graft_vstream").toString
+    import graft.operators.{Dedup, Video}
+    val dir = Files.createTempDirectory("graft_vwaves").toString
     def clips(ids: Long*) = Video.syntheticCorpus(
       ids.toDF("doc_id"), "doc_id", variantsPerScene = 3, corruptEvery = 0)
-    // persisted positional state: wave 1 through the BATCH loop
-    // (scene 0 base = clip 0, scene 1 base = clip 3)
-    val st = IngestCli.initVideoState(spark, "graft_vstream_t1", dir,
-      maxHamming = 8, minFrames = 2, everyNth = 2, numBuckets = 4)
-    IngestCli.ingestVideoWave(spark, st, clips(0L, 3L), 1)
-    val stateIdx = Incremental.stateFrameHammingIndex(
-      spark.table(st.sigTable), maxHamming = 8, everyNth = 2,
-      signer = Some(IngestCli.VideoSignerName))
     // cross-modal blocklist: scene 2's base STILL (sampled frame 0) —
     // variants share untouched frames, so near-copy clips block too
     val blockIdx = Dedup.hammingIndex(
       Video.frameSignatures(clips(6L), "doc_id", col("content"),
         everyNth = 2).filter(col("frame_pos") === 0),
       "dhash", maxHamming = 8)
-    // wave 2: 1 = scene-0 variant (positional match vs state clip 0 →
-    // drop), 6/7 = scene 2 base + variant (blocked through the shared
-    // still), 9 fresh (pass), 209 an EXACT byte recrawl of 9 (one of
-    // the pair survives), 999 corrupt (undecodable → pass)
-    val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    val base = clips(1L, 6L, 7L, 9L)
-      .select("doc_id", "content").as[(Long, Array[Byte])].collect()
+    // wave 0: clips 0 and 3 (scene 0 and 1 bases). Wave 1: 1 = scene-0
+    // variant (positional match vs state clip 0 → drop), 6/7 = scene 2
+    // base + variant (blocked through the shared still), 9 fresh (pass),
+    // 209 an EXACT byte recrawl of 9 (the in-wave pair keeps 9), 999
+    // corrupt (undecodable → pass)
+    val base = clips(1L, 6L, 7L, 9L).as[(Long, Array[Byte])].collect()
     val c9 = base.find(_._1 == 9L).get._2
-    val rows = base.toSeq.map { case (id, c) => (id, c, ts0) } ++
-      Seq((209L, c9, ts0), (999L, Array[Byte](1, 2, 3), ts0))
-    val w2 = rows.toDF("doc_id", "content", "ts")
-
-    // batch wave decisions through the real loop (keeps lowest id 9)
-    val r2 = IngestCli.ingestVideoWave(spark, st, w2, 2,
-      blocklist = Some(blockIdx))
-    val goldW2 = spark.read.parquet(st.goldPath)
-      .filter(col("ingest_wave") === 2)
-      .select("doc_id").as[Long].collect().toSet
-    assert(goldW2 === Set(9L, 999L), s"batch loop decisions: $goldW2")
-    assert(r2.blocked === 2)
-
-    // the same wave through the STREAM gate chain
-    val waveDir = s"$dir/w2"
-    w2.coalesce(1).write.mode("overwrite").parquet(waveDir)
-    val streamed = runToMemory(
-      StreamOps.videoIngestStream(
-        spark.readStream.schema(w2.schema).parquet(waveDir),
-        "content", stateIdx, Some(blockIdx)),
-      "video_ingest_kept")
-    val keptIds = streamed.select("doc_id").as[Long].collect().toSet
-    // the exact pair keeps FIRST ARRIVAL (either id — documented),
-    // everything else matches the batch loop row for row
-    assert(keptIds - 9L - 209L === Set(999L), s"kept: $keptIds")
-    assert((keptIds & Set(9L, 209L)).size === 1, s"kept: $keptIds")
-    // corrupt row surfaces as undecodable, not silently dropped
-    val corrupt = streamed.filter(col("doc_id") === 999L).collect()(0)
-    assert(!corrupt.getAs[Boolean]("decoded") && corrupt.isNullAt(
-      corrupt.fieldIndex("clip_sig")))
-    // batch-mode invocation of the same chain agrees (same code path)
-    val batchKept = StreamOps.videoIngestStream(w2, "content", stateIdx,
-      Some(blockIdx)).select("doc_id").as[Long].collect().toSet
-    assert(batchKept - 9L - 209L === Set(999L))
-    assert((batchKept & Set(9L, 209L)).size === 1)
-    // a stride-mismatched probe refuses loudly instead of silently
-    // matching nothing
-    val e = intercept[IllegalArgumentException] {
-      StreamOps.videoIngestStream(w2, "content", stateIdx, everyNth = 3)
+    val w2 = (base.toSeq ++ Seq((209L, c9), (999L, Array[Byte](1, 2, 3))))
+      .toDF("doc_id", "content")
+    def fresh(tag: String) = IngestCli.initVideoState(spark,
+      s"graft_vwaves_$tag", s"$dir/$tag", maxHamming = 8, minFrames = 2,
+      everyNth = 2, numBuckets = 4)
+    val (gold, reports) = streamWaveParity(dir, Seq(clips(0L, 3L), w2),
+        fresh("b"), fresh("s")) { (st, w, n) =>
+      IngestCli.ingestVideoWave(spark, st, w, n, blocklist = Some(blockIdx))
     }
-    assert(e.getMessage.contains("sampling grid"))
+    assert(gold(1) === Set(9L, 999L), s"second-wave gold: ${gold(1)}")
+    assert(reports(1).blocked === 2)
+    assert(reports(1).live === 6 && reports(1).decoded === 5,
+      "the corrupt payload counts as undecodable")
+  }
+
+  test("zero-frame clips (container parses, every frame fails decode) are exact-drop-EXEMPT: null clip_sig") {
+    import graft.operators.Video
+    // hand-rolled RIFF/AVI with one 00dc chunk of NON-JPEG payload:
+    // aviFrames parses it, decodeGray rejects every frame — the clip
+    // is decoded with zero signed frames
+    def le32(v: Int) = Array[Byte]((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte,
+      ((v >> 16) & 0xFF).toByte, ((v >> 24) & 0xFF).toByte)
+    def fakeAvi(payload: Array[Byte]): Array[Byte] = {
+      val chunk = "00dc".getBytes("US-ASCII") ++ le32(payload.length) ++ payload
+      val movi = "LIST".getBytes("US-ASCII") ++ le32(4 + chunk.length) ++
+        "movi".getBytes("US-ASCII") ++ chunk
+      "RIFF".getBytes("US-ASCII") ++ le32(4 + movi.length) ++
+        "AVI ".getBytes("US-ASCII") ++ movi
+    }
+    val dir = Files.createTempDirectory("graft_zero_frames").toString
+    // two MUTUALLY-DISTINCT zero-frame clips: nothing is provable
+    // about either, so BOTH must pass every gate — a shared
+    // empty-signature constant would let one drop the other
+    val w = Seq((501L, fakeAvi(Array[Byte](9, 9, 9, 9))),
+      (502L, fakeAvi(Array[Byte](8, 8, 8, 8)))).toDF("doc_id", "content")
+    Video.clipInfo(w, "doc_id", col("content")).collect().foreach { r =>
+      assert(r.getAs[Boolean]("decoded"), "the container itself parsed")
+    }
+    assert(Video.frameSignatures(w, "doc_id", col("content")).isEmpty,
+      "zero signed frames -> no signature rows, never a shared constant")
+    def fresh(tag: String) = IngestCli.initVideoState(spark,
+      s"graft_zero_frames_$tag", s"$dir/$tag", maxHamming = 8,
+      minFrames = 2, everyNth = 2, numBuckets = 4)
+    val (stB, stS) = (fresh("b"), fresh("s"))
+    val (gold, _) = streamWaveParity(dir,
+        Seq(Video.syntheticCorpus(Seq(0L).toDF("doc_id"), "doc_id",
+          corruptEvery = 0), w), stB, stS) { (st, wave, n) =>
+      IngestCli.ingestVideoWave(spark, st, wave, n)
+    }
+    assert(gold(1) === Set(501L, 502L),
+      "stream ≡ batch: every zero-frame clip reaches gold")
+    assert(spark.table(stS.sigTable).filter(col("doc_id").isin(501L, 502L)).isEmpty,
+      "no signature state is recorded for a clip with no signed frames")
   }
 
   test("streaming cluster assignment parity: micro-batch waves ≡ batch appendClusters") {
@@ -838,49 +840,5 @@ class StreamingSpec extends AnyFunSuite {
       x.aliasTable, x.edgeTable, s"${x.memberTable}_tomb",
       s"${x.memberTable}_patch")
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n")))
-  }
-
-  test("zero-frame clips (container parses, every frame fails decode) are exact-drop-EXEMPT: null clip_sig") {
-    import graft.operators.Video
-    // hand-rolled RIFF/AVI with one 00dc chunk of NON-JPEG payload:
-    // aviFrames parses it, decodeGray rejects every frame — the clip
-    // is decoded=true with zero signed frames
-    def le32(v: Int) = Array[Byte]((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte,
-      ((v >> 16) & 0xFF).toByte, ((v >> 24) & 0xFF).toByte)
-    def fakeAvi(payload: Array[Byte]): Array[Byte] = {
-      val chunk = "00dc".getBytes("US-ASCII") ++ le32(payload.length) ++ payload
-      val movi = "LIST".getBytes("US-ASCII") ++ le32(4 + chunk.length) ++
-        "movi".getBytes("US-ASCII") ++ chunk
-      "RIFF".getBytes("US-ASCII") ++ le32(4 + movi.length) ++
-        "AVI ".getBytes("US-ASCII") ++ movi
-    }
-    val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    // two MUTUALLY-DISTINCT zero-frame clips: nothing is provable
-    // about either, so BOTH must pass every gate — a shared
-    // empty-digest constant would let the exact recrawl gate drop one
-    val w = Seq((1L, fakeAvi(Array[Byte](9, 9, 9, 9)), ts0),
-      (2L, fakeAvi(Array[Byte](8, 8, 8, 8)), ts0))
-      .toDF("doc_id", "content", "ts")
-    val signed = StreamOps.videoSignStream(w, "content").collect()
-    signed.foreach { r =>
-      assert(r.getAs[Boolean]("decoded"), "the container itself parsed")
-      assert(r.getSeq[Int](r.fieldIndex("frame_pos")).isEmpty)
-      assert(r.isNullAt(r.fieldIndex("clip_sig")),
-        "zero signed frames -> NULL clip_sig, never a shared constant")
-    }
-    val emptyIdx = Video.FrameStateIndex(8, 2, Array.empty, Array.empty,
-      Array.empty, Array.empty)
-    val batchKept = StreamOps.videoIngestStream(w, "content", emptyIdx)
-      .select("doc_id").as[Long].collect().toSet
-    assert(batchKept === Set(1L, 2L),
-      "batch chain admits every zero-frame clip (nothing provable)")
-    val dir = Files.createTempDirectory("graft-zero-frames").toString + "/w"
-    w.coalesce(1).write.parquet(dir)
-    val streamed = runToMemory(
-      StreamOps.videoIngestStream(
-        spark.readStream.schema(w.schema).parquet(dir), "content", emptyIdx),
-      "video_zero_frames")
-    assert(streamed.select("doc_id").as[Long].collect().toSet === Set(1L, 2L),
-      "stream ≡ batch: the exact gate exempts zero-frame clips")
   }
 }
