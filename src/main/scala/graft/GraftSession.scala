@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * Scan parallelism note: splits land on parquet row-group boundaries,
   * so a single-row-group file is one task no matter the config — lay
   * out production tables with row groups ≤ maxPartitionBytes. The
-  * compute-heavy narrow expressions (CharNGrams, MinHashSig) are
-  * native and cheap enough that a single-split scan is not a
-  * bottleneck at test scale.
+  * compute-heavy narrow expressions (CharNGrams, the MinHash signing
+  * and band-key kernels ShingleMinHash and MinHashBandKeys) are native
+  * and cheap enough that a single-split scan is not a bottleneck at
+  * test scale.
   */
 object GraftSession {
 

@@ -52,6 +52,22 @@ object MinHashSig {
     z ^ (z >>> 31)
   }
 
+  /** Folds one token (`len` bytes at `base`/`off`) into the running
+    * minima: two Murmur3 seeds (42, 1042) make the 64-bit token hash,
+    * then `sig.length` splitmix permutations of it. The one token hash
+    * behind [[compute]] and [[ShingleMinHash]]. */
+  def add(sig: Array[Long], base: AnyRef, off: Long, len: Int): Unit = {
+    val lo = Murmur3_x86_32.hashUnsafeBytes(base, off, len, 42)
+    val hi = Murmur3_x86_32.hashUnsafeBytes(base, off, len, 1042)
+    val h = (hi.toLong << 32) | (lo.toLong & 0xFFFFFFFFL)
+    var p = 0
+    while (p < sig.length) {
+      val ph = mix(h ^ (p.toLong * 0xC2B2AE3D27D4EB4FL))
+      if (ph < sig(p)) sig(p) = ph
+      p += 1
+    }
+  }
+
   def compute(tokens: ArrayData, numPerm: Int): ArrayData = {
     val sig = Array.fill(numPerm)(Long.MaxValue)
     val n = tokens.numElements()
@@ -59,15 +75,7 @@ object MinHashSig {
     while (i < n) {
       if (!tokens.isNullAt(i)) {
         val s = tokens.getUTF8String(i)
-        val lo = Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42)
-        val hi = Murmur3_x86_32.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 1042)
-        val h = (hi.toLong << 32) | (lo.toLong & 0xFFFFFFFFL)
-        var p = 0
-        while (p < numPerm) {
-          val ph = mix(h ^ (p.toLong * 0xC2B2AE3D27D4EB4FL))
-          if (ph < sig(p)) sig(p) = ph
-          p += 1
-        }
+        add(sig, s.getBaseObject, s.getBaseOffset, s.numBytes)
       }
       i += 1
     }

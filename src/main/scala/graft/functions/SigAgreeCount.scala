@@ -16,12 +16,13 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * the ≥-threshold verify then drops).
   *
   * This is the verification kernel of the banded-LSH dedup
-  * ([[graft.operators.Dedup.minhashDedup]]): every candidate pair
-  * evaluates signature agreement once PER COLLIDING BAND, and the
+  * ([[graft.operators.Dedup.minhashDedup]]): candidate pairs are made
+  * distinct before the verify, so it runs once per distinct pair
+  * (however many bands the pair collides in). The
   * higher-order-function formulation interprets three lambda
   * dispatches per signature position — ~128 interpreted calls per
-  * verify on a numPerm=128 signature, millions of times per corpus.
-  * Here it is one allocation-free loop inside whole-stage codegen.
+  * verify on a numPerm=128 signature. Here it is one allocation-free
+  * loop inside whole-stage codegen.
   */
 case class SigAgreeCount(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -146,16 +146,13 @@ object Dedup {
     graft.functions.text.expr2col(
       graft.functions.SimHash64(graft.functions.text.col2expr(tokens)))
 
-  /** Word shingles of size n ("a b c d",2 → ["a b","b c","c d"]);
-    * shorter texts collapse to a single whole-text shingle. */
-  def shingles(textCol: Column, n: Int): Column = {
-    val words = split(textCol, "\\s+")
-    if (n <= 1) words
-    else when(size(words) <= n, array(array_join(words, " ")))
-      .otherwise(transform(
-        sequence(lit(0), size(words) - n),
-        i => array_join(slice(words, i + lit(1), lit(n)), " ")))
-  }
+  /** Word shingles of size n ("a b c d",2 → ["a b","b c","c d"]) over
+    * `split(textCol, "\\s+")` fields; texts of at most n fields
+    * collapse to a single whole-text shingle. The native
+    * [[graft.functions.Shingles]] kernel, whose splitter also feeds the
+    * MinHash signing kernel ([[minhashSigCol]]). */
+  def shingles(textCol: Column, n: Int): Column =
+    text.expr2col(graft.functions.Shingles(text.col2expr(textCol), n))
 
   private def minhashSig(tokens: Column, numPerm: Int): Column =
     graft.functions.text.expr2col(
@@ -166,84 +163,62 @@ object Dedup {
 
   /** The MinHash band key: one `(band, bucket)` struct per band, exploded,
     * where `bucket` is the xxhash64 of the band's `r` signature slots
-    * (AND within a band, OR across bands). The one definition behind
-    * batch dedup, [[minhashDedupAgainst]] and the persisted text state
-    * ([[Incremental.banded]]) — state rows and their probes must hash
-    * identically. */
+    * (AND within a band, OR across bands), computed by the native
+    * [[graft.functions.MinHashBandKeys]] kernel. The one definition
+    * behind batch dedup, [[minhashDedupAgainst]] and the persisted text
+    * state ([[Incremental.banded]]) — state rows and their probes must
+    * hash identically. */
   private[graft] def minhashBandKeys(sig: Column, bands: Int, r: Int): Column =
-    explode(transform(sequence(lit(0), lit(bands - 1)),
-      b => struct(b.as("band"), xxhash64(slice(sig, b * r + 1, lit(r))).as("bucket"))))
+    explode(text.expr2col(graft.functions.MinHashBandKeys(text.col2expr(sig), bands, r)))
 
-  /** Banded MinHash LSH dedup — the classic shingle → minhash → band →
-    * bucket-join pipeline, built directly on DataFrame ops with the
-    * native [[graft.functions.MinHashSig]] expression.
+  /** Candidate `(id_a, id_b)` pairs (`id_a < id_b`) of an already-signed
+    * frame `(idCol, __sig)` whose estimated Jaccard — the signature
+    * agreement fraction — meets `threshold`: the banded-LSH enumeration
+    * behind [[minhashDedup]], the text waves' in-wave pairs, and exposed
+    * so skew bounds are spec-testable.
     *
-    * vs [[fuzzyDedup]] (spark.ml MinHashLSH): ml's LSH has only
-    * OR-amplification (each hash table = ONE MinHash function), so
-    * moderately-similar pairs collide constantly and the join
-    * explodes. Banding r rows per band gives AND-amplification —
-    * P(candidate) = 1-(1-J^r)^b — which suppresses sub-threshold pairs
-    * exponentially. Candidate verification is the exact signature
-    * agreement fraction; removal is a left_anti join (never a driver
-    * collect).
+    * Banding r = numPerm / bands slots per band gives AND-amplification
+    * within a band and OR across bands — P(candidate) = 1 − (1 − J^r)^b
+    * — which suppresses sub-threshold pairs exponentially (spark.ml's
+    * MinHashLSH, behind [[fuzzyDedup]], has only the OR side).
     *
-    * Scale shape: one narrow map per row (signature), one explode ×
-    * bands (b small rows), one hash-partitioned self-join on
-    * (band, bucket), one window-free verify on candidate pairs.
-    * Skewed buckets (boilerplate shingles) are AQE-splittable.
-    */
-  /** Candidate (id_a, id_b) pairs whose estimated Jaccard (signature
-    * agreement fraction) meets `threshold` — the enumeration behind
-    * [[minhashDedup]], exposed so skew bounds are spec-testable.
-    *
-    * Skew hardening: a bucket of near-identical boilerplate (the same
-    * members colliding in EVERY band) makes the self-join O(B²) per
-    * band. Buckets larger than `maxBucketSize` switch to a star
-    * pattern — every member is verified against the bucket's min-id
-    * member only (B−1 pairs instead of B²). On the pathological case
-    * that creates oversized buckets (a near-clique), the star reaches
-    * the same removable set, because every member verifies against the
-    * min; a member of an oversized MIXED bucket that only matches some
-    * non-min member can be missed there, but it still collides with it
-    * in the other bands' (smaller) buckets. Cost is bounded at
-    * `bands × max(maxBucketSize, B−1)` per bucket either way. */
-  /** Candidate enumeration from an already-signed frame `(id, __sig)`.
-    * The bucket-size stats aggregation carries ONLY counts (signature
-    * arrays never enter its shuffle); min-id signatures are aggregated
-    * over oversized-bucket members alone, which the cap makes rare by
-    * construction. */
+    * Plan: the ids-only banded rows `(id, band, bucket)` cross ONE
+    * hash exchange on `(band, bucket)`; a window over it attaches each
+    * bucket's size and min id, and everything downstream reads that
+    * partitioning.
+    *  - Buckets of at most `maxBucketSize` members self-join on
+    *    `(band, bucket)`: all member pairs.
+    *  - Larger buckets (near-identical boilerplate colliding in every
+    *    band, O(B²) pairs per band) emit star pairs `(min id, id)`
+    *    directly, with no join — B−1 pairs. On the near-clique that
+    *    makes such buckets the star reaches the same removable set,
+    *    since every member verifies against the min; a member of an
+    *    oversized MIXED bucket that only matches some non-min member
+    *    can be missed there, but it still collides with it in the
+    *    other bands' smaller buckets.
+    * The signature never rides the banded rows (a numPerm-long array
+    * crossing a ×bands exchange measured 5 GB vs 130 MB ids-only on a
+    * 150k-doc rehearsal). */
   private[graft] def candidatesFromSig(
       withSig: DataFrame, idCol: String,
       threshold: Double, numPerm: Int, bands: Int,
       maxBucketSize: Int): DataFrame = {
     val r = numPerm / bands
-    // ids-only banded rows: the (band, bucket) exchange — the widest
-    // in the operator — carries ~28-byte rows, never the numPerm-long
-    // signature. The earlier sig-carrying formulation shuffled and
-    // SMJ-sorted ~1 KB rows (measured 5 GB vs 130 MB on a 150k-doc
-    // rehearsal; that exchange dominated the whole operator).
+    val bucket = Window.partitionBy(col("band"), col("bucket"))
     val banded = withSig.select(col(idCol),
         minhashBandKeys(col("__sig"), bands, r).as("__b"))
       .select(col(idCol), col("__b.band"), col("__b.bucket"))
-    val sizes = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__bsz"))
-    val tagged = banded.join(sizes, Seq("band", "bucket"))
-    // normal buckets: ids-only self-join of the literally-same frame,
-    // so the two hash exchanges canonicalize identically and Spark
-    // plans a ReusedExchange — the (band, bucket) shuffle is written
-    // ONCE and read twice.
-    val small = tagged.filter(col("__bsz") <= maxBucketSize)
+      .withColumn("__bsz", count(lit(1)).over(bucket))
+      .withColumn("__bmin", min(col(idCol)).over(bucket))
+    // the literally-same frame on both sides, already partitioned and
+    // sorted on (band, bucket) by the window: the join adds no exchange
+    val small = banded.filter(col("__bsz") <= maxBucketSize)
       .select(col(idCol), col("band"), col("bucket"))
     val smallPairs = small.as("l").join(small.as("r"), Seq("band", "bucket"))
       .filter(col(s"l.$idCol") < col(s"r.$idCol"))
       .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
-    // oversized buckets: star pattern against the min-id member —
-    // B−1 pairs instead of B².
-    val big = tagged.filter(col("__bsz") > maxBucketSize)
-    val bigStats = big.groupBy(col("band"), col("bucket"))
-      .agg(min(col(idCol)).as("__bmin"))
-    val bigPairs = big.join(bigStats, Seq("band", "bucket"))
-      .filter(col(idCol) =!= col("__bmin"))
+    val bigPairs = banded
+      .filter(col("__bsz") > maxBucketSize && col(idCol) =!= col("__bmin"))
       .select(col("__bmin").as("id_a"), col(idCol).as("id_b"))
     // a pair colliding in k bands is distinct'd to ONE 16-byte row
     // BEFORE the verify; signatures re-attach to the few unique
@@ -266,7 +241,8 @@ object Dedup {
     * state rows and their probes sign identically. */
   private[graft] def minhashSigCol(textCol: Column, numPerm: Int,
       shingleSize: Int): Column =
-    minhashSig(shingles(text.norm_key(textCol), shingleSize), numPerm)
+    text.expr2col(graft.functions.ShingleMinHash(
+      text.col2expr(text.norm_key(textCol)), shingleSize, numPerm))
 
   private[graft] def minhashCandidates(
       df: DataFrame,
@@ -325,7 +301,7 @@ object Dedup {
     require(numPerm % bands == 0, "bands must divide numPerm")
     // signatures are the expensive narrow map (numPerm hashes per
     // shingle); the candidate plan references the signed frame from
-    // several subplans (both self-join sides + the size stats), so
+    // three subplans (the banded rows + both re-attach sides), so
     // persist it for the duration of the dup-id computation — same
     // cache-then-localCheckpoint discipline as fuzzyDedup: the dup-id
     // set (ids only) is materialized eagerly, the cache released, and
@@ -334,12 +310,12 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // Materialize the cache EAGERLY: the candidate plan fans out into
-      // ~8 independent map stages (band explode sides, bucket-size agg,
-      // star-verify agg) that AQE submits concurrently — against a lazy
-      // cache they all miss and each recomputes the full signature pass
-      // (observable as "Block rdd_N already exists" warnings and an 8×
-      // signature cost). One count() populates the cache first, so the
-      // fan-out reads blocks.
+      // independent map stages (the banded exchange, both re-attach
+      // sides) that AQE submits concurrently — against a lazy cache
+      // they all miss and each recomputes the full signature pass
+      // (observable as "Block rdd_N already exists" warnings and a
+      // multiplied signature cost). One count() populates the cache
+      // first, so the fan-out reads blocks.
       withSig.count()
       val dupIds = candidatesFromSig(withSig, idCol, threshold, numPerm, bands, maxBucketSize)
         .select(col("id_b").as(idCol)).distinct()
@@ -1460,6 +1436,17 @@ object Dedup {
     } finally sets.unpersist(blocking = false)
   }
 
+  /** `(__id, __bucket)` band rows of `(__id, __g)` gram sets for the
+    * banded Jaccard joins: [[minhashBandKeys]] of each set's signature
+    * with the band index hashed into the key, so the bucket join keys
+    * on one long; a cross-band hash collision only adds a spurious
+    * candidate that exact verification discards. */
+  private def bandedGramSets(sets: DataFrame, numPerm: Int, bands: Int,
+      r: Int): DataFrame = sets
+    .select(col("__id"),
+      minhashBandKeys(minhashSig(col("__g"), numPerm), bands, r).as("__b"))
+    .select(col("__id"), xxhash64(col("__b.bucket"), col("__b.band")).as("__bucket"))
+
   /** [[jaccardPairsBanded]]'s body over an ALREADY persisted +
     * materialized `(__id, __g)` gram-set frame — shared with
     * [[jaccardPairsAuto]], whose probe builds the same cache; the
@@ -1469,13 +1456,7 @@ object Dedup {
     {
       val r = recallBandRows(t, numPerm)
       val bands = numPerm / r
-      // band index rides INSIDE the hash (seed column) so the bucket
-      // join keys on one long; a cross-band hash collision only adds a
-      // spurious candidate that exact verification discards.
-      val banded = sets
-        .select(col("__id"), minhashSig(col("__g"), numPerm).as("__sig"))
-        .select(col("__id"), explode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("__sig"), b * r + 1, lit(r)), b))).as("__bucket"))
+      val banded = bandedGramSets(sets, numPerm, bands, r)
       val cand = banded.as("l").join(banded.as("r"), Seq("__bucket"))
         .filter(col("l.__id") < col("r.__id"))
         .select((shiftleft(col("l.__id"), 32) + col("r.__id")).as("__pair"))
@@ -1678,10 +1659,7 @@ object Dedup {
       setsL: DataFrame, setsR: DataFrame, t: Double, numPerm: Int): DataFrame = {
     val r = recallBandRows(t, numPerm)
     val bands = numPerm / r
-    def bandedSide(sets: DataFrame): DataFrame = sets
-      .select(col("__id"), minhashSig(col("__g"), numPerm).as("__sig"))
-      .select(col("__id"), explode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(slice(col("__sig"), b * r + 1, lit(r)), b))).as("__bucket"))
+    def bandedSide(sets: DataFrame): DataFrame = bandedGramSets(sets, numPerm, bands, r)
     // distinct on BOTH ids, not a packed long: unlike the self-join
     // hot aggregation (countedPairs, where the pack is the measured
     // hash-agg win and the 32-bit assumption is documented), the two

@@ -1475,7 +1475,7 @@ object Incremental {
   def retractFrameHammingIds(
       spark: org.apache.spark.sql.SparkSession, table: String,
       newTable: String, newPath: String, tombstones: DataFrame,
-      numBuckets: Int = 64): Long = {
+      numBuckets: Int = 64): Unit = {
     val (idCol, shardCols) = positionalStateCols(spark.table(table))
     retractHammingCore(spark, table, newTable, newPath, tombstones,
       idCol, ("frame_pos" +: shardCols) ++ Seq("band", "bucket"), numBuckets)
@@ -1492,7 +1492,7 @@ object Incremental {
   def retractBandedHammingIds(
       spark: org.apache.spark.sql.SparkSession, table: String,
       newTable: String, newPath: String, tombstones: DataFrame,
-      numBuckets: Int = 64): Long = {
+      numBuckets: Int = 64): Unit = {
     val state = spark.table(table)
     require(state.columns.length == 4 &&
       Set("band", "bucket", "sig").subsetOf(state.columns.toSet),
@@ -1512,20 +1512,11 @@ object Incremental {
     * every probe decision for live content. The remap updates in the
     * same pass (tombstoned twins leave, repointed families stay
     * depth-1, the new representative's own row is removed).
-    * Tombstones broadcast; elections are takedown-sized.
-    *
-    * Returns the number of distinct ids ACTUALLY removed from the
-    * state in this pass — tombstoned ids present before the rewrite
-    * either as signature rows or as a remap-sidecar dropped id
-    * (compacted-away twins have no rows but ARE state: their remap
-    * entry is what suppresses re-ingest), matching
-    * `compactFrameHammingDuplicates`' nDropped convention. Callers
-    * pass the full historical tombstone table, so the cumulative
-    * tombstone count would overstate every pass after the first. */
+    * Tombstones broadcast; elections are takedown-sized. */
   private def retractHammingCore(
       spark: org.apache.spark.sql.SparkSession, table: String,
       newTable: String, newPath: String, tombstones: DataFrame,
-      idCol: String, bcols: Seq[String], numBuckets: Int): Long = {
+      idCol: String, bcols: Seq[String], numBuckets: Int): Unit = {
     // the `_meta` row's null id matches no tombstone and no election, so
     // it rides through every join below untouched, and the rewrite keeps
     // the scan's rows in place for the bucketed write
@@ -1535,20 +1526,6 @@ object Incremental {
         .distinct().localCheckpoint(true))
     val remapT = s"${table}_remap"
     val hasRemap = spark.catalog.tableExists(remapT)
-    // the pass's honest metric: tombstoned ids present in the
-    // PRE-rewrite state — as signature rows OR as a remap dropped id
-    // (one broadcast-semi scan each; retraction already rewrites the
-    // whole state, so this doesn't change the envelope)
-    val presentRowIds = rows
-      .join(tomb, col(idCol) === col("retract_id"), "left_semi")
-      .select(col(idCol).cast("long").as("__rid"))
-    val presentIds =
-      if (hasRemap) presentRowIds.unionByName(
-        spark.table(remapT)
-          .join(tomb, col("dropped_id") === col("retract_id"), "left_semi")
-          .select(col("dropped_id").cast("long").as("__rid")))
-      else presentRowIds
-    val nRemoved = presentIds.distinct().count()
     val (rows2, remap2) = if (hasRemap) {
       val remap = spark.table(remapT)
       // retired representatives → min SURVIVING twin (if any)
@@ -1578,7 +1555,6 @@ object Incremental {
     writeBucketed(rows2, newTable, bcols, numBuckets, path = Some(newPath))
     remap2.foreach(writeRemap(_, newTable, newPath))
     hammingMetaMemo.clear()
-    nRemoved
   }
 
   /** Drop every batch row whose signature is within `maxHamming` of

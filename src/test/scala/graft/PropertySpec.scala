@@ -159,6 +159,57 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("property: MinHash shingle, signing and band-key kernels equal the HOF formulations") {
+    // the Column formulations the kernels replaced, kept as the reference
+    def hofShingles(c: org.apache.spark.sql.Column, n: Int) = {
+      val words = split(c, "\\s+")
+      if (n <= 1) words
+      else when(size(words) <= n, array(array_join(words, " ")))
+        .otherwise(transform(sequence(lit(0), size(words) - n),
+          i => array_join(slice(words, i + lit(1), lit(n)), " ")))
+    }
+    def hofBandKeys(sig: org.apache.spark.sql.Column, bands: Int, r: Int) =
+      transform(sequence(lit(0), lit(bands - 1)),
+        b => struct(b.as("band"), xxhash64(slice(sig, b * r + 1, lit(r))).as("bucket")))
+    def bandKeys(sig: org.apache.spark.sql.Column, bands: Int, r: Int) =
+      text.expr2col(graft.functions.MinHashBandKeys(text.col2expr(sig), bands, r))
+    val edge = Seq("", " ", "\t", " \t\n ", "\tleading tab", "trailing tab\t",
+      "one", "two words", "three small words", "four plain small words",
+      "tlācatl ōmētl Ācatl", "tlaʼtolli tla'tolli tla’tolli tla`tolli tlaʔtolli",
+      "k'iin ch'ich' ts'o'ok p'u'ul t'aan", "İstanbul STRAßE Straße", null)
+    for (seed <- 1L to 5L) {
+      val strs = sample(Gen.listOfN(40, corpusString), seed * 13) ++ edge
+      val df = strs.toDF("s").withColumn("k", text.norm_key(col("s")))
+      for (n <- Seq(1, 2, 3, 4)) {
+        val bad = df.select(col("s"), Dedup.shingles(col("k"), n).as("a"),
+            hofShingles(col("k"), n).as("b"))
+          .filter(not(col("a") <=> col("b")))
+        assert(bad.count() === 0L,
+          s"native vs HOF shingles diverge (n=$n), e.g. ${bad.head(1).toSeq}")
+      }
+      val signed = df.select(col("s"),
+        Dedup.minhashSigCol(col("s"), 128, 3).as("a"),
+        Dedup.minhashSigForTest(hofShingles(col("k"), 3), 128).as("b"))
+      val badSig = signed.filter(not(col("a") <=> col("b")))
+      assert(badSig.count() === 0L,
+        s"signing kernel vs MinHashSig(shingles) diverge, e.g. ${badSig.head(1).toSeq}")
+      val badBands = signed.select(col("s"),
+          bandKeys(col("a"), 32, 4).as("ka"), hofBandKeys(col("a"), 32, 4).as("kb"))
+        .filter(not(col("ka") <=> col("kb")))
+      assert(badBands.count() === 0L,
+        s"band-key kernel vs xxhash64(slice) diverge, e.g. ${badBands.head(1).toSeq}")
+    }
+    // short, empty, null-slotted and null signatures: slices past the
+    // end are partial or empty, null slots and a null array are skipped
+    val sigs = sample(Gen.listOfN(40, Gen.chooseNum(0, 14).flatMap(len =>
+      Gen.listOfN(len, Gen.option(Gen.chooseNum(Long.MinValue, Long.MaxValue))))), 7L)
+    val sdf = (sigs.map(Option(_)) :+ None).toDF("sig")
+    val badOdd = sdf.select(bandKeys(col("sig"), 3, 4).as("ka"),
+        hofBandKeys(col("sig"), 3, 4).as("kb"))
+      .filter(not(col("ka") <=> col("kb")))
+    assert(badOdd.count() === 0L, s"e.g. ${badOdd.head(1).toSeq}")
+  }
+
   test("property: native HyperplaneSig equals the Column-tree formulation") {
     for (seed <- 1L to 3L) {
       val vecs = sample(Gen.listOfN(30, Gen.listOfN(24,
