@@ -640,29 +640,27 @@ object SparkEntry {
         .orderBy("category", "dialect")
     },
 
-    // ---- Near-dup at scale: FULL-table n-gram Jaccard pairs via the
-    // exact count-based token join — explode gram sets once, equi-join
-    // on the gram, COUNT(*) per pair = |A∩B| — never a cross join, and
-    // the output provably equals the brute-force pair enumeration, so
-    // the all-pairs DuckDB oracle hash-checks it. 8-char shingles keep
-    // the gram vocabulary from saturating (vs n=3). The PPJoin variant
-    // (Dedup.jaccardPairsPrefix) loses here ~8×: this corpus has no
-    // truly rare grams (min df ≈ dozens), so rarest-prefix candidates
-    // still explode and then drag gram ARRAYS through the verify join —
-    // the count join's 20-byte rows win despite touching every
-    // gram-sharing pair.
+    // ---- Near-dup at scale: FULL-table n-gram Jaccard pairs through
+    // the guarded core — tokenize the gram sets once, probe Σdf², then
+    // either the exact count-based token join (explode, equi-join on
+    // the gram, COUNT(*) per pair = |A∩B|; output provably equals the
+    // brute-force pair enumeration) or, past 8192 joined rows per doc,
+    // banded-MinHash candidates with the same exact verify. Never a
+    // cross join; the all-pairs DuckDB oracle hash-checks either route.
+    // 8-char shingles keep the gram vocabulary from saturating (vs
+    // n=3), yet at sf0.1 the probe still routes banded: Σdf² =
+    // 560,913,038 over 5,000 docs against a 40,960,000-row budget.
     "q45_ngram_pairs_full" -> { (s, dir) =>
       Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", col("text"),
           t = 0.8, n = 8)
         .orderBy("id_a", "id_b")
     },
 
-    // ---- Guardrailed n-gram dedup: same removal contract as a direct
-    // jaccardPairs anti-join, but the Σdf² probe routes the candidate
-    // join — on this corpus (gram df tail past the per-doc budget) it
-    // picks banded-MinHash candidates + exact jaccardOfSets verify, so
-    // the brute-force DuckDB oracle hash-checks the guarded path
-    // end-to-end THROUGH the routing decision.
+    // ---- Guardrailed n-gram dedup: q45's pairs (same corpus, t and
+    // n, so the same probe decision) feeding a left_anti removal of
+    // every higher-id member — the brute-force DuckDB oracle
+    // hash-checks the guarded path end-to-end THROUGH the routing
+    // decision.
     "q97_ngram_dedup_guarded" -> { (s, dir) =>
       Dedup.ngramDedup(Tables.documents(s, dir), "doc_id", col("text"),
           t = 0.8, n = 8)
@@ -772,8 +770,9 @@ object SparkEntry {
 
     // ---- Decontamination: scrub an eval split of documents that leak
     // from the training split (≥ t bipartite n-gram Jaccard against ANY
-    // train doc) — the exact count-based join across two corpora, so
-    // the brute-force DuckDB cross-corpus oracle hash-checks it.
+    // train doc) — the guarded bipartite join (exact count join or
+    // banded candidates + exact verify), so the brute-force DuckDB
+    // cross-corpus oracle hash-checks it.
     "q49_decontaminate" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val eval = docs.filter(col("doc_id") % 10 === 0)
@@ -787,15 +786,15 @@ object SparkEntry {
     // many training docs it fuzzily leaks into (count, zeros kept).
     // The artifact an eval-set owner reviews before trusting numbers.
     // Eval here is 10% of the corpus — exactly the oversized-reference
-    // shape the unguarded bipartite join detonates on at scale — so the
-    // report runs through jaccardJoinAuto: the Σ dfL·dfR probe keeps
-    // the exact count join while it fits and swaps in banded-MinHash
-    // candidates + exact verify past the budget.
+    // shape an unguarded bipartite join detonates on at scale — and
+    // jaccardJoin's Σ dfL·dfR probe keeps the exact count join while
+    // it fits and swaps in banded-MinHash candidates + exact verify
+    // past the budget.
     "q105_leak_report" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       val eval = docs.filter(col("doc_id") % 10 === 0)
       val train = docs.filter(col("doc_id") % 10 =!= 0)
-      val hits = Dedup.jaccardJoinAuto(eval, "doc_id", col("text"),
+      val hits = Dedup.jaccardJoin(eval, "doc_id", col("text"),
           train, "doc_id", col("text"), t = 0.8, n = 8)
         .groupBy(col("id_a").as("doc_id")).agg(count(lit(1)).as("n_leaks"))
       eval.select("doc_id").join(hits, Seq("doc_id"), "left")

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * which Spark can only plan as a nested-loop cross product — that
   * exact shape is what [[graft.plans.JaccardJoinRewrite]] pattern-
   * matches and replaces with the count-based exact set-similarity join
-  * ([[graft.operators.Dedup.jaccardPairs]]'s algorithm). Without the
+  * ([[graft.operators.Dedup.textPairsByJaccard]]). Without the
   * rule installed the query still answers correctly, just O(n·m).
   *
   * Codegen is a single static call (same discipline as [[CharNGrams]]:

@@ -9,7 +9,9 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * columns, as a native Catalyst expression with codegen.
   *
   * This is the verification kernel of the set-similarity join family
-  * (prefix-filtered n-gram Jaccard, [[graft.operators.Dedup.jaccardPairs]]):
+  * (behind [[graft.operators.Dedup.jaccardOfSets]], which verifies the
+  * banded candidates of [[graft.operators.Dedup.jaccardPairs]] and
+  * `jaccardJoin`):
   * a candidate-verify pass evaluates |A∩B| millions of times, and
   * Spark's `array_intersect` builds a fresh hash set PER ROW (string
   * hashing + boxing + a growing table) — ~45 µs/pair on ~300-element

@@ -441,9 +441,15 @@ object Dedup {
       .select(col(idCol), col("__sig"),
         graft.functions.Bits.unpackBand(col("__e")).as("band"),
         graft.functions.Bits.unpackBucket(col("__e")).as("bucket"))
-    val sizes = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("__bsz"))
-    val tagged = banded.join(sizes, Seq("band", "bucket"))
+    // one window over the (band, bucket) exchange attaches each
+    // bucket's size, min id and the min id's signature — the
+    // candidatesFromSig plan: small buckets self-join on its output
+    // with no further exchange, oversized ones star without a join
+    val bucket = Window.partitionBy(col("band"), col("bucket"))
+    val tagged = banded
+      .withColumn("__bsz", count(lit(1)).over(bucket))
+      .withColumn("__bmin", min(col(idCol)).over(bucket))
+      .withColumn("__bminsig", min_by(col("__sig"), col(idCol)).over(bucket))
     def withinBudget(x: Column, y: Column): Column =
       bit_count(x.bitwiseXOR(y)) <= maxHamming
     val small = tagged.filter(col("__bsz") <= maxBucketSize)
@@ -452,12 +458,8 @@ object Dedup {
       .filter(col(s"l.$idCol") < col(s"r.$idCol") &&
         withinBudget(col("l.__sig"), col("r.__sig")))
       .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
-    val big = tagged.filter(col("__bsz") > maxBucketSize)
-    val bigStats = big.groupBy(col("band"), col("bucket")).agg(
-      min(col(idCol)).as("__bmin"),
-      min_by(col("__sig"), col(idCol)).as("__bminsig"))
-    val bigPairs = big.join(bigStats, Seq("band", "bucket"))
-      .filter(col(idCol) =!= col("__bmin") &&
+    val bigPairs = tagged
+      .filter(col("__bsz") > maxBucketSize && col(idCol) =!= col("__bmin") &&
         withinBudget(col("__sig"), col("__bminsig")))
       .select(col("__bmin").as("id_a"), col(idCol).as("id_b"))
     // the same pair collides in up to nBands bands → distinct
@@ -1071,100 +1073,57 @@ object Dedup {
     jaccardOfSets(ngrams(a, n), ngrams(b, n))
 
   /** Exact all-pairs character-n-gram Jaccard join — every pair of
-    * documents with J ≥ `t`, WITHOUT the O(n²) theta-join, and with
-    * output identical to the brute-force cross join on any input (no
-    * probabilistic recall — safe behind a hash-checking oracle).
+    * documents with J ≥ `t`, as `(id_a, id_b, jaccard)` with
+    * `id_a < id_b` and J rounded to 6 places, WITHOUT the O(n²)
+    * theta-join.
     *
-    * COUNT-BASED formulation (the "tokenize–join–aggregate" exact
-    * set-similarity join): explode each doc's distinct gram set once,
-    * self-join on the gram, and COUNT rows per (id_a, id_b) — that
-    * count IS |A∩B| exactly, so J = |∩| / (|A|+|B|−|∩|) needs no gram
-    * array anywhere past the explode. Pairs sharing zero grams are
-    * never enumerated and have J = 0 < t (the {""} sentinel makes
-    * empty-set pairs share a token, preserving J(∅,∅)=1).
+    * Self-protecting and EAGER ([[gramJaccard]]): the distinct gram
+    * sets are tokenized once and cached, a probe measures the exact
+    * count join's Σ_gram df² joined rows, and the count join
+    * ([[countedPairs]] — output identical to the brute-force cross
+    * join) runs while that fits 8192 rows per document. Past the
+    * budget — stop-grams on templated or heavy-tailed corpora make
+    * Σdf² quadratic — candidates come from banded MinHash over the
+    * gram sets with the same exact verify ([[bandedPairs]]; per-pair
+    * recall ≥ 1 − 1e-6 instead of exactly 1). The probe decision is
+    * logged; the result is materialized before the call returns, so a
+    * caller composing further pruning pays full materialization.
     *
-    * Scale shape:
-    *  - gram sets come from the native [[graft.functions.CharNGrams]]
-    *    expression (one static-call codegen site — the equivalent
-    *    HOF-chain expression tree generates multi-KB Janino methods
-    *    that overflow HotSpot's JIT limits);
-    *  - the token join carries (id, size, gram) rows only — ~20 bytes;
-    *    no array ever crosses an exchange, no plan-dependent broadcast
-    *    of array tables, nothing for AQE to flip between runs;
-    *  - a size filter (J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|)) drops
-    *    pairs INSIDE the join stage, before the aggregation;
-    *  - the pair count aggregates map-side (partial agg) in the same
-    *    stage as the join — the token-match fan-out collapses before
-    *    its exchange; what shuffles is one row per surviving pair.
-    * Cost is Σ_gram df² join rows. Stop-grams make that quadratic on
-    * heavy-tailed corpora — there, bound the fan-out upstream (drop
-    * boilerplate with [[minhashDedup]], or raise `n`: an 8-gram's df
-    * is a fraction of a 3-gram's). The earlier prefix-filter variant
-    * (AllPairs/PPJoin) bounded candidates by rarest-token prefixes but
-    * needed the gram ARRAYS at verify time — the array-carrying join
-    * was 10× the cost of the extra count rows at every tested scale.
-    *
-    * Reference analog: near-dup detection over the corpus
-    * (/root/reference/pipeline/processing/deduplication.py:19-31) —
-    * re-expressed as an exact relational algorithm instead of a cap. */
+    * Reference analog: near-dup detection over the corpus (reference
+    * `pipeline/processing/deduplication.py:19-31`) — re-expressed as
+    * an exact relational algorithm instead of a cap. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: Column,
-      t: Double, n: Int = 3): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    // The token join is a broadcast join when one side fits, so NO
-    // exchange precedes it — the explode→join→partial-agg pipeline
-    // (the Σdf² fan-out, the expensive part of the whole operator)
-    // inherits the SCAN's partitioning. A source with fewer splits
-    // than cores (one unsplittable file, a gzip'd dump) would run it
-    // near-sequentially; spread it first. Well-partitioned at-scale
-    // inputs skip the extra shuffle entirely.
-    val tok = tokens(spreadWide(df), idCol, textCol, n)
-    countedPairs(
-      tok.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-      tok.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-      t, antiReflexive = true)
-  }
+      t: Double, n: Int = 3): DataFrame =
+    gramJaccard(gramSets(spreadWide(df), idCol, textCol, n), None, t)
 
   /** Exact BIPARTITE n-gram Jaccard join: every (left, right) pair
-    * across two corpora with J ≥ `t` — the same count-based exact
-    * algorithm as [[jaccardPairs]] with the self-join specialization
-    * removed. This is the decontamination primitive: `left` = eval
-    * set, `right` = training corpus, a returned pair is a leak.
-    *
-    * UNGUARDED oracle companion, like [[jaccardPairs]]: cost is
-    * Σ_gram dfL·dfR joined rows, which goes quadratic when BOTH sides
-    * scale (the round-4 rehearsal measured 20.6× growth at 10× with a
-    * corpus-proportional eval side). Defaults never hit that shape —
-    * [[decontaminate]] and the leak-report queries route through
-    * [[jaccardJoinAuto]], whose probe measures Σ dfL·dfR first. */
+    * across two corpora with J ≥ `t` — [[jaccardPairs]]' core without
+    * the `id_a < id_b` orientation. This is the decontamination
+    * primitive: `left` = eval set, `right` = training corpus, a
+    * returned pair is a leak. Guarded and eager like [[jaccardPairs]];
+    * the probe measures Σ_gram dfL·dfR, which goes quadratic when BOTH
+    * sides scale (20.6× growth at 10× data with a corpus-proportional
+    * eval side), against 8192 rows per document of |L| + |R|. */
   def jaccardJoin(
       left: DataFrame, leftId: String, leftText: Column,
       right: DataFrame, rightId: String, rightText: Column,
-      t: Double, n: Int = 3): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    val ta = tokens(spreadWide(left), leftId, leftText, n)
-      .select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram"))
-    val tb = tokens(spreadWide(right), rightId, rightText, n)
-      .select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram"))
-    countedPairs(ta, tb, t, antiReflexive = false)
-  }
+      t: Double, n: Int = 3): DataFrame =
+    gramJaccard(gramSets(spreadWide(left), leftId, leftText, n),
+      Some(gramSets(spreadWide(right), rightId, rightText, n)), t)
 
   /** Decontamination: drop every `corpus` row whose text is ≥ `t`
     * n-gram-Jaccard-similar to ANY `reference` row — e.g. scrub an
     * eval/benchmark set out of a training corpus (or vice versa)
-    * before fine-tuning. Removal ids come from [[jaccardJoinAuto]] (the
-    * Σ-df guarded bipartite join: exact count join while its probe
-    * fits, banded-MinHash candidates + exact verify past the budget),
-    * removal is a left_anti join. The documented contract used to be
-    * "benchmark-sized reference side only"; the guard lifts it — an
-    * oversized reference routes to the near-linear candidate path
-    * instead of detonating the Σ dfL·dfR token join. */
+    * before fine-tuning. Removal ids come from the guarded
+    * [[jaccardJoin]], so an oversized reference side routes to the
+    * near-linear candidate path instead of detonating the Σ dfL·dfR
+    * token join; removal is a left_anti join. */
   def decontaminate(
       corpus: DataFrame, idCol: String, textCol: Column,
       reference: DataFrame, refIdCol: String, refTextCol: Column,
-      t: Double = 0.8, n: Int = 8,
-      maxJoinRowsPerDoc: Long = 8192L): DataFrame = {
-    val leaked = jaccardJoinAuto(corpus, idCol, textCol,
-        reference, refIdCol, refTextCol, t, n, maxJoinRowsPerDoc)
+      t: Double = 0.8, n: Int = 8): DataFrame = {
+    val leaked = jaccardJoin(corpus, idCol, textCol,
+        reference, refIdCol, refTextCol, t, n)
       .select(col("id_a").as(idCol)).distinct()
     corpus.join(leaked, Seq(idCol), "left_anti")
   }
@@ -1237,10 +1196,10 @@ object Dedup {
       .select(col("__ta"), col("__tb"))
   }
 
-  /** `(__id, __sz, __gram)` exploded token stream of a doc frame. */
-  private def tokens(df: DataFrame, idCol: String, textCol: Column, n: Int): DataFrame =
-    gramSets(df, idCol, textCol, n)
-      .select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
+  /** `(__id, __sz, __gram)` exploded token stream of a `(__id, __g)`
+    * gram-set frame. */
+  private def gramTokens(sets: DataFrame): DataFrame =
+    sets.select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
 
   /** Repartition an under-split source up to the session's default
     * parallelism. Expensive narrow maps (LSH featurization, MinHash/
@@ -1264,10 +1223,23 @@ object Dedup {
     else df
   }
 
-  /** Count-based pair enumeration shared by [[jaccardPairs]] (self
-    * join, `antiReflexive` orients pairs id_a < id_b) and
-    * [[jaccardJoin]] (bipartite, every cross pair once). Inputs are
-    * `(id_a|id_b, __sza|__szb, __gram)` token streams. */
+  /** The exact route of [[gramPairs]]: COUNT-BASED pair enumeration
+    * (the "tokenize–join–aggregate" exact set-similarity join). Each
+    * doc's distinct gram set is exploded once, the two token streams
+    * `(id_a|id_b, __sza|__szb, __gram)` equi-join on the gram, and the
+    * rows per (id_a, id_b) are COUNTED — that count IS |A∩B| exactly,
+    * so J = |∩| / (|A|+|B|−|∩|) needs no gram array past the explode.
+    * Pairs sharing zero grams are never enumerated and have J = 0 < t
+    * (the {""} sentinel makes empty-set pairs share a token, preserving
+    * J(∅,∅)=1). `antiReflexive` (the self join) orients pairs
+    * id_a < id_b; the bipartite join keeps every cross pair once.
+    *
+    * Scale shape: the token join carries (id, size, gram) rows only —
+    * ~20 bytes, no array crosses an exchange; a size filter
+    * (J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|)) drops pairs inside the
+    * join stage; the pair count aggregates map-side in the same stage,
+    * so what shuffles is one row per surviving pair. Cost is Σ_gram
+    * dfL·dfR joined rows — what [[probeRoute]] measures. */
   private def countedPairs(
       a: DataFrame, b: DataFrame, t: Double, antiReflexive: Boolean): DataFrame = {
     // ε guards float noise in t·size (0.3·10 = 3.0000000000000004),
@@ -1308,94 +1280,19 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Exact all-pairs n-gram Jaccard join via PPJoin-style PREFIX
-    * filtering — same output contract as [[jaccardPairs]] (provably
-    * identical to the brute-force cross join), different cost shape.
-    *
-    * [[jaccardPairs]]'s count-based join costs Σ_gram df² rows. On a
-    * corpus whose gram vocabulary saturates (templated/boilerplate
-    * text: few distinct grams, each in hundreds of documents) that sum
-    * goes quadratic even though almost no pair passes the threshold.
-    * Prefix filtering bounds candidates instead by RARE grams: order
-    * grams globally by (document frequency, gram); a pair with
-    * J ≥ t must share a gram inside both sides' first
-    * `|A| − ⌈t·|A|⌉ + 1` grams of that order (Chaudhuri/Xiao AllPairs–
-    * PPJoin bound: the suffix has < t·|A| ≤ |A∩B| elements, so the
-    * intersection cannot avoid the prefix; symmetrically for B). Only
-    * prefix tokens are joined — Σ over prefix grams of (prefix-df)²,
-    * which selects each doc's rarest grams — then candidates are
-    * verified with the exact codegen'd set intersection
-    * ([[jaccardOfSets]]).
-    *
-    * Scale shape: one df aggregation (gram vocabulary), one window
-    * rank per doc (hash shuffle on doc id), one equi-join on prefix
-    * grams, one pair-distinct, two hash joins to re-attach gram sets
-    * (arrays shuffle only for candidate rows). Prefer this over
-    * [[jaccardPairs]] when the corpus is template-heavy; prefer the
-    * count-based join when gram df is low (its joined rows carry no
-    * arrays and skip the window + verify joins).
-    */
-  def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: Column,
-      t: Double, n: Int = 3): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    val sets = gramSets(spreadWide(df), idCol, textCol, n)
-    val tok = sets
-      .select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
-    val dfTab = tok.groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
-    // The output filter is on ROUNDED J ≥ t, which admits true J down
-    // to t − 5e-7 — so all pruning runs at the relaxed tC < t (longer
-    // prefix, looser size bound: strictly more candidates, never
-    // fewer), and the ε inside ceil guards float noise the same way.
-    val tC = math.max(t - 1e-6, 1e-12)
-    val prefLen = (col("__sz") - ceil(col("__sz") * tC - lit(1e-9)) + 1).cast("int")
-    val rankW = Window.partitionBy(col("__id")).orderBy(col("__df"), col("__gram"))
-    val pref = tok.join(dfTab, Seq("__gram"))
-      .withColumn("__pos", row_number().over(rankW))
-      .filter(col("__pos") <= prefLen)
-    val a = pref.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram"))
-    val b = pref.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram"))
-    val sizeOk = least(col("__sza"), col("__szb")).cast("double") >=
-      greatest(col("__sza"), col("__szb")) * tC - lit(1e-9)
-    val cand = a.join(b, Seq("__gram"))
-      .filter(col("id_a") < col("id_b") && sizeOk)
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val sa = sets.select(col("__id").as("id_a"), col("__g").as("__ga"))
-    val sb = sets.select(col("__id").as("id_b"), col("__g").as("__gb"))
-    // same numerator/denominator values as jaccardPairs' count-based
-    // formula, so the rounded output is bit-identical.
-    cand.join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-      .withColumn("jaccard", round(jaccardOfSets(col("__ga"), col("__gb")), 6))
-      .filter(col("jaccard") >= t)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
   /** `(__id, __g)` with `__g` = lexically-sorted distinct n-gram set
     * (sentinel {""} for sub-n docs), via the native
-    * [[graft.functions.CharNGrams]] expression. */
+    * [[graft.functions.CharNGrams]] expression (one static-call codegen
+    * site — the equivalent HOF-chain expression tree generates multi-KB
+    * Janino methods that overflow HotSpot's JIT limits). */
   private[graft] def gramSets(df: DataFrame, idCol: String, textCol: Column, n: Int): DataFrame = {
     val grams = text.expr2col(
       graft.functions.CharNGrams(text.col2expr(textCol), n, sentinel = true))
     df.select(col(idCol).as("__id"), grams.as("__g"))
   }
 
-  /** Σ_gram df² — the exact count-based pair join's joined-row count —
-    * from one narrow tokenize pass plus a vocabulary-sized aggregation.
-    * This is [[jaccardPairsAuto]]'s routing probe: the quantity that
-    * goes quadratic on gram-saturated corpora (ADR-003's 48-hour
-    * lesson) is measurable for the cost of a map-side count BEFORE the
-    * join is committed to. */
-  private[graft] def gramJoinRows(df: DataFrame, idCol: String, textCol: Column,
-      n: Int): Long = {
-    val tok = tokens(spreadWide(df), idCol, textCol, n)
-    val row = tok.groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
-      .agg(coalesce(sum(col("__df") * col("__df")), lit(0L)).as("__rows"))
-      .head()
-    row.getLong(0)
-  }
-
-  /** Band width r for [[jaccardPairsBanded]]: the widest divisor of
-    * `numPerm` whose per-pair MISS probability at J = t,
+  /** Band width r for the banded route of [[gramPairs]]: the widest
+    * divisor of `numPerm` whose per-pair MISS probability at J = t,
     * (1 − t^r)^(numPerm/r), stays ≤ 1e-6. Wider bands (AND-
     * amplification) suppress sub-threshold candidates exponentially;
     * the bound keeps threshold-passing pairs from being suppressed
@@ -1405,39 +1302,8 @@ object Dedup {
       (numPerm / r) * math.log1p(-math.pow(t, r)) <= math.log(1e-6)
     }.maxOption.getOrElse(1)
 
-  /** Exact-verified all-pairs n-gram Jaccard join with banded-MinHash
-    * CANDIDATE generation — the Σdf²-safe sibling of [[jaccardPairs]].
-    *
-    * Same output columns and the same rounded J values (verification
-    * is the exact codegen'd [[jaccardOfSets]] over the gram sets, not
-    * the signature-agreement estimate), but candidates come from LSH
-    * band buckets instead of the gram-token join, so cost is
-    * Σ_bucket |bucket|² over AND-amplified buckets — near-linear on
-    * corpora whose gram vocabulary saturates, where Σ_gram df² (the
-    * count join's row count) goes quadratic. The one contract
-    * difference: per-pair recall at J ≥ t is 1 − (1 − t^r)^b with r
-    * chosen by [[recallBandRows]] so the miss probability is ≤ 1e-6
-    * (deterministic per corpus: signatures are seeded) — vs the count
-    * join's exactly 1.
-    *
-    * Scale shape: one narrow signature map (numPerm hashes per gram),
-    * one ids-only bucket self-join (16-byte rows, ReusedExchange), one
-    * packed-long pair distinct, two hash joins re-attaching gram sets
-    * to CANDIDATE pairs only. The pair set is materialized eagerly
-    * (localCheckpoint) while the gram-set cache is hot. */
-  def jaccardPairsBanded(df: DataFrame, idCol: String, textCol: Column,
-      t: Double, n: Int = 3, numPerm: Int = 128): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    val sets = gramSets(spreadWide(df), idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      sets.count() // eager: the plan fans out (sig side + both verify sides)
-      jaccardPairsBandedFromSets(sets, t, numPerm)
-    } finally sets.unpersist(blocking = false)
-  }
-
-  /** `(__id, __bucket)` band rows of `(__id, __g)` gram sets for the
-    * banded Jaccard joins: [[minhashBandKeys]] of each set's signature
+  /** `(__id, __bucket)` band rows of `(__id, __g)` gram sets for
+    * [[bandedPairs]]: [[minhashBandKeys]] of each set's signature
     * with the band index hashed into the key, so the bucket join keys
     * on one long; a cross-band hash collision only adds a spurious
     * candidate that exact verification discards. */
@@ -1447,250 +1313,133 @@ object Dedup {
       minhashBandKeys(minhashSig(col("__g"), numPerm), bands, r).as("__b"))
     .select(col("__id"), xxhash64(col("__b.bucket"), col("__b.band")).as("__bucket"))
 
-  /** [[jaccardPairsBanded]]'s body over an ALREADY persisted +
-    * materialized `(__id, __g)` gram-set frame — shared with
-    * [[jaccardPairsAuto]], whose probe builds the same cache; the
-    * result is `localCheckpoint`ed before the caller unpersists. */
-  private def jaccardPairsBandedFromSets(
-      sets: DataFrame, t: Double, numPerm: Int): DataFrame = {
-    {
-      val r = recallBandRows(t, numPerm)
-      val bands = numPerm / r
-      val banded = bandedGramSets(sets, numPerm, bands, r)
-      val cand = banded.as("l").join(banded.as("r"), Seq("__bucket"))
-        .filter(col("l.__id") < col("r.__id"))
-        .select((shiftleft(col("l.__id"), 32) + col("r.__id")).as("__pair"))
-        .distinct()
-      val sa = sets.select(col("__id").cast("long").as("id_a"), col("__g").as("__ga"))
-      val sb = sets.select(col("__id").cast("long").as("id_b"), col("__g").as("__gb"))
-      cand
-        .select(shiftright(col("__pair"), 32).as("id_a"),
-          col("__pair").bitwiseAND(lit(0xFFFFFFFFL)).as("id_b"))
-        .join(sa, Seq("id_a")).join(sb, Seq("id_b"))
-        .withColumn("jaccard", round(jaccardOfSets(col("__ga"), col("__gb")), 6))
-        .filter(col("jaccard") >= t)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-        .localCheckpoint(true)
-    }
-  }
-
-  /** Routing decision behind [[jaccardPairsAuto]], exposed so the
-    * guardrail is spec-testable: true ⟹ the exact count-based join's
-    * Σdf² row count fits the per-document budget. */
-  private[graft] def routeExact(df: DataFrame, idCol: String, textCol: Column,
-      n: Int, maxJoinRowsPerDoc: Long): Boolean = {
-    val joinRows = gramJoinRows(df, idCol, textCol, n)
-    val nDocs = math.max(df.count(), 1L)
-    logRoute(joinRows, nDocs, maxJoinRowsPerDoc)
-  }
-
-  private def logRoute(joinRows: Long, nDocs: Long, maxJoinRowsPerDoc: Long): Boolean = {
-    val exact = joinRows <= maxJoinRowsPerDoc * nDocs
-    val msg = s"jaccardPairsAuto: ngram join probe Σdf²=$joinRows over $nDocs docs " +
-      s"(budget ${maxJoinRowsPerDoc}/doc) → ${if (exact) "exact count join"
-        else "banded-MinHash candidates + exact verify"}"
-    if (exact) log.info(msg) else log.warn(msg)
-    exact
-  }
-
-  /** Self-protecting exact n-gram Jaccard pair join: probes the gram
-    * document-frequency distribution (one cheap aggregation) and runs
-    * the count-based [[jaccardPairs]] only while its Σ_gram df² joined
-    * rows fit `maxJoinRowsPerDoc · nDocs`; past the budget — the gram-
-    * saturated regime where the count join goes quadratic — it routes
-    * to [[jaccardPairsBanded]] (LSH candidates, exact verify) and logs
-    * the decision at WARN.
+  /** The banded route of [[gramPairs]]: banded-MinHash CANDIDATES,
+    * verified exactly. Same output columns and the same rounded J as
+    * the count join (verification is the codegen'd [[jaccardOfSets]]
+    * over the gram sets, not the signature-agreement estimate), but
+    * candidates come from band buckets, so cost is Σ_bucket |bucket|²
+    * over AND-amplified buckets — near-linear where Σ_gram dfL·dfR goes
+    * quadratic. Per-pair recall at J ≥ t is 1 − (1 − t^r)^b with r from
+    * [[recallBandRows]] (miss ≤ 1e-6; deterministic per corpus, since
+    * signatures are seeded).
     *
-    * The gram-set frame is tokenized ONCE and persisted; the probe,
-    * the exact join's both token sides, and the banded route all read
-    * the cache — so the guarded join costs one tokenize pass total,
-    * not one for the probe plus one per consumer (the cache also
-    * spares the exact join a second scan+normalize of the source).
-    *
-    * EAGER on both routes: the probe is an action, and the result is
-    * materialized (`localCheckpoint`) while the cache is hot, then the
-    * cache is dropped — callers composing further pruning (limit,
-    * narrow filters) pay full materialization at call time. Use
-    * [[jaccardPairs]] / [[jaccardPairsBanded]] directly when a lazy
-    * composable plan matters more than the guardrail. */
-  def jaccardPairsAuto(df: DataFrame, idCol: String, textCol: Column,
-      t: Double, n: Int = 3, maxJoinRowsPerDoc: Long = 8192L): DataFrame =
-    if (recallBandRows(t, 128) < 2) {
-      // r = 1 bands have no AND-amplification: every pair sharing a
-      // single minhash value becomes a candidate, so the banded path
-      // costs ≥ the count join WITH the signature overhead on top
-      // (measured 7× slower at t = 0.3). Below the amplification
-      // regime the exact count join is also the cheaper join.
-      log.warn(s"jaccardPairsAuto: threshold $t too low for AND-amplified banding " +
-        "(r < 2 at numPerm=128) — staying on the exact count join; on a " +
-        "gram-saturated corpus raise t or pre-dedup with minhashDedup")
-      jaccardPairs(df, idCol, textCol, t, n)
-    } else {
-      val sets = gramSets(spreadWide(df), idCol, textCol, n)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nDocs = math.max(sets.count(), 1L) // materializes the cache
-        val tok = sets.select(col("__id"),
-          size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
-        val joinRows = tok.groupBy(col("__gram")).agg(count(lit(1)).as("__df"))
-          .agg(coalesce(sum(col("__df") * col("__df")), lit(0L)).as("__rows"))
-          .head().getLong(0)
-        if (logRoute(joinRows, nDocs, maxJoinRowsPerDoc))
-          countedPairs(
-            tok.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-            tok.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-            t, antiReflexive = true)
-            .localCheckpoint(true)
-        else jaccardPairsBandedFromSets(sets, t, numPerm = 128)
-      } finally sets.unpersist(blocking = false)
-    }
-
-  /** Σ_gram dfL·dfR — the exact bipartite count join's joined-row
-    * count — [[jaccardJoinAuto]]'s routing probe. The self-join probe
-    * ([[gramJoinRows]]) guards the within-corpus shape; this is its
-    * two-sided analog, the quantity that detonated the reference's
-    * decontamination when both sides scaled
-    * (/root/reference/docs/adr/003-pandas-vs-pyspark-strategy.md:
-    * 165-189's 48-hour nested-loop lesson, measured here as 20.6×
-    * growth at 10× in the round-4 rehearsal). */
-  private[graft] def bipartiteJoinRows(
-      left: DataFrame, leftId: String, leftText: Column,
-      right: DataFrame, rightId: String, rightText: Column, n: Int): Long =
-    bipartiteJoinRowsFromTokens(
-      tokens(spreadWide(left), leftId, leftText, n),
-      tokens(spreadWide(right), rightId, rightText, n))
-
-  /** Σ_gram dfL·dfR over two `__gram` token streams — the ONE
-    * implementation of the bipartite routing formula, shared by the
-    * spec-facing [[routeExactBipartite]] probe and [[jaccardJoinAuto]]
-    * (which feeds it the token streams read from its gram-set caches,
-    * so the guardrail the spec tests and the guardrail production
-    * routes on cannot drift apart). */
-  private def bipartiteJoinRowsFromTokens(ta: DataFrame, tb: DataFrame): Long =
-    ta.groupBy(col("__gram")).agg(count(lit(1)).as("__dfl"))
-      .join(tb.groupBy(col("__gram")).agg(count(lit(1)).as("__dfr")), Seq("__gram"))
-      .agg(coalesce(sum(col("__dfl") * col("__dfr")), lit(0L)).as("__rows"))
-      .head().getLong(0)
-
-  /** Routing decision behind [[jaccardJoinAuto]], exposed so the
-    * guardrail is spec-testable: true ⟹ the exact bipartite count
-    * join's Σ dfL·dfR row count fits the per-document budget. */
-  private[graft] def routeExactBipartite(
-      left: DataFrame, leftId: String, leftText: Column,
-      right: DataFrame, rightId: String, rightText: Column,
-      n: Int, maxJoinRowsPerDoc: Long): Boolean = {
-    val joinRows = bipartiteJoinRows(left, leftId, leftText, right, rightId, rightText, n)
-    val nDocs = math.max(left.count() + right.count(), 1L)
-    logRouteBipartite(joinRows, nDocs, maxJoinRowsPerDoc)
-  }
-
-  private def logRouteBipartite(joinRows: Long, nDocs: Long,
-      maxJoinRowsPerDoc: Long): Boolean = {
-    val exact = joinRows <= maxJoinRowsPerDoc * nDocs
-    val msg = s"jaccardJoinAuto: bipartite ngram probe ΣdfL·dfR=$joinRows over " +
-      s"$nDocs docs (budget ${maxJoinRowsPerDoc}/doc) → ${if (exact) "exact count join"
-        else "banded-MinHash candidates + exact verify"}"
-    if (exact) log.info(msg) else log.warn(msg)
-    exact
-  }
-
-  /** Self-protecting BIPARTITE n-gram Jaccard join — [[jaccardJoin]]'s
-    * guarded sibling, the decontamination/leak-report default. Probes
-    * Σ_gram dfL·dfR (the exact count join's joined-row count, ONE
-    * vocabulary-sized aggregation per side) and runs the count-based
-    * [[jaccardJoin]] only while that fits `maxJoinRowsPerDoc · (|L| +
-    * |R|)`; past the budget — the oversized-reference regime where the
-    * two-sided join goes quadratic — it routes to banded-MinHash
-    * candidate pairs verified by the exact codegen'd [[jaccardOfSets]],
-    * and logs the decision at WARN. Same output columns and the same
-    * rounded J values on either route; the banded route's one contract
-    * difference is per-pair recall 1 − (1 − t^r)^b ≥ 1 − 1e-6
-    * ([[recallBandRows]]) instead of exactly 1.
-    *
-    * Both sides' gram-set frames are tokenized ONCE and persisted; the
-    * probe, the exact join's token streams, and the banded route's
-    * signatures + verify all read the caches. Like
-    * [[jaccardPairsAuto]], the result is EAGER on both routes
-    * (materialized via `localCheckpoint` while the caches are hot). */
-  def jaccardJoinAuto(
-      left: DataFrame, leftId: String, leftText: Column,
-      right: DataFrame, rightId: String, rightText: Column,
-      t: Double, n: Int = 3, maxJoinRowsPerDoc: Long = 8192L): DataFrame = {
-    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
-    if (recallBandRows(t, 128) < 2) {
-      // r = 1 bands have no AND-amplification — same reasoning as
-      // jaccardPairsAuto: below the amplification regime the exact
-      // count join is also the cheaper join.
-      log.warn(s"jaccardJoinAuto: threshold $t too low for AND-amplified banding " +
-        "(r < 2 at numPerm=128) — staying on the exact count join")
-      jaccardJoin(left, leftId, leftText, right, rightId, rightText, t, n)
-    } else {
-      val lv = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val setsL = gramSets(spreadWide(left), leftId, leftText, n).persist(lv)
-      val setsR = gramSets(spreadWide(right), rightId, rightText, n).persist(lv)
-      try {
-        val nDocs = math.max(setsL.count() + setsR.count(), 1L) // materializes both
-        def toks(sets: DataFrame): DataFrame = sets.select(col("__id"),
-          size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
-        val ta = toks(setsL)
-        val tb = toks(setsR)
-        val joinRows = bipartiteJoinRowsFromTokens(ta, tb)
-        if (logRouteBipartite(joinRows, nDocs, maxJoinRowsPerDoc))
-          countedPairs(
-            ta.select(col("__id").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-            tb.select(col("__id").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-            t, antiReflexive = false)
-            .localCheckpoint(true)
-        else jaccardJoinBandedFromSets(setsL, setsR, t, numPerm = 128)
-      } finally {
-        setsL.unpersist(blocking = false)
-        setsR.unpersist(blocking = false)
-      }
-    }
-  }
-
-  /** Banded-MinHash candidates + exact verify over two ALREADY
-    * persisted `(__id, __g)` gram-set frames — [[jaccardJoinAuto]]'s
-    * oversized-reference route, the bipartite analog of
-    * [[jaccardPairsBandedFromSets]]. Candidates are L×R band-bucket
-    * collisions (ids-only 16-byte rows), never an id-ordered self
-    * pair, so every cross pair is considered exactly once. */
-  private def jaccardJoinBandedFromSets(
-      setsL: DataFrame, setsR: DataFrame, t: Double, numPerm: Int): DataFrame = {
-    val r = recallBandRows(t, numPerm)
-    val bands = numPerm / r
-    def bandedSide(sets: DataFrame): DataFrame = bandedGramSets(sets, numPerm, bands, r)
-    // distinct on BOTH ids, not a packed long: unlike the self-join
-    // hot aggregation (countedPairs, where the pack is the measured
-    // hash-agg win and the 32-bit assumption is documented), the two
-    // sides here are UNRELATED id spaces — a reference set with
-    // ≥ 2^32 ids would silently overflow into the corpus-id bits and
-    // drop the wrong rows. A 16-byte distinct key on a candidate list
-    // costs nothing measurable.
-    val cand = bandedSide(setsL).as("l").join(bandedSide(setsR).as("r"), Seq("__bucket"))
-      .select(col("l.__id").cast("long").as("id_a"),
-        col("r.__id").cast("long").as("id_b"))
+    * Scale shape: one narrow signature map, one ids-only bucket join
+    * (the self join joins the literally-same frame, so the exchange is
+    * reused), one distinct on both ids — not a packed long: the
+    * bipartite sides are unrelated id spaces, and a 16-byte distinct
+    * key on a candidate list costs nothing measurable — and two hash
+    * joins re-attaching gram sets to CANDIDATE pairs only. */
+  private def bandedPairs(setsL: DataFrame, setsR: Option[DataFrame], t: Double): DataFrame = {
+    val r = recallBandRows(t, BandPerms)
+    val bands = BandPerms / r
+    val bl = bandedGramSets(setsL, BandPerms, bands, r)
+    val br = setsR.fold(bl)(bandedGramSets(_, BandPerms, bands, r))
+    val joined = bl.as("l").join(br.as("r"), Seq("__bucket"))
+    val cand = (if (setsR.isEmpty) joined.filter(col("l.__id") < col("r.__id")) else joined)
+      .select(col("l.__id").cast("long").as("id_a"), col("r.__id").cast("long").as("id_b"))
       .distinct()
     val sa = setsL.select(col("__id").cast("long").as("id_a"), col("__g").as("__ga"))
-    val sb = setsR.select(col("__id").cast("long").as("id_b"), col("__g").as("__gb"))
+    val sb = setsR.getOrElse(setsL)
+      .select(col("__id").cast("long").as("id_b"), col("__g").as("__gb"))
     cand
       .join(sa, Seq("id_a")).join(sb, Seq("id_b"))
       .withColumn("jaccard", round(jaccardOfSets(col("__ga"), col("__gb")), 6))
       .filter(col("jaccard") >= t)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-      .localCheckpoint(true)
+  }
+
+  /** The candidate generator of the n-gram Jaccard core. */
+  private[graft] sealed trait GramRoute
+  private[graft] object GramRoute {
+    /** [[countedPairs]]: exact, costs Σ_gram dfL·dfR joined rows. */
+    case object Exact extends GramRoute
+    /** [[bandedPairs]]: banded-MinHash candidates + exact verify. */
+    case object Banded extends GramRoute
+  }
+
+  /** Joined-row budget of the exact route, per document of the input
+    * (|L| for the self join, |L| + |R| for the bipartite one). */
+  private val GramJoinRowsPerDoc = 8192L
+
+  /** Signature length of the banded route. */
+  private val BandPerms = 128
+
+  /** The lazy pair plan of one route over `(__id, __g)` gram-set
+    * frames ([[gramSets]]): `setsR = None` is the self join
+    * (`id_a < id_b`), `Some` the bipartite one. [[gramJaccard]] picks
+    * the route; specs force each one through here. */
+  private[graft] def gramPairs(setsL: DataFrame, setsR: Option[DataFrame], t: Double,
+      route: GramRoute): DataFrame = route match {
+    case GramRoute.Exact =>
+      // long ids on both routes, so the output schema never depends on
+      // the probe's decision
+      val ta = gramTokens(setsL)
+      val tb = setsR.fold(ta)(gramTokens)
+      countedPairs(
+        ta.select(col("__id").cast("long").as("id_a"), col("__sz").as("__sza"), col("__gram")),
+        tb.select(col("__id").cast("long").as("id_b"), col("__sz").as("__szb"), col("__gram")),
+        t, antiReflexive = setsR.isEmpty)
+    case GramRoute.Banded => bandedPairs(setsL, setsR, t)
+  }
+
+  /** The routing probe: Σ_gram dfL·dfR — the exact route's joined-row
+    * count; Σdf² for the self join, whose two sides are one stream —
+    * from one vocabulary-sized aggregation per side, against
+    * [[GramJoinRowsPerDoc]] · `nDocs`. That quantity is what detonated
+    * the reference's decontamination (ADR-003's 48-hour nested-loop
+    * lesson), measured for the cost of a map-side count BEFORE the join
+    * is committed to. Below r = 2 ([[recallBandRows]] at
+    * [[BandPerms]]) banding has no AND-amplification — every pair
+    * sharing one minhash value is a candidate, measured 7× slower than
+    * the count join at t = 0.3 — so the probe is skipped and the route
+    * stays exact. */
+  private[graft] def probeRoute(setsL: DataFrame, setsR: Option[DataFrame], t: Double,
+      nDocs: Long): GramRoute =
+    if (recallBandRows(t, BandPerms) < 2) {
+      log.warn(s"n-gram Jaccard join: threshold $t too low for AND-amplified banding " +
+        s"(r < 2 at numPerm=$BandPerms) — staying on the exact count join; on a " +
+        "gram-saturated corpus raise t or pre-dedup with minhashDedup")
+      GramRoute.Exact
+    } else {
+      def dfs(sets: DataFrame, c: String): DataFrame =
+        gramTokens(sets).groupBy(col("__gram")).agg(count(lit(1)).as(c))
+      val joinRows = dfs(setsL, "__dfl").join(dfs(setsR.getOrElse(setsL), "__dfr"), Seq("__gram"))
+        .agg(coalesce(sum(col("__dfl") * col("__dfr")), lit(0L)))
+        .head().getLong(0)
+      val exact = joinRows <= GramJoinRowsPerDoc * nDocs
+      val msg = (if (setsR.isEmpty) s"n-gram Jaccard self join probe Σdf²=$joinRows"
+        else s"n-gram Jaccard bipartite join probe ΣdfL·dfR=$joinRows") +
+        s" over $nDocs docs (budget $GramJoinRowsPerDoc/doc) → " +
+        (if (exact) "exact count join" else "banded-MinHash candidates + exact verify")
+      if (exact) log.info(msg) else log.warn(msg)
+      if (exact) GramRoute.Exact else GramRoute.Banded
+    }
+
+  /** The n-gram Jaccard core behind [[jaccardPairs]] and
+    * [[jaccardJoin]]: the gram sets are persisted and materialized
+    * once — the probe, both token sides of the exact route and the
+    * banded route's signatures + verify all read the cache (an eager
+    * count, because the route's plan fans out into map stages that AQE
+    * submits concurrently against a lazy cache) — then
+    * [[probeRoute]] picks the route, and its pairs are materialized
+    * (`localCheckpoint`) while the cache is hot. */
+  private def gramJaccard(setsL: DataFrame, setsR: Option[DataFrame], t: Double): DataFrame = {
+    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
+    val cached = (setsL +: setsR.toSeq)
+      .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    try {
+      val nDocs = math.max(cached.map(_.count()).sum, 1L)
+      gramPairs(setsL, setsR, t, probeRoute(setsL, setsR, t, nDocs)).localCheckpoint(true)
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
   /** N-gram-Jaccard near-duplicate removal: drops every document whose
     * gram set is ≥ `t` Jaccard-similar to an earlier (lower-id) one,
-    * with candidate pairs from [[jaccardPairsAuto]] — the count-based
-    * exact join while its Σdf² cost probe fits, banded-MinHash
-    * candidates + exact verify on gram-saturated corpora — and removal
+    * with candidate pairs from the guarded [[jaccardPairs]] and removal
     * via left_anti; never a driver collect. */
   def ngramDedup(df: DataFrame, idCol: String, textCol: Column,
-      t: Double = 0.8, n: Int = 3,
-      maxJoinRowsPerDoc: Long = 8192L): DataFrame = {
-    val dupIds = jaccardPairsAuto(df, idCol, textCol, t, n, maxJoinRowsPerDoc)
+      t: Double = 0.8, n: Int = 3): DataFrame = {
+    val dupIds = jaccardPairs(df, idCol, textCol, t, n)
       .select(col("id_b").as(idCol)).distinct()
     df.join(dupIds, Seq(idCol), "left_anti")
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -169,47 +170,61 @@ class DedupSpec extends AnyFunSuite {
     assert(capped === Set(0L, 1L), "each clique collapses to its min id")
   }
 
-  test("jaccardPairs (prefix filtering) equals the brute-force cross join on real documents") {
+  private def pairSet(df: DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+
+  /** The specs' brute-force reference for the n-gram Jaccard core: the
+    * full cross join (self: `id_a < id_b`) over the HOF gram sets,
+    * exact rounded J ≥ t. */
+  private def bruteJaccard(left: DataFrame, right: Option[DataFrame], idCol: String,
+      textCol: String, t: Double, n: Int): Set[(Long, Long, Double)] = {
+    val a = left.select(col(idCol).as("id_a"), Dedup.ngrams(col(textCol), n).as("ga"))
+    val b = right.getOrElse(left)
+      .select(col(idCol).as("id_b"), Dedup.ngrams(col(textCol), n).as("gb"))
+    pairSet(a.join(b, if (right.isEmpty) col("id_a") < col("id_b") else lit(true))
+      .withColumn("jaccard", round(Dedup.jaccardOfSets(col("ga"), col("gb")), 6))
+      .filter(col("jaccard") >= t)
+      .select("id_a", "id_b", "jaccard"))
+  }
+
+  /** Each forced route of the core, as `route -> pairs`. */
+  private def forcedRoutes(left: DataFrame, right: Option[DataFrame], idCol: String,
+      textCol: String, t: Double, n: Int): Map[Dedup.GramRoute, Set[(Long, Long, Double)]] = {
+    val setsL = Dedup.gramSets(left, idCol, col(textCol), n)
+    val setsR = right.map(Dedup.gramSets(_, idCol, col(textCol), n))
+    Seq(Dedup.GramRoute.Exact, Dedup.GramRoute.Banded)
+      .map(r => r -> pairSet(Dedup.gramPairs(setsL, setsR, t, r))).toMap
+  }
+
+  /** The core's probe decision for `left` (and `right`). */
+  private def probed(left: DataFrame, right: Option[DataFrame], idCol: String,
+      textCol: String, t: Double, n: Int): Dedup.GramRoute = {
+    val nDocs = left.count() + right.map(_.count()).getOrElse(0L)
+    Dedup.probeRoute(Dedup.gramSets(left, idCol, col(textCol), n),
+      right.map(Dedup.gramSets(_, idCol, col(textCol), n)), t, nDocs)
+  }
+
+  test("jaccardPairs routes equal the brute-force cross join on real documents") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val brute = {
-      val g = docs.select(col("doc_id"), Dedup.ngrams(col("text"), 3).as("g"))
-      val a = g.select(col("doc_id").as("id_a"), col("g").as("ga"))
-      val b = g.select(col("doc_id").as("id_b"), col("g").as("gb"))
-      a.join(b, col("id_a") < col("id_b"))
-        .withColumn("jaccard", round(Dedup.jaccardOfSets(col("ga"), col("gb")), 6))
-        .filter(col("jaccard") >= 0.3)
-        .select("id_a", "id_b", "jaccard").collect().map(key).toSet
-    }
-    val counted = Dedup.jaccardPairs(docs, "doc_id", col("text"), t = 0.3)
-      .collect().map(key).toSet
-    assert(counted === brute, s"count-based=${counted.size} brute=${brute.size}")
-    val prefix = Dedup.jaccardPairsPrefix(docs, "doc_id", col("text"), t = 0.3)
-      .collect().map(key).toSet
-    assert(prefix === brute, s"prefix=${prefix.size} brute=${brute.size}")
+    val brute = bruteJaccard(docs, None, "doc_id", "text", 0.3, 3)
     assert(brute.nonEmpty, "fixture must actually contain qualifying pairs")
+    val guarded = pairSet(Dedup.jaccardPairs(docs, "doc_id", col("text"), t = 0.3))
+    assert(guarded === brute, s"jaccardPairs=${guarded.size} brute=${brute.size}")
+    for ((route, pairs) <- forcedRoutes(docs, None, "doc_id", "text", 0.3, 3))
+      assert(pairs === brute, s"$route=${pairs.size} brute=${brute.size}")
   }
 
   test("jaccardJoin (bipartite) equals brute force across two corpora; decontaminate scrubs leaks") {
-    import spark.implicits._
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val eval = docs.filter(col("doc_id") % 5 === 0)
     val train = docs.filter(col("doc_id") % 5 =!= 0)
-    val brute = {
-      val ge = eval.select(col("doc_id").as("id_a"), Dedup.ngrams(col("text"), 3).as("ga"))
-      val gt = train.select(col("doc_id").as("id_b"), Dedup.ngrams(col("text"), 3).as("gb"))
-      ge.join(gt, lit(true))
-        .withColumn("jaccard", round(Dedup.jaccardOfSets(col("ga"), col("gb")), 6))
-        .filter(col("jaccard") >= 0.3)
-        .select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    }
-    val fast = Dedup.jaccardJoin(eval, "doc_id", col("text"),
-        train, "doc_id", col("text"), t = 0.3, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(fast === brute, s"fast=${fast.size} brute=${brute.size}")
+    val brute = bruteJaccard(eval, Some(train), "doc_id", "text", 0.3, 3)
     assert(brute.nonEmpty, "fixture must actually contain cross-corpus leaks")
+    val fast = pairSet(Dedup.jaccardJoin(eval, "doc_id", col("text"),
+        train, "doc_id", col("text"), t = 0.3, n = 3))
+    assert(fast === brute, s"fast=${fast.size} brute=${brute.size}")
+    for ((route, pairs) <- forcedRoutes(eval, Some(train), "doc_id", "text", 0.3, 3))
+      assert(pairs === brute, s"$route=${pairs.size} brute=${brute.size}")
 
     val clean = Dedup.decontaminate(eval, "doc_id", col("text"),
         train, "doc_id", col("text"), t = 0.3, n = 3)
@@ -220,7 +235,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("jaccardPairs: sub-n-length docs follow J(∅,∅)=1 / J(∅,S)=0 semantics") {
-    import spark.implicits._
     val docs = Seq((1L, "ab"), (2L, "yz"), (3L, "tlazohcamati"), (4L, "tlazohcamati"))
       .toDF("doc_id", "text")
     val pairs = Dedup.jaccardPairs(docs, "doc_id", col("text"), t = 0.5)
@@ -232,7 +246,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("Σdf² guardrail: saturated-vocabulary corpus routes to banded candidates, output identical") {
-    import spark.implicits._
     // pathological fixture: every gram drawn from a 12-word vocabulary,
     // so each gram's document frequency is ~corpus-sized and the exact
     // count join's Σdf² goes quadratic — while almost no PAIR passes
@@ -247,57 +260,44 @@ class DedupSpec extends AnyFunSuite {
     val dups = (0 until 20).map { i => (1000L + i, base(i)._2) }
     val docs = (base ++ dups).toDF("id", "t")
 
-    val nDocs = docs.count()
-    val joinRows = Dedup.gramJoinRows(docs, "id", col("t"), 3)
-    assert(joinRows > 8192L * nDocs,
-      s"fixture must be in the quadratic regime: Σdf²=$joinRows for $nDocs docs")
-    assert(!Dedup.routeExact(docs, "id", col("t"), 3, 8192L),
+    // the probe's budget is 8192 joined rows per doc: this corpus is
+    // past it, a 20-doc slice of it is well inside
+    assert(probed(docs, None, "id", "t", 0.8, 3) === Dedup.GramRoute.Banded,
       "probe must route the saturated corpus away from the count join")
-    // a small real corpus with a tame gram tail routes exact
     val tiny = base.take(20).toDF("id", "t")
-    assert(Dedup.routeExact(tiny, "id", col("t"), 3, 8192L))
+    assert(probed(tiny, None, "id", "t", 0.8, 3) === Dedup.GramRoute.Exact)
 
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val exact = Dedup.jaccardPairs(docs, "id", col("t"), t = 0.8, n = 3)
-      .collect().map(key).toSet
-    val banded = Dedup.jaccardPairsBanded(docs, "id", col("t"), t = 0.8, n = 3)
-      .collect().map(key).toSet
-    assert(banded === exact, s"banded=${banded.size} exact=${exact.size}")
-    assert(exact.size >= 20, "planted duplicates must appear as pairs")
-    // the banded path's candidate join is bucket-bounded: colliding
-    // band-bucket rows, not Σdf² token matches. Planted dups collide in
-    // every band (32 bands × 20 pairs) plus a stray sub-threshold pair
-    // per band at most — orders of magnitude under the count join.
-    val auto = Dedup.jaccardPairsAuto(docs, "id", col("t"), t = 0.8, n = 3)
-      .collect().map(key).toSet
-    assert(auto === exact)
-    // low thresholds have no AND-amplification (r < 2): auto must stay
-    // on the exact join rather than degrade to r=1 banding
+    val brute = bruteJaccard(docs, None, "id", "t", 0.8, 3)
+    assert(brute.size >= 20, "planted duplicates must appear as pairs")
+    for ((route, pairs) <- forcedRoutes(docs, None, "id", "t", 0.8, 3))
+      assert(pairs === brute, s"$route=${pairs.size} brute=${brute.size}")
+    val guarded = pairSet(Dedup.jaccardPairs(docs, "id", col("t"), t = 0.8, n = 3))
+    assert(guarded === brute)
+    // low thresholds have no AND-amplification (r < 2): the probe must
+    // keep the exact join even on the saturated corpus rather than
+    // degrade to r=1 banding
     assert(Dedup.recallBandRows(0.3, 128) === 1)
-    val low = Dedup.jaccardPairsAuto(tiny, "id", col("t"), t = 0.3, n = 3)
-      .collect().map(key).toSet
-    val lowExact = Dedup.jaccardPairs(tiny, "id", col("t"), t = 0.3, n = 3)
-      .collect().map(key).toSet
-    assert(low === lowExact)
+    assert(probed(docs, None, "id", "t", 0.3, 3) === Dedup.GramRoute.Exact)
+    val low = pairSet(Dedup.jaccardPairs(tiny, "id", col("t"), t = 0.3, n = 3))
+    assert(low === bruteJaccard(tiny, None, "id", "t", 0.3, 3))
     // end-to-end: guarded ngramDedup drops exactly the planted dups
     val kept = Dedup.ngramDedup(docs, "id", col("t"), t = 0.8, n = 3)
       .select("id").collect().map(_.getLong(0)).toSet
-    val removed = exact.map(_._2)
-    assert(kept === (base ++ dups).map(_._1).toSet -- removed)
+    assert(kept === (base ++ dups).map(_._1).toSet -- brute.map(_._2))
   }
 
-  test("jaccardJoinAuto guards the oversized-reference decontamination shape") {
-    // eval is a large fraction of the corpus — the two-sided shape
+  test("jaccardJoin guards the oversized-reference decontamination shape") {
+    // eval is as large as the training side — the two-sided shape
     // whose Σ dfL·dfR goes quadratic (ADR-003's lesson). Word-soup
     // docs over a tiny vocabulary put the fixture in that regime;
     // planted verbatim leaks are the pairs that must survive routing.
     val rnd = new scala.util.Random(11)
     val vocab = Vector("tla", "toc", "cal", "mex", "nah", "pil",
       "xoc", "atl", "tep", "mic", "zta", "hui")
-    val train = (0 until 300).map { i =>
+    val train = (0 until 600).map { i =>
       (i.toLong, (0 until 30).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
     }
-    val eval = (0 until 60).map { i =>
+    val eval = (0 until 900).map { i =>
       // first 15 eval docs are verbatim copies of training docs (leaks)
       if (i < 15) (5000L + i, train(i * 3)._2)
       else (5000L + i, (0 until 30).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
@@ -305,29 +305,27 @@ class DedupSpec extends AnyFunSuite {
     val trainDf = train.toDF("id", "t")
     val evalDf = eval.toDF("id", "t")
 
-    // fixture must be past the budget so the banded route fires
-    assert(!Dedup.routeExactBipartite(evalDf, "id", col("t"),
-      trainDf, "id", col("t"), n = 3, maxJoinRowsPerDoc = 512L),
+    // past the 8192 rows/doc budget, so the banded route fires; a
+    // benchmark-sized reference side routes exact
+    assert(probed(evalDf, Some(trainDf), "id", "t", 0.8, 3) === Dedup.GramRoute.Banded,
       "probe must route the oversized two-sided shape away from the count join")
-    // and a benchmark-sized reference side routes exact
-    assert(Dedup.routeExactBipartite(evalDf.limit(5), "id", col("t"),
-      trainDf.limit(20), "id", col("t"), n = 3, maxJoinRowsPerDoc = 8192L))
+    assert(probed(evalDf.limit(5), Some(trainDf.limit(20)), "id", "t", 0.8, 3) ===
+      Dedup.GramRoute.Exact)
 
-    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val exact = Dedup.jaccardJoin(evalDf, "id", col("t"),
-      trainDf, "id", col("t"), t = 0.8, n = 3).collect().map(key).toSet
-    val auto = Dedup.jaccardJoinAuto(evalDf, "id", col("t"),
-      trainDf, "id", col("t"), t = 0.8, n = 3, maxJoinRowsPerDoc = 512L)
-      .collect().map(key).toSet
-    assert(auto === exact, s"banded route must not change the leak set " +
-      s"(auto=${auto.size} exact=${exact.size})")
-    assert(exact.map(_._1).toSet.size >= 15, "planted leaks must all be found")
+    val brute = bruteJaccard(evalDf, Some(trainDf), "id", "t", 0.8, 3)
+    assert(brute.map(_._1).size >= 15, "planted leaks must all be found")
+    for ((route, pairs) <- forcedRoutes(evalDf, Some(trainDf), "id", "t", 0.8, 3))
+      assert(pairs === brute, s"$route=${pairs.size} brute=${brute.size}")
+    val guarded = pairSet(Dedup.jaccardJoin(evalDf, "id", col("t"),
+      trainDf, "id", col("t"), t = 0.8, n = 3))
+    assert(guarded === brute, s"banded route must not change the leak set " +
+      s"(guarded=${guarded.size} brute=${brute.size})")
 
     // decontaminate through the guard drops exactly the leaking ids
     val kept = Dedup.decontaminate(evalDf, "id", col("t"),
-        trainDf, "id", col("t"), t = 0.8, n = 3, maxJoinRowsPerDoc = 512L)
+        trainDf, "id", col("t"), t = 0.8, n = 3)
       .select("id").collect().map(_.getLong(0)).toSet
-    assert(kept === eval.map(_._1).toSet -- exact.map(_._1))
+    assert(kept === eval.map(_._1).toSet -- brute.map(_._1))
   }
 
   test("ngramDedup keeps the lowest id of each near-dup clique") {

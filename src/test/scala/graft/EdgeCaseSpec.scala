@@ -41,8 +41,9 @@ class EdgeCaseSpec extends AnyFunSuite {
       emptyDocs, "doc_id", col("text"), t = 0.5).count() === 0)
     assert(Dedup.decontaminate(oneDoc, "doc_id", col("text"),
       emptyDocs, "doc_id", col("text")).count() === 1)
-    // guarded auto path: empty probe must route cleanly (Σdf²=0)
-    assert(Dedup.jaccardPairsAuto(emptyDocs, "doc_id", col("text"), t = 0.8).count() === 0)
+    // both entries probe: an empty side must route cleanly (Σ dfL·dfR = 0)
+    assert(Dedup.jaccardJoin(emptyDocs, "doc_id", col("text"),
+      emptyDocs, "doc_id", col("text"), t = 0.8).count() === 0)
     assert(Dedup.ngramDedup(oneDoc, "doc_id", col("text")).count() === 1)
   }
 

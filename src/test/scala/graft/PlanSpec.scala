@@ -215,11 +215,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("jaccard pair join: token equi-join + map-side pair count, never cartesian") {
-    val plan = formatted("q45_ngram_pairs_full")
-    assert(!plan.contains("CartesianProduct"),
-      s"pair enumeration must not cross-join the corpus:\n$plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      s"pair enumeration must be key-based, not a nested loop:\n$plan")
+    // the lazy plan of each route of the core (jaccardPairs itself
+    // returns a materialized checkpoint scan)
+    val sets = operators.Dedup.gramSets(Tables.documents(spark, dir), "doc_id", col("text"), 8)
+    def routePlan(route: operators.Dedup.GramRoute): String =
+      operators.Dedup.gramPairs(sets, None, 0.8, route).queryExecution
+        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    for (route <- Seq(operators.Dedup.GramRoute.Exact, operators.Dedup.GramRoute.Banded)) {
+      val plan = routePlan(route)
+      assert(!plan.contains("CartesianProduct"),
+        s"$route pair enumeration must not cross-join the corpus:\n$plan")
+      assert(!plan.contains("BroadcastNestedLoopJoin"),
+        s"$route pair enumeration must be key-based, not a nested loop:\n$plan")
+    }
+    val plan = routePlan(operators.Dedup.GramRoute.Exact)
     assert(plan.contains("SortMergeJoin") || plan.contains("BroadcastHashJoin") ||
       plan.contains("ShuffledHashJoin"),
       s"token join must be an equi-join:\n$plan")

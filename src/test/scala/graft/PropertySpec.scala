@@ -122,28 +122,28 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: jaccardPairs equals brute force on random corpora (incl. sub-n docs)") {
-    for (seed <- 10L to 12L) {
+    for (seed <- 10L to 12L; t <- Seq(0.4, 0.8)) {
       val strs = sample(Gen.listOfN(30, corpusString), seed)
       val df = strs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
-      val t = 0.4
-      val fast = Dedup.jaccardPairs(df, "id", col("s"), t, n = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pref = Dedup.jaccardPairsPrefix(df, "id", col("s"), t, n = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      def pairSet(p: org.apache.spark.sql.DataFrame) =
+        p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val fast = pairSet(Dedup.jaccardPairs(df, "id", col("s"), t, n = 2))
+      val banded = pairSet(Dedup.gramPairs(Dedup.gramSets(df, "id", col("s"), 2), None, t,
+        Dedup.GramRoute.Banded))
       val g = df.select(col("id"), Dedup.ngrams(col("s"), 2).as("g"))
       val withSentinel = g.select(col("id"),
         when(size(col("g")) === 0, array(lit(""))).otherwise(col("g")).as("g"))
       val a = withSentinel.select(col("id").as("id_a"), col("g").as("ga"))
       val b = withSentinel.select(col("id").as("id_b"), col("g").as("gb"))
-      val brute = a.join(b, col("id_a") < col("id_b"))
+      val brute = pairSet(a.join(b, col("id_a") < col("id_b"))
         .withColumn("j", round(Dedup.jaccardOfSets(col("ga"), col("gb")), 6))
         .filter(col("j") >= t)
-        .select("id_a", "id_b", "j")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(fast === brute, s"seed=$seed fast=${fast.size} brute=${brute.size}")
-      assert(pref === brute, s"seed=$seed prefix=${pref.size} brute=${brute.size}")
+        .select("id_a", "id_b", "j"))
+      assert(fast === brute, s"seed=$seed t=$t fast=${fast.size} brute=${brute.size}")
+      assert(banded === brute, s"seed=$seed t=$t banded=${banded.size} brute=${brute.size}")
     }
   }
+
 
   test("property: SigAgreeCount equals the zip_with/filter HOF formulation") {
     for (seed <- 1L to 5L) {
