@@ -55,8 +55,7 @@ object Bench {
       force(operators.Dedup.simhashDedup(warmDocs, "doc_id", col("text")))
       warmDocs.unpersist(blocking = false)
       val warmEmb = Tables.embeddings(spark, sfDir).limit(256)
-      force(operators.Similarity.similarPairsApprox(warmEmb, "vec_id", "embedding",
-        t = 0.4, nCells = 4))
+      force(operators.Similarity.similarPairsApprox(warmEmb, "vec_id", "embedding", t = 0.4))
     }
 
     // Pre-built incremental state, OFF the clock: q100 times the

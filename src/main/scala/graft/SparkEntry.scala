@@ -542,9 +542,10 @@ object SparkEntry {
     },
 
     // ---- J4-threshold at scale: FULL-table similar pairs through the
-    // cell-pruned candidate join (k-means cells + triangle-inequality
-    // pruning, exact verify) — output provably equals the exact cross
-    // join, so the all-pairs DuckDB oracle hash-checks it.
+    // cell-pruned candidate join (hyperplane-signature cells +
+    // triangle-inequality pruning, exact verify) — output provably
+    // equals the exact cross join, so the all-pairs DuckDB oracle
+    // hash-checks it.
     "q41_similar_pairs_full" -> { (s, dir) =>
       Similarity.similarPairsApprox(Tables.embeddings(s, dir), "vec_id", "embedding",
           t = 0.4)
@@ -1857,15 +1858,15 @@ object SparkEntry {
 
     // ---- Hard-negative mining (DPR/ANCE): per anchor, the top-5
     // most-similar vectors in the cosine band [0.3, 0.8) — similar
-    // enough to be hard, below the near-duplicate zone. Runs the
-    // approx (cell-pruned) path, whose exact-output guarantee the
-    // brute-force DuckDB replay verifies end-to-end.
+    // enough to be hard, below the near-duplicate zone. Pairs come from
+    // the cell-pruned similarPairsApprox, whose exact-output guarantee
+    // the brute-force DuckDB replay verifies end-to-end.
     "q121_hard_negatives" -> { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
         .withColumn("embedding", col("embedding").cast("array<double>"))
         .filter(!exists(col("embedding"), x => isnan(x)))
       Similarity.hardNegatives(emb, "vec_id", "embedding",
-          lo = 0.3, hi = 0.8, k = 5, approx = true)
+          lo = 0.3, hi = 0.8, k = 5)
         .select(col("anchor_id"), col("neg_id"), col("sim"), col("rank"))
         .orderBy("anchor_id", "rank")
     },

@@ -1392,7 +1392,8 @@ object Dedup {
     * [[BandPerms]]) banding has no AND-amplification — every pair
     * sharing one minhash value is a candidate, measured 7× slower than
     * the count join at t = 0.3 — so the probe is skipped and the route
-    * stays exact. */
+    * stays exact. Either decision is logged at WARN, the level the
+    * engine's session ([[graft.GraftSession.get]]) shows. */
   private[graft] def probeRoute(setsL: DataFrame, setsR: Option[DataFrame], t: Double,
       nDocs: Long): GramRoute =
     if (recallBandRows(t, BandPerms) < 2) {
@@ -1411,7 +1412,7 @@ object Dedup {
         else s"n-gram Jaccard bipartite join probe ΣdfL·dfR=$joinRows") +
         s" over $nDocs docs (budget $GramJoinRowsPerDoc/doc) → " +
         (if (exact) "exact count join" else "banded-MinHash candidates + exact verify")
-      if (exact) log.info(msg) else log.warn(msg)
+      log.warn(msg)
       if (exact) GramRoute.Exact else GramRoute.Banded
     }
 
@@ -1448,21 +1449,16 @@ object Dedup {
     * within `threshold` cosine of an earlier (lower-id) row are
     * dropped via left_anti.
     *
-    * Default candidate generation is the cell-pruned pair join
-    * ([[Similarity.similarPairsApprox]]): seeded k-means cells +
-    * triangle-inequality pruning on angular distance, exact cosine
-    * verify on survivors — identical output to the exact cross join on
-    * any input, with cost ≈ Σ|cell|² on clustered (i.e. duplicated)
-    * corpora. `exact = true` keeps the O(n²) cross join as a
-    * cross-check baseline for small inputs. */
+    * Candidate generation is the cell-pruned pair join
+    * ([[Similarity.similarPairsApprox]]): seeded hyperplane-signature
+    * cells + triangle-inequality pruning on angular distance, exact
+    * cosine verify on survivors — identical output to the exact cross
+    * join on any input, with cost ≈ Σ|cell|² on clustered (i.e.
+    * duplicated) corpora. */
   def embeddingDedup(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double = 0.95, exact: Boolean = false, nCells: Int = 0): DataFrame = {
-    val pairs =
-      if (exact)
-        Similarity.similarPairs(
-          df.withColumn(vecCol, col(vecCol).cast("array<double>")), idCol, vecCol, threshold)
-      else Similarity.similarPairsApprox(df, idCol, vecCol, threshold, nCells)
-    val dupIds = pairs.select(col("id_b").as(idCol)).distinct()
+      threshold: Double = 0.95): DataFrame = {
+    val dupIds = Similarity.similarPairsApprox(df, idCol, vecCol, threshold)
+      .select(col("id_b").as(idCol)).distinct()
     df.join(dupIds, Seq(idCol), "left_anti")
   }
 

@@ -6,17 +6,19 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Observability for the NaN-quarantine envelopes in
-  * [[Similarity.similarPairsApprox]] / [[Similarity.vecPairsByCosine]].
+/** Observability for the NaN-quarantine envelope of the exact cosine
+  * pair core behind [[Similarity.similarPairsApprox]] and
+  * [[Similarity.vecPairsByCosine]] (the cosine join rewrite).
   *
-  * Those operators keep their exact-output guarantee on NaN-poisoned
+  * The core keeps its exact-output guarantee on NaN-poisoned
   * embeddings by routing every dirty vector AROUND the cell-pruned
   * geometry and joining it against the full opposite side — a
   * documented |dirty| × n cost envelope that is empty on sane corpora
   * but silently degenerates toward O(n²) when a corpus arrives with
-  * pervasive NaN embeddings. Each operator therefore `observe`s its
-  * input with a `graft.nan_quarantine.*` metric pair
-  * (`n_vecs`, `n_dirty`); the [[NanQuarantine.Listener]] (installed by
+  * pervasive NaN embeddings. The core therefore `observe`s each input
+  * side with a `graft.nan_quarantine.*` metric pair
+  * (`n_vecs`, `n_dirty`; null vectors, which never pair, are not
+  * counted); the [[NanQuarantine.Listener]] (installed by
   * [[graft.GraftSession]]) reads the metrics after every successful
   * execution and WARNs when the dirty fraction crosses
   * [[NanQuarantine.warnFraction]] — making the envelope visible

@@ -296,8 +296,8 @@ object Similarity {
   }
 
   /** Threshold similarity self-join: all pairs (a<b) with cosine ≥ t.
-    * Exact (cross-join) — [[similarPairsApprox]] is the scale path
-    * (identical output, pruned candidate set). */
+    * Exact (cross join): the reference that [[similarPairsApprox]], the
+    * scale path with identical output, is checked against. */
   def similarPairs(df: DataFrame, idCol: String, vecCol: String, t: Double): DataFrame = {
     val a = df.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
     val b = df.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
@@ -307,37 +307,33 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
   }
 
-  /** Cell assignment + pruned cell-pair list backing
-    * [[similarPairsApprox]]; split out so the pruning itself is
-    * spec-testable. Returns the assigned frame
-    * `(__id, __v, __nrm, __cell)` and the SYMMETRIC list of cell pairs
-    * (ca, cb) that can possibly contain a qualifying pair. */
-  private[graft] def cellPartition(
-      df: DataFrame, idCol: String, vecCol: String, t: Double,
-      nCells: Int, seed: Long): (DataFrame, Seq[(Int, Int)]) = {
-    val spark = df.sparkSession
-    // spread before the narrow maps (norms, cell assignment) AND the
-    // downstream candidate join: both sides of the cell join inherit
-    // this frame's partitioning, so a single-split source would
-    // otherwise verify all candidate pairs in one task.
-    //
-    // Cells are HYPERPLANE-SIGNATURE buckets (⌈log2 nCells⌉ seeded sign
-    // bits, native codegen expression), not fitted k-means cells: the
-    // quantizer only affects how much the triangle-inequality step can
-    // prune (cost), never which pairs the exact verify emits
-    // (correctness) — and a fit (~10 driver-blocking ml jobs) costs
-    // more than the pruning it buys. Signature buckets have exactly
-    // the angular locality the geodesic bound wants, assign in one
-    // narrow map, and are deterministic in (seed, dim) with no model
-    // object to broadcast. Centroids/radii come from the members
-    // themselves (per-bucket mean, max member angle) in two
-    // aggregation passes, so the bound stays tight on actual bucket
-    // contents.
-    val bits = cellBits(nCells)
-    val base = Dedup.spreadWide(df)
-      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__nrm", sqrt(dot(col("__v"), col("__v"))))
-      .withColumn("__cell", hyperplaneSignature(col("__v"), bits, seed).cast("int"))
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Similarity")
+
+  /** Seed of every cosine-core cell signature: both join sides must agree. */
+  private val CellSeed = 42L
+
+  private def cellOf(v: Column, nCells: Int): Column =
+    hyperplaneSignature(v, cellBits(nCells), CellSeed).cast("int")
+
+  /** The pruned cell-pair list behind [[cosineCore]] (split out so the
+    * pruning is spec-testable): the SYMMETRIC cell pairs (ca, cb) over
+    * `vecs`' `__v` that can contain a pair with cosine ≥ t. Logs the
+    * cell count and the surviving share of cells².
+    *
+    * Cells are HYPERPLANE-SIGNATURE buckets (⌈log2 nCells⌉ seeded sign
+    * bits, native codegen expression), not fitted k-means cells: the
+    * quantizer only affects how much the triangle-inequality step can
+    * prune (cost), never which pairs the exact verify emits
+    * (correctness) — and a fit (~10 driver-blocking ml jobs) costs
+    * more than the pruning it buys. Signature buckets have exactly
+    * the angular locality the geodesic bound wants, assign in one
+    * narrow map, and are deterministic in (seed, dim) with no model
+    * object to broadcast. Centroids/radii come from the members
+    * themselves (per-bucket mean, max member angle) in two
+    * aggregation passes, so the bound stays tight on actual bucket
+    * contents. */
+  private[graft] def cellPartition(vecs: DataFrame, t: Double, nCells: Int): Seq[(Int, Int)] = {
+    val base = vecs.select(col("__v"), cellOf(col("__v"), nCells).as("__cell"))
 
     // per-cell mean vector: one partial-aggregated pass over
     // (cell, dim) — the collect is k×dim doubles of metadata.
@@ -346,7 +342,7 @@ object Similarity {
       .groupBy(col("__cell"), col("__pos"))
       .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
       .collect()
-    if (sums.isEmpty) return (base, Seq.empty)
+    if (sums.isEmpty) return Seq.empty
     val dims = sums.map(_.getInt(1)).max + 1
     val centroids: Map[Int, Array[Double]] = sums.groupBy(_.getInt(0)).map {
       case (cell, rows) =>
@@ -355,7 +351,7 @@ object Similarity {
         cell -> c
     }
     val cells = centroids.keys.toSeq.sorted
-    val centroidDf = spark.createDataFrame(
+    val centroidDf = vecs.sparkSession.createDataFrame(
       cells.map(c => (c, centroids(c).toSeq)))
       .toDF("__cell", "__centroid")
 
@@ -381,14 +377,17 @@ object Similarity {
       if thetaBetween(centroids(ca), centroids(cb)) -
         radii.getOrElse(ca, 0.0) - radii.getOrElse(cb, 0.0) <= maxTheta
     } yield (ca, cb)
-    (base, allowed)
+    val sigCells = 1 << cellBits(nCells)
+    log.warn(s"cosine pair join: $sigCells cells, " +
+      s"${allowed.size} of ${sigCells * sigCells} cell pairs allowed")
+    allowed
   }
 
   private[graft] def cellBits(nCells: Int): Int =
     math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(1, nCells - 1).toLong).toInt)
 
-  /** Corpus-sized cell count for [[similarPairsApprox]]: ~256 vectors
+  /** Corpus-sized cell count for [[cosineCore]]: ~256 vectors
     * per cell (verify cost on balanced cells ≈ n²/k, so a FIXED k
     * grows quadratically with the corpus — the round-4 scale rehearsal
     * measured exactly that shape at 10× data). Clamped to [8, 1024]:
@@ -400,196 +399,121 @@ object Similarity {
   private[graft] def autoCells(n: Long): Int =
     math.min(1024L, math.max(8L, n / 256L)).toInt
 
+  /** The exact cosine pair join behind [[similarPairsApprox]] (`r =
+    * None`: self join, pairs `__ka < __kb`) and [[vecPairsByCosine]]
+    * (`Some(r)`: bipartite, identical values pair too), over `(__k,
+    * __v)` frames — a frame without `__k` is keyed by its vector, which
+    * then rides the verify exchange once, not twice — cut into `nCells`
+    * cells. Output `(__ka, __kb, __sim)`, raw `__sim` kept when `> t`
+    * (`strict`) or `>= t`.
+    *
+    * A cell pair (A, B) can hold a pair with cosine ≥ t only if
+    * θ(centroidA, centroidB) − radiusA − radiusB ≤ arccos(t) (triangle
+    * inequality on geodesic distance, a metric on the sphere —
+    * [[cellPartition]]); only surviving cell pairs meet, in one
+    * cell-keyed exchange, and exact cosine verifies every candidate, so
+    * the output equals the cross join on ANY input. On clustered
+    * corpora (the near-dup case) cost approaches Σ|cell|²; on uniform
+    * random data it degrades to the exact join, the floor there anyway.
+    *
+    * Null vectors never pair (nor in the cross join), so they are
+    * dropped before the quarantine counts. NaN quarantine, which the
+    * exact-output guarantee needs: a NaN element makes a pair's
+    * similarity NaN, which Spark AND DuckDB order ABOVE every threshold
+    * (the cross join KEEPS such pairs), and inside the geometry it would
+    * poison its cell's centroid (NaN angle → the cell's real pairs
+    * silently pruned). So each side `observe`s a
+    * `graft.nan_quarantine.*` (`n_vecs`, `n_dirty`) pair that
+    * [[NanQuarantine]] warns on (no extra job), the geometry sees only
+    * clean vectors, and every pair with a dirty vector is enumerated
+    * directly: |dirty| × n, empty on sane corpora. */
+  private def cosineCore(l: DataFrame, r: Option[DataFrame], t: Double, strict: Boolean,
+      nCells: Int): DataFrame = {
+    val self = r.isEmpty
+    val dirtyFlag = exists(col("__v"), x => isnan(x))
+    def quarantined(side: DataFrame, name: String): DataFrame =
+      side.filter(col("__v").isNotNull)
+        .observe(NanQuarantine.observationName(name),
+          count(lit(1)).as("n_vecs"),
+          sum(when(dirtyFlag, lit(1L)).otherwise(lit(0L))).as("n_dirty"))
+    val lq = quarantined(l, if (self) "cosinePairs" else "cosinePairs.left")
+    val rq = r.fold(lq)(quarantined(_, "cosinePairs.right"))
+    val lClean = lq.filter(!dirtyFlag)
+    val rClean = if (self) lClean else rq.filter(!dirtyFlag)
+    val allowed = cellPartition(
+      if (self) lClean.select(col("__v"))
+      else lClean.select(col("__v")).union(rClean.select(col("__v"))),
+      t, nCells)
+
+    val keyed = l.columns.contains("__k")
+    def key(s: String): Column = col(if (keyed) s"__k$s" else s"__v$s")
+    def side(d: DataFrame, s: String, extra: Column*): DataFrame =
+      d.select((if (keyed) Seq(col("__k").as(s"__k$s")) else Nil) ++
+        (col("__v").as(s"__v$s") +: extra): _*)
+    def tagged(d: DataFrame, s: String): DataFrame = side(d, s,
+      sqrt(dot(col("__v"), col("__v"))).as(s"__n$s"), cellOf(col("__v"), nCells).as(s"__c$s"))
+    val allowedDf = l.sparkSession.createDataFrame(allowed).toDF("__ca", "__cb")
+    val pruned = tagged(lClean, "a").join(broadcast(allowedDf), Seq("__ca"))
+      .join(tagged(rClean, "b"), Seq("__cb"))
+      .withColumn("__sim", when(col("__na") === 0 || col("__nb") === 0, lit(0.0))
+        .otherwise(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb"))))
+    // NaN similarities pass any threshold, as in the cross join; the
+    // dirty side broadcasts, so AQE drops a branch whose side is empty
+    val dirty = broadcast(side(lq.filter(dirtyFlag), "a")).crossJoin(side(rq, "b"))
+      .union(side(lClean, "a").crossJoin(broadcast(side(rq.filter(dirtyFlag), "b"))))
+      .withColumn("__sim", cosine(col("__va"), col("__vb")))
+    // key order first: it halves the self join's dot products
+    val keep = (if (self) key("a") < key("b") else lit(true)) &&
+      (if (strict) col("__sim") > t else col("__sim") >= t)
+    def verified(pairs: DataFrame): DataFrame =
+      pairs.filter(keep).select(key("a").as("__ka"), key("b").as("__kb"), col("__sim"))
+    verified(pruned).union(verified(dirty))
+  }
+
   /** DISTINCT (left-vector, right-vector) ORDERED pairs whose exact
     * cosine satisfies the threshold — the relational core behind
-    * [[graft.plans.CosineJoinRewrite]] (the vector analog of
-    * `Dedup.textPairsByJaccard`). Cell geometry (centroids/radii →
-    * allowed cell pairs) is computed over the UNION of both sides'
-    * clean distinct vectors; each side's cell assignment is the
-    * data-independent hyperplane signature, so both sides land in
-    * consistent cells without a join. NaN vectors bypass the geometry
-    * (their similarity is NaN, which orders above every threshold —
-    * the pairs are kept, enumerated directly). */
+    * [[graft.plans.CosineJoinRewrite]]: [[cosineCore]]'s bipartite join
+    * over each side's distinct vectors, keyed by the vector itself,
+    * with cells sized from both sides' row counts (an upper bound on
+    * their distinct vectors). The distinct's exchange has an explicit
+    * count from the session's parallelism, which AQE never coalesces:
+    * coalesced, the few-MB distinct frames land in ONE task, and so
+    * does every stage after. */
   private[graft] def vecPairsByCosine(
       left: DataFrame, leftVec: Column,
       right: DataFrame, rightVec: Column,
-      t: Double, strict: Boolean,
-      nCells: Int = 16, seed: Long = 42L): DataFrame = {
-    def distinctVecs(src: DataFrame, v: Column): DataFrame =
-      Dedup.spreadWide(
-        src.select(v.cast("array<double>").as("__v")).filter(col("__v").isNotNull))
-        .distinct()
-    val dirtyFlag = exists(col("__v"), x => isnan(x))
-    def quarantineObserved(src: DataFrame, side: String): DataFrame =
-      src.observe(NanQuarantine.observationName(s"vecPairsByCosine.$side"),
-        count(lit(1)).as("n_vecs"),
-        sum(when(dirtyFlag, lit(1L)).otherwise(lit(0L))).as("n_dirty"))
-    val lv = quarantineObserved(distinctVecs(left, leftVec), "left")
-    val rv = quarantineObserved(distinctVecs(right, rightVec), "right")
-    val lvClean = lv.filter(!dirtyFlag)
-    val rvClean = rv.filter(!dirtyFlag)
-
-    // geometry over the union (dummy carried id — cellPartition only
-    // threads it through); per-side cells recomputed from the same
-    // data-independent signature expression
-    val u = lvClean.union(rvClean).distinct().withColumn("__uid", lit(0L))
-    val (_, allowed) = cellPartition(u, "__uid", "__v", t, nCells, seed)
-    val allowedDf = left.sparkSession.createDataFrame(allowed).toDF("__ca", "__cb")
-    val bits = cellBits(nCells)
-    def tagged(k: DataFrame, v: String, n: String, c: String): DataFrame =
-      k.select(col("__v").as(v),
-        sqrt(dot(col("__v"), col("__v"))).as(n),
-        hyperplaneSignature(col("__v"), bits, seed).cast("int").as(c))
-    val la = tagged(lvClean, "__va", "__na", "__ca")
-    val rb = tagged(rvClean, "__vb", "__nb", "__cb")
-    val sim = when(col("__na") === 0 || col("__nb") === 0, lit(0.0))
-      .otherwise(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-    val cmp = (s: Column) => if (strict) s > t else s >= t
-    // Verify-stage parallelism. The exchange feeding the exact-cosine
-    // verify is keyed on the CELL id — at most `nCells` distinct
-    // values, so its parallelism is capped at nCells at ANY scale, and
-    // at bench scale AQE's byte-driven coalescing fuses the tiny-bytes
-    // / heavy-compute candidate partitions into ONE task (~2 s of
-    // serialized vector math measured on q67). Two moves, both
-    // output-invariant:
-    //  - SALT: the left side gets a deterministic per-vector salt
-    //    (hash, never rand — retried tasks must land rows identically,
-    //    guide §2.5) and the right side replicates once per salt value,
-    //    so the key space grows to nCells × saltFan and the per-key
-    //    verify work splits. Each (va, vb) candidate still meets
-    //    exactly once: va carries ONE salt and vb has exactly one copy
-    //    per salt value.
-    //  - PIN the exchange with an explicit-partition-count repartition
-    //    on both sides (REPARTITION_BY_NUM — AQE honors user-pinned
-    //    counts and neither coalesces nor resizes them), sized from
-    //    the session's parallelism, not a constant.
-    // Replication cost: right-side rows × saltFan across the exchange —
-    // bounded by the fan cap below; the win is that the verify stage
-    // engages every core instead of at most nCells (or one) of them.
-    val sc = left.sparkSession.sparkContext
-    // fan 8 balances the two costs: nCells × 8 keys spread a pinned
-    // exchange evenly past any realistic core count, while right-side
-    // replication (the salt's price, paid at every scale) stays ≤ 8×
-    val saltFan = math.max(1, math.min(sc.defaultParallelism, 8))
-    val parts = math.max(sc.defaultParallelism,
-      left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt)
-    val laS = la.join(broadcast(allowedDf), Seq("__ca"))
-      .withColumn("__salt", pmod(xxhash64(col("__va")), lit(saltFan)).cast("int"))
-      .repartition(parts, col("__cb"), col("__salt"))
-    // sequence(int, int) is array<int>, so the exploded salt matches
-    // the int-cast pmod salt on the left side
-    val rbS = rb.withColumn("__salt",
-        explode(sequence(lit(0), lit(saltFan - 1))))
-      .repartition(parts, col("__cb"), col("__salt"))
-    val prunedPairs = laS
-      .join(rbS, Seq("__cb", "__salt"))
-      .withColumn("__sim", sim)
-      .filter(cmp(col("__sim")))
-      .select(col("__va"), col("__vb"))
-
-    // dirty completeness: NaN-similarity pairs pass any threshold
-    // (NaN orders above every double) exactly as in the naive plan
-    val lvDirty = lv.filter(dirtyFlag).select(col("__v").as("__va"))
-    val rvDirty = rv.filter(dirtyFlag).select(col("__v").as("__vb"))
-    val dSim = cosine(col("__va"), col("__vb"))
-    val dirtyPairs = lvDirty.crossJoin(rv.select(col("__v").as("__vb")))
-      .union(lvClean.select(col("__v").as("__va")).crossJoin(rvDirty))
-      .withColumn("__sim", dSim)
-      .filter(cmp(col("__sim")))
-      .select(col("__va"), col("__vb"))
-
-    prunedPairs.union(dirtyPairs)
+      t: Double, strict: Boolean): DataFrame = {
+    val spark = left.sparkSession
+    val parts = math.max(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    def vecs(src: DataFrame, v: Column): DataFrame =
+      src.select(v.cast("array<double>").as("__v")).repartition(parts, col("__v")).distinct()
+    cosineCore(vecs(left, leftVec), Some(vecs(right, rightVec)), t, strict,
+        autoCells(left.count() + right.count()))
+      .select(col("__ka").as("__va"), col("__kb").as("__vb"))
   }
 
-  /** Scale path for [[similarPairs]] with an EXACT-OUTPUT guarantee:
-    * metric-space cell pruning instead of probabilistic LSH recall.
-    *
-    * Vectors are partitioned into `nCells` seeded hyperplane-signature
-    * cells; a cell pair (A, B) can contain a pair with cosine ≥ t only if
-    * θ(centroidA, centroidB) − radiusA − radiusB ≤ arccos(t) (triangle
-    * inequality on geodesic distance — angular distance is a metric on
-    * the sphere). Only surviving cell pairs are joined, then exact
-    * cosine verifies every candidate, so the output equals
-    * [[similarPairs]] on ANY input — clustering quality affects cost,
-    * never correctness. This is the guarantee an oracle-gated dedup
-    * default needs, which hyperplane LSH (probabilistic recall) cannot
-    * give.
-    *
-    * Scale shape: one narrow map to tag cells (native signature
-    * expression, no fit), two metadata aggregations (centroids,
-    * radii), one hash equi-join on cell id over the pruned pair list
-    * (broadcast — it is ≤ nCells² ints). On clustered corpora (the near-dup use
-    * case: embeddings of duplicated documents are near-identical by
-    * construction) most cell pairs prune away and cost approaches
-    * Σ|cell|²; on adversarial uniform-random data it degrades to the
-    * exact join, which is the information-theoretic floor there anyway.
-    * Size `nCells` ≈ n / targetCellSize so cells fit in a task.
-    * Reference analog: the Faiss IndexFlatIP alignment search
-    * (/root/reference/pipeline/alignment/aligner.py:15-52) — same
-    * coarse-quantize-then-verify shape as its IVF variants, with the
-    * pruning made loss-free.
-    *
-    * `nCells <= 0` (the default) sizes the cell count from the corpus
-    * via [[autoCells]] (~256 vectors/cell, clamped) — a fixed cell
-    * count makes Σ|cell|² quadratic in the corpus; auto-sizing keeps
-    * it ~256·n. One extra count() action, against the input scan.
-    */
-  def similarPairsApprox(
-      df: DataFrame, idCol: String, vecCol: String, t: Double,
-      nCells: Int = 0, seed: Long = 42L): DataFrame = {
-    val cells = if (nCells > 0) nCells else autoCells(df.count())
-    // NaN/null quarantine — required for the exact-output guarantee:
-    // a NaN element makes the pair similarity NaN, which Spark AND
-    // DuckDB order ABOVE every threshold, so the exact join KEEPS such
-    // pairs; inside the pruned path the same NaN would poison its
-    // cell's centroid (NaN sums → NaN inter-centroid angle → the whole
-    // cell's pairs silently pruned). Dirty vectors therefore bypass
-    // the geometry entirely: every pair involving one is enumerated
-    // directly (they all pass the NaN-ordering filter, exactly like
-    // the exact join), and only clean vectors enter cell pruning.
-    // Cost: |dirty| × n — dirty is empty on sane corpora.
-    val vd = col(vecCol).cast("array<double>")
-    val dirtyFlag = exists(vd, x => isnan(x))
-    // observed metrics make the quarantine envelope visible: the
-    // NanQuarantine listener WARNs post-run when the dirty fraction
-    // crosses its bound (no extra job — metrics ride the plan)
-    val observed = df.observe(NanQuarantine.observationName("similarPairsApprox"),
-      count(lit(1)).as("n_vecs"),
-      sum(when(coalesce(dirtyFlag, lit(true)), lit(1L)).otherwise(lit(0L))).as("n_dirty"))
-    val clean = observed.filter(coalesce(!dirtyFlag, lit(false)))
-    val dirty = observed.filter(coalesce(dirtyFlag, lit(true)))
+  /** Scale path for [[similarPairs]] with an EXACT-OUTPUT guarantee
+    * (the one an oracle-gated dedup default needs, and hyperplane LSH
+    * cannot give): [[cosineCore]]'s self join, with cells sized from
+    * one count of the corpus. The count and two metadata aggregations
+    * run at call time; the result is one narrow cell-tagging map and
+    * one cell-keyed equi-join over the broadcast pruned pair list.
+    * Reference analog: the Faiss IndexFlatIP alignment search (the
+    * reference's `pipeline/alignment/aligner.py:15-52`), whose IVF
+    * variants have the same quantize-then-verify shape, here made
+    * loss-free. */
+  def similarPairsApprox(df: DataFrame, idCol: String, vecCol: String, t: Double): DataFrame =
+    similarPairsInCells(df, idCol, vecCol, t, nCells = 0)
 
-    val (assigned, allowed) = cellPartition(clean, idCol, vecCol, t, cells, seed)
-    val spark = df.sparkSession
-    val allowedDf = spark.createDataFrame(allowed).toDF("__ca", "__cb")
-    val a = assigned.select(col("__id").as("id_a"), col("__v").as("__va"),
-      col("__nrm").as("__na"), col("__cell").as("__ca"))
-    val b = assigned.select(col("__id").as("id_b"), col("__v").as("__vb"),
-      col("__nrm").as("__nb"), col("__cell").as("__cb"))
-    // the allowlist is symmetric and includes the diagonal, and pair
-    // orientation is fixed by id_a < id_b, so every qualifying pair
-    // appears exactly once — no dropDuplicates pass needed.
-    val sim = when(col("__na") === 0 || col("__nb") === 0, lit(0.0))
-      .otherwise(dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
-    val prunedPairs = a.join(broadcast(allowedDf), Seq("__ca"))
-      .join(b, Seq("__cb"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", sim)
-      .filter(col("sim") >= t)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-
-    val allB = df.select(col(idCol).as("id_b"), vd.as("__vb"))
-    val dirtyA = dirty.select(col(idCol).as("id_a"), vd.as("__va"))
-    val cleanA = clean.select(col(idCol).as("id_a"), vd.as("__va"))
-    val dirtyB = dirty.select(col(idCol).as("id_b"), vd.as("__vb"))
-    val dirtyPairs = dirtyA.crossJoin(allB).filter(col("id_a") < col("id_b"))
-      .union(cleanA.crossJoin(dirtyB).filter(col("id_a") < col("id_b")))
-      .withColumn("sim", cosine(col("__va"), col("__vb")))
-      .filter(col("sim") >= t)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-
-    prunedPairs.union(dirtyPairs)
-  }
+  /** [[similarPairsApprox]] over a forced cell count — the entry specs
+    * reach the cell geometry through; `0` sizes it from the corpus. */
+  private[graft] def similarPairsInCells(
+      df: DataFrame, idCol: String, vecCol: String, t: Double, nCells: Int): DataFrame =
+    cosineCore(Dedup.spreadWide(df)
+        .select(col(idCol).as("__k"), col(vecCol).cast("array<double>").as("__v")),
+        None, t, strict = false, if (nCells > 0) nCells else autoCells(df.count()))
+      .select(col("__ka").as("id_a"), col("__kb").as("id_b"), round(col("__sim"), 6).as("sim"))
 
   /** IVF (inverted-file) ANN: k-means coarse quantizer over the corpus,
     * queries probe their `nProbe` nearest centroids, exact cosine
@@ -651,28 +575,22 @@ object Similarity {
     * pair serves BOTH directions, so each side of a qualifying pair
     * sees the other as a candidate negative.
     *
-    * Pair enumeration is [[similarPairs]] (`approx = false`, the
-    * oracle-checkable baseline) or [[similarPairsApprox]] (the scale
-    * path — IDENTICAL output by that operator's exact-output
-    * guarantee, cell-pruned candidate set; pass `nCells` explicitly at
-    * scale to skip its sizing count). The band filter applies to the
-    * ROUNDED sim on both engines, so the mined set can never disagree
-    * on a ulp at the `hi` boundary; enumeration admits raw sim ≥ `lo`
-    * exactly as `similarPairs` defines it. Per-anchor ranking is one
+    * Pair enumeration is [[similarPairsApprox]]: cell-pruned
+    * candidates, output identical to the [[similarPairs]] cross join by
+    * that operator's exact-output guarantee. The band filter applies to
+    * the ROUNDED sim on both engines, so the mined set can never
+    * disagree on a ulp at the `hi` boundary; enumeration admits raw
+    * sim ≥ `lo` exactly as `similarPairs` defines it. Per-anchor ranking is one
     * window keyed by anchor id — bounded by the anchor's in-band
     * neighborhood, which the band keeps narrow by construction (a
     * dense near-duplicate clique sits ABOVE `hi`); dedup first
     * ([[graft.operators.Dedup.semanticDedup]]) if your corpus hasn't
     * been. */
   def hardNegatives(df: DataFrame, idCol: String, vecCol: String,
-      lo: Double, hi: Double, k: Int,
-      approx: Boolean = false, nCells: Int = 0, seed: Long = 42L): DataFrame = {
+      lo: Double, hi: Double, k: Int): DataFrame = {
     require(lo < hi && hi <= 1.0, "need lo < hi <= 1")
     require(k > 0, "k must be positive")
-    val pairs =
-      (if (approx) similarPairsApprox(df, idCol, vecCol, lo, nCells, seed)
-       else similarPairs(df, idCol, vecCol, lo))
-        .filter(col("sim") < hi)
+    val pairs = similarPairsApprox(df, idCol, vecCol, lo).filter(col("sim") < hi)
     val sym = pairs.select(col("id_a").as("anchor_id"), col("id_b").as("neg_id"), col("sim"))
       .unionAll(pairs.select(col("id_b").as("anchor_id"), col("id_a").as("neg_id"), col("sim")))
     val w = Window.partitionBy(col("anchor_id")).orderBy(desc("sim"), asc("neg_id"))

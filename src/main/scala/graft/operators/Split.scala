@@ -388,8 +388,8 @@ object Split {
     * together and isolated docs (the overwhelming majority) behave
     * exactly like [[split]].
     *
-    * Scale shape: the pair enumeration dominates (bucketed, by
-    * construction of the enumerators); components loop only over
+    * Scale shape: the pair enumeration dominates (bucketed or
+    * cell-pruned, by construction of the enumerators); components loop only over
     * edge-participating vertices; the final label is a narrow map —
     * no extra shuffle beyond the cluster join. */
   def leakageSafeSplit(df: DataFrame, idCol: String, pairs: DataFrame,

@@ -22,11 +22,13 @@ import graft.operators.Similarity
   * declares every pair at least 0.8-cosine-similar; Spark's only plan
   * for the non-equi condition is a nested-loop cross product scoring
   * every pair. The rule replaces it with
-  * [[Similarity.vecPairsByCosine]]: hyperplane-signature cells over
-  * both sides' distinct vectors, triangle-inequality pruning of cell
-  * pairs, exact cosine verify on survivors (identical output — the
-  * bound is loss-free and NaN pairs are enumerated out-of-band), then
-  * equi-joins back to each side's full rows by vector equality. Same
+  * [[Similarity.vecPairsByCosine]] — the bipartite form of the exact
+  * cosine core under [[Similarity.similarPairsApprox]], over both
+  * sides' distinct vectors: corpus-sized hyperplane-signature cells,
+  * triangle-inequality pruning of cell pairs, exact cosine verify on
+  * survivors (identical output — the bound is loss-free and NaN pairs
+  * are enumerated out-of-band) — then equi-joins back to each side's
+  * full rows by vector equality. Same
   * scope/safety contract as the jaccard rule: inner/cross joins,
   * foldable double threshold in (0, 1], deterministic side-separable
   * marker arguments, residual conjuncts re-applied, bail-out unless

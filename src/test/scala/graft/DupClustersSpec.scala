@@ -120,7 +120,7 @@ class DupClustersSpec extends AnyFunSuite {
 
   test("components of the embedding pair graph agree with a driver-side union-find") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val pairs = Similarity.similarPairsApprox(emb, "vec_id", "embedding", t = 0.4, nCells = 4)
+    val pairs = Similarity.similarPairsInCells(emb, "vec_id", "embedding", t = 0.4, nCells = 4)
     val edges = pairs.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     val ids = emb.select("vec_id").as[Long].collect()
     // reference union-find on the driver (test-only)

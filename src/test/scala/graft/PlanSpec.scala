@@ -191,7 +191,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("cell-pruned pair join: allowlist broadcast + hash equi-join, data sides never cartesian") {
     val df = operators.Similarity.similarPairsApprox(
-      Tables.embeddings(spark, dir), "vec_id", "embedding", t = 0.4, nCells = 8)
+      Tables.embeddings(spark, dir), "vec_id", "embedding", t = 0.4)
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // the (row × allowlist) expansion is a broadcast of ≤ nCells² ints;

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +10,17 @@ import graft.operators.Similarity
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  /** Exact reference for embeddingDedup: drop every id_b of the
+    * similarPairs cross join. */
+  private def crossJoinDedupIds(df: DataFrame, t: Double): Set[Long] = {
+    val dup = Similarity.similarPairs(
+        df.withColumn("embedding", col("embedding").cast("array<double>")),
+        "vec_id", "embedding", t)
+      .select(col("id_b").as("vec_id"))
+    df.join(dup, Seq("vec_id"), "left_anti")
+      .select("vec_id").collect().map(_.getLong(0)).toSet
+  }
 
   test("cosine: orthogonal 0, identical 1, opposite -1, zero-vector 0") {
     val df = Seq(
@@ -90,10 +103,7 @@ class SimilaritySpec extends AnyFunSuite {
     // matches the exact global dedup here, because every qualifying
     // pair is bucket-co-located on this fixture
     val cleanDf = clean.toDF("vec_id", "embedding")
-    val exact = Dedup.embeddingDedup(cleanDf, "vec_id", "embedding",
-        threshold = 0.95, exact = true)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(kept - 98L - 99L === exact)
+    assert(kept - 98L - 99L === crossJoinDedupIds(cleanDf, 0.95))
 
     val again = Dedup.semanticDedup(df, "vec_id", "embedding", eps = 0.05, nCells = 4)
       .select("vec_id").collect().map(_.getLong(0)).toSet
@@ -185,15 +195,25 @@ class SimilaritySpec extends AnyFunSuite {
     // k-limit holds per anchor
     assert(byAnchor.values.forall(_.length <= 5))
 
-    // approx path is output-identical on the real fixture
+    // the cell-pruned path is output-identical to the band + window
+    // over the similarPairs cross join on the real fixture
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .withColumn("embedding", col("embedding").cast("array<double>"))
       .filter(!exists(col("embedding"), x => isnan(x)))
-    def run(a: Boolean) = Similarity.hardNegatives(emb, "vec_id", "embedding",
-        lo = 0.3, hi = 0.8, k = 5, approx = a)
+    val got = Similarity.hardNegatives(emb, "vec_id", "embedding", lo = 0.3, hi = 0.8, k = 5)
       .select("anchor_id", "neg_id", "sim", "rank")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(run(true) === run(false))
+    val band = Similarity.similarPairs(emb, "vec_id", "embedding", t = 0.3)
+      .filter(col("sim") < 0.8)
+    val both = band.select(col("id_a").as("anchor_id"), col("id_b").as("neg_id"), col("sim"))
+      .unionAll(band.select(col("id_b").as("anchor_id"), col("id_a").as("neg_id"), col("sim")))
+    val reference = both
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("anchor_id")).orderBy(desc("sim"), asc("neg_id"))))
+      .filter(col("rank") <= 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
+    assert(reference.nonEmpty)
+    assert(got === reference)
   }
 
   test("hardNegativesAnn: subset of the exact band, same sims, coarse-bucket recall") {
@@ -240,12 +260,12 @@ class SimilaritySpec extends AnyFunSuite {
       .withColumn("embedding", col("embedding").cast("array<double>"))
     val exact = Similarity.similarPairs(emb, "vec_id", "embedding", t = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val pruned = Similarity.similarPairsApprox(emb, "vec_id", "embedding", t = 0.4, nCells = 8)
+    val pruned = Similarity.similarPairsInCells(emb, "vec_id", "embedding", t = 0.4, nCells = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(exact.nonEmpty, "fixture should contain at least one qualifying pair")
     assert(pruned === exact, "cell pruning must be loss-free (exact-output guarantee)")
-    // auto-sized cells (nCells <= 0, the default) are a cost knob only:
-    // identical output through a different cell partition
+    // corpus-sized cells (similarPairsApprox itself) are a cost choice
+    // only: identical output through a different cell partition
     val auto = Similarity.similarPairsApprox(emb, "vec_id", "embedding", t = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(auto === exact, "auto-sized cells must preserve the exact output")
@@ -273,14 +293,17 @@ class SimilaritySpec extends AnyFunSuite {
     val v = Array.tabulate(8)(i => 0.5 + 0.1 * i)
     val vNear = v.map(_ + 1e-3)
     val vNaN = v.clone(); vNaN(3) = Double.NaN
-    val df = Seq(
-      (1L, v.toSeq), (2L, vNear.toSeq), (3L, vNaN.toSeq)
+    // a null vector never pairs (its similarity is null), and the
+    // quarantine drops it before counting: it is neither a vector nor
+    // a dirty one in the metric pair
+    val df = Seq[(Long, Option[Seq[Double]])](
+      (1L, Some(v.toSeq)), (2L, Some(vNear.toSeq)), (3L, Some(vNaN.toSeq)), (4L, None)
     ).toDF("vec_id", "embedding")
     val exact = Similarity.similarPairs(df, "vec_id", "embedding", t = 0.9)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact === Set((1L, 2L), (1L, 3L), (2L, 3L)),
       s"exact baseline keeps NaN pairs: $exact")
-    val pruned = Similarity.similarPairsApprox(df, "vec_id", "embedding", t = 0.9, nCells = 4)
+    val pruned = Similarity.similarPairsInCells(df, "vec_id", "embedding", t = 0.9, nCells = 4)
     // the action must run on `pruned` ITSELF: observed metrics live on
     // the executed QueryExecution, not on derived datasets' plans
     val prunedPairs = pruned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -311,13 +334,13 @@ class SimilaritySpec extends AnyFunSuite {
     val rows = (0L until 100L).map(i =>
       (i, if (i % 2 == 0) jitter(c1) else jitter(c2)))
     val df = rows.toDF("vec_id", "embedding")
-    val (_, allowed) = Similarity.cellPartition(df, "vec_id", "embedding",
-      t = 0.9, nCells = 8, seed = 42L)
+    val allowed = Similarity.cellPartition(
+      df.select(col("embedding").cast("array<double>").as("__v")), t = 0.9, nCells = 8)
     assert(allowed.size < 8 * 8,
       s"clustered data must prune some of the 64 cell pairs, got ${allowed.size}")
     val exact = Similarity.similarPairs(df, "vec_id", "embedding", t = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pruned = Similarity.similarPairsApprox(df, "vec_id", "embedding", t = 0.9, nCells = 8)
+    val pruned = Similarity.similarPairsInCells(df, "vec_id", "embedding", t = 0.9, nCells = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
     assert(pruned === exact)
@@ -326,11 +349,9 @@ class SimilaritySpec extends AnyFunSuite {
   test("embeddingDedup pruned default matches exact cross-join path") {
     import graft.operators.Dedup
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val viaPruned = Dedup.embeddingDedup(emb, "vec_id", "embedding", threshold = 0.4, nCells = 8)
+    val viaPruned = Dedup.embeddingDedup(emb, "vec_id", "embedding", threshold = 0.4)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val viaExact = Dedup.embeddingDedup(emb, "vec_id", "embedding", threshold = 0.4, exact = true)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(viaPruned === viaExact)
+    assert(viaPruned === crossJoinDedupIds(emb, 0.4))
     assert(viaPruned.size < 500, "threshold 0.4 should drop at least one near-pair member")
   }
 

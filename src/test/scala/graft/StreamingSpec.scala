@@ -183,7 +183,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("semantic dedup stream drops full chains like the batch operator (a~b~c, a≁c)") {
-    import graft.operators.Dedup
+    import graft.operators.Similarity
     // cos(a,b) = cos(b,c) = 0.96 >= 0.95, cos(a,c) = 0.8432 < 0.95:
     // the batch contract drops a row similar to ANY lower-id mate,
     // dropped or not — so b AND c go. A stream comparing only against
@@ -194,10 +194,12 @@ class StreamingSpec extends AnyFunSuite {
     val out = StreamOps.semanticDedupStream(rows.toDS(), eps = 0.05)
       .collect().map(d => d.id -> d.isDuplicate).toMap
     assert(!out(1L) && out(2L) && out(3L), s"chain must drop b and c: $out")
-    // the global batch contract on the same vectors agrees
-    val batchKept = Dedup.embeddingDedup(
-        Seq((1L, at(0)), (2L, at(1)), (3L, at(2))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", threshold = 0.95, exact = true)
+    // the global batch contract on the same vectors agrees: a
+    // left_anti of every id_b of the exact similarPairs cross join
+    val vecs = Seq((1L, at(0)), (2L, at(1)), (3L, at(2))).toDF("vec_id", "embedding")
+    val dup = Similarity.similarPairs(vecs, "vec_id", "embedding", t = 0.95)
+      .select(col("id_b").as("vec_id"))
+    val batchKept = vecs.join(dup, Seq("vec_id"), "left_anti")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(batchKept === Set(1L))
   }
