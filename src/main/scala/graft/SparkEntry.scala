@@ -1109,7 +1109,8 @@ object SparkEntry {
       // the signature is the exported seeded state; the oracle replays
       // the ALL-PAIRS Hamming-≤-3 + keep-lowest-id anti-join over it
       // (the pigeonhole banding GUARANTEES the engine's pair set equals
-      // the brute-force set, so the replay is exact — see simhashPairs)
+      // the brute-force set, so the replay is exact — see
+      // Dedup.hammingPairsValues)
       docs.select(col("doc_id"), Dedup.simhashSignature(col("text")).as("sig"))
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q72_sigs")
       Dedup.simhashNearDedup(docs, "doc_id", col("text"),
@@ -2189,7 +2190,7 @@ object SparkEntry {
       Images.imageSignatures(imgs, "doc_id", col("content"))
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q141_sigs")
       val sigs = s.read.parquet(s"${stateDir(dir)}/q141_sigs")
-      val dupIds = Images.nearDupPairs(sigs, "doc_id", "dhash", maxHamming = 8)
+      val dupIds = Dedup.hammingNearDupPairs(sigs, "doc_id", "dhash", maxHamming = 8)
         .select(col("id_b").as("doc_id")).distinct()
       sigs.select("doc_id", "decoded", "width", "height")
         .join(dupIds, Seq("doc_id"), "left_anti")

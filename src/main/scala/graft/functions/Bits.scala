@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared 64-bit kernels with ONE definition each:
@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *    fixtures key their pixel/sample PRFs on
   *    ([[graft.operators.Images.syntheticPng]] and friends);
   *  - the pigeonhole Hamming band layout every 64-bit signature
-  *    family builds and probes with — SimHash pairs, image/audio
-  *    perceptual-hash joins, the persisted Hamming state
+  *    family builds and probes with — the Hamming pair join
+  *    ([[graft.operators.Dedup.hammingPairsValues]], behind SimHash,
+  *    image, audio and video pairs), the persisted Hamming state
   *    ([[graft.operators.Incremental.writeHammingState]]), the
   *    driver-built blocklist index
   *    ([[graft.operators.Dedup.hammingIndex]]) and its codegen probe
@@ -115,46 +116,26 @@ object Bits {
     out
   }
 
-  /** Column form of [[packedBands]] — explode it and unpack with
-    * [[unpackBand]]/[[unpackBucket]]. The probe expansion is enabled
-    * HERE, from (maxHamming, nBands): flips are REQUIRED for
-    * exactness exactly when the layout has fewer bands than the exact
-    * `maxHamming + 1` (the ≤ 1-error-band guarantee needs the probe
-    * side to reach one flip away) — callers say which SIDE probes,
-    * never whether the layout needs it. */
-  def hammingBandCol(sig: Column, maxHamming: Int, nBands: Int,
-      probeSide: Boolean): Column =
-    text.expr2col(HammingBands(text.col2expr(sig.cast("long")), nBands,
-      probeSide && nBands < maxHamming + 1))
-
-  def unpackBand(packed: Column): Column =
-    shiftrightunsigned(packed, 56).cast("int")
-
-  def unpackBucket(packed: Column): Column =
-    packed.bitwiseAND(lit((1L << 56) - 1))
-
-  /** The full band decomposition of a signature Column — one
-    * `struct(band, bucket)` per band. Bit-identical to [[bandOfK]]
-    * (strided). Kept for callers that band and verify within one
-    * function (e.g. SimHash pairs); the heavy Hamming joins use
-    * [[hammingBandCol]]. */
-  def bandStructs(sig: Column, maxHamming: Int): Seq[Column] = {
+  /** The band rows of `df`'s 64-bit signature column `sig` under the
+    * [[joinBands]] layout: one row per packed (band, bucket) of
+    * [[packedBands]], carrying `carry` (names of `df`) followed by
+    * `band` INT and `bucket` BIGINT. The one definition every banded
+    * Hamming join and the persisted Hamming state build and probe
+    * with. `probeSide` marks the side that emits single-bit bucket
+    * flips; they are emitted only when the layout needs them (fewer
+    * bands than the exact `maxHamming + 1`), so on the exact layout
+    * both sides band identically. A null signature yields no rows. */
+  private[graft] def bandRows(df: DataFrame, sig: String, maxHamming: Int,
+      probeSide: Boolean, carry: Seq[String]): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 32)")
-    bandStructsK(sig, maxHamming + 1)
+    val nBands = joinBands(maxHamming)
+    val bands = text.expr2col(HammingBands(text.col2expr(col(sig).cast("long")),
+      nBands, probeSide && nBands < maxHamming + 1))
+    val kept = carry.map(col)
+    df.select(kept :+ explode(bands).as("__e"): _*)
+      .select(kept ++ Seq(shiftrightunsigned(col("__e"), 56).cast("int").as("band"),
+        col("__e").bitwiseAND(lit((1L << 56) - 1)).as("bucket")): _*)
   }
-
-  /** [[bandStructs]] generalized to any band count (strided gather,
-    * expressed as bit-select/shift/or — fine for the SMALL band
-    * counts its callers use, but prefer [[hammingBandCol]] in heavy
-    * paths). */
-  def bandStructsK(sig: Column, nBands: Int): Seq[Column] =
-    (0 until nBands).map { b =>
-      val w = bandWidthK(b, nBands)
-      val bucket = (0 until w).map { i =>
-        shiftleft(shiftrightunsigned(sig, b + i * nBands).bitwiseAND(lit(1L)), i)
-      }.reduce(_.bitwiseOR(_))
-      struct(lit(b).as("band"), bucket.as("bucket"))
-    }
 
   /** Smallest band count whose per-band error bound is ≤ 1 under
     * `maxHamming` (nBands · 2 > maxHamming) — the band count the

@@ -400,94 +400,35 @@ object Dedup {
       .drop("__sig")
   }
 
-  /** Candidate near-dup pairs within a TRUE Hamming-distance budget on
-    * the 64-bit SimHash — [[simhashDedup]] only groups exact signature
-    * equality, which misses the near-dups SimHash exists to find (a
-    * one-word edit flips a few signature bits).
-    *
-    * Pigeonhole banding: split the 64 bits into `maxHamming + 1`
-    * strided bands ([[graft.functions.Bits]] — bit entropy is uneven
-    * in real signatures, so contiguous ranges skew); two signatures
-    * within distance `maxHamming`
-    * MUST agree exactly on at least one band (at most `maxHamming`
-    * bands can contain a differing bit), so an equi-join per band finds
-    * every qualifying pair — candidates are then verified with the
-    * exact popcount `bit_count(a ^ b) <= maxHamming`. Unlike MinHash
-    * banding this is a GUARANTEE, not a probability: output pairs are
-    * exactly the pairs within the Hamming budget (of the token-set
-    * signature — the semantic approximation lives in SimHash itself).
-    *
-    * Scale shape mirrors [[minhashCandidates]]: one narrow signature
-    * map, explode × (k+1) bands of plain longs (no arrays cross any
-    * exchange — the 8-byte signature rides along), hash self-join per
-    * band, popcount verify at collision time. Near-identical
-    * boilerplate floods a band bucket; buckets over `maxBucketSize`
-    * degrade to star verification against the bucket's min-id member
-    * (B−1 pairs instead of B², same cap rationale as the MinHash path:
-    * a near-clique's members all verify against the min). */
+  /** Near-dup pairs `(id_a < id_b)` within a TRUE Hamming budget on
+    * the 64-bit SimHash: [[hammingNearDupPairs]] over
+    * [[simhashSignature]], projected to the id pair. [[simhashDedup]]
+    * only groups exact signature equality, which misses the near-dups
+    * SimHash exists to find (a one-word edit flips a few signature
+    * bits). Exact: the pigeonhole banding never misses a within-budget
+    * pair and the popcount verify admits nothing else (the semantic
+    * approximation lives in SimHash itself). Near-identical
+    * boilerplate costs one signature value, however many rows carry
+    * it. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: Column,
-      maxHamming: Int = 3, maxBucketSize: Int = 4096): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 32)")
-    val sigDf = spreadWide(df).select(col(idCol),
-      simhashSignature(textCol).as("__sig"))
-    // exact maxHamming+1 layout on BOTH sides (this self-join reuses
-    // one banded frame, so the asymmetric multi-probe form doesn't
-    // fit; at the default budget 3 the exact layout is already the
-    // wide one) — native kernel, not a per-bit Column gather
-    val banded = sigDf
-      .select(col(idCol), col("__sig"),
-        explode(graft.functions.Bits.hammingBandCol(col("__sig"),
-          maxHamming, maxHamming + 1, probeSide = false)).as("__e"))
-      .select(col(idCol), col("__sig"),
-        graft.functions.Bits.unpackBand(col("__e")).as("band"),
-        graft.functions.Bits.unpackBucket(col("__e")).as("bucket"))
-    // one window over the (band, bucket) exchange attaches each
-    // bucket's size, min id and the min id's signature — the
-    // candidatesFromSig plan: small buckets self-join on its output
-    // with no further exchange, oversized ones star without a join
-    val bucket = Window.partitionBy(col("band"), col("bucket"))
-    val tagged = banded
-      .withColumn("__bsz", count(lit(1)).over(bucket))
-      .withColumn("__bmin", min(col(idCol)).over(bucket))
-      .withColumn("__bminsig", min_by(col("__sig"), col(idCol)).over(bucket))
-    def withinBudget(x: Column, y: Column): Column =
-      bit_count(x.bitwiseXOR(y)) <= maxHamming
-    val small = tagged.filter(col("__bsz") <= maxBucketSize)
-      .select(col(idCol), col("__sig"), col("band"), col("bucket"))
-    val smallPairs = small.as("l").join(small.as("r"), Seq("band", "bucket"))
-      .filter(col(s"l.$idCol") < col(s"r.$idCol") &&
-        withinBudget(col("l.__sig"), col("r.__sig")))
-      .select(col(s"l.$idCol").as("id_a"), col(s"r.$idCol").as("id_b"))
-    val bigPairs = tagged
-      .filter(col("__bsz") > maxBucketSize && col(idCol) =!= col("__bmin") &&
-        withinBudget(col("__sig"), col("__bminsig")))
-      .select(col("__bmin").as("id_a"), col(idCol).as("id_b"))
-    // the same pair collides in up to nBands bands → distinct
-    smallPairs.union(bigPairs).distinct()
-  }
+      maxHamming: Int = 3): DataFrame =
+    // spread before signing: the signature map is the heavy narrow step
+    hammingIdPairs(spreadWide(df).select(col(idCol), simhashSignature(textCol).as("__sig")),
+        idCol, "__sig", maxHamming, Nil, spread = false)
+      .select(col("id_a"), col("id_b"))
+      .distinct()
 
-  /** DISTINCT 64-bit signature VALUE pairs (__ham_sa, __ham_sb) within a true
-    * Hamming budget across two frames — the enumerator behind
-    * [[graft.plans.HammingJoinRewrite]], which joins the value pairs
-    * back to each side's rows by signature equality (the
-    * vecPairsByCosine shape). EXACT: pigeonhole banding over
-    * `maxHamming + 1` bands guarantees every qualifying pair collides
-    * in some band, and the popcount verify admits nothing else — no
-    * star cap here, because the rewrite's contract is identical
-    * output, not best-effort dedup. Null signatures never pair (the
-    * theta-join predicate is null on them too). `strict` verifies
-    * `< maxHamming` instead of `<=` while banding at the same width
-    * (a strictly-smaller distance is also ≤). */
   /** Near-duplicate id pairs over ANY precomputed 64-bit signature
     * frame `(<idCol>, <sigCol>)`: every (id_a < id_b, dist) with
     * popcount(sig_a XOR sig_b) ≤ maxHamming — EXACT output (the
     * pigeonhole banding never misses a within-budget pair). Null
-    * signatures never pair. Value-level banding + id re-attach, so
-    * duplicate signature VALUES cost one bucket row each regardless
-    * of multiplicity — a million byte-identical payloads are one
-    * value row, not a 10¹²-pair bucket. The shared engine under the
-    * image (aHash/dHash, [[Images.nearDupPairs]]) and audio
-    * ([[Audio]] energy-contour hash) perceptual-dedup families.
+    * signatures never pair. Value-level banding + id re-attach
+    * ([[hammingPairsValues]]), so duplicate signature VALUES cost one
+    * bucket row each regardless of multiplicity — a million
+    * byte-identical payloads are one value row, not a 10¹²-pair
+    * bucket. The shared engine under the image (aHash/dHash,
+    * [[Images.imageNearDedup]]) and audio ([[Audio]] energy-contour
+    * hash) perceptual-dedup families.
     *
     * '''`shardCols` — the >10⁶-signature escape hatch.''' The batch
     * self-join's candidate mass is quadratic in DISTINCT signatures
@@ -503,30 +444,42 @@ object Dedup {
     * (the groupBy convention, via null-safe struct equality) — a raw
     * equi-join would silently exempt null-shard rows from dedup. */
   def hammingNearDupPairs(sigs: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int, shardCols: Seq[String] = Nil): DataFrame = {
-    val sharded = shardCols.nonEmpty
-    // the SAME struct construction hammingPairsValues packs its
-    // `__shard` output with — identical types, so the re-attach joins
-    // below key on it directly (null-safe by struct equality)
-    def shardKey = struct(shardCols.map(col): _*).as("__shard")
-    val ids = sigs
-      .select((col(idCol) +: col(sigCol) +: shardCols.map(col)): _*)
-      .filter(col(sigCol).isNotNull)
-    val valPairs = hammingPairsValues(ids, col(sigCol), ids, col(sigCol),
-      maxHamming, strict = false, shardCols)
-    val attachKeysA = "__ham_sa" +: (if (sharded) Seq("__shard") else Nil)
-    val attachKeysB = "__ham_sb" +: (if (sharded) Seq("__shard") else Nil)
-    valPairs
-      .join(ids.select((col(idCol).as("id_a") +:
-        col(sigCol).as("__ham_sa") +:
-        (if (sharded) Seq(shardKey) else Nil)): _*), attachKeysA)
-      .join(ids.select((col(idCol).as("id_b") +:
-        col(sigCol).as("__ham_sb") +:
-        (if (sharded) Seq(shardKey) else Nil)): _*), attachKeysB)
-      .filter(col("id_a") < col("id_b"))
+      maxHamming: Int, shardCols: Seq[String] = Nil): DataFrame =
+    hammingIdPairs(sigs, idCol, sigCol, maxHamming, shardCols, spread = true)
       .select(col("id_a"), col("id_b"),
         bit_count(col("__ham_sa").bitwiseXOR(col("__ham_sb"))).as("dist"))
       .distinct()
+
+  /** The id pairs behind every batch Hamming self join: value pairs
+    * from [[hammingPairsValues]] with ids re-attached on both sides by
+    * (shard, signature). Rows `(id_a < id_b, __ham_sa, __ham_sb[,
+    * __shard])`, not deduplicated — callers project and distinct.
+    * `spread` runs [[spreadWide]] on the values' input (off when the
+    * caller spread before computing the signature). */
+  private[graft] def hammingIdPairs(sigs: DataFrame, idCol: String, sigCol: String,
+      maxHamming: Int, shardCols: Seq[String], spread: Boolean): DataFrame = {
+    val sharded = shardCols.nonEmpty
+    val ids = sigs
+      .select((col(idCol) +: col(sigCol) +: shardCols.map(col)): _*)
+      .filter(col(sigCol).isNotNull)
+    val values = if (spread) spreadWide(ids) else ids
+    val valPairs = hammingPairsValues(values, col(sigCol), values, col(sigCol),
+      maxHamming, strict = false, shardCols).as("__p")
+    // both re-attach sides are ONE plan keyed the same way, so the self
+    // join shuffles it once (ReusedExchange); the `__shard` struct is
+    // built as hammingPairsValues builds it (null-safe by struct equality)
+    val side = ids.select((col(idCol).as("__ham_id") +: col(sigCol).cast("long").as("__ham_v") +:
+      (if (sharded) Seq(struct(shardCols.map(col): _*).as("__shard")) else Nil)): _*)
+    def attach(s: String, sig: String): Column =
+      ((col(s"__p.$sig") === col(s"$s.__ham_v")) +:
+        (if (sharded) Seq(col("__p.__shard") === col(s"$s.__shard")) else Nil)).reduce(_ && _)
+    valPairs
+      .join(side.as("__a"), attach("__a", "__ham_sa"))
+      .join(side.as("__b"), attach("__b", "__ham_sb"))
+      .select((Seq(col("__a.__ham_id").as("id_a"), col("__b.__ham_id").as("id_b"),
+        col("__p.__ham_sa").as("__ham_sa"), col("__p.__ham_sb").as("__ham_sb")) ++
+        (if (sharded) Seq(col("__p.__shard").as("__shard")) else Nil)): _*)
+      .filter(col("id_a") < col("id_b"))
   }
 
   /** Driver-side pigeonhole index over a BOUNDED 64-bit signature set
@@ -596,60 +549,52 @@ object Dedup {
       graft.functions.text.col2expr(sig.cast("long")),
       index.maxHamming, index.buckets, index.sigs))
 
-  /** Value-level banded Hamming join. Band layout comes from
-    * [[graft.functions.Bits.joinBands]]: the exact `maxHamming + 1`
-    * layout at small budgets; at `maxHamming ≥ 6` (where exact-layout
-    * buckets collapse to ≤ 9 bits and the bucket join's candidate
-    * mass goes n²·k/2⁹ — the measured 16×-wall-at-10×-docs shape) the
-    * 1-error multi-probe layout: LEFT banded exactly, RIGHT emitting
-    * each band bucket plus its single-bit flips. Both are EXACT — a
-    * within-budget pair shares an exact band, or (probe layout, by
-    * `probeBands`'s pigeonhole) a band with ≤ 1 differing bit that
-    * one flip reaches. */
+  /** DISTINCT 64-bit signature VALUE pairs `(__ham_sa, __ham_sb[,
+    * __shard])` within a true Hamming budget across two frames — the
+    * one Hamming pair enumerator: [[hammingIdPairs]] (SimHash, image,
+    * audio and video pairs) re-attaches ids to it, and
+    * [[graft.plans.HammingJoinRewrite]] joins the value pairs back to
+    * each side's rows by signature equality. Each side's signatures
+    * are `distinct()`ed per (shard, value) before banding, so a
+    * repeated signature is one bucket row however many rows carry it:
+    * that is the guard against flooded buckets. Band layout
+    * [[graft.functions.Bits.bandRows]]: the exact `maxHamming + 1`
+    * layout at small budgets, the 1-error multi-probe layout (the
+    * right side emitting single-bit bucket flips) at `maxHamming ≥ 6`.
+    * EXACT either way, and the popcount verify admits nothing else.
+    * Null signatures never pair. `strict` verifies `< maxHamming`
+    * instead of `<=` at the same banding width. `shardCols` pack into
+    * ONE struct key: Spark struct equality compares fields null-safely,
+    * so a NULL shard value forms a real group (the groupBy convention)
+    * instead of silently exempting its rows from dedup the way a raw
+    * equi-join on a nullable column would. Logs the layout at WARN. */
   private[graft] def hammingPairsValues(
       ldf: DataFrame, lsig: Column,
       rdf: DataFrame, rsig: Column,
       maxHamming: Int, strict: Boolean = false,
       shardCols: Seq[String] = Nil): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 32)")
-    val nBands = graft.functions.Bits.joinBands(maxHamming)
     val sharded = shardCols.nonEmpty
-    // shard values are packed into ONE non-null struct key: Spark
-    // struct equality compares fields with null-safe semantics, so a
-    // NULL shard value forms a real group (the groupBy convention)
-    // instead of silently exempting its rows from dedup the way a
-    // raw equi-join on a nullable column would — silent under-dedup
-    // is the one failure a dedup knob must not have. Output carries
-    // `__shard` when sharded (callers re-attach ids by it).
-    def banded(df: DataFrame, sig: Column, out: String,
-        probe: Boolean): DataFrame = {
-      // value-level dedup per (shard, sig): a signature re-occurring
-      // across shards is one value row PER SHARD — the shard is part
-      // of the value's identity once it joins the band key
-      val keyed =
-        if (sharded)
-          spreadWide(df).select(struct(shardCols.map(col): _*).as("__shard"),
-            sig.cast("long").as(out))
-        else spreadWide(df).select(sig.cast("long").as(out))
-      val keys = if (sharded) Seq(col("__shard")) else Nil
-      val base = keyed.filter(col(out).isNotNull).distinct()
-      base.select((keys :+ col(out) :+
-          explode(graft.functions.Bits.hammingBandCol(
-            col(out), maxHamming, nBands, probe)).as("__e")): _*)
-        .select((keys :+ col(out) :+
-          graft.functions.Bits.unpackBand(col("__e")).as("band") :+
-          graft.functions.Bits.unpackBucket(col("__e")).as("bucket")): _*)
+    val shard = if (sharded) Seq("__shard") else Nil
+    // both sides name their values alike, so a self join's distinct
+    // values (and, on the exact layout, its band rows) are one plan that
+    // shuffles once (ReusedExchange)
+    def banded(df: DataFrame, sig: Column, probe: Boolean): DataFrame = {
+      val keyed = df.select(((if (sharded) Seq(struct(shardCols.map(col): _*).as("__shard"))
+        else Nil) :+ sig.cast("long").as("__ham_s")): _*)
+      graft.functions.Bits.bandRows(keyed.filter(col("__ham_s").isNotNull).distinct(), "__ham_s",
+        maxHamming, probe, shard :+ "__ham_s")
     }
-    val verify =
-      if (strict) bit_count(col("__ham_sa").bitwiseXOR(col("__ham_sb"))) < maxHamming
-      else bit_count(col("__ham_sa").bitwiseXOR(col("__ham_sb"))) <= maxHamming
-    val joinKeys = (if (sharded) Seq("__shard") else Nil) ++ Seq("band", "bucket")
-    val outCols = (if (sharded) Seq(col("__shard")) else Nil) :+
-      col("__ham_sa") :+ col("__ham_sb")
-    banded(ldf, lsig, "__ham_sa", probe = false)
-      .join(banded(rdf, rsig, "__ham_sb", probe = true), joinKeys)
-      .filter(verify)
-      .select(outCols: _*)
+    val l = banded(ldf, lsig, probe = false).as("__l")
+    val r = banded(rdf, rsig, probe = true).as("__r")
+    val nBands = graft.functions.Bits.joinBands(maxHamming)
+    log.warn(s"hamming pair join: maxHamming=$maxHamming, " +
+      (if (nBands == maxHamming + 1) s"exact $nBands" else s"1-error probe $nBands") +
+      s" bands, sharded=$sharded")
+    val dist = bit_count(col("__ham_sa").bitwiseXOR(col("__ham_sb")))
+    l.join(r, shard ++ Seq("band", "bucket"))
+      .select((shard.map(col) :+ col("__l.__ham_s").as("__ham_sa") :+
+        col("__r.__ham_s").as("__ham_sb")): _*)
+      .filter(if (strict) dist < maxHamming else dist <= maxHamming)
       .distinct()
   }
 
@@ -658,8 +603,8 @@ object Dedup {
     * [[DupClusters.clusterDedup]] instead). Removal is a left_anti on
     * ids — never a driver-side set. */
   def simhashNearDedup(df: DataFrame, idCol: String, textCol: Column,
-      maxHamming: Int = 3, maxBucketSize: Int = 4096): DataFrame = {
-    val dupIds = simhashPairs(df, idCol, textCol, maxHamming, maxBucketSize)
+      maxHamming: Int = 3): DataFrame = {
+    val dupIds = simhashPairs(df, idCol, textCol, maxHamming)
       .select(col("id_b").as(idCol)).distinct()
       .localCheckpoint(true)
     df.join(dupIds, Seq(idCol), "left_anti")

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *
   * Pipeline: decode → integer luma grayscale → area-average downscale
   * → 64-bit perceptual signature →
-  * [[Dedup.hammingPairsValues]] pigeonhole-banded Hamming join →
+  * [[Dedup.hammingNearDupPairs]] pigeonhole-banded Hamming join →
   * keep-lowest-id anti-join. Two signatures:
   *
   *  - '''aHash''' (average hash): 8×8 grayscale, bit set where the
@@ -248,15 +248,6 @@ object Images {
       .toDF().withColumnRenamed("id", idCol)
   }
 
-  /** Near-duplicate id pairs over a precomputed signature frame —
-    * delegates to [[Dedup.hammingNearDupPairs]] (value-level
-    * pigeonhole banding, EXACT pair set); kept here as the image-
-    * family entry point. Null signatures (undecoded images) never
-    * pair. */
-  def nearDupPairs(sigs: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int): DataFrame =
-    Dedup.hammingNearDupPairs(sigs, idCol, sigCol, maxHamming)
-
   /** Perceptual near-dup image dedup: decode, dHash, drop every image
     * whose signature is within `maxHamming` bits of a LOWER-id image
     * (the [[Dedup.simhashNearDedup]] contract — compared against every
@@ -266,7 +257,7 @@ object Images {
   def imageNearDedup(df: DataFrame, idCol: String, contentCol: Column,
       maxHamming: Int = 8): DataFrame = {
     val sigs = imageSignatures(df, idCol, contentCol)
-    val dupIds = nearDupPairs(sigs, idCol, "dhash", maxHamming)
+    val dupIds = Dedup.hammingNearDupPairs(sigs, idCol, "dhash", maxHamming)
       .select(col("id_b").as(idCol)).distinct()
       .localCheckpoint(true)
     df.join(dupIds, Seq(idCol), "left_anti")

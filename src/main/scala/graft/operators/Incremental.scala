@@ -820,41 +820,24 @@ object Incremental {
   // text SimHash (q72) — one state layout, one probe.
   // --------------------------------------------------------------
 
-  /** Pigeonhole bands of a 64-bit signature: `maxHamming + 1` bands
-    * so any pair within the budget agrees on ≥ 1 whole band. Rows:
-    * `(<keyCols...>, band INT, bucket BIGINT, <idCol>, sig BIGINT)`;
-    * null signatures (undecoded media) produce no rows. `keyCols`
-    * (e.g. `frame_pos` for the positional video family) ride the
-    * band key — ONE definition serves the flat and positional state
-    * families, so the under-banding guard below can never diverge
-    * between them (an under-banded layout silently misses
-    * within-budget pairs — the class of failure the `_meta` row
-    * cannot catch when write and probe agree on the same bad value). */
+  /** Pigeonhole band rows of a 64-bit signature under the
+    * [[graft.functions.Bits.bandRows]] layout. Rows: `(<keyCols...>,
+    * band INT, bucket BIGINT, <idCol>, sig BIGINT)`; null signatures
+    * (undecoded media) produce no rows. `keyCols` (e.g. `frame_pos`
+    * for the positional video family) ride the band key — ONE
+    * definition serves the flat and positional state families. */
   private def hammingBanded(df: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int, nBands: Int, probe: Boolean,
+      maxHamming: Int, probe: Boolean,
       keyCols: Seq[String] = Nil): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 32)")
-    require(nBands == maxHamming + 1 ||
-      nBands >= graft.functions.Bits.probeBands(maxHamming),
-      s"nBands=$nBands under-bands maxHamming=$maxHamming (needs " +
-        s"${graft.functions.Bits.probeBands(maxHamming)}+ for 1-error probing)")
     val missing = keyCols.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"signature frame lacks key column(s) ${missing.mkString(",")}: " +
         df.columns.mkString(","))
     val keys = keyCols.map(col)
-    // band over the RENAMED column — referencing `sigCol` here would
-    // fail resolution for any source column not literally named "sig"
-    // (the projection below renames it away)
-    val bands = graft.functions.Bits.hammingBandCol(col("sig"), maxHamming,
-      nBands, probe)
-    df.select((keys :+ col(idCol) :+ col(sigCol).cast("long").as("sig")): _*)
+    val sigs = df.select((keys :+ col(idCol) :+ col(sigCol).cast("long").as("sig")): _*)
       .filter(col("sig").isNotNull)
-      .select((keys :+ col(idCol) :+ col("sig") :+ explode(bands).as("__e")): _*)
-      .select((keys :+
-        graft.functions.Bits.unpackBand(col("__e")).as("band") :+
-        graft.functions.Bits.unpackBucket(col("__e")).as("bucket") :+
-        col(idCol) :+ col("sig")): _*)
+    graft.functions.Bits.bandRows(sigs, "sig", maxHamming, probe, keyCols :+ idCol :+ "sig")
+      .select((keys :+ col("band") :+ col("bucket") :+ col(idCol) :+ col("sig")): _*)
   }
 
   /** Shared write/append bodies for the flat (`keyCols = Nil`) and
@@ -862,18 +845,16 @@ object Incremental {
     * banding, one meta-union, one bucket spec. */
   private def writeHammingStateKeyed(corpus: DataFrame, idCol: String,
       sigCol: String, table: String, path: String, maxHamming: Int,
-      numBuckets: Int, nBands: Int, keyCols: Seq[String],
+      numBuckets: Int, keyCols: Seq[String],
       grid: Int, sharded: Boolean = false,
       signer: Option[String] = None): Unit = {
-    val nb = resolveBands(maxHamming, nBands)
     val meta = keyCols.foldLeft(
         hammingMeta(corpus.sparkSession, idCol,
-          corpus.schema(idCol).dataType, maxHamming, nb, grid, sharded,
+          corpus.schema(idCol).dataType, maxHamming, grid, sharded,
           signer))(
       (m, k) => m.withColumn(k, lit(null).cast(corpus.schema(k).dataType)))
     writeBucketed(
-      hammingBanded(corpus, idCol, sigCol, maxHamming, nb, probe = false,
-          keyCols)
+      hammingBanded(corpus, idCol, sigCol, maxHamming, probe = false, keyCols)
         .unionByName(meta),
       table, keyCols ++ Seq("band", "bucket"), numBuckets, path = Some(path))
     // an overwrite may have changed the layout under a memoized name
@@ -882,15 +863,13 @@ object Incremental {
 
   private def appendHammingStateKeyed(batch: DataFrame, idCol: String,
       sigCol: String, table: String, maxHamming: Int, numBuckets: Int,
-      nBands: Int, keyCols: Seq[String], caller: String,
+      keyCols: Seq[String], caller: String,
       grid: Int, sharded: Boolean = false,
       signer: Option[String] = None): Unit = {
-    val nb = resolveBands(maxHamming, nBands)
-    validateHammingMeta(batch.sparkSession.table(table), maxHamming, nb,
+    validateHammingMeta(batch.sparkSession.table(table), maxHamming,
       caller, grid, sharded, signer)
     writeBucketed(
-      hammingBanded(batch, idCol, sigCol, maxHamming, nb, probe = false,
-        keyCols),
+      hammingBanded(batch, idCol, sigCol, maxHamming, probe = false, keyCols),
       table, keyCols ++ Seq("band", "bucket"), numBuckets, SaveMode.Append)
   }
 
@@ -911,10 +890,10 @@ object Incremental {
     * `maxHamming` in 16..31, `nBands` in 0..15. Tables written
     * before the shard flag existed have zeros in 40..47 and read
     * back as unsharded version-1 — no migration. */
-  private def packHammingMeta(maxHamming: Int, nBands: Int,
+  private def packHammingMeta(maxHamming: Int,
       grid: Int, sharded: Boolean): Long =
     (grid.toLong << 48) | ((if (sharded) 1L else 0L) << 40) | (1L << 32) |
-      (maxHamming.toLong << 16) | nBands.toLong
+      (maxHamming.toLong << 16) | graft.functions.Bits.joinBands(maxHamming).toLong
 
   /** 64-bit signer-identity tag from a DECLARED signer name (FNV-1a
     * over the UTF-8 bytes, finalized with mix64 — deterministic
@@ -948,10 +927,10 @@ object Incremental {
     * readers interpret as "no declared signer". */
   private def hammingMeta(spark: org.apache.spark.sql.SparkSession,
       idCol: String, idType: org.apache.spark.sql.types.DataType,
-      maxHamming: Int, nBands: Int, grid: Int,
+      maxHamming: Int, grid: Int,
       sharded: Boolean = false,
       signer: Option[String] = None): DataFrame = {
-    val packed = packHammingMeta(maxHamming, nBands, grid, sharded)
+    val packed = packHammingMeta(maxHamming, grid, sharded)
     val sigWord = signer.map { n =>
       val t = signerTag(n)
       if (t == packed) t ^ 1L else t // never collide with "unsigned"
@@ -966,8 +945,9 @@ object Incremental {
   /** Validate a state frame's `_meta` against the band layout a
     * caller is about to probe or append with. The failure mode this
     * closes is SILENT: different strides gather different buckets, so
-    * a probe issued with a `maxHamming`/`nBands` other than the
-    * write's would simply match nothing — false negatives in a dedup
+    * a probe issued at a band layout other than the write's (another
+    * `maxHamming`, or a table written at another band count) would
+    * simply match nothing — false negatives in a dedup
     * or compliance gate. Refuses (loudly) tables with no meta row:
     * both pre-layout-v1 contiguous tables and pre-meta strided tables
     * must be rebuilt once with [[writeHammingState]]. */
@@ -1010,11 +990,12 @@ object Incremental {
   }
 
   private def validateHammingMeta(state: DataFrame, maxHamming: Int,
-      nBands: Int, caller: String, grid: Int,
+      caller: String, grid: Int,
       sharded: Boolean = false,
       signer: Option[String] = None): Unit = {
+    val nBands = graft.functions.Bits.joinBands(maxHamming)
     val memoKey = (state.queryExecution.analyzed.semanticHash(),
-      packHammingMeta(maxHamming, nBands, grid, sharded) ^
+      packHammingMeta(maxHamming, grid, sharded) ^
         signer.map(signerTag).getOrElse(0L))
     if (hammingMetaMemo.contains(memoKey)) return
     val rows = state.filter(col("band") === HammingMetaBand)
@@ -1068,7 +1049,7 @@ object Incremental {
       s"$caller: state table was written with (maxHamming=$mh, " +
         s"nBands=$nb) but called with (maxHamming=$maxHamming, " +
         s"nBands=$nBands) — a mismatched band layout silently matches " +
-        "nothing; pass the written values (or rebuild the state)")
+        "nothing; pass the written maxHamming (or rebuild the state)")
     require(g == grid,
       if (g == 0 && grid > 0)
         s"$caller: positional state table carries no sampling grid — " +
@@ -1087,12 +1068,12 @@ object Incremental {
     * (band, bucket) — exactly the probe's join key, so recurring
     * batches join without a state-side exchange (the
     * [[writeBandedSignatures]] stance for 64-bit perceptual hashes).
-    * `(maxHamming, nBands)` FIX the band layout at write time and are
-    * persisted IN the table as a one-row `_meta` companion
-    * ([[hammingMeta]]) that [[appendHammingState]] and
-    * [[hammingDupIdsAgainstTable]] validate — a divergent override
+    * `maxHamming` FIXES the band layout at write time; it and the
+    * band count it implies are persisted IN the table as a one-row
+    * `_meta` companion ([[hammingMeta]]) that [[appendHammingState]]
+    * and [[hammingDupIdsAgainstTable]] validate — a divergent call
     * fails loudly instead of silently matching nothing (different
-    * strides gather different buckets). The default `nBands` is
+    * strides gather different buckets). The band count is
     * [[graft.functions.Bits.joinBands]] — at budgets ≥ 6 that is the
     * 1-error MULTI-PROBE layout (fewer, WIDER bands; the batch side
     * probes single-bit flips), because the exact `maxHamming + 1`
@@ -1106,10 +1087,10 @@ object Incremental {
     * batch-sized forever. */
   def writeHammingState(corpus: DataFrame, idCol: String, sigCol: String,
       table: String, path: String, maxHamming: Int = 8,
-      numBuckets: Int = 64, nBands: Int = -1,
+      numBuckets: Int = 64,
       signer: Option[String] = None): Unit =
     writeHammingStateKeyed(corpus, idCol, sigCol, table, path, maxHamming,
-      numBuckets, nBands, keyCols = Nil, grid = 0, sharded = false,
+      numBuckets, keyCols = Nil, grid = 0, sharded = false,
       signer = signer)
 
   /** Grow the Hamming state by a batch — same band layout, same
@@ -1122,9 +1103,9 @@ object Incremental {
     * matters. */
   def appendHammingState(batch: DataFrame, idCol: String, sigCol: String,
       table: String, maxHamming: Int = 8, numBuckets: Int = 64,
-      nBands: Int = -1, signer: Option[String] = None): Unit =
+      signer: Option[String] = None): Unit =
     appendHammingStateKeyed(batch, idCol, sigCol, table, maxHamming,
-      numBuckets, nBands, keyCols = Nil, caller = "appendHammingState",
+      numBuckets, keyCols = Nil, caller = "appendHammingState",
       grid = 0, sharded = false, signer = signer)
 
   /** Batch ids within `maxHamming` bits of ANY state signature:
@@ -1147,7 +1128,7 @@ object Incremental {
     * whose hit rate was 98%. */
   def hammingDupIdsAgainstTable(batch: DataFrame, idCol: String,
       sigCol: String, state: DataFrame, maxHamming: Int = 8,
-      nBands: Int = -1, signer: Option[String] = None): DataFrame = {
+      signer: Option[String] = None): DataFrame = {
     require(Set("band", "bucket", "sig").subsetOf(state.columns.toSet) &&
       state.columns.length <= 4,
       s"not a hamming state table (want band, bucket, sig[, <id>]): " +
@@ -1155,22 +1136,18 @@ object Incremental {
     // the _meta row is the layout contract: refuses pre-strided and
     // pre-meta tables AND any probe issued at a band layout other
     // than the write's (one filtered metadata-sized read)
-    val nb = resolveBands(maxHamming, nBands)
-    validateHammingMeta(state, maxHamming, nb, "hammingDupIdsAgainstTable",
+    validateHammingMeta(state, maxHamming, "hammingDupIdsAgainstTable",
       grid = 0, sharded = false, signer = signer)
     val st = state.filter(col("band") =!= HammingMetaBand)
       .select(col("band").as("__hb"), col("bucket").as("__hk"),
         col("sig").as("__ssig"))
-    hammingBanded(batch, idCol, sigCol, maxHamming, nb, probe = true)
+    hammingBanded(batch, idCol, sigCol, maxHamming, probe = true)
       .join(st,
         col("band") === col("__hb") && col("bucket") === col("__hk") &&
           bit_count(col("sig").bitwiseXOR(col("__ssig"))) <= maxHamming,
         "left_semi")
       .select(col(idCol)).distinct()
   }
-
-  private def resolveBands(maxHamming: Int, nBands: Int): Int =
-    if (nBands == -1) graft.functions.Bits.joinBands(maxHamming) else nBands
 
   // --------------------------------------------------------------
   // Positional Hamming state: the persisted form for SEQUENCE
@@ -1231,12 +1208,12 @@ object Incremental {
     * even starts. */
   def writeFrameHammingState(frameSigs: DataFrame, idCol: String,
       sigCol: String, table: String, path: String, maxHamming: Int = 8,
-      numBuckets: Int = 64, nBands: Int = -1, everyNth: Int,
+      numBuckets: Int = 64, everyNth: Int,
       shardCol: Option[String] = None,
       signer: Option[String] = None): Unit = {
     requireGrid(everyNth, "writeFrameHammingState")
     writeHammingStateKeyed(shardCast(frameCast(frameSigs), shardCol),
-      idCol, sigCol, table, path, maxHamming, numBuckets, nBands,
+      idCol, sigCol, table, path, maxHamming, numBuckets,
       keyCols = frameKeyCols(shardCol), grid = everyNth,
       sharded = shardCol.isDefined, signer = signer)
   }
@@ -1246,7 +1223,7 @@ object Incremental {
     * joins against rows written under another grid silently match
     * nothing. Every write declares it (persisted in the `_meta` row)
     * and every append/probe is validated against it, exactly like
-    * `(maxHamming, nBands)`. */
+    * the band layout. */
   private def requireGrid(everyNth: Int, caller: String): Unit =
     require(everyNth >= 1 && everyNth <= 0xFFFF,
       s"$caller: everyNth must be in [1, 65535], got $everyNth — the " +
@@ -1260,12 +1237,12 @@ object Incremental {
     * waves matters. */
   def appendFrameHammingState(batch: DataFrame, idCol: String,
       sigCol: String, table: String, maxHamming: Int = 8,
-      numBuckets: Int = 64, nBands: Int = -1, everyNth: Int,
+      numBuckets: Int = 64, everyNth: Int,
       shardCol: Option[String] = None,
       signer: Option[String] = None): Unit = {
     requireGrid(everyNth, "appendFrameHammingState")
     appendHammingStateKeyed(shardCast(frameCast(batch), shardCol),
-      idCol, sigCol, table, maxHamming, numBuckets, nBands,
+      idCol, sigCol, table, maxHamming, numBuckets,
       keyCols = frameKeyCols(shardCol),
       caller = "appendFrameHammingState", grid = everyNth,
       sharded = shardCol.isDefined, signer = signer)
@@ -1303,7 +1280,7 @@ object Incremental {
     * refuses loudly instead of silently matching nothing. */
   def frameHammingDupIdsAgainstTable(batch: DataFrame, idCol: String,
       sigCol: String, state: DataFrame, maxHamming: Int = 8,
-      minFrames: Int = 2, nBands: Int = -1, everyNth: Int,
+      minFrames: Int = 2, everyNth: Int,
       shardCol: Option[String] = None,
       signer: Option[String] = None): DataFrame = {
     requireGrid(everyNth, "frameHammingDupIdsAgainstTable")
@@ -1327,8 +1304,7 @@ object Incremental {
         s"hamming state table (want ${reserved.mkString(", ")}[, <id>]): " +
         state.columns.mkString(","))
     val (stateIdCol, _) = positionalStateCols(state)
-    val nb = resolveBands(maxHamming, nBands)
-    validateHammingMeta(state, maxHamming, nb,
+    validateHammingMeta(state, maxHamming,
       "frameHammingDupIdsAgainstTable", grid = everyNth,
       sharded = shardCol.isDefined, signer = signer)
     val keyCols = frameKeyCols(shardCol)
@@ -1336,7 +1312,7 @@ object Incremental {
       .select((keyCols.map(col) ++ Seq(col("band"), col("bucket"),
         col(stateIdCol).as("__idC"), col("sig").as("__ssig"))): _*)
     hammingBanded(shardCast(frameCast(batch), shardCol), idCol, sigCol,
-        maxHamming, nb, probe = true, keyCols = keyCols)
+        maxHamming, probe = true, keyCols = keyCols)
       .join(st, keyCols ++ Seq("band", "bucket"))
       .filter(bit_count(col("sig").bitwiseXOR(col("__ssig"))) <= maxHamming)
       .select(col(idCol), col("__idC"), col("frame_pos"))
@@ -1565,9 +1541,9 @@ object Incremental {
     * assert lives on [[hammingDupIdsAgainstTable]]). */
   def hammingDedupAgainstTable(batch: DataFrame, idCol: String,
       sigCol: String, state: DataFrame, maxHamming: Int = 8,
-      nBands: Int = -1, signer: Option[String] = None): DataFrame = {
+      signer: Option[String] = None): DataFrame = {
     val dupIds = hammingDupIdsAgainstTable(batch, idCol, sigCol, state,
-        maxHamming, nBands, signer)
+        maxHamming, signer)
       .localCheckpoint(true)
     batch.join(dupIds, Seq(idCol), "left_anti")
   }

@@ -312,8 +312,12 @@ object Similarity {
   /** Seed of every cosine-core cell signature: both join sides must agree. */
   private val CellSeed = 42L
 
+  /** The cell of a non-null vector. Non-nullable on purpose: a
+    * nullable join key makes Catalyst infer an `isnotnull(cell)` filter
+    * below the projection that computes the cell, which would evaluate
+    * the signature twice per vector. */
   private def cellOf(v: Column, nCells: Int): Column =
-    hyperplaneSignature(v, cellBits(nCells), CellSeed).cast("int")
+    coalesce(hyperplaneSignature(v, cellBits(nCells), CellSeed).cast("int"), lit(-1))
 
   /** The pruned cell-pair list behind [[cosineCore]] (split out so the
     * pruning is spec-testable): the SYMMETRIC cell pairs (ca, cb) over

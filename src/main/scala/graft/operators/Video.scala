@@ -26,13 +26,11 @@ import org.apache.spark.sql.functions._
   * their SAMPLED frame positions are pairwise within `maxHamming`
   * bits — re-encodes and light edits perturb frames locally, while
   * requiring agreement at the same sample position keeps unrelated
-  * clips apart. The pair enumeration is one frame-level join keyed by
-  * (frame position, Hamming band) — the [[Dedup.hammingPairsValues]]
-  * decomposition with the position folded into the band key, so the
-  * exchange carries (pos, band, bucket, id, sig) rows and the state
-  * of the art for 100 TB of video is unchanged from the text path:
-  * banded equi-join + popcount verify + per-pair frame count, no
-  * cross join anywhere. The oracle (q145) replays the whole decision
+  * clips apart. The pair enumeration is the engine's one Hamming pair
+  * join ([[Dedup.hammingPairsValues]]) with the position folded into
+  * its shard key, so the state of the art for 100 TB of video is
+  * unchanged from the text path: value-level banded equi-join +
+  * popcount verify + per-pair frame count, no cross join anywhere. The oracle (q145) replays the whole decision
   * from exported per-frame signatures.
   *
   * Scale shape: decode+sample+hash is one `mapPartitions` scan (bytes
@@ -143,66 +141,26 @@ object Video {
 
   /** Clip pairs (id_a < id_b, matched_frames) where at least
     * `minFrames` sampled positions are pairwise within `maxHamming`
-    * bits. One banded frame-level equi-join on (frame_pos, band,
-    * bucket) + popcount verify + per-pair distinct-position count —
-    * EXACT under either band layout ([[graft.functions.Bits
-    * .joinBands]]: the `maxHamming + 1` exact layout at small
-    * budgets; at budgets ≥ 6 the 1-error multi-probe layout — side
-    * "b" emits single-bit bucket flips — because 7-bit buckets make
-    * the per-position join quadratic in clips-per-corpus with a fat
-    * constant). `shardCols` (columns of `frameSigs`, constant per
-    * clip — source/day/tenant) fold into the join key exactly like
+    * bits: [[Dedup.hammingIdPairs]] over the frame signatures with
+    * `frame_pos` folded into the shard key, so frames only meet frames
+    * at their own sample position, then a per-pair distinct-position
+    * count. EXACT, like every caller of that core. `shardCols`
+    * (columns of `frameSigs`, constant per clip — source/day/tenant)
+    * join the position in the key exactly like
     * [[Dedup.hammingNearDupPairs]]'s: pairs are sought only WITHIN
     * equal shard values, bounding the residual per-(position, bucket)
     * quadratic term to each shard's clips — the >10⁶-signature
     * envelope escape for batch video self-joins. */
   def clipNearDupPairs(frameSigs: DataFrame, idCol: String,
       maxHamming: Int = 8, minFrames: Int = 2,
-      shardCols: Seq[String] = Nil): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 32)")
-    val nBands = graft.functions.Bits.joinBands(maxHamming)
-    val sharded = shardCols.nonEmpty
-    def banded(side: String, probe: Boolean): DataFrame = {
-      val sig = col(s"sig_$side")
-      val bands = graft.functions.Bits.hammingBandCol(sig, maxHamming,
-        nBands, probe)
-      val base = frameSigs
-        .select((col(idCol).as(s"id_$side") +: col("frame_pos") +:
-          col("dhash").as(s"sig_$side") +: shardCols.map(col)): _*)
-        .filter(sig.isNotNull)
-      // the shard key joins the position in the band key — pairs are
-      // sought only WITHIN equal shard values (the q148 envelope
-      // escape: bounds the per-(position, bucket) cluster to each
-      // shard's clips). Struct packing makes null shard values
-      // join-equal, like Dedup.hammingPairsValues.
-      val keyed =
-        if (sharded)
-          base.select(col(s"id_$side"), col("frame_pos"), sig,
-            struct(shardCols.map(col): _*).as("__shard"))
-        else base
-      val carry = Seq(col(s"id_$side"), col("frame_pos"), sig) ++
-        (if (sharded) Seq(col("__shard")) else Nil)
-      keyed
-        .select(carry :+ explode(bands).as("__e"): _*)
-        .select(carry ++ Seq(
-          graft.functions.Bits.unpackBand(col("__e")).as("band"),
-          graft.functions.Bits.unpackBucket(col("__e")).as("bucket")): _*)
-    }
-    // note: banded("a") and banded("b") project DIFFERENT columns, so
-    // no ReusedExchange — acceptable: the frame-sig frame is tiny
-    // relative to the clips (nSampled rows of 16 B each)
-    val joinKeys = Seq("frame_pos", "band", "bucket") ++
-      (if (sharded) Seq("__shard") else Nil)
-    banded("a", probe = false)
-      .join(banded("b", probe = true), joinKeys)
-      .filter(col("id_a") < col("id_b") &&
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))) <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("frame_pos"))
-      .distinct()
+      shardCols: Seq[String] = Nil): DataFrame =
+    Dedup.hammingIdPairs(frameSigs, idCol, "dhash", maxHamming,
+        "frame_pos" +: shardCols, spread = false)
       .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("matched_frames"))
+      // the set of matched positions, not a distinct + count: one
+      // exchange on the id pair instead of two
+      .agg(size(collect_set(col("__shard.frame_pos"))).cast("long").as("matched_frames"))
       .filter(col("matched_frames") >= minFrames)
-  }
 
   /** True when ANY sampled frame of the clip is within the index's
     * budget of a flagged still — the cross-modal decision the video
@@ -256,7 +214,7 @@ object Video {
     * sharded/shardless mix loudly. */
   def dedupAgainstState(df: DataFrame, idCol: String, contentCol: Column,
       state: DataFrame, everyNth: Int = 2, maxHamming: Int = 8,
-      minFrames: Int = 2, nBands: Int = -1,
+      minFrames: Int = 2,
       shardCol: Option[String] = None): DataFrame = {
     val sigs0 = frameSignatures(df, idCol, contentCol, everyNth)
     // the shard is clip-level metadata: re-attach by id (the content
@@ -264,7 +222,7 @@ object Video {
     val sigs = shardCol.fold(sigs0)(c =>
       sigs0.join(df.select(col(idCol), col(c)), Seq(idCol)))
     val dupIds = Incremental.frameHammingDupIdsAgainstTable(sigs, idCol,
-        "dhash", state, maxHamming, minFrames, nBands, everyNth, shardCol)
+        "dhash", state, maxHamming, minFrames, everyNth, shardCol)
       .localCheckpoint(true)
     df.join(dupIds, Seq(idCol), "left_anti")
   }

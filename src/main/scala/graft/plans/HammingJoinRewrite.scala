@@ -20,13 +20,15 @@ import graft.operators.Dedup
   *
   * — the natural way to write a near-dup signature join, which Spark
   * can only plan as a nested-loop cross product. The rule replaces it
-  * with [[Dedup.hammingPairsValues]]: distinct signature values banded
-  * into `k+1` pigeonhole slices (every pair within distance k MUST
-  * agree on one band — a guarantee, not a probability), bucket
-  * equi-join, exact popcount verify, then equi-joins back to each
-  * side's rows by signature equality. Identical output: the banding is
-  * loss-free, null signatures never pair on either path, and residual
-  * conjuncts re-apply. Scope: inner/cross joins, both signature
+  * with [[Dedup.hammingPairsValues]], the engine's one Hamming pair
+  * enumerator (the batch SimHash, image, audio and video pair joins
+  * call it too): distinct signature values banded into pigeonhole
+  * slices (every pair within distance k MUST share a band, or at
+  * k ≥ 6 a band one probed bit flip reaches — a guarantee, not a
+  * probability), bucket equi-join, exact popcount verify, then
+  * equi-joins back to each side's rows by signature equality.
+  * Identical output: the banding is loss-free, null signatures never
+  * pair on either path, and residual conjuncts re-apply. Scope: inner/cross joins, both signature
   * expressions LongType deterministic and side-separable, foldable
   * integral threshold with a budget in [0, 32) (`<=` form; `<` forms
   * verify strictly at the same banding width); the rebuilt plan must
@@ -51,9 +53,9 @@ case class HammingJoinRewrite(spark: SparkSession)
       // join's ONLY handle — with any cross-side equi conjunct Spark
       // already plans a hash/sort-merge join and the popcount is a
       // cheap post-join filter (this also keeps the rule off the
-      // engine's own banded joins, e.g. simhashPairs' (band, bucket)
-      // bucket join, whose pushed-down verify would otherwise
-      // re-match here).
+      // engine's own (band, bucket) bucket join in
+      // Dedup.hammingPairsValues, whose pushed-down verify would
+      // otherwise re-match here).
       val hasEqui = conjuncts.exists {
         case EqualTo(a, b) => crossSide(a, b, l, r)
         case EqualNullSafe(a, b) => crossSide(a, b, l, r)
@@ -131,7 +133,7 @@ case class HammingJoinRewrite(spark: SparkSession)
     val lsCol = bridge.toColumn(m.leftSig)
     val rsCol = bridge.toColumn(m.rightSig)
     val pairs = Dedup.hammingPairsValues(
-      leftDf, lsCol, rightDf, rsCol, m.k, m.strict)
+      Dedup.spreadWide(leftDf), lsCol, Dedup.spreadWide(rightDf), rsCol, m.k, m.strict)
     // right ⋈ (left ⋈ pairs) by signature equality — the
     // CosineJoinRewrite join-back shape; analyzer self-join dedup
     // regenerates ids inside the pairs copies only (output-id check

@@ -424,18 +424,18 @@ class DedupSpec extends AnyFunSuite {
       "fixture should produce at least one non-trivial near-dup pair")
   }
 
-  test("simhashNearDedup drops pair-dup higher ids; star path covers near-cliques") {
+  test("simhashNearDedup drops pair-dup higher ids; an identical clique keeps its min id") {
     val docs = hammingCorpus
     val kept = Dedup.simhashNearDedup(docs, "doc_id", col("text"), maxHamming = 3)
       .select("doc_id").as[Long].collect().toSet
     assert(kept.contains(1L) && kept.contains(5L))
     assert(!kept.contains(2L), "exact dup of 1 must drop")
-    // force every bucket through the oversized star path on a clique
+    // eight rows, one signature value: value-level dedup bands the
+    // value once and the id re-attach still emits every (0, i) pair
     val clique = Seq.tabulate(8)(i => (i.toLong, "same text for every row here")).toDF("doc_id", "text")
-    val keptStar = Dedup.simhashNearDedup(clique, "doc_id", col("text"),
-        maxHamming = 3, maxBucketSize = 1)
+    val keptClique = Dedup.simhashNearDedup(clique, "doc_id", col("text"), maxHamming = 3)
       .select("doc_id").as[Long].collect().toSet
-    assert(keptStar === Set(0L), s"star verification must still resolve the clique: $keptStar")
+    assert(keptClique === Set(0L), s"the clique must collapse to its min id: $keptClique")
   }
 
   test("collapseRepeatedLines: only ADJACENT repeats collapse; reappearances stay") {

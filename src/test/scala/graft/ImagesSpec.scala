@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Images
+import graft.operators.{Dedup, Images}
 
 /** Real image decode (javax.imageio) + perceptual-hash near-dup:
   * decoded pixels round-trip PNG exactly, planted 3×3-patch variants
@@ -98,7 +98,7 @@ class ImagesSpec extends AnyFunSuite {
       (ia, sa) <- vals; (ib, sb) <- vals
       if ia < ib && ham(sa, sb) <= 8
     } yield (ia, ib)).toSet
-    val engine = Images.nearDupPairs(sigs, "doc_id", "dhash", maxHamming = 8)
+    val engine = Dedup.hammingNearDupPairs(sigs, "doc_id", "dhash", maxHamming = 8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(engine == brute)
     // every planted (scene-base, variant) pair is recalled

@@ -884,16 +884,6 @@ class IncrementalSpec extends AnyFunSuite {
           "t_fhamm", maxHamming = 8, numBuckets = 8, everyNth = 1)
       }
       assert(eGridApp.getMessage.contains("everyNth"))
-      // UNDER-BANDED explicit nBands refuses on the positional family
-      // exactly like the flat one (regression: the positional copy
-      // once lacked the guard, and a write+probe AGREEING on a bad
-      // value sails past the _meta check → silent false negatives)
-      val eUnder = intercept[IllegalArgumentException] {
-        Incremental.writeFrameHammingState(cor, "doc_id", "dhash",
-          "t_fhamm_bad", tmp("graft_fhamm_bad"), maxHamming = 8,
-          numBuckets = 4, nBands = 3, everyNth = 2)
-      }
-      assert(eUnder.getMessage.contains("under-bands"))
     } finally {
       spark.sql("DROP TABLE IF EXISTS t_fhamm")
       sigs.unpersist(blocking = false)
@@ -999,11 +989,20 @@ class IncrementalSpec extends AnyFunSuite {
       }
       assert(e1.getMessage.contains("maxHamming=8") &&
         e1.getMessage.contains("maxHamming=4"))
+      // a copy of the table whose _meta row records another band
+      // count (9 at maxHamming 8: layout v1, unsharded, grid 0) — as a
+      // table written at a different layout would carry
+      val otherBands = (1L << 32) | (8L << 16) | 9L
+      val rebanded = spark.table("t_hamm_meta")
+        .filter(col("band") =!= Incremental.HammingMetaBand)
+        .unionByName(spark.range(1).select(lit(Incremental.HammingMetaBand).as("band"),
+          lit(otherBands).as("bucket"), lit(null).cast("long").as("doc_id"),
+          lit(otherBands).as("sig")))
       val e2 = intercept[IllegalArgumentException] {
         Incremental.hammingDupIdsAgainstTable(probe, "doc_id", "sig",
-          spark.table("t_hamm_meta"), maxHamming = 8, nBands = 9)
+          rebanded, maxHamming = 8)
       }
-      assert(e2.getMessage.contains("nBands"))
+      assert(e2.getMessage.contains("nBands=9"))
       // a mismatched APPEND must refuse BEFORE writing anything
       val before = spark.table("t_hamm_meta").count()
       intercept[IllegalArgumentException] {

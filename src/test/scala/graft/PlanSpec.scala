@@ -204,6 +204,23 @@ class PlanSpec extends AnyFunSuite {
       s"candidate join must be key-based:\n$plan")
   }
 
+  test("cosine pair join computes each vector's cell signature once per side") {
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val df = operators.Similarity.similarPairsApprox(
+      Tables.embeddings(spark, dir), "vec_id", "embedding", t = 0.4)
+    df.collect()
+    val helper = new AdaptiveSparkPlanHelper {}
+    def sigs(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.collect { case h: functions.HyperplaneSig => h }.size
+    val nodes = helper.collect(df.queryExecution.executedPlan) { case p => p }
+    val total = nodes.map(_.expressions.map(sigs).sum).sum
+    val inFilters = nodes.collect { case f: FilterExec => sigs(f.condition) }.sum
+    val plan = df.queryExecution.executedPlan.toString
+    assert(inFilters === 0, s"no filter may re-evaluate the cell signature:\n$plan")
+    assert(total === 2, s"one cell signature per verify side:\n$plan")
+  }
+
   test("similarity kernel is the codegen'd vector_dot, inside a codegen stage") {
     val emb = Tables.embeddings(spark, dir)
       .withColumn("embedding", col("embedding").cast("array<double>"))

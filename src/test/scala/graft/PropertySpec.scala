@@ -145,6 +145,91 @@ class PropertySpec extends AnyFunSuite {
   }
 
 
+  // ---- the Hamming pair core: random 64-bit signatures with mates
+  // planted at every distance 0..k+1 from a base, repeated values, null
+  // signatures and a null shard, against brute force. The budgets
+  // cross the exact/multi-probe layout boundary at 5 → 6.
+  private def flipBits(rng: scala.util.Random, v: Long, d: Int): Long =
+    rng.shuffle((0 until 64).toList).take(d).foldLeft(v)((x, b) => x ^ (1L << b))
+
+  private val shardValues = Seq(Some("a"), Some("b"), None)
+
+  private def hammingRows(seed: Long, k: Int): Seq[(Long, Option[Long], Option[String])] = {
+    val rng = new scala.util.Random(seed)
+    val sigs = (0 until 24).flatMap { _ =>
+      val base = rng.nextLong()
+      (0 to k + 1).map(d => flipBits(rng, base, d))
+    }
+    val repeated = Seq.fill(12)(sigs(rng.nextInt(sigs.size)))
+    val all = (sigs ++ repeated).map(Option(_)) ++ Seq.fill(6)(None)
+    rng.shuffle(all).zipWithIndex.map { case (sig, i) =>
+      (i.toLong, sig, shardValues(rng.nextInt(shardValues.size)))
+    }
+  }
+
+  test("property: the Hamming pair core equals brute force across the band layouts") {
+    for (k <- Seq(0, 3, 5, 6, 8, 12)) {
+      val rows = hammingRows(100L + k, k)
+      val df = rows.toDF("id", "sig", "shard")
+      def dist(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
+      def idPairs(sharded: Boolean) = (for {
+        (a, Some(sa), ha) <- rows; (b, Some(sb), hb) <- rows
+        if a < b && dist(sa, sb) <= k && (!sharded || ha == hb)
+      } yield (a, b, dist(sa, sb))).toSet
+      for (sharded <- Seq(false, true)) {
+        val got = Dedup.hammingNearDupPairs(df, "id", "sig", k,
+            if (sharded) Seq("shard") else Nil)
+          .as[(Long, Long, Int)].collect().toSet
+        assert(got === idPairs(sharded), s"k=$k sharded=$sharded")
+      }
+      val (l, r) = (df.filter(col("id") % 2 === 0), df.filter(col("id") % 2 === 1))
+      def values(side: org.apache.spark.sql.DataFrame) =
+        side.select("sig").as[Option[Long]].collect().flatten.distinct
+      for (strict <- Seq(false, true); (lf, rf) <- Seq((df, df), (l, r))) {
+        val want = (for {
+          sa <- values(lf); sb <- values(rf)
+          if (if (strict) dist(sa, sb) < k else dist(sa, sb) <= k)
+        } yield (sa, sb)).toSet
+        val got = Dedup.hammingPairsValues(lf, col("sig"), rf, col("sig"), k, strict)
+          .select("__ham_sa", "__ham_sb").as[(Long, Long)].collect().toSet
+        assert(got === want, s"k=$k strict=$strict self=${lf eq rf}")
+      }
+    }
+  }
+
+  test("property: clipNearDupPairs equals a brute-force position-aligned count") {
+    for (k <- Seq(0, 3, 6, 8)) {
+      val rng = new scala.util.Random(200L + k)
+      // 12 clips of 4 sampled frames, a mate per clip with each frame
+      // flipped by 0..k+1 bits, two exact copies (in their source's
+      // shard), some frames undecoded
+      val clips = (0 until 12).flatMap { _ =>
+        val base = Seq.fill(4)(rng.nextLong())
+        Seq(base, base.map(s => flipBits(rng, s, rng.nextInt(k + 2))))
+      }.map(frames => (frames, shardValues(rng.nextInt(shardValues.size))))
+      val all = clips ++ Seq(clips(0), clips(5))
+      val rows = all.zipWithIndex.flatMap { case ((frames, shard), id) =>
+        frames.zipWithIndex.map { case (sig, pos) =>
+          (id.toLong, pos, if (rng.nextInt(10) == 0) None else Some(sig), shard)
+        }
+      }
+      val df = rows.toDF("doc_id", "frame_pos", "dhash", "src")
+      for (sharded <- Seq(false, true)) {
+        val want = (for {
+          (a, pa, Some(sa), ha) <- rows; (b, pb, Some(sb), hb) <- rows
+          if a < b && pa == pb && java.lang.Long.bitCount(sa ^ sb) <= k &&
+            (!sharded || ha == hb)
+        } yield (a, b, pa)).distinct.groupBy(p => (p._1, p._2))
+          .collect { case ((a, b), ps) if ps.size >= 2 => (a, b, ps.size.toLong) }.toSet
+        val got = graft.operators.Video.clipNearDupPairs(df, "doc_id", k, minFrames = 2,
+            shardCols = if (sharded) Seq("src") else Nil)
+          .as[(Long, Long, Long)].collect().toSet
+        assert(got === want, s"k=$k sharded=$sharded")
+        assert(want.nonEmpty, s"k=$k: fixture must plant clip pairs")
+      }
+    }
+  }
+
   test("property: SigAgreeCount equals the zip_with/filter HOF formulation") {
     for (seed <- 1L to 5L) {
       val rows = sample(Gen.listOfN(50, Gen.zip(
