@@ -205,10 +205,10 @@ object IngestCli {
 
   /** A family's steps, as the calls the loop makes. `tag`/`countStep`
     * name the wave's jobs (`<tag> wave N: <step>`); `gate` is a
-    * row-local predicate the audit counts; `pairs` are in-wave
-    * `(id_a < id_b)` near-duplicates among the screened rows, `probe`
-    * their single-column drop ids against the persisted state;
-    * `retract` gets the state before and after the bump plus the
+    * row-local predicate the audit counts; `dupIds` are the in-wave
+    * single-column drop ids among the screened rows (the higher id of
+    * each near-duplicate pair), `probe` theirs against the persisted
+    * state; `retract` gets the state before and after the bump plus the
     * retracted ids; `compact` gets the prior `_remap` sidecar;
     * `manifest` marks layouts that keep a release manifest; `line` and
     * `stateDocs` are the CLI loop's report line and compaction baseline. */
@@ -216,7 +216,7 @@ object IngestCli {
       countStep: String, gate: Option[Column], manifest: Boolean,
       init: (SparkSession, S) => Unit,
       screen: (DataFrame, S) => Screen,
-      pairs: (DataFrame, S) => DataFrame,
+      dupIds: (DataFrame, S) => DataFrame,
       probe: (DataFrame, S) => DataFrame,
       append: (DataFrame, S) => Unit,
       retract: (SparkSession, S, S, DataFrame) => Unit,
@@ -265,7 +265,7 @@ object IngestCli {
     // unioned (never chained) — the seen-not-kept contract. Eager: the
     // probe must read the state BEFORE this wave's append lands in it.
     val dropIds = step("drop ids") {
-      layout.pairs(screen.rows, st).select(col("id_b").as("doc_id"))
+      layout.dupIds(screen.rows, st)
         .union(layout.probe(screen.rows, st))
         .distinct().localCheckpoint(eager = true)
     }
@@ -524,8 +524,9 @@ object IngestCli {
         Screen(rows, () => (rows.count(), 0L),
           dropIds => rows.drop("__sig").join(dropIds, Seq("doc_id"), "left_anti"))
       },
-      pairs = (rows, _) => Dedup.candidatesFromSig(rows, "doc_id",
-        cfg.fuzzyThreshold, numPerm, bands, maxBucketSize = 1024),
+      dupIds = (rows, _) => Dedup.candidatesFromSig(rows, "doc_id",
+        cfg.fuzzyThreshold, numPerm, bands, maxBucketSize = 1024)
+        .select(col("id_b").as("doc_id")),
       probe = (rows, st) => Incremental.fuzzyDupIdsFromSigs(rows, "doc_id",
         rows.sparkSession.table(st.sigTable), cfg.fuzzyThreshold, numPerm,
         bands),
@@ -692,14 +693,14 @@ object IngestCli {
     * decoded-row test; `callerSigner` marks a caller-chosen signer,
     * which rebuild guards; `screen` gates a wave's payload rows given
     * their signatures and the blocklist, its counts are (decoded,
-    * blocked); `pairs` are in-wave `(id_a < id_b)` near-duplicates
-    * within a Hamming budget; `retract` is remap-aware. The loop reads
-    * them through [[wave]]. */
+    * blocked); `dupIds` are the in-wave drop ids within a Hamming
+    * budget (the higher id of each near-duplicate pair); `retract` is
+    * remap-aware. The loop reads them through [[wave]]. */
   private final case class HammingLayout(tag: String, decodeStep: String,
       signerName: String, sig: Column, decoded: Column, callerSigner: Boolean,
       sign: DataFrame => DataFrame,
       screen: (DataFrame, DataFrame, Option[Dedup.HammingIndex]) => Screen,
-      pairs: (DataFrame, Int) => DataFrame,
+      dupIds: (DataFrame, Int) => DataFrame,
       probe: (DataFrame, AnyHammingState) => DataFrame,
       write: (DataFrame, AnyHammingState) => Unit,
       append: (DataFrame, AnyHammingState) => Unit,
@@ -716,7 +717,7 @@ object IngestCli {
         // lazy checkpoint makes decode+materialize+counts ONE job
         screen = (live, _) =>
           screen(live, sign(live).localCheckpoint(eager = false), blocklist),
-        pairs = (rows, st) => pairs(rows, st.maxHamming),
+        dupIds = (rows, st) => dupIds(rows, st.maxHamming),
         probe = probe, append = append, retract = retract, compact = compact,
         line = t => s"decoded=${t.counts._1} blocked=${t.counts._2}",
         stateDocs = (spark, st) =>
@@ -747,7 +748,7 @@ object IngestCli {
           dropIds => live.join(admitted.select("doc_id")
             .join(dropIds, Seq("doc_id"), "left_anti"), Seq("doc_id"), "left_semi"))
       },
-      pairs = Dedup.hammingNearDupPairs(_, "doc_id", "sig", _),
+      dupIds = Dedup.hammingDupIds(_, "doc_id", "sig", _),
       probe = (rows, st) => Incremental.hammingDupIdsAgainstTable(rows,
         "doc_id", "sig", rows.sparkSession.table(st.sigTable), st.maxHamming,
         signer = signed),
@@ -788,7 +789,8 @@ object IngestCli {
             .join(blockedIds, Seq("doc_id"), "left_anti")
             .join(dropIds, Seq("doc_id"), "left_anti"))
       },
-      pairs = operators.Video.clipNearDupPairs(_, "doc_id", _, minFrames),
+      dupIds = operators.Video.clipNearDupPairs(_, "doc_id", _, minFrames)
+        .select(col("id_b").as("doc_id")),
       probe = (rows, st) => Incremental.frameHammingDupIdsAgainstTable(rows,
         "doc_id", "dhash", rows.sparkSession.table(st.sigTable),
         st.maxHamming, minFrames, everyNth = everyNth, signer = signed),
@@ -950,8 +952,7 @@ object IngestCli {
       Dedup.hammingNearSet(layout.sig, idx)).select("doc_id").distinct())
     def unblocked(df: DataFrame) =
       blocked.fold(df)(df.join(_, Seq("doc_id"), "left_anti"))
-    val dropIds = layout.pairs(unblocked(sigs.filter(layout.decoded)),
-        maxHamming).select(col("id_b").as("doc_id")).distinct()
+    val dropIds = layout.dupIds(unblocked(sigs.filter(layout.decoded)), maxHamming)
     unblocked(corpus).join(dropIds, Seq("doc_id"), "left_anti")
   }
 

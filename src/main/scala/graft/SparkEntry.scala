@@ -1108,9 +1108,9 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       // the signature is the exported seeded state; the oracle replays
       // the ALL-PAIRS Hamming-≤-3 + keep-lowest-id anti-join over it
-      // (the pigeonhole banding GUARANTEES the engine's pair set equals
-      // the brute-force set, so the replay is exact — see
-      // Dedup.hammingPairsValues)
+      // (the pigeonhole banding GUARANTEES the engine's drop set equals
+      // the brute-force one, so the replay is exact — see
+      // Dedup.hammingDupIds)
       docs.select(col("doc_id"), Dedup.simhashSignature(col("text")).as("sig"))
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q72_sigs")
       Dedup.simhashNearDedup(docs, "doc_id", col("text"),
@@ -2182,7 +2182,7 @@ object SparkEntry {
     // throw). The dHash signatures are the exported seeded state; the
     // oracle replays the ALL-PAIRS Hamming-≤-8 + keep-lowest-id
     // anti-join over them (the pigeonhole banding GUARANTEES the
-    // engine's pair set equals brute force — the q72 pattern).
+    // engine's drop set equals brute force — the q72 pattern).
     "q141_image_near_dedup" -> { (s, dir) =>
       val imgs = Images.syntheticCorpus(
         Tables.documents(s, dir).select("doc_id"), "doc_id",
@@ -2190,8 +2190,7 @@ object SparkEntry {
       Images.imageSignatures(imgs, "doc_id", col("content"))
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q141_sigs")
       val sigs = s.read.parquet(s"${stateDir(dir)}/q141_sigs")
-      val dupIds = Dedup.hammingNearDupPairs(sigs, "doc_id", "dhash", maxHamming = 8)
-        .select(col("id_b").as("doc_id")).distinct()
+      val dupIds = Dedup.hammingDupIds(sigs, "doc_id", "dhash", maxHamming = 8)
       sigs.select("doc_id", "decoded", "width", "height")
         .join(dupIds, Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
@@ -2456,8 +2455,7 @@ object SparkEntry {
       operators.Audio.audioSignatures(clips, "doc_id", col("content"))
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q143_sigs")
       val sigs = s.read.parquet(s"${stateDir(dir)}/q143_sigs")
-      val dupIds = Dedup.hammingNearDupPairs(sigs, "doc_id", "ehash", maxHamming = 8)
-        .select(col("id_b").as("doc_id")).distinct()
+      val dupIds = Dedup.hammingDupIds(sigs, "doc_id", "ehash", maxHamming = 8)
       sigs.select("doc_id", "decoded", "sample_rate", "duration_ms")
         .join(dupIds, Seq("doc_id"), "left_anti")
         .orderBy("doc_id")
@@ -2502,9 +2500,8 @@ object SparkEntry {
         .withColumn("source", expr("doc_id div 30"))
         .write.mode("overwrite").parquet(s"${stateDir(dir)}/q148_sigs")
       val sigs = s.read.parquet(s"${stateDir(dir)}/q148_sigs")
-      val dupIds = Dedup.hammingNearDupPairs(sigs, "doc_id", "ehash",
+      val dupIds = Dedup.hammingDupIds(sigs, "doc_id", "ehash",
           maxHamming = 8, shardCols = Seq("source"))
-        .select(col("id_b").as("doc_id")).distinct()
       sigs.select("doc_id", "decoded", "source")
         .join(dupIds, Seq("doc_id"), "left_anti")
         .orderBy("doc_id")

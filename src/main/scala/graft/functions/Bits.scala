@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   *    fixtures key their pixel/sample PRFs on
   *    ([[graft.operators.Images.syntheticPng]] and friends);
   *  - the pigeonhole Hamming band layout every 64-bit signature
-  *    family builds and probes with — the Hamming pair join
-  *    ([[graft.operators.Dedup.hammingPairsValues]], behind SimHash,
-  *    image, audio and video pairs), the persisted Hamming state
+  *    family builds and probes with — the Hamming band join behind
+  *    the SimHash, image, audio and video pairs and drop sets and
+  *    the join rewrite ([[graft.operators.Dedup.hammingNearDupPairs]],
+  *    [[graft.operators.Dedup.hammingDupIds]]), the persisted Hamming state
   *    ([[graft.operators.Incremental.writeHammingState]]), the
   *    driver-built blocklist index
   *    ([[graft.operators.Dedup.hammingIndex]]) and its codegen probe
@@ -135,6 +136,27 @@ object Bits {
     df.select(kept :+ explode(bands).as("__e"): _*)
       .select(kept ++ Seq(shiftrightunsigned(col("__e"), 56).cast("int").as("band"),
         col("__e").bitwiseAND(lit((1L << 56) - 1)).as("bucket")): _*)
+  }
+
+  /** True when `band` (a [[bandRows]] `band` value) is the FIRST band
+    * in which signatures `a` and `b` meet in a [[bandRows]] join: equal
+    * buckets, or on the multi-probe layout buckets at most one bit
+    * apart. A band join that keeps a pair only there emits it once,
+    * with no distinct. The one-band layout (`maxHamming` 0) meets in
+    * its only band, whose packed number its 64-bit bucket overwrites. */
+  private[graft] def firstMeeting(band: Column, a: Column, b: Column,
+      maxHamming: Int): Column = {
+    val nBands = joinBands(maxHamming)
+    val slack = if (nBands < maxHamming + 1) 1 else 0
+    val diff = a.cast("long").bitwiseXOR(b.cast("long"))
+    def meets(i: Int): Column = {
+      val mask = (i until 64 by nBands).foldLeft(0L)((m, bit) => m | (1L << bit))
+      bit_count(diff.bitwiseAND(lit(mask))) <= slack
+    }
+    if (nBands == 1) lit(true)
+    else band === (1 until nBands).foldLeft(when(meets(0), LayoutV1Tag)) { (first, i) =>
+      first.when(meets(i), LayoutV1Tag + i)
+    }
   }
 
   /** Smallest band count whose per-band error bound is ≤ 1 under

@@ -42,7 +42,8 @@ import org.apache.spark.sql.functions._
   * Scale shape: decode + fingerprint run in one `mapPartitions` scan
   * (bytes never on the driver, 8 B/clip out); the Hamming join is
   * value-level (byte-identical re-uploads collapse to one bucket
-  * row); removal is a left_anti on ids.
+  * row, and [[Dedup.hammingDupIds]] drops them without listing
+  * pairs); removal is a left_anti on ids.
   */
 object Audio {
 
@@ -159,8 +160,7 @@ object Audio {
   def audioNearDedup(df: DataFrame, idCol: String, contentCol: Column,
       maxHamming: Int = 8): DataFrame = {
     val sigs = audioSignatures(df, idCol, contentCol)
-    val dupIds = Dedup.hammingNearDupPairs(sigs, idCol, "ehash", maxHamming)
-      .select(col("id_b").as(idCol)).distinct()
+    val dupIds = Dedup.hammingDupIds(sigs, idCol, "ehash", maxHamming)
       .localCheckpoint(true)
     df.join(dupIds, Seq(idCol), "left_anti")
   }

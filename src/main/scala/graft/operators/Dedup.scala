@@ -407,28 +407,31 @@ object Dedup {
     * SimHash exists to find (a one-word edit flips a few signature
     * bits). Exact: the pigeonhole banding never misses a within-budget
     * pair and the popcount verify admits nothing else (the semantic
-    * approximation lives in SimHash itself). Near-identical
-    * boilerplate costs one signature value, however many rows carry
-    * it. */
+    * approximation lives in SimHash itself). The output is quadratic in
+    * a group of rows sharing one signature, as any pair list is; to
+    * DROP near-dups use [[simhashNearDedup]], which never lists them. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: Column,
       maxHamming: Int = 3): DataFrame =
-    // spread before signing: the signature map is the heavy narrow step
-    hammingIdPairs(spreadWide(df).select(col(idCol), simhashSignature(textCol).as("__sig")),
-        idCol, "__sig", maxHamming, Nil, spread = false)
+    hammingIdPairs(hammingGroups(simhashSigs(df, idCol, textCol), idCol, "__sig", Nil,
+        spread = false), maxHamming)
       .select(col("id_a"), col("id_b"))
       .distinct()
+
+  // spread before signing: the signature map is the heavy narrow step
+  private def simhashSigs(df: DataFrame, idCol: String, textCol: Column): DataFrame =
+    spreadWide(df).select(col(idCol), simhashSignature(textCol).as("__sig"))
 
   /** Near-duplicate id pairs over ANY precomputed 64-bit signature
     * frame `(<idCol>, <sigCol>)`: every (id_a < id_b, dist) with
     * popcount(sig_a XOR sig_b) ≤ maxHamming — EXACT output (the
     * pigeonhole banding never misses a within-budget pair). Null
-    * signatures never pair. Value-level banding + id re-attach
-    * ([[hammingPairsValues]]), so duplicate signature VALUES cost one
-    * bucket row each regardless of multiplicity — a million
-    * byte-identical payloads are one value row, not a 10¹²-pair
-    * bucket. The shared engine under the image (aHash/dHash,
-    * [[Images.imageNearDedup]]) and audio ([[Audio]] energy-contour
-    * hash) perceptual-dedup families.
+    * signatures never pair. Banding runs per distinct (shard, value)
+    * ([[hammingGroups]]), so a repeated signature is one bucket row
+    * however many rows carry it; the pair LIST is still quadratic in
+    * such a group, so a caller that only drops near-dups uses
+    * [[hammingDupIds]], which stays linear. The shared engine under
+    * the image (aHash/dHash) and audio ([[Audio]] energy-contour hash)
+    * perceptual pair families.
     *
     * '''`shardCols` — the >10⁶-signature escape hatch.''' The batch
     * self-join's candidate mass is quadratic in DISTINCT signatures
@@ -439,47 +442,83 @@ object Dedup {
     * WITHIN equal shard values (the semantic change is the point:
     * cross-shard pairs are declared out of scope, exactly like
     * [[graft.operators.Video.clipNearDupPairs]] scoping frame pairs
-    * to equal positions). Value-level dedup becomes per (shard, sig);
-    * ids re-attach by (shard, sig). NULL shard values form ONE group
-    * (the groupBy convention, via null-safe struct equality) — a raw
+    * to equal positions). NULL shard values form ONE group (the
+    * groupBy convention, via null-safe struct equality) — a raw
     * equi-join would silently exempt null-shard rows from dedup. */
   def hammingNearDupPairs(sigs: DataFrame, idCol: String, sigCol: String,
       maxHamming: Int, shardCols: Seq[String] = Nil): DataFrame =
-    hammingIdPairs(sigs, idCol, sigCol, maxHamming, shardCols, spread = true)
+    hammingIdPairs(hammingGroups(sigs, idCol, sigCol, shardCols, spread = true), maxHamming)
       .select(col("id_a"), col("id_b"),
         bit_count(col("__ham_sa").bitwiseXOR(col("__ham_sb"))).as("dist"))
       .distinct()
 
-  /** The id pairs behind every batch Hamming self join: value pairs
-    * from [[hammingPairsValues]] with ids re-attached on both sides by
-    * (shard, signature). Rows `(id_a < id_b, __ham_sa, __ham_sb[,
-    * __shard])`, not deduplicated — callers project and distinct.
-    * `spread` runs [[spreadWide]] on the values' input (off when the
+  /** The ids [[hammingNearDupPairs]] would list as `id_b` — every row
+    * within `maxHamming` bits of a LOWER-id row of its shard — without
+    * listing a pair: the drop set of the keep-lowest-id near-dedup
+    * (image, audio, SimHash, the media wave). An id may repeat when it
+    * carries several signatures. Linear in rows plus value pairs: a
+    * group of n rows sharing one signature costs one bucket row and
+    * drops n − 1 ids, where the pair list would hold n(n − 1)/2. */
+  def hammingDupIds(sigs: DataFrame, idCol: String, sigCol: String,
+      maxHamming: Int, shardCols: Seq[String] = Nil): DataFrame =
+    dupIdsOf(hammingGroups(sigs, idCol, sigCol, shardCols, spread = true), idCol, maxHamming)
+
+  /** One row per distinct (shard, signature value) of `sigs`: the
+    * `__shard` struct (with `shardCols` only; Spark struct equality is
+    * null-safe, so a NULL shard value forms a real group), the value
+    * `__ham_s` and its ids `__ham_ids`. Both sides' bands and the drop
+    * decision read this one aggregate through one exchange, so the
+    * signatures are read (and computed) once. Rows with a null signature collect no id, so
+    * they never pair; the key is non-nullable, so no join above infers
+    * an `isnotnull` filter that would re-evaluate the signature below
+    * the aggregate. `spread` runs [[spreadWide]] first (off when the
     * caller spread before computing the signature). */
-  private[graft] def hammingIdPairs(sigs: DataFrame, idCol: String, sigCol: String,
-      maxHamming: Int, shardCols: Seq[String], spread: Boolean): DataFrame = {
-    val sharded = shardCols.nonEmpty
-    val ids = sigs
-      .select((col(idCol) +: col(sigCol) +: shardCols.map(col)): _*)
-      .filter(col(sigCol).isNotNull)
-    val values = if (spread) spreadWide(ids) else ids
-    val valPairs = hammingPairsValues(values, col(sigCol), values, col(sigCol),
-      maxHamming, strict = false, shardCols).as("__p")
-    // both re-attach sides are ONE plan keyed the same way, so the self
-    // join shuffles it once (ReusedExchange); the `__shard` struct is
-    // built as hammingPairsValues builds it (null-safe by struct equality)
-    val side = ids.select((col(idCol).as("__ham_id") +: col(sigCol).cast("long").as("__ham_v") +:
-      (if (sharded) Seq(struct(shardCols.map(col): _*).as("__shard")) else Nil)): _*)
-    def attach(s: String, sig: String): Column =
-      ((col(s"__p.$sig") === col(s"$s.__ham_v")) +:
-        (if (sharded) Seq(col("__p.__shard") === col(s"$s.__shard")) else Nil)).reduce(_ && _)
-    valPairs
-      .join(side.as("__a"), attach("__a", "__ham_sa"))
-      .join(side.as("__b"), attach("__b", "__ham_sb"))
-      .select((Seq(col("__a.__ham_id").as("id_a"), col("__b.__ham_id").as("id_b"),
-        col("__p.__ham_sa").as("__ham_sa"), col("__p.__ham_sb").as("__ham_sb")) ++
-        (if (sharded) Seq(col("__p.__shard").as("__shard")) else Nil)): _*)
+  private[graft] def hammingGroups(sigs: DataFrame, idCol: String, sigCol: String,
+      shardCols: Seq[String], spread: Boolean): DataFrame = {
+    val sig = col(sigCol).cast("long")
+    val rows = sigs.select(((if (shardCols.nonEmpty) Seq(struct(shardCols.map(col): _*).as("__shard"))
+        else Nil) ++ Seq(coalesce(sig, lit(0L)).as("__ham_s"),
+        when(sig.isNotNull, col(idCol)).as("__ham_id"))): _*)
+    val keys = (if (shardCols.nonEmpty) Seq("__shard") else Nil) :+ "__ham_s"
+    (if (spread) spreadWide(rows) else rows)
+      .groupBy(keys.map(col): _*).agg(collect_list(col("__ham_id")).as("__ham_ids"))
+      .filter(size(col("__ham_ids")) > 0)
+  }
+
+  private def groupKeys(groups: DataFrame): Seq[String] =
+    groups.columns.filter(_ == "__shard").toSeq :+ "__ham_s"
+
+  /** The id pairs behind every batch Hamming self join, from
+    * [[hammingGroups]]: each group's ids ride its band rows, so every
+    * within-budget value pair (once, in its first meeting band) expands
+    * to its id pairs with no join back. Rows `(id_a < id_b, __ham_sa,
+    * __ham_sb[, __shard])`; an id with several signatures can repeat a
+    * pair, so callers project and distinct. */
+  private[graft] def hammingIdPairs(groups: DataFrame, maxHamming: Int): DataFrame = {
+    val shard = groupKeys(groups).init.map(col)
+    hammingBandJoin(groups, groups, maxHamming, strict = false, carry = Seq("__ham_ids"))
+      .select(shard ++ Seq(col("__ham_sa"), col("__ham_sb"),
+        explode(col("__ham_ids_a")).as("id_a"), col("__ham_ids_b")): _*)
+      .select(shard ++ Seq(col("__ham_sa"), col("__ham_sb"), col("id_a"),
+        explode(col("__ham_ids_b")).as("id_b")): _*)
       .filter(col("id_a") < col("id_b"))
+  }
+
+  /** [[hammingDupIds]] over [[hammingGroups]]: id x of value v drops
+    * iff some value u within budget of v (v itself included) holds an
+    * id below x, i.e. iff x > min over those u of min(ids(u)). The band
+    * rows carry each group's min id; a value pair whose left min exceeds
+    * the right's can drop nothing v's own min does not (x > min(u) >
+    * min(v)), so it is filtered in the join. */
+  private def dupIdsOf(groups: DataFrame, idCol: String, maxHamming: Int): DataFrame = {
+    val keys = groupKeys(groups)
+    val mins = groups.select(keys.map(col) :+ array_min(col("__ham_ids")).as("__ham_min"): _*)
+    val lowest = hammingBandJoin(mins, mins, maxHamming, strict = false, carry = Seq("__ham_min"))
+      .filter(col("__ham_min_a") <= col("__ham_min_b"))
+      .groupBy(keys.init.map(col) :+ col("__ham_sb").as("__ham_s"): _*)
+      .agg(min(col("__ham_min_a")).as("__ham_low"))
+    groups.join(lowest, keys)
+      .select(explode(filter(col("__ham_ids"), _ > col("__ham_low"))).as(idCol))
   }
 
   /** Driver-side pigeonhole index over a BOUNDED 64-bit signature set
@@ -550,62 +589,70 @@ object Dedup {
       index.maxHamming, index.buckets, index.sigs))
 
   /** DISTINCT 64-bit signature VALUE pairs `(__ham_sa, __ham_sb[,
-    * __shard])` within a true Hamming budget across two frames — the
-    * one Hamming pair enumerator: [[hammingIdPairs]] (SimHash, image,
-    * audio and video pairs) re-attaches ids to it, and
-    * [[graft.plans.HammingJoinRewrite]] joins the value pairs back to
-    * each side's rows by signature equality. Each side's signatures
-    * are `distinct()`ed per (shard, value) before banding, so a
-    * repeated signature is one bucket row however many rows carry it:
-    * that is the guard against flooded buckets. Band layout
-    * [[graft.functions.Bits.bandRows]]: the exact `maxHamming + 1`
-    * layout at small budgets, the 1-error multi-probe layout (the
-    * right side emitting single-bit bucket flips) at `maxHamming ≥ 6`.
-    * EXACT either way, and the popcount verify admits nothing else.
-    * Null signatures never pair. `strict` verifies `< maxHamming`
-    * instead of `<=` at the same banding width. `shardCols` pack into
-    * ONE struct key: Spark struct equality compares fields null-safely,
-    * so a NULL shard value forms a real group (the groupBy convention)
-    * instead of silently exempting its rows from dedup the way a raw
-    * equi-join on a nullable column would. Logs the layout at WARN. */
+    * __shard])` within a true Hamming budget across two frames, for
+    * [[graft.plans.HammingJoinRewrite]], which joins them back to each
+    * side's rows by signature equality: each side's distinct (shard,
+    * value) rows through [[hammingBandJoin]]. `strict` verifies
+    * `< maxHamming` instead of `<=` at the same banding width.
+    * `shardCols` pack into ONE struct key (null-safe, as in
+    * [[hammingGroups]]). Null signatures never pair. */
   private[graft] def hammingPairsValues(
       ldf: DataFrame, lsig: Column,
       rdf: DataFrame, rsig: Column,
       maxHamming: Int, strict: Boolean = false,
       shardCols: Seq[String] = Nil): DataFrame = {
-    val sharded = shardCols.nonEmpty
-    val shard = if (sharded) Seq("__shard") else Nil
-    // both sides name their values alike, so a self join's distinct
-    // values (and, on the exact layout, its band rows) are one plan that
-    // shuffles once (ReusedExchange)
-    def banded(df: DataFrame, sig: Column, probe: Boolean): DataFrame = {
-      val keyed = df.select(((if (sharded) Seq(struct(shardCols.map(col): _*).as("__shard"))
-        else Nil) :+ sig.cast("long").as("__ham_s")): _*)
-      graft.functions.Bits.bandRows(keyed.filter(col("__ham_s").isNotNull).distinct(), "__ham_s",
-        maxHamming, probe, shard :+ "__ham_s")
-    }
-    val l = banded(ldf, lsig, probe = false).as("__l")
-    val r = banded(rdf, rsig, probe = true).as("__r")
+    def values(df: DataFrame, sig: Column): DataFrame =
+      df.select(((if (shardCols.nonEmpty) Seq(struct(shardCols.map(col): _*).as("__shard"))
+          else Nil) :+ sig.cast("long").as("__ham_s")): _*)
+        .filter(col("__ham_s").isNotNull).distinct()
+    hammingBandJoin(values(ldf, lsig), values(rdf, rsig), maxHamming, strict, Nil)
+  }
+
+  /** The one Hamming pair enumerator, under [[hammingIdPairs]] (SimHash,
+    * image, audio and video pairs), [[hammingDupIds]] and
+    * [[hammingPairsValues]]. `l` and `r` hold distinct (`__shard`?,
+    * `__ham_s`) rows plus `carry` columns; the result has one row per
+    * value pair within the budget, `(__shard?, __ham_sa, __ham_sb)`
+    * plus each carried `c` as `c_a` (left) and `c_b` (right). Band
+    * layout [[graft.functions.Bits.bandRows]]: the exact `maxHamming +
+    * 1` layout at small budgets, the 1-error multi-probe layout (the
+    * right side emitting single-bit bucket flips) at `maxHamming ≥ 6`.
+    * EXACT either way, and the popcount verify admits nothing else; a
+    * pair is kept only in the first band it meets in
+    * ([[graft.functions.Bits.firstMeeting]]), so it leaves the join
+    * once. Logs the layout at WARN. */
+  private def hammingBandJoin(l: DataFrame, r: DataFrame, maxHamming: Int,
+      strict: Boolean, carry: Seq[String]): DataFrame = {
+    val shard = groupKeys(l).init
+    // on the exact layout both sides band alike, so a self join's band
+    // rows are one plan that shuffles once (ReusedExchange)
+    def banded(df: DataFrame, probe: Boolean): DataFrame =
+      graft.functions.Bits.bandRows(df, "__ham_s", maxHamming, probe, groupKeys(l) ++ carry)
     val nBands = graft.functions.Bits.joinBands(maxHamming)
     log.warn(s"hamming pair join: maxHamming=$maxHamming, " +
       (if (nBands == maxHamming + 1) s"exact $nBands" else s"1-error probe $nBands") +
-      s" bands, sharded=$sharded")
-    val dist = bit_count(col("__ham_sa").bitwiseXOR(col("__ham_sb")))
-    l.join(r, shard ++ Seq("band", "bucket"))
-      .select((shard.map(col) :+ col("__l.__ham_s").as("__ham_sa") :+
-        col("__r.__ham_s").as("__ham_sb")): _*)
-      .filter(if (strict) dist < maxHamming else dist <= maxHamming)
-      .distinct()
+      s" bands, sharded=${shard.nonEmpty}")
+    val (sa, sb) = (col("__l.__ham_s"), col("__r.__ham_s"))
+    val dist = bit_count(sa.bitwiseXOR(sb))
+    banded(l, probe = false).as("__l").join(banded(r, probe = true).as("__r"),
+        shard ++ Seq("band", "bucket"))
+      .filter((if (strict) dist < maxHamming else dist <= maxHamming) &&
+        graft.functions.Bits.firstMeeting(col("band"), sa, sb, maxHamming))
+      .select((shard.map(col) ++ Seq(sa.as("__ham_sa"), sb.as("__ham_sb")) ++
+        carry.map(c => col(s"__l.$c").as(s"${c}_a")) ++
+        carry.map(c => col(s"__r.$c").as(s"${c}_b"))): _*)
   }
 
-  /** Hamming-budget SimHash dedup: drop the higher-id side of every
-    * [[simhashPairs]] pair (cluster-wide resolution: feed the pairs to
-    * [[DupClusters.clusterDedup]] instead). Removal is a left_anti on
+  /** Hamming-budget SimHash dedup: drop every row within `maxHamming`
+    * bits of a lower-id row ([[hammingDupIds]] over
+    * [[simhashSignature]]; the ids [[simhashPairs]] lists as `id_b`,
+    * without listing the pairs). Cluster-wide resolution: feed the pairs
+    * to [[DupClusters.clusterDedup]] instead. Removal is a left_anti on
     * ids — never a driver-side set. */
   def simhashNearDedup(df: DataFrame, idCol: String, textCol: Column,
       maxHamming: Int = 3): DataFrame = {
-    val dupIds = simhashPairs(df, idCol, textCol, maxHamming)
-      .select(col("id_b").as(idCol)).distinct()
+    val dupIds = dupIdsOf(hammingGroups(simhashSigs(df, idCol, textCol), idCol, "__sig", Nil,
+        spread = false), idCol, maxHamming)
       .localCheckpoint(true)
     df.join(dupIds, Seq(idCol), "left_anti")
   }

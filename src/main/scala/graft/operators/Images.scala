@@ -46,11 +46,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape (100 TB of images): decode runs in `mapPartitions`
   * (codec scratch amortized per task, bytes never on the driver); the
-  * Hamming join is value-level — [[Dedup.hammingPairsValues]]
-  * `distinct()`s signatures BEFORE banding, so a million byte-exact
+  * Hamming join is value-level — [[Dedup.hammingGroups]] collects
+  * each signature's ids BEFORE banding, so a million byte-exact
   * re-encodes of one meme cost one value row, not a 10¹²-row bucket —
-  * and ids re-attach to the few surviving near-dup values by an
-  * equi-join. Undecodable payloads (truncated file, wrong magic)
+  * and [[imageNearDedup]] drops every id above the lowest id within
+  * budget ([[Dedup.hammingDupIds]]) without listing the 10¹² pairs. Undecodable payloads (truncated file, wrong magic)
   * yield `decoded = false` rows that pass through un-deduped rather
   * than poisoning the join (counted, never thrown).
   */
@@ -251,14 +251,14 @@ object Images {
   /** Perceptual near-dup image dedup: decode, dHash, drop every image
     * whose signature is within `maxHamming` bits of a LOWER-id image
     * (the [[Dedup.simhashNearDedup]] contract — compared against every
-    * seen image, not just survivors). Undecodable images always
-    * survive (no signature, nothing provable). Removal is a broadcast
-    * of nothing but ids via left_anti — never a driver-side set. */
+    * seen image, not just survivors), from [[Dedup.hammingDupIds]].
+    * Undecodable images always survive (no signature, nothing
+    * provable). Removal is a left_anti on ids — never a driver-side
+    * set. */
   def imageNearDedup(df: DataFrame, idCol: String, contentCol: Column,
       maxHamming: Int = 8): DataFrame = {
     val sigs = imageSignatures(df, idCol, contentCol)
-    val dupIds = Dedup.hammingNearDupPairs(sigs, idCol, "dhash", maxHamming)
-      .select(col("id_b").as(idCol)).distinct()
+    val dupIds = Dedup.hammingDupIds(sigs, idCol, "dhash", maxHamming)
       .localCheckpoint(true)
     df.join(dupIds, Seq(idCol), "left_anti")
   }

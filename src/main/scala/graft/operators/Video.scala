@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * bits — re-encodes and light edits perturb frames locally, while
   * requiring agreement at the same sample position keeps unrelated
   * clips apart. The pair enumeration is the engine's one Hamming pair
-  * join ([[Dedup.hammingPairsValues]]) with the position folded into
+  * join ([[Dedup.hammingIdPairs]]) with the position folded into
   * its shard key, so the state of the art for 100 TB of video is
   * unchanged from the text path: value-level banded equi-join +
   * popcount verify + per-pair frame count, no cross join anywhere. The oracle (q145) replays the whole decision
@@ -141,8 +141,8 @@ object Video {
 
   /** Clip pairs (id_a < id_b, matched_frames) where at least
     * `minFrames` sampled positions are pairwise within `maxHamming`
-    * bits: [[Dedup.hammingIdPairs]] over the frame signatures with
-    * `frame_pos` folded into the shard key, so frames only meet frames
+    * bits: [[Dedup.hammingIdPairs]] over the frame signature groups
+    * ([[Dedup.hammingGroups]]) with `frame_pos` folded into the shard key, so frames only meet frames
     * at their own sample position, then a per-pair distinct-position
     * count. EXACT, like every caller of that core. `shardCols`
     * (columns of `frameSigs`, constant per clip — source/day/tenant)
@@ -154,8 +154,8 @@ object Video {
   def clipNearDupPairs(frameSigs: DataFrame, idCol: String,
       maxHamming: Int = 8, minFrames: Int = 2,
       shardCols: Seq[String] = Nil): DataFrame =
-    Dedup.hammingIdPairs(frameSigs, idCol, "dhash", maxHamming,
-        "frame_pos" +: shardCols, spread = false)
+    Dedup.hammingIdPairs(Dedup.hammingGroups(frameSigs, idCol, "dhash",
+        "frame_pos" +: shardCols, spread = false), maxHamming)
       .groupBy(col("id_a"), col("id_b"))
       // the set of matched positions, not a distinct + count: one
       // exchange on the id pair instead of two

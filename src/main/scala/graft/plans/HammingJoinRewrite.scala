@@ -20,9 +20,9 @@ import graft.operators.Dedup
   *
   * — the natural way to write a near-dup signature join, which Spark
   * can only plan as a nested-loop cross product. The rule replaces it
-  * with [[Dedup.hammingPairsValues]], the engine's one Hamming pair
-  * enumerator (the batch SimHash, image, audio and video pair joins
-  * call it too): distinct signature values banded into pigeonhole
+  * with [[Dedup.hammingPairsValues]], the value pairs of the engine's
+  * one Hamming band join (the batch SimHash, image, audio and video
+  * pair joins and drop sets run it too): distinct signature values banded into pigeonhole
   * slices (every pair within distance k MUST share a band, or at
   * k ≥ 6 a band one probed bit flip reaches — a guarantee, not a
   * probability), bucket equi-join, exact popcount verify, then

@@ -430,12 +430,35 @@ class DedupSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     assert(kept.contains(1L) && kept.contains(5L))
     assert(!kept.contains(2L), "exact dup of 1 must drop")
-    // eight rows, one signature value: value-level dedup bands the
-    // value once and the id re-attach still emits every (0, i) pair
+    // eight rows, one signature value: one bucket row, and the drop
+    // set is every id above the group's min, with no pair listed
     val clique = Seq.tabulate(8)(i => (i.toLong, "same text for every row here")).toDF("doc_id", "text")
     val keptClique = Dedup.simhashNearDedup(clique, "doc_id", col("text"), maxHamming = 3)
       .select("doc_id").as[Long].collect().toSet
     assert(keptClique === Set(0L), s"the clique must collapse to its min id: $keptClique")
+  }
+
+  test("hammingDupIds stays linear on a group sharing one signature; the pair list does not") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // n rows on one value, a mate 1 bit away and an unrelated row
+    val n = 2000L
+    val sigs = spark.range(n).select(col("id"), lit(0x5555L).as("sig"))
+      .union(Seq((n, 0x5557L), (n + 1, -1L)).toDF("id", "sig"))
+    val helper = new AdaptiveSparkPlanHelper {}
+    // runs the frame's own plan, then reads its largest operator output
+    def run(df: DataFrame): (Long, Long) = {
+      val rows = df.queryExecution.toRdd.count()
+      (rows, helper.collect(df.queryExecution.executedPlan) {
+        case p => p.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+      }.max)
+    }
+    val drops = Dedup.hammingDupIds(sigs, "id", "sig", 3)
+    assert(drops.as[Long].collect().toSet === (1L to n).toSet)
+    val (nDrops, dropsMax) = run(drops)
+    assert(nDrops === n && dropsMax <= 2 * n, s"drop plan peaked at $dropsMax rows")
+    // the pair API lists the clique, and the same probe sees it
+    val (nPairs, pairsMax) = run(Dedup.hammingNearDupPairs(sigs, "id", "sig", 3))
+    assert(nPairs === n * (n - 1) / 2 + n && pairsMax >= n * (n - 1) / 2)
   }
 
   test("collapseRepeatedLines: only ADJACENT repeats collapse; reappearances stay") {
