@@ -11,10 +11,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * full predicate pushdown / column pruning on every downstream query.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
@@ -53,13 +49,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
-
-  /** Register every table as a temp view so `spark.sql` queries (the
-    * metadata-warehouse surface, SURVEY §2.9) can reference them by name.
-    */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else table(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

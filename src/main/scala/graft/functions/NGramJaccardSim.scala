@@ -17,7 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * which Spark can only plan as a nested-loop cross product — that
   * exact shape is what [[graft.plans.JaccardJoinRewrite]] pattern-
   * matches and replaces with the count-based exact set-similarity join
-  * ([[graft.operators.Dedup.textPairsByJaccard]]). Without the
+  * ([[graft.operators.Dedup.textPairsByJaccard]], a caller of the
+  * engine's one count join, `Dedup.countedPairs`, whose unrounded
+  * compare is [[NGramJaccardSim.compute]]'s arithmetic). Without the
   * rule installed the query still answers correctly, just O(n·m).
   *
   * Codegen is a single static call (same discipline as [[CharNGrams]]:
@@ -45,10 +47,11 @@ case class NGramJaccardSim(left: Expression, right: Expression, n: Int)
 
 object NGramJaccardSim {
 
-  /** Distinct-gram Jaccard; arithmetic matches the count-based join's
-    * `i / (|A|+|B|−i)` double division exactly (same operands, same
-    * order), so a threshold comparison agrees bit-for-bit between the
-    * naive and rewritten plans. */
+  /** Distinct-gram Jaccard; arithmetic matches the count join's
+    * unrounded `i / (|A|+|B|−i)` double division exactly (same
+    * operands, same order), so a threshold comparison agrees
+    * bit-for-bit between the naive and rewritten plans
+    * (JaccardRewriteSpec pins thresholds at and within 1e-7 of J). */
   def compute(a: UTF8String, b: UTF8String, n: Int): Double = {
     val sa = gramSet(a, n)
     val sb = gramSet(b, n)

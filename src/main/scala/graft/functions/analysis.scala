@@ -170,10 +170,6 @@ object analysis {
     when(length(c) === 0, lit(0.0))
       .otherwise(regexp_count(c, lit("[^\\p{L}0-9\\s]")).cast("double") / length(c))
 
-  def digit_ratio(c: Column): Column =
-    when(length(c) === 0, lit(0.0))
-      .otherwise(regexp_count(c, lit("[0-9]")).cast("double") / length(c))
-
   /** Deflate compression ratio (compressed/raw bytes, 1.0 for empty) —
     * the cheap sub-word redundancy detector: boilerplate and templated
     * junk compress far better than prose. Native expression

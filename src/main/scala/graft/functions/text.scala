@@ -37,9 +37,6 @@ object text {
   def unicode_nfc(c: Column): Column =
     expr2col(UnicodeNormalize(col2expr(c), Normalizer.Form.NFC))
 
-  def unicode_nfd(c: Column): Column =
-    expr2col(UnicodeNormalize(col2expr(c), Normalizer.Form.NFD))
-
   def unicode_nfkc(c: Column): Column =
     expr2col(UnicodeNormalize(col2expr(c), Normalizer.Form.NFKC))
 

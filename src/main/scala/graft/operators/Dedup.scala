@@ -1135,9 +1135,8 @@ object Dedup {
 
   /** DISTINCT text pairs `(__ta, __tb)` whose exact n-gram Jaccard
     * satisfies the threshold — the relational core behind
-    * [[graft.plans.JaccardJoinRewrite]]. Same count-based algorithm as
-    * [[jaccardPairs]] but keyed by the text VALUES themselves (the
-    * rewrite has no row ids to pack) and compared UNROUNDED so the
+    * [[graft.plans.JaccardJoinRewrite]]: [[countedPairs]]' bipartite
+    * form over each side's distinct texts, compared UNROUNDED so the
     * decision agrees bit-for-bit with evaluating
     * [[graft.functions.NGramJaccardSim]] per pair. */
   private[graft] def textPairsByJaccard(
@@ -1155,41 +1154,19 @@ object Dedup {
     def keyed(src: DataFrame, textExpr: Column): DataFrame =
       spreadWide(src.select(textExpr.as("__t")).filter(col("__t").isNotNull))
         .distinct()
-        .select(col("__t"), xxhash64(col("__t")).as("__h1"),
-          xxhash64(col("__t"), lit(1)).as("__h2"))
+        .select(col("__t"),
+          struct(xxhash64(col("__t")), xxhash64(col("__t"), lit(1))).as("__id"))
     val lt = keyed(left, leftText)
     val rt = keyed(right, rightText)
-    def toks(k: DataFrame, p: String): DataFrame = {
-      val grams = text.expr2col(
-        graft.functions.CharNGrams(text.col2expr(col("__t")), n, sentinel = true))
-      k.select(col("__h1").as(s"__${p}1"), col("__h2").as(s"__${p}2"), grams.as("__g"))
-        .select(col(s"__${p}1"), col(s"__${p}2"),
-          size(col("__g")).as(s"__sz$p"), explode(col("__g")).as("__gram"))
-    }
-    val ta = toks(lt, "a")
-    val tb = toks(rt, "b")
-    // loose size bound (ε guards double rounding of t·max): prunes
-    // inside the join stage; the exact unrounded J filter decides.
-    val sizeOk = least(col("__sza"), col("__szb")).cast("double") >=
-      greatest(col("__sza"), col("__szb")) * t - lit(1e-9)
-    val j = col("__i").cast("double") / (col("__sza") + col("__szb") - col("__i"))
-    val hits = ta.join(tb, Seq("__gram"))
-      .filter(sizeOk)
-      .groupBy(col("__a1"), col("__a2"), col("__b1"), col("__b2"))
-      .agg(count(lit(1)).as("__i"),
-        min(col("__sza")).as("__sza"), min(col("__szb")).as("__szb"))
-      .filter(if (strict) j > t else j >= t)
-      .select(col("__a1"), col("__a2"), col("__b1"), col("__b2"))
-    hits
-      .join(lt.select(col("__t").as("__ta"), col("__h1").as("__a1"), col("__h2").as("__a2")),
-        Seq("__a1", "__a2"))
-      .join(rt.select(col("__t").as("__tb"), col("__h1").as("__b1"), col("__h2").as("__b2")),
-        Seq("__b1", "__b2"))
+    def toks(k: DataFrame): DataFrame = gramTokens(gramSets(k, "__id", col("__t"), n))
+    countedPairs(toks(lt), Some(toks(rt)), Seq("__gram"), PairTest.Jaccard(t, strict))
+      .join(lt.select(col("__t").as("__ta"), col("__id").as("id_a")), Seq("id_a"))
+      .join(rt.select(col("__t").as("__tb"), col("__id").as("id_b")), Seq("id_b"))
       .select(col("__ta"), col("__tb"))
   }
 
   /** `(__id, __sz, __gram)` exploded token stream of a `(__id, __g)`
-    * gram-set frame. */
+    * gram-set frame — [[countedPairs]]' input shape. */
   private def gramTokens(sets: DataFrame): DataFrame =
     sets.select(col("__id"), size(col("__g")).as("__sz"), explode(col("__g")).as("__gram"))
 
@@ -1215,61 +1192,75 @@ object Dedup {
     else df
   }
 
-  /** The exact route of [[gramPairs]]: COUNT-BASED pair enumeration
-    * (the "tokenize–join–aggregate" exact set-similarity join). Each
-    * doc's distinct gram set is exploded once, the two token streams
-    * `(id_a|id_b, __sza|__szb, __gram)` equi-join on the gram, and the
-    * rows per (id_a, id_b) are COUNTED — that count IS |A∩B| exactly,
-    * so J = |∩| / (|A|+|B|−|∩|) needs no gram array past the explode.
-    * Pairs sharing zero grams are never enumerated and have J = 0 < t
-    * (the {""} sentinel makes empty-set pairs share a token, preserving
-    * J(∅,∅)=1). `antiReflexive` (the self join) orients pairs
-    * id_a < id_b; the bipartite join keeps every cross pair once.
+  /** How [[countedPairs]] decides a pair from its shared-key count. */
+  private[operators] sealed trait PairTest
+  private[operators] object PairTest {
+    /** round(J, 6) ≥ t, emitted as `jaccard` — the convention every
+      * oracle replays. */
+    final case class RoundedJaccard(t: Double) extends PairTest
+    /** Unrounded J > t (`strict`) or ≥ t, emitted as `jaccard` — the
+      * arithmetic of [[graft.functions.NGramJaccardSim]], so the
+      * rewrite's decision agrees with the marker on every pair. */
+    final case class Jaccard(t: Double, strict: Boolean) extends PairTest
+    /** Shared key count ≥ m, emitted as `shared` (winnowing). */
+    final case class Shared(m: Long) extends PairTest
+  }
+
+  /** The engine's one shared-token pair count (the "tokenize–join–
+    * aggregate" exact set-similarity join). Inputs are posting frames
+    * `(__id, [__sz,] <keys>)`: one row per (document, distinct token),
+    * the token being `keys` (a character gram, a 128-bit word-gram
+    * digest, a winnowing fingerprint) and `__sz` the document's
+    * distinct-token total, which the Jaccard tests need. The postings
+    * equi-join on the keys and the rows per (id_a, id_b) are COUNTED —
+    * that count IS |A∩B| exactly, so J = |∩| / (|A|+|B|−|∩|) needs no
+    * token array past the explode. Pairs sharing no token are never
+    * enumerated (J = 0; the gram sets' {""} sentinel makes empty-set
+    * pairs share a token, preserving J(∅,∅) = 1).
     *
-    * Scale shape: the token join carries (id, size, gram) rows only —
-    * ~20 bytes, no array crosses an exchange; a size filter
+    * `b = None` is the self join: the literally-same frame under two
+    * aliases, so the posting exchange is planned once and read twice
+    * (ReusedExchange), pairs oriented `id_a < id_b`. `Some(b)` is the
+    * bipartite join, every cross pair once. Ids may be of any groupable
+    * type, and the aggregation groups on both of them: no pack, so no
+    * id range can alias two pairs.
+    *
+    * Scale shape: the join carries (id, size, key) rows only — no array
+    * crosses an exchange; for the Jaccard tests a size filter
     * (J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|)) drops pairs inside the
     * join stage; the pair count aggregates map-side in the same stage,
-    * so what shuffles is one row per surviving pair. Cost is Σ_gram
-    * dfL·dfR joined rows — what [[probeRoute]] measures. */
-  private def countedPairs(
-      a: DataFrame, b: DataFrame, t: Double, antiReflexive: Boolean): DataFrame = {
-    // ε guards float noise in t·size (0.3·10 = 3.0000000000000004),
-    // and the relaxed t−1e-6 covers pairs whose true J sits just below
-    // t but ROUNDS to ≥ t (the output filter is on the rounded value):
-    // the bound may only ever round DOWN, never drop an emitted pair.
-    val sizeOk = least(col("__sza"), col("__szb")).cast("double") >=
-      greatest(col("__sza"), col("__szb")) * (t - 1e-6) - lit(1e-9)
-    val joined = a.join(b, Seq("__gram"))
-    val scoped = if (antiReflexive) joined.filter(col("id_a") < col("id_b")) else joined
-    // SELF-join (antiReflexive): the hot aggregation groups on ONE
-    // packed long (ids read as 32-bit; widen the pack if your ids
-    // exceed 2^31) — a third the hash-agg state of grouping on
-    // (id_a, id_b, sza, szb). The sizes ride along as min() buffers
-    // (constant within a pair), so no per-doc side table exists
-    // downstream. BIPARTITE: the two sides are UNRELATED id spaces —
-    // a ≥ 2^32 reference id would silently overflow into the
-    // corpus-id bits and drop the WRONG rows — so that path groups on
-    // both ids (16-byte key; correctness over the pack's state win).
-    val grouped =
-      if (antiReflexive)
-        scoped.filter(sizeOk)
-          .groupBy((shiftleft(col("id_a"), 32) + col("id_b")).as("__pair"))
-          .agg(count(lit(1)).as("__i"),
-            min(col("__sza")).as("__sza"), min(col("__szb")).as("__szb"))
-          .select(shiftright(col("__pair"), 32).as("id_a"),
-            col("__pair").bitwiseAND(lit(0xFFFFFFFFL)).as("id_b"),
-            col("__i"), col("__sza"), col("__szb"))
-      else
-        scoped.filter(sizeOk)
-          .groupBy(col("id_a"), col("id_b"))
-          .agg(count(lit(1)).as("__i"),
-            min(col("__sza")).as("__sza"), min(col("__szb")).as("__szb"))
-    grouped
-      .withColumn("jaccard", round(col("__i").cast("double") /
-        (col("__sza") + col("__szb") - col("__i")), 6))
-      .filter(col("jaccard") >= t)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    * so what shuffles is one row per surviving pair. Cost is Σ_key
+    * df_a·df_b joined rows — what [[probeRoute]] measures. */
+  private[operators] def countedPairs(a: DataFrame, b: Option[DataFrame],
+      keys: Seq[String], test: PairTest): DataFrame = {
+    val on = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    val joined = b.fold(a.as("a").join(a.as("b"), on && col("a.__id") < col("b.__id")))(
+      r => a.as("a").join(r.as("b"), on))
+    val ids = Seq(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
+    def jaccard(t: Double): DataFrame = {
+      // one bound for both Jaccard tests: ε guards float noise in t·size
+      // (0.3·10 = 3.0000000000000004), and the relaxed t−1e-6 keeps
+      // pairs whose true J sits just below t but ROUNDS to ≥ t — the
+      // bound only prunes pairs that can pass neither test
+      val sizeOk = least(col("a.__sz"), col("b.__sz")).cast("double") >=
+        greatest(col("a.__sz"), col("b.__sz")) * (t - 1e-6) - lit(1e-9)
+      // the sizes ride along as min() buffers (constant within a
+      // pair), so no per-doc side table exists downstream
+      joined.filter(sizeOk).groupBy(ids: _*)
+        .agg(count(lit(1)).as("__i"),
+          min(col("a.__sz")).as("__sza"), min(col("b.__sz")).as("__szb"))
+        .select(col("id_a"), col("id_b"), (col("__i").cast("double") /
+          (col("__sza") + col("__szb") - col("__i"))).as("jaccard"))
+    }
+    test match {
+      case PairTest.RoundedJaccard(t) =>
+        jaccard(t).select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+          .filter(col("jaccard") >= t)
+      case PairTest.Jaccard(t, strict) =>
+        jaccard(t).filter(if (strict) col("jaccard") > t else col("jaccard") >= t)
+      case PairTest.Shared(m) =>
+        joined.groupBy(ids: _*).agg(count(lit(1)).as("shared")).filter(col("shared") >= m)
+    }
   }
 
   /** `(__id, __g)` with `__g` = lexically-sorted distinct n-gram set
@@ -1317,10 +1308,8 @@ object Dedup {
     *
     * Scale shape: one narrow signature map, one ids-only bucket join
     * (the self join joins the literally-same frame, so the exchange is
-    * reused), one distinct on both ids — not a packed long: the
-    * bipartite sides are unrelated id spaces, and a 16-byte distinct
-    * key on a candidate list costs nothing measurable — and two hash
-    * joins re-attaching gram sets to CANDIDATE pairs only. */
+    * reused), one distinct on both ids, and two hash joins
+    * re-attaching gram sets to CANDIDATE pairs only. */
   private def bandedPairs(setsL: DataFrame, setsR: Option[DataFrame], t: Double): DataFrame = {
     val r = recallBandRows(t, BandPerms)
     val bands = BandPerms / r
@@ -1365,12 +1354,9 @@ object Dedup {
     case GramRoute.Exact =>
       // long ids on both routes, so the output schema never depends on
       // the probe's decision
-      val ta = gramTokens(setsL)
-      val tb = setsR.fold(ta)(gramTokens)
-      countedPairs(
-        ta.select(col("__id").cast("long").as("id_a"), col("__sz").as("__sza"), col("__gram")),
-        tb.select(col("__id").cast("long").as("id_b"), col("__sz").as("__szb"), col("__gram")),
-        t, antiReflexive = setsR.isEmpty)
+      def toks(sets: DataFrame): DataFrame =
+        gramTokens(sets.select(col("__id").cast("long").as("__id"), col("__g")))
+      countedPairs(toks(setsL), setsR.map(toks), Seq("__gram"), PairTest.RoundedJaccard(t))
     case GramRoute.Banded => bandedPairs(setsL, setsR, t)
   }
 

@@ -363,12 +363,20 @@ object Incremental {
       textCol: Column, table: String, path: String,
       k: Int = 4, w: Int = 4, maxDf: Long = 64,
       numBuckets: Int = 64): Unit = {
-    val fp = Winnow.fingerprints(corpus, idCol, textCol, k, w)
-      .select(col("fp"), col(idCol).as("corpus_id")).distinct()
+    writeBucketed(cappedFingerprints(corpus, idCol, textCol, k, w, maxDf)
+        .withColumnRenamed(idCol, "corpus_id"),
+      table, Seq("fp"), numBuckets, path = Some(path))
+  }
+
+  /** Distinct `(fp, <idCol>)` winnow postings of `df`, without the
+    * fingerprints held by more than `maxDf` documents. */
+  private def cappedFingerprints(df: DataFrame, idCol: String, textCol: Column,
+      k: Int, w: Int, maxDf: Long): DataFrame = {
+    val fp = Winnow.fingerprints(df, idCol, textCol, k, w)
+      .select(col("fp"), col(idCol)).distinct()
     val keep = fp.groupBy("fp").agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxDf).select("fp")
-    writeBucketed(fp.join(keep, Seq("fp")), table, Seq("fp"), numBuckets,
-      path = Some(path))
+    fp.join(keep, Seq("fp"))
   }
 
   /** Which corpus documents does each batch document near-verbatim
@@ -385,8 +393,9 @@ object Incremental {
       .select(col(idCol), col("fp")).distinct()
       .join(fpTable.select(col("fp"), col("corpus_id")), Seq("fp"))
       .groupBy(col(idCol), col("corpus_id"))
-      // DISTINCT fps, not join rows: duplicate-safe should the state's
-      // posting invariant ever be violated (same defense as
+      // DISTINCT fps, not join rows (so not Dedup.countedPairs, which
+      // counts join rows): duplicate-safe should the state's posting
+      // invariant ever be violated (same defense as
       // noveltyAgainstTable's anti-join)
       .agg(countDistinct(col("fp")).as("shared_fps"))
       .filter(col("shared_fps") >= minShared)
@@ -1717,47 +1726,23 @@ object Incremental {
       aliasTable: String, aliasPath: String,
       edgeTable: String, edgePath: String, numBuckets: Int = 64)
 
-  /** Exact word-n-gram Jaccard pairs between two posting-shaped
-    * frames `(<key>, __g1, __g2, n_grams)`: equi-join on the digest,
-    * per-pair intersection count, threshold on
+  /** Exact word-n-gram Jaccard pairs `(id_a, id_b)` of wave postings
+    * ([[wavePostings]]) against `state` postings of the same shape, or
+    * among themselves (`None`, `id_a < id_b`): [[Dedup.countedPairs]]
+    * on the 128-bit gram digest, thresholded on
     * `round(inter / (na + nb − inter), 6)` — the round-then-compare
     * convention every oracle replays. The per-gram fan-out is
-    * Σ df_a·df_b — exactness's price, disclosed; `n` is the knob
-    * (bigger grams, thinner document frequencies), and the guarded
-    * router (q97) or winnowing fingerprints are the production
-    * alternatives when a corpus carries heavy boilerplate. */
-  private def gramJaccardPairs(a: DataFrame, b: DataFrame,
-      threshold: Double): DataFrame = {
-    a.join(b, Seq("__g1", "__g2"))
-      .groupBy(col("__ia"), col("__ib"))
-      .agg(count(lit(1)).as("__iv"),
-        max(col("__na")).as("__na"), max(col("__nb")).as("__nb"))
-      .filter(round(col("__iv") * lit(1.0) /
-        (col("__na") + col("__nb") - col("__iv")), 6) >= threshold)
-      .select(col("__ia"), col("__ib"))
+    * Σ df_a·df_b, exactness's price; `n` is the knob (bigger grams,
+    * thinner document frequencies), and winnowing fingerprints
+    * ([[writeWinnowClusterState]]) are the alternative when a corpus
+    * carries heavy boilerplate. */
+  private def gramDigestPairs(posts: DataFrame, idCol: String,
+      state: Option[DataFrame], threshold: Double): DataFrame = {
+    def shaped(p: DataFrame): DataFrame = p.select(col(idCol).as("__id"),
+      col("n_grams").as("__sz"), col("__g1"), col("__g2"))
+    Dedup.countedPairs(shaped(posts), state.map(shaped), Seq("__g1", "__g2"),
+      Dedup.PairTest.RoundedJaccard(threshold)).select(col("id_a"), col("id_b"))
   }
-
-  private def postingsShape(df: DataFrame, idCol: String, side: String): DataFrame =
-    df.select(col(idCol).as(s"__i$side"), col("__g1"), col("__g2"),
-      col("n_grams").as(s"__n$side"))
-
-  /** [[gramJaccardPairs]]' SELF-join form over one posting frame: the
-    * literally-same instance joins itself under two aliases, so the
-    * gram shuffle canonicalizes equal and plans as ONE exchange
-    * written once, read twice (ReusedExchange) — two separately
-    * projected copies would shuffle the wave's grams twice. */
-  private def gramJaccardPairsSelf(posts: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    posts.alias("a").join(posts.alias("b"),
-        col("a.__g1") === col("b.__g1") &&
-          col("a.__g2") === col("b.__g2") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .groupBy(col(s"a.$idCol").as("__ia"), col(s"b.$idCol").as("__ib"))
-      .agg(count(lit(1)).as("__iv"),
-        max(col("a.n_grams")).as("__na"), max(col("b.n_grams")).as("__nb"))
-      .filter(round(col("__iv") * lit(1.0) /
-        (col("__na") + col("__nb") - col("__iv")), 6) >= threshold)
-      .select(col("__ia"), col("__ib"))
 
   /** Wave-shaped postings from raw (id, text): per-doc DISTINCT gram
     * digests + the denormalized total. Materialized eagerly — the
@@ -1794,33 +1779,41 @@ object Incremental {
     * batch semantics. */
   def writeClusterState(corpus: DataFrame, idCol: String, textCol: Column,
       n: Int, threshold: Double, t: ClusterTables): Unit = {
+    val posts = wavePostings(corpus, idCol, textCol, n)
+    writeFreshClusters(corpus, idCol, t, gramDigestPairs(posts, idCol, None, threshold)) {
+      writeBucketed(posts.select(col("__g1").as("g1"),
+          col("__g2").as("g2"), col(idCol), col("n_grams")),
+        t.postTable, Seq("g1", "g2"), t.numBuckets, path = Some(t.postPath))
+    }
+  }
+
+  /** The posting-agnostic half of a fresh cluster state (the write
+    * sibling of [[appendClustersCore]]): `pairs` → components → edges
+    * and membership, `writePosts` for whatever posting family
+    * enumerated them, and an empty alias table. A FRESH state's four
+    * relations are each a blue/green Overwrite into their own dir (a
+    * crash re-inits from scratch), so no write ordering is load-bearing
+    * here — unlike the append path: the postings write and the empty
+    * alias overlap the whole pair-enumeration → CC → edges/membership
+    * chain instead of queueing behind it (guide §2.6). */
+  private def writeFreshClusters(corpus: DataFrame, idCol: String, t: ClusterTables,
+      pairs: => DataFrame)(writePosts: => Unit): Unit = {
     val spark = corpus.sparkSession
     // a fresh state must not inherit a previous life's takedown
     // overlay under the same derived names
     Seq(patchTable(t), tombTable(t))
       .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
-    val posts = wavePostings(corpus, idCol, textCol, n)
-    // A FRESH state's four relations are each a blue/green Overwrite
-    // into their own dir (a crash re-inits from scratch), so no write
-    // ordering is load-bearing here — unlike the append path. The
-    // postings write and the empty alias depend only on `posts`, so
-    // they overlap the whole pair-enumeration → CC → edges/membership
-    // chain instead of queueing behind it (guide §2.6).
     Actions.inParallel(Seq(
       () => {
-        val pairs = gramJaccardPairsSelf(posts, idCol, threshold)
-          .select(col("__ia").as("id_a"), col("__ib").as("id_b"))
-          .localCheckpoint(true)
+        val edges = pairs.localCheckpoint(true)
         val comps = DupClusters.connectedComponents(
-          corpus.select(col(idCol)), pairs)
+          corpus.select(col(idCol)), edges)
         Actions.inParallel(Seq(
-          () => writeEdges(pairs, t, SaveMode.Overwrite),
+          () => writeEdges(edges, t, SaveMode.Overwrite),
           () => writeMembership(comps.select(col("id").as(idCol),
             col("cluster")), idCol, t, SaveMode.Overwrite)))
       },
-      () => writeBucketed(posts.select(col("__g1").as("g1"),
-          col("__g2").as("g2"), col(idCol), col("n_grams")),
-        t.postTable, Seq("g1", "g2"), t.numBuckets, path = Some(t.postPath)),
+      () => writePosts,
       () => writeEmptyAlias(spark, t)))
   }
 
@@ -1909,9 +1902,7 @@ object Incremental {
     val ids0 = member.select(col(idCol)).distinct()
     // a pending takedown overlay holds ground truth the raw edges
     // pre-date: tombstoned ids (and their bridging edges) are gone
-    val ids = (if (spark.catalog.tableExists(tombTable(t)))
-        retractIds(ids0, idCol, spark.table(tombTable(t)))
-      else ids0).localCheckpoint(true)
+    val ids = untombed(ids0, idCol, t).localCheckpoint(true)
     val sub = spark.table(t.edgeTable)
       .filter(col("src") < col("dst"))
       .join(ids.select(col(idCol).as("src")), Seq("src"), "left_semi")
@@ -1972,8 +1963,9 @@ object Incremental {
     * gram table plus an id-join on bucketed membership — nothing
     * corpus-sized shuffles, ever; the CC loop sees a wave-bounded
     * graph. The honest residual is the exact probe's per-gram
-    * Σ df_wave·df_state fan-out (boilerplate grams), same envelope
-    * and knobs as the batch pair join (q45's disclosure). */
+    * Σ df_wave·df_state fan-out (boilerplate grams): the count join's
+    * envelope ([[Dedup.countedPairs]]), without the batch join's
+    * routing probe — `n` and the winnow-backed state are the knobs. */
   def appendClusters(wave: DataFrame, idCol: String, textCol: Column,
       n: Int, threshold: Double, t: ClusterTables): DataFrame = {
     val spark = wave.sparkSession
@@ -1981,14 +1973,8 @@ object Incremental {
     // pending takedown overlay: a tombstoned doc's postings must not
     // match (its content no longer suppresses or links anything) —
     // broadcast anti-join, the retraction-at-read pattern
-    val statePosts0 = spark.table(t.postTable)
-    val statePosts1 =
-      if (spark.catalog.tableExists(tombTable(t)))
-        retractIds(statePosts0, idCol, spark.table(tombTable(t)))
-      else statePosts0
-    val statePosts = statePosts1
-      .select(col(idCol).as("__ib"), col("g1").as("__g1"),
-        col("g2").as("__g2"), col("n_grams").as("__nb"))
+    val statePosts = untombed(spark.table(t.postTable), idCol, t)
+      .select(col(idCol), col("g1").as("__g1"), col("g2").as("__g2"), col("n_grams"))
     // the in-wave self-join and the wave↔state probe are independent
     // reads of the materialized postings: UNION them under a source
     // tag and materialize ONCE — one action instead of two, and AQE
@@ -1996,9 +1982,8 @@ object Incremental {
     // within the single plan, so the wave pays max not sum (guide
     // §2.6) without a second job's worth of submit latency
     val (inWave, waveState) = enumeratePairsTagged(
-      gramJaccardPairsSelf(posts, idCol, threshold),
-      gramJaccardPairs(postingsShape(posts, idCol, "a"), statePosts,
-        threshold))
+      gramDigestPairs(posts, idCol, None, threshold),
+      gramDigestPairs(posts, idCol, Some(statePosts), threshold))
     appendClustersCore(spark, wave, idCol, inWave, waveState, t) {
       writeBucketed(posts.select(col("__g1").as("g1"), col("__g2").as("g2"),
           col(idCol), col("n_grams")),
@@ -2007,17 +1992,16 @@ object Incremental {
   }
 
   /** Materialize a wave's two pair enumerations — the in-wave
-    * self-join and the wave↔state probe, both `(__ia, __ib)` — in ONE
+    * self-join and the wave↔state probe, both `(id_a, id_b)` — in ONE
     * localCheckpoint action: the frames union under a source tag, so
     * one job materializes both (AQE runs the two subtrees' independent
     * stages concurrently inside it) and the downstream consumers read
-    * tag-filtered blocks. Returns (inWave, waveState). */
+    * tag-filtered blocks. Returns (inWave, waveState) as `(__ia, __ib)`. */
   private def enumeratePairsTagged(inWavePlan: DataFrame,
       waveStatePlan: DataFrame): (DataFrame, DataFrame) = {
-    val tagged = inWavePlan
-      .select(lit(0).as("__src"), col("__ia"), col("__ib"))
-      .unionByName(waveStatePlan
-        .select(lit(1).as("__src"), col("__ia"), col("__ib")))
+    def tag(pairs: DataFrame, src: Int): DataFrame =
+      pairs.select(lit(src).as("__src"), col("id_a").as("__ia"), col("id_b").as("__ib"))
+    val tagged = tag(inWavePlan, 0).unionByName(tag(waveStatePlan, 1))
       .localCheckpoint(true)
     (tagged.filter(col("__src") === 0).select(col("__ia"), col("__ib")),
       tagged.filter(col("__src") === 1).select(col("__ia"), col("__ib")))
@@ -2103,6 +2087,13 @@ object Incremental {
     assigned
   }
 
+  /** In-batch winnow pairs `(id_a, id_b)`, `id_a < id_b`, sharing
+    * ≥ `minShared` fingerprints of the `(fp, <idCol>)` postings (one
+    * row per distinct pair): [[Dedup.countedPairs]]' self form. */
+  private def fpPairs(posts: DataFrame, idCol: String, minShared: Long): DataFrame =
+    Dedup.countedPairs(posts.select(col(idCol).as("__id"), col("fp")), None, Seq("fp"),
+      Dedup.PairTest.Shared(minShared)).select(col("id_a"), col("id_b"))
+
   /** Winnowing-backed initial cluster state — the SAME
     * [[ClusterTables]] life cycle (append/resolve/takedown/recover
     * all reuse the membership/alias/edge machinery) with
@@ -2124,36 +2115,10 @@ object Incremental {
   def writeWinnowClusterState(corpus: DataFrame, idCol: String,
       textCol: Column, t: ClusterTables, k: Int = 4, w: Int = 4,
       minShared: Long = 2, maxDf: Long = 64): Unit = {
-    val spark = corpus.sparkSession
-    Seq(patchTable(t), tombTable(t))
-      .foreach(tb => spark.sql(s"DROP TABLE IF EXISTS $tb"))
-    val fp0 = Winnow.fingerprints(corpus, idCol, textCol, k, w)
-      .select(col("fp"), col(idCol)).distinct()
-    val keep = fp0.groupBy("fp").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxDf).select("fp")
-    val posts = fp0.join(keep, Seq("fp")).localCheckpoint(true)
-    // same overlap as [[writeClusterState]]: fresh-state Overwrites
-    // are order-free, so the posting and alias writes run concurrently
-    // with the pair → CC → edges/membership chain
-    Actions.inParallel(Seq(
-      () => {
-        val pairs = posts.alias("a").join(posts.alias("b"),
-            col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
-          .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-          .agg(count(lit(1)).as("__shared"))
-          .filter(col("__shared") >= minShared)
-          .select(col("id_a"), col("id_b"))
-          .localCheckpoint(true)
-        val comps = DupClusters.connectedComponents(
-          corpus.select(col(idCol)), pairs)
-        Actions.inParallel(Seq(
-          () => writeEdges(pairs, t, SaveMode.Overwrite),
-          () => writeMembership(comps.select(col("id").as(idCol),
-            col("cluster")), idCol, t, SaveMode.Overwrite)))
-      },
-      () => writeBucketed(posts, t.postTable, Seq("fp"), t.numBuckets,
-        path = Some(t.postPath)),
-      () => writeEmptyAlias(spark, t)))
+    val posts = cappedFingerprints(corpus, idCol, textCol, k, w, maxDf).localCheckpoint(true)
+    writeFreshClusters(corpus, idCol, t, fpPairs(posts, idCol, minShared)) {
+      writeBucketed(posts, t.postTable, Seq("fp"), t.numBuckets, path = Some(t.postPath))
+    }
   }
 
   /** One wave against a winnow-backed cluster state — the q160
@@ -2170,35 +2135,23 @@ object Incremental {
       textCol: Column, t: ClusterTables, k: Int = 4, w: Int = 4,
       minShared: Long = 2, maxDf: Long = 64): DataFrame = {
     val spark = wave.sparkSession
-    val fp0 = Winnow.fingerprints(wave, idCol, textCol, k, w)
-      .select(col("fp"), col(idCol)).distinct()
-    val keep = fp0.groupBy("fp").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxDf).select("fp")
-    val posts = fp0.join(keep, Seq("fp")).localCheckpoint(true)
+    val posts = cappedFingerprints(wave, idCol, textCol, k, w, maxDf).localCheckpoint(true)
     val statePosts0 = spark.table(t.postTable)
-    val statePosts =
-      (if (spark.catalog.tableExists(tombTable(t)))
-        retractIds(statePosts0, idCol, spark.table(tombTable(t)))
-      else statePosts0)
-        .select(col("fp"), col(idCol).as("__ib"))
+    val statePosts = untombed(statePosts0, idCol, t).select(col("fp"), col(idCol).as("id_b"))
     // in-wave self-join + wave↔state probe materialized in ONE tagged
     // action ([[enumeratePairsTagged]] — one job, AQE-concurrent
     // subtree stages)
     val (inWave, waveState) = enumeratePairsTagged(
-      posts.alias("a").join(posts.alias("b"),
-          col("a.fp") === col("b.fp") && col(s"a.$idCol") < col(s"b.$idCol"))
-        .groupBy(col(s"a.$idCol").as("__ia"), col(s"b.$idCol").as("__ib"))
-        .agg(count(lit(1)).as("__shared"))
-        .filter(col("__shared") >= minShared)
-        .select(col("__ia"), col("__ib")),
-      posts.select(col("fp"), col(idCol).as("__ia"))
+      fpPairs(posts, idCol, minShared),
+      // not countedPairs: this probe counts DISTINCT fingerprints, not
+      // join rows, so it stays exact should duplicate (fp, id) state
+      // postings ever appear (a re-run append) — like overlapAgainstTable
+      posts.select(col("fp"), col(idCol).as("id_a"))
         .join(statePosts, Seq("fp"))
-        .groupBy(col("__ia"), col("__ib"))
-        // distinct fps, not join rows — duplicate-safe like
-        // overlapAgainstTable should the posting invariant break
+        .groupBy(col("id_a"), col("id_b"))
         .agg(countDistinct(col("fp")).as("__shared"))
         .filter(col("__shared") >= minShared)
-        .select(col("__ia"), col("__ib")))
+        .select(col("id_a"), col("id_b")))
     appendClustersCore(spark, wave, idCol, inWave, waveState, t) {
       writeBucketed(posts.join(statePosts0.select(col("fp"), col(idCol)),
           Seq("fp", idCol), "left_anti"),
@@ -2247,8 +2200,15 @@ object Incremental {
   def resolveClusters(spark: org.apache.spark.sql.SparkSession,
       t: ClusterTables): DataFrame = {
     val raw = resolveRaw(spark, t)
-    if (!spark.catalog.tableExists(tombTable(t))) raw
-    else retractIds(raw, raw.columns.head, spark.table(tombTable(t)))
+    untombed(raw, raw.columns.head, t)
+  }
+
+  /** `df` without the rows whose `idCol` a pending takedown overlay of
+    * `t` tombstoned — the retraction-at-read filter. */
+  private def untombed(df: DataFrame, idCol: String, t: ClusterTables): DataFrame = {
+    val spark = df.sparkSession
+    if (spark.catalog.tableExists(tombTable(t))) retractIds(df, idCol, spark.table(tombTable(t)))
+    else df
   }
 
   /** Takedown in O(affected), not O(corpus): the SAME split-correct

@@ -478,11 +478,14 @@ object Similarity {
     * cosine satisfies the threshold — the relational core behind
     * [[graft.plans.CosineJoinRewrite]]: [[cosineCore]]'s bipartite join
     * over each side's distinct vectors, keyed by the vector itself,
-    * with cells sized from both sides' row counts (an upper bound on
-    * their distinct vectors). The distinct's exchange has an explicit
-    * count from the session's parallelism, which AQE never coalesces:
-    * coalesced, the few-MB distinct frames land in ONE task, and so
-    * does every stage after. */
+    * with cells sized from their count. The distinct's exchange has an
+    * explicit count from the session's parallelism, which AQE never
+    * coalesces: coalesced, the few-MB distinct frames land in ONE task,
+    * and so does every stage after. Both sides' distinct vectors are
+    * materialized once, in one side-tagged `localCheckpoint` (one job,
+    * and one exchange when the sides are the same plan): the count, the
+    * geometry's two metadata jobs and the verify join all read it,
+    * where lazy frames would run both distinct shuffles three times. */
   private[graft] def vecPairsByCosine(
       left: DataFrame, leftVec: Column,
       right: DataFrame, rightVec: Column,
@@ -490,10 +493,12 @@ object Similarity {
     val spark = left.sparkSession
     val parts = math.max(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    def vecs(src: DataFrame, v: Column): DataFrame =
+    def vecs(src: DataFrame, v: Column, s: Int): DataFrame =
       src.select(v.cast("array<double>").as("__v")).repartition(parts, col("__v")).distinct()
-    cosineCore(vecs(left, leftVec), Some(vecs(right, rightVec)), t, strict,
-        autoCells(left.count() + right.count()))
+        .select(lit(s).as("__s"), col("__v"))
+    val both = vecs(left, leftVec, 0).union(vecs(right, rightVec, 1)).localCheckpoint(true)
+    def side(s: Int): DataFrame = both.filter(col("__s") === s).select(col("__v"))
+    cosineCore(side(0), Some(side(1)), t, strict, autoCells(both.count()))
       .select(col("__ka").as("__va"), col("__kb").as("__vb"))
   }
 

@@ -125,13 +125,10 @@ object Winnow {
       .observe(s"winnow_stop_fps.${Winnow.obsCounter.incrementAndGet()}",
         sum(when(col("__df") > maxDf, 1L).otherwise(0L)).as("stop_fps"))
       .filter(col("__df") >= 2 && col("__df") <= maxDf)
-    val keyed = posting.join(dfs.select("fp"), Seq("fp"))
-    // same instance under two aliases → the fp exchange is planned
-    // once and reused (ReusedExchange), not shuffled twice
-    keyed.as("a").join(keyed.as("b"),
-        col("a.fp") === col("b.fp") && col("a.__id") < col("b.__id"))
-      .groupBy(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-      .agg(count(lit(1)).as("shared_fps"))
-      .filter(col("shared_fps") >= minShared)
+    // the count join's self form: the fp exchange is planned once and
+    // reused (ReusedExchange), not shuffled twice
+    Dedup.countedPairs(posting.join(dfs.select("fp"), Seq("fp")), None, Seq("fp"),
+        Dedup.PairTest.Shared(minShared))
+      .select(col("id_a"), col("id_b"), col("shared").as("shared_fps"))
   }
 }

@@ -25,10 +25,11 @@ import graft.operators.Dedup
   * nested-loop cross product: O(n·m) marker evaluations, each
   * recomputing both gram sets. This rule replaces the join with the
   * count-based exact algorithm ([[Dedup.textPairsByJaccard]]): distinct
-  * texts per side, one gram explode each, an equi-join on the gram, a
-  * size-bound prune inside the join stage, a partial-aggregated pair
-  * count, and an equi-join back to each side's full rows. Identical
-  * output on any input — the threshold decision uses the same unrounded
+  * texts per side, one gram explode each, the engine's shared count
+  * join (`Dedup.countedPairs`: an equi-join on the gram, a size-bound
+  * prune inside the join stage, a partial-aggregated pair count), and
+  * an equi-join back to each side's full rows. Identical output on any
+  * input — the count join's unrounded compare uses the same
   * `i/(|A|+|B|−i)` arithmetic the marker evaluates — with the cross
   * product replaced by hash joins that only ever touch gram-sharing
   * pairs.

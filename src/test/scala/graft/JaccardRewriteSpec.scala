@@ -78,6 +78,23 @@ class JaccardRewriteSpec extends AnyFunSuite {
   }
 
   test("strict >, reversed literal, and swapped sides all match") {
+    // planted 3-gram sets whose J is 1/3 (abcd, abce), 1/2 (abcde,
+    // abcdx) or 3/5 (abcdef, abcdeg), among others; thresholds at J and
+    // within 1e-7 of it, strict and not, against the marker's per-pair
+    // evaluation. 1/3 is not a 6-place decimal, so a rounded compare
+    // would differ from the marker right at t = 1/3
+    val planted = Seq((1L, "abcd"), (2L, "abce"), (3L, "abcde"), (4L, "abcdx"),
+      (5L, "abcdef"), (6L, "abcdeg")).toDF("id", "text")
+    def near(t: Double, strict: Boolean): DataFrame = {
+      val sim = Dedup.jaccardSim(col("a.text"), col("b.text"), 3)
+      planted.as("a").join(planted.as("b"),
+        (if (strict) sim > lit(t) else sim >= lit(t)) && col("a.id") < col("b.id"))
+    }
+    val cases = for (j <- Seq(1.0 / 3, 0.5, 0.6); d <- Seq(0.0, 5e-8, -5e-8);
+        strict <- Seq(false, true)) yield (j + d, strict)
+    val naive = cases.map { case (t, strict) => pairsOf(near(t, strict)) }
+    assert(naive(0).contains((1L, 2L)) && !naive(1).contains((1L, 2L)),
+      "J = t exactly: kept by >=, dropped by > (sanity)")
     withRule {
       val a = docs.as("a")
       val b = docs.as("b")
@@ -94,6 +111,12 @@ class JaccardRewriteSpec extends AnyFunSuite {
           col("a.id") < col("b.id"))
       assert(!nestedLoopish(reversed.queryExecution.executedPlan))
       assert(pairsOf(reversed) === Set((1L, 4L), (6L, 7L)))
+
+      cases.zip(naive).foreach { case ((t, strict), expected) =>
+        val q = near(t, strict)
+        assert(!nestedLoopish(q.queryExecution.executedPlan))
+        assert(pairsOf(q) === expected, s"t=$t strict=$strict")
+      }
     }
   }
 

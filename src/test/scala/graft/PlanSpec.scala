@@ -253,6 +253,29 @@ class PlanSpec extends AnyFunSuite {
       s"pair count must partial-aggregate map-side (join-stage combine):\n$plan")
   }
 
+  test("count join self form: one posting exchange, written once and read twice") {
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    // static at-scale shape, as in the reuse tests below: broadcast and
+    // AQE off so the shuffle join and its exchange reuse are visible
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val aqeKey = "spark.sql.adaptive.enabled"
+    val prevT = spark.conf.get(thresholdKey)
+    val prevA = spark.conf.get(aqeKey)
+    val plan = try {
+      spark.conf.set(thresholdKey, "-1")
+      spark.conf.set(aqeKey, "false")
+      val sets = operators.Dedup.gramSets(Tables.documents(spark, dir), "doc_id", col("text"), 8)
+      operators.Dedup.gramPairs(sets, None, 0.8, operators.Dedup.GramRoute.Exact)
+        .queryExecution.executedPlan
+    } finally { spark.conf.set(thresholdKey, prevT); spark.conf.set(aqeKey, prevA) }
+    val postingExchanges = plan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.toString.contains("__gram") => e
+    }
+    assert(postingExchanges.size === 1, s"one posting exchange:\n$plan")
+    assert(plan.collect { case r: ReusedExchangeExec => r }.nonEmpty,
+      s"the second alias must read the reused exchange:\n$plan")
+  }
+
   test("sorted-intersect kernel runs inside whole-stage codegen") {
     val df = Tables.documents(spark, dir)
       .select(sort_array(operators.Dedup.ngrams(col("text"), 3)).as("g"))

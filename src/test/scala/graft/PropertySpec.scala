@@ -122,9 +122,10 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("property: jaccardPairs equals brute force on random corpora (incl. sub-n docs)") {
-    for (seed <- 10L to 12L; t <- Seq(0.4, 0.8)) {
+    // id offsets: ids past 2^31 and negative ids must pair exactly too
+    for (seed <- 10L to 12L; t <- Seq(0.4, 0.8); offset <- Seq(0L, 3000000000L, -15L)) {
       val strs = sample(Gen.listOfN(30, corpusString), seed)
-      val df = strs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
+      val df = strs.zipWithIndex.map { case (s, i) => (i + offset, s) }.toDF("id", "s")
       def pairSet(p: org.apache.spark.sql.DataFrame) =
         p.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val fast = pairSet(Dedup.jaccardPairs(df, "id", col("s"), t, n = 2))
@@ -139,8 +140,10 @@ class PropertySpec extends AnyFunSuite {
         .withColumn("j", round(Dedup.jaccardOfSets(col("ga"), col("gb")), 6))
         .filter(col("j") >= t)
         .select("id_a", "id_b", "j"))
-      assert(fast === brute, s"seed=$seed t=$t fast=${fast.size} brute=${brute.size}")
-      assert(banded === brute, s"seed=$seed t=$t banded=${banded.size} brute=${brute.size}")
+      assert(fast === brute,
+        s"seed=$seed t=$t offset=$offset fast=${fast.size} brute=${brute.size}")
+      assert(banded === brute,
+        s"seed=$seed t=$t offset=$offset banded=${banded.size} brute=${brute.size}")
     }
   }
 
